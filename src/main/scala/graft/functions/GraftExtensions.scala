@@ -2,13 +2,14 @@ package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Build-time registration of the graft native functions for cluster
   * deployments: `--conf spark.sql.extensions=graft.functions.GraftExtensions`
   * injects them into every session created by the application. (Inside the
   * driver-owned local harness, where sessions pre-exist, the runtime
-  * equivalent [[GraftFunctions.register]] is used instead — same builders.)
+  * equivalent [[GraftFunctions.register]] is used instead — both install
+  * [[GraftFunctions.natives]].)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -16,38 +17,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     new ExpressionInfo(classOf[GraftExtensions].getName, name, usage, "", "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    val fns: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
-      ("vec_dot", "dot product of two float vectors as double",
-        es => FloatVecDot(es(0), es(1))),
-      ("sorted_intersect_count", "intersection size of two sorted string arrays",
-        es => SortedIntersectCount(es(0), es(1))),
-      ("sorted_long_intersect_count", "intersection size of two sorted long arrays",
-        es => SortedLongIntersectCount(es(0), es(1))),
-      ("simhash_bits", "bits-wide simhash signature of a token array",
-        es => SimHashBits(es(0), es(1))),
-      ("minhash_sig", "k minhash values of a shingle array",
-        es => MinHashSig(es(0), es(1))),
-      ("minhash_bands", "LSH band hashes of a shingle array",
-        es => MinHashBands(es(0), es(1), es(2))),
-      ("char_ngram_longs", "sorted-distinct long-packed char k-grams",
-        es => CharNgramLongs(es(0), es(1))),
-      ("long_minhash_bands", "LSH band hashes of a long-packed element set",
-        es => LongMinHashBands(es(0), es(1), es(2))),
-      ("token_ngrams", "all adjacent k-token grams in document order",
-        es => TokenNgrams(es(0), es(1))),
-      ("token_shingles", "sorted-distinct k-token shingles",
-        es => TokenShingles(es(0), es(1))),
-      ("sorted_token_set", "sorted-distinct tokens",
-        es => SortedTokenSet(es.head)),
-      ("kgram_min_md5", "lexicographic-min md5 over char k-grams",
-        es => KgramMinMd5(es(0), es(1))),
-      ("fence", "identity optimizer fence (blocks predicate pushdown)",
-        es => OptimizerFence(es.head)),
-      ("stop_strip", "normalize text and strip stopwords in one pass",
-        es => StopStrip(es(0), es(1))),
-      ("winnow_fps", "winnowing fingerprint set (min per k-gram hash window)",
-        es => WinnowFps(es(0), es(1), es(2))))
-    fns.foreach { case (name, usage, builder) =>
+    GraftFunctions.natives.foreach { case (name, usage, builder) =>
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
     }
     // selective predicate pushdown through fenced projections — injected

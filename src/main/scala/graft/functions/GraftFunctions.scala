@@ -726,54 +726,78 @@ case class OptimizerFence(child: Expression) extends UnaryExpression {
 }
 
 object GraftFunctions {
+  /** Every graft native function as (name, usage, builder) — the one table
+    * both [[register]] and [[GraftExtensions]] install. */
+  val natives: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", "dot product of two float vectors as double",
+      es => FloatVecDot(es(0), es(1))),
+    ("sorted_intersect_count", "intersection size of two sorted string arrays",
+      es => SortedIntersectCount(es(0), es(1))),
+    ("sorted_long_intersect_count", "intersection size of two sorted long arrays",
+      es => SortedLongIntersectCount(es(0), es(1))),
+    ("simhash_bits", "bits-wide simhash signature of a token array",
+      es => SimHashBits(es(0), es(1))),
+    ("minhash_sig", "k minhash values of a shingle array",
+      es => MinHashSig(es(0), es(1))),
+    ("minhash_bands", "LSH band hashes of a shingle array",
+      es => MinHashBands(es(0), es(1), es(2))),
+    ("char_ngram_longs", "sorted-distinct long-packed char k-grams",
+      es => CharNgramLongs(es(0), es(1))),
+    ("long_minhash_bands", "LSH band hashes of a long-packed element set",
+      es => LongMinHashBands(es(0), es(1), es(2))),
+    ("token_ngrams", "all adjacent k-token grams in document order",
+      es => TokenNgrams(es(0), es(1))),
+    ("token_shingles", "sorted-distinct k-token shingles",
+      es => TokenShingles(es(0), es(1))),
+    ("sorted_token_set", "sorted-distinct tokens",
+      es => SortedTokenSet(es.head)),
+    ("kgram_min_md5", "lexicographic-min md5 over char k-grams",
+      es => KgramMinMd5(es(0), es(1))),
+    ("fence", "identity optimizer fence (blocks predicate pushdown)",
+      es => OptimizerFence(es.head)),
+    ("stop_strip", "normalize text and strip stopwords in one pass",
+      es => StopStrip(es(0), es(1))),
+    ("winnow_fps", "winnowing fingerprint set (min per k-gram hash window)",
+      es => WinnowFps(es(0), es(1), es(2))),
+    ("topk_pairs", "aggregate: exact top-k (v, id) pairs",
+      es => ExactTopK(es(0), es(1), es(2)).toAggregateExpression()),
+    ("vec_sum_fp", "aggregate: elementwise half-up fixed-point sum of vectors",
+      es => VecSumFp(es(0), es(1)).toAggregateExpression()),
+    ("argmin_pair", "aggregate: id of the least ord",
+      es => ArgExtreme(es(0), es(1), None, isMax = false).toAggregateExpression()),
+    ("argmax_pair", "aggregate: id of the greatest ord",
+      es => ArgExtreme(es(0), es(1), None, isMax = true).toAggregateExpression()),
+    ("argmin_vec", "aggregate: (id, vec) of the least ord",
+      es => ArgExtreme(es(0), es(1), Some(es(2)), isMax = false).toAggregateExpression()),
+    ("argmax_vec", "aggregate: (id, vec) of the greatest ord",
+      es => ArgExtreme(es(0), es(1), Some(es(2)), isMax = true).toAggregateExpression()),
+    ("outer_product_sum", "aggregate: sum of the flattened outer products qa x qa",
+      es => OuterProductSum(es.head).toAggregateExpression()))
+
+  // ObjectHashAggregate (the execution mode of every TypedImperativeAggregate
+  // here: topk_pairs, argmin/argmax, vec_sum_fp, outer_product_sum) falls
+  // back to SORT-BASED aggregation once a task's hash map exceeds this
+  // threshold — the Spark default of 128 groups re-introduces exactly the
+  // per-group sort these aggregates exist to avoid (measured r17: x115's
+  // 250 q_id groups pushed the partial agg into the fallback and the
+  // topk_pairs tail ran slower than the window it replaced). 64k groups
+  // bounds the map at ~45 MB/task for the largest buffer shape
+  // (argmin_vec, ~700 B/group) — safely inside executor memory at any
+  // corpus scale, because past the threshold Spark still degrades
+  // gracefully to the sort path.
+  private val ObjAggFallbackThreshold = 65536
+
   /** Idempotent registration of the native functions into the session's
     * FunctionRegistry (runtime equivalent of SparkSessionExtensions
     * injectFunction — the driver owns session construction, so injection
     * at build time isn't available). */
   def register(spark: SparkSession): Unit = {
-    // ObjectHashAggregate (the execution mode of every TypedImperativeAggregate
-    // here: topk_pairs, argmin/argmax, vec_sum_fp, outer_product_sum) falls
-    // back to SORT-BASED aggregation once a task's hash map exceeds this
-    // threshold — the Spark default of 128 groups re-introduces exactly the
-    // per-group sort these aggregates exist to avoid (measured r17: x115's
-    // 250 q_id groups pushed the partial agg into the fallback and the
-    // topk_pairs tail ran slower than the window it replaced). 64k groups
-    // bounds the map at ~45 MB/task for the largest buffer shape
-    // (argmin_vec, ~700 B/group) — safely inside executor memory at any
-    // corpus scale, because past the threshold Spark still degrades
-    // gracefully to the sort path. Env-overridable for cluster tuning.
     spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_FALLBACK", "65536"))
+      ObjAggFallbackThreshold.toString)
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot", es => FloatVecDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("sorted_intersect_count", es => SortedIntersectCount(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("sorted_long_intersect_count", es => SortedLongIntersectCount(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash_bits", es => SimHashBits(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig", es => MinHashSig(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_bands", es => MinHashBands(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("char_ngram_longs", es => CharNgramLongs(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("long_minhash_bands", es => LongMinHashBands(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("token_ngrams", es => TokenNgrams(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("token_shingles", es => TokenShingles(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("sorted_token_set", es => SortedTokenSet(es.head), "built-in")
-    reg.createOrReplaceTempFunction("kgram_min_md5", es => KgramMinMd5(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("fence", es => OptimizerFence(es.head), "built-in")
-    reg.createOrReplaceTempFunction("stop_strip", es => StopStrip(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("winnow_fps", es => WinnowFps(es(0), es(1), es(2)), "built-in")
-    reg.createOrReplaceTempFunction("topk_pairs",
-      es => ExactTopK(es(0), es(1), es(2)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("vec_sum_fp",
-      es => VecSumFp(es(0), es(1)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("argmin_pair",
-      es => ArgExtreme(es(0), es(1), None, isMax = false).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("argmax_pair",
-      es => ArgExtreme(es(0), es(1), None, isMax = true).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("argmin_vec",
-      es => ArgExtreme(es(0), es(1), Some(es(2)), isMax = false).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("argmax_vec",
-      es => ArgExtreme(es(0), es(1), Some(es(2)), isMax = true).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("outer_product_sum",
-      es => OuterProductSum(es.head).toAggregateExpression(), "built-in")
+    natives.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "built-in")
+    }
     // selective pushdown through fenced projections (see FencePushdown);
     // extraOptimizations is the runtime analogue of injectOptimizerRule
     val cur = spark.experimental.extraOptimizations

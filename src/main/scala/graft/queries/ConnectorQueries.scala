@@ -20,10 +20,7 @@ object ConnectorQueries {
 
   def paginatedConnector(spark: SparkSession, dir: String) = {
     val client = new SyntheticPageClient(TotalItems, QueryPageSize)
-    // DSv2 path (PaginatedTableProvider): the scan itself plans the page
-    // runs; the mapPartitions form is covered by PaginatedSourceSpec.
-    PaginatedSource.bulkExtractV2(spark, "src1_query", client,
-      parallelism = 8, pageSize = QueryPageSize)
+    PaginatedSource.bulkExtract(spark, client, parallelism = 8, pageSize = QueryPageSize)
       .orderBy("hash")
   }
 

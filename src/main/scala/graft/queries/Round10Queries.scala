@@ -125,7 +125,7 @@ object Round10Queries {
     // checkpointed.
     val base = java.nio.file.Files.createTempDirectory("graft_x132").toString
     def drive(totalItems: Int): DataFrame = QueryUtil.withStreamShuffle(spark) {
-      val sdf = PaginatedSource.streamPages(spark, "x132_stream",
+      val sdf = PaginatedSource.streamPages(spark,
         new SyntheticPageClient(totalItems, StreamPageSize),
         startRows = 0L, parallelism = 4, pageSize = StreamPageSize)
       QueryUtil.stageStream(spark, sdf.select("value"), base, "append")

@@ -9,8 +9,10 @@ import org.apache.spark.sql.types._
   * (`/root/reference/app/salesforce_extractor.py`) Spark-first:
   *
   *  - SRC1 (:106-136, :248): page-numbered GET with envelope
-  *    `{count, items[]}`, page size 2500 → one Spark task per page chunk via
-  *    `spark.range(start, total+1)` + `mapPartitions(fetch)`.
+  *    `{count, items[]}`, page size 2500, read through the DataSource V2
+  *    `graft-pages` table ([[PaginatedTableProvider]]) — one Spark task per
+  *    contiguous page run, with page predicates, column pruning, LIMIT and
+  *    ungrouped `count(*)` pushed into the scan.
   *  - SRC2 (:86-104): auth is a connector concern — the transport is an
   *    injected [[PageClient]]; a real HTTP client holds a lazy bearer token
   *    per executor. Keeping the transport injectable makes the connector
@@ -26,9 +28,9 @@ import org.apache.spark.sql.types._
   *
   * Scale: page fetches distribute as `parallelism` tasks each pulling a
   * contiguous page run; no driver materialization (only the page-1 count
-  * pre-flight runs on the driver). At 100 TB-equivalent page counts the
-  * same shape holds — `spark.range` partitions the page id space evenly and
-  * fetch is pipelined per partition iterator.
+  * pre-flight runs on the driver, as one plain fetch and parse). At 100
+  * TB-equivalent page counts the same shape holds — the scan splits the
+  * page id space evenly and each reader fetches its run lazily.
   */
 object PaginatedSource {
 
@@ -72,13 +74,29 @@ object PaginatedSource {
         StructField("event_name", StringType),
         StructField("date", StringType))))))))))
 
-  /** A2: driver-side pre-flight — fetch page 1, read the envelope `count`
-    * (salesforce_extractor.py:263-269). */
-  def totalCount(spark: SparkSession, client: PageClient): Long = {
-    import spark.implicits._
-    val first = Seq(client.fetchPage(1)).toDS()
-    first.select(from_json($"value", envelopeSchema).getField("count"))
-      .head().getLong(0)
+  private val json = new com.fasterxml.jackson.core.JsonFactory()
+
+  /** A2: driver-side pre-flight — fetch page 1 and read the envelope's
+    * TOP-LEVEL numeric `count` (salesforce_extractor.py:263-269); also the
+    * streaming source's per-trigger probe. A streaming parser skips every
+    * nested value, so a `count` inside an item can't shadow the envelope's
+    * and the items are never materialized. A missing or non-numeric `count`
+    * fails loudly: every page plan and the stream watermark derive from it. */
+  def totalCount(client: PageClient): Long = {
+    import com.fasterxml.jackson.core.JsonToken
+    val p = json.createParser(client.fetchPage(1))
+    try {
+      var count: Option[Long] = None
+      if (p.nextToken() == JsonToken.START_OBJECT)
+        while (count.isEmpty && p.nextToken() == JsonToken.FIELD_NAME) {
+          val field = p.currentName()
+          val v = p.nextToken()
+          if (field == "count" && v == JsonToken.VALUE_NUMBER_INT) count = Some(p.getLongValue)
+          else p.skipChildren()
+        }
+      count.getOrElse(throw new IllegalStateException(
+        "page-1 envelope has no numeric top-level \"count\" field"))
+    } finally p.close()
   }
 
   /** S1: `start_page = max(1, ceil(db_count / page_size))`
@@ -89,21 +107,26 @@ object PaginatedSource {
   def totalPages(apiCount: Long, pageSize: Int = PageSize): Int =
     ((apiCount + pageSize - 1) / pageSize).toInt
 
-  /** SRC1: distributed scan of pages [startPage, endPage] as raw envelope
-    * JSON strings. */
+  /** SRC1: the `graft-pages` scan of pages [startPage, endPage] as a
+    * `(page, value)` frame, `value` the raw envelope JSON. Planner-visible:
+    * `page` predicates and LIMIT prune the fetched range before any fetch,
+    * and a `page`-only projection never fetches a body. */
   def rawPages(spark: SparkSession, client: PageClient,
-               startPage: Int, endPage: Int, parallelism: Int = 8): Dataset[String] = {
-    import spark.implicits._
-    spark.range(startPage, endPage + 1L)
-      .repartition(math.min(parallelism, math.max(1, endPage - startPage + 1)))
-      .as[Long]
-      .mapPartitions(pages => pages.map(p => client.fetchPage(p.toInt)))
-  }
+               startPage: Int, endPage: Int, parallelism: Int = 8): DataFrame =
+    PaginatedTableProvider.withClient(client) { key =>
+      spark.read.format("graft-pages")
+        .option("client", key)
+        .option("startpage", startPage)
+        .option("endpage", endPage)
+        .option("parallelism", parallelism)
+        .load()
+    }
 
   /** P1+F3+F4: envelope JSON → flattened lead-activity rows with the
     * reference's exact defaulting (absent keys → "", only `date` nullable)
-    * and 16-hex content hash over the full projection. */
-  def flattenPages(pages: Dataset[String]): DataFrame = {
+    * and 16-hex content hash over the full projection. Reads the `value`
+    * column of [[rawPages]], of [[streamPages]] or of any string Dataset. */
+  def flattenPages(pages: Dataset[_]): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
     val s = (c: org.apache.spark.sql.Column) => coalesce(c, lit(""))
@@ -125,23 +148,6 @@ object PaginatedSource {
           $"item.values.date").as("hash"))
   }
 
-  /** SRC1 via the DataSource V2 table ([[PaginatedTableProvider]]): same
-    * rows as [[rawPages]], but planner-visible — `page` predicates prune
-    * the fetched range at planning time, column pruning can skip the body
-    * fetch, and the scan shows one InputPartition per page run. */
-  def rawPagesV2(spark: SparkSession, clientName: String, client: PageClient,
-                 startPage: Int, endPage: Int, parallelism: Int = 8): Dataset[String] = {
-    import spark.implicits._
-    PaginatedTableProvider.registerClient(clientName, client)
-    spark.read.format("graft-pages")
-      .option("client", clientName)
-      .option("startpage", startPage)
-      .option("endpage", endPage)
-      .option("parallelism", parallelism)
-      .load()
-      .select("value").as[String]
-  }
-
   /** S1 as Structured Streaming: the paginated source as a DSv2
     * `MicroBatchStream` — each trigger probes the API row count (A2
     * pre-flight) and fetches only pages past the committed ROW watermark,
@@ -149,48 +155,40 @@ object PaginatedSource {
     * dedup drops (the reference's incremental loop, checkpoint-resumable).
     * Compose with [[flattenPages]] + an idempotent merge sink for
     * exactly-once rows. */
-  def streamPages(spark: SparkSession, clientName: String, client: PageClient,
+  def streamPages(spark: SparkSession, client: PageClient,
                   startRows: Long = 0L, parallelism: Int = 8,
-                  pageSize: Int = PageSize): DataFrame = {
-    PaginatedTableProvider.registerClient(clientName, client)
-    spark.readStream.format("graft-pages")
-      .option("client", clientName)
-      .option("startrows", startRows)
-      .option("pagesize", pageSize)
-      .option("parallelism", parallelism)
-      .load()
-  }
+                  pageSize: Int = PageSize): DataFrame =
+    PaginatedTableProvider.withClient(client) { key =>
+      spark.readStream.format("graft-pages")
+        .option("client", key)
+        .option("startrows", startRows)
+        .option("pagesize", pageSize)
+        .option("parallelism", parallelism)
+        .load()
+    }
 
   /** T6 bulk mode: full scan from page 1 (reference truncates the sink
     * first = SaveMode.Overwrite downstream). */
   def bulkExtract(spark: SparkSession, client: PageClient, parallelism: Int = 8,
-                  pageSize: Int = PageSize): DataFrame = {
-    val total = totalPages(totalCount(spark, client), pageSize)
-    flattenPages(rawPages(spark, client, 1, total, parallelism))
-  }
-
-  /** [[bulkExtract]] through the DSv2 scan — the planner-integrated path. */
-  def bulkExtractV2(spark: SparkSession, clientName: String, client: PageClient,
-                    parallelism: Int = 8, pageSize: Int = PageSize): DataFrame = {
-    val total = totalPages(totalCount(spark, client), pageSize)
-    flattenPages(rawPagesV2(spark, clientName, client, 1, total, parallelism))
-  }
+                  pageSize: Int = PageSize): DataFrame =
+    flattenPages(rawPages(spark, client, 1, totalPages(totalCount(client), pageSize), parallelism))
 
   /** T6+S1 incremental mode: scan only pages >= the high-watermark page for
-    * `dbCount` already-loaded rows, then anti-join-merge into `existing`
-    * (overlap rows on the boundary page are dropped by hash — the
-    * reference's ON DUPLICATE KEY no-op). Returns `existing` unchanged when
-    * the API has nothing new (salesforce_extractor.py:271-274). */
+    * `dbCount` already-loaded rows and return the rows whose hash `existing`
+    * lacks — the overlap rows of the re-fetched boundary page drop out here.
+    * Within-round duplicates stay; the sink's merge ([[graft.sinks.Sinks.appendNew]],
+    * the reference's ON DUPLICATE KEY no-op) collapses them. Returns no rows
+    * when the API has nothing new (salesforce_extractor.py:271-274). */
   def incrementalExtract(spark: SparkSession, client: PageClient, existing: DataFrame,
                          dbCount: Long, parallelism: Int = 8,
                          pageSize: Int = PageSize): DataFrame = {
-    val apiCount = totalCount(spark, client)
-    if (apiCount <= dbCount) existing
+    val apiCount = totalCount(client)
+    if (apiCount <= dbCount) existing.limit(0)
     else {
       val start = incrementalStartPage(dbCount, pageSize)
       val end = totalPages(apiCount, pageSize)
-      val incoming = flattenPages(rawPages(spark, client, start, end, parallelism))
-      Etl.mergeIncremental(existing, incoming, "hash")
+      flattenPages(rawPages(spark, client, start, end, parallelism))
+        .join(existing.select("hash"), Seq("hash"), "left_anti")
     }
   }
 }

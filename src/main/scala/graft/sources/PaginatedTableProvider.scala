@@ -11,14 +11,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 form of the paginated REST source (SURVEY.md §2 SRC1's
-  * planner-integrated shape; reference behavior
-  * `/root/reference/app/salesforce_extractor.py:106-136`): the page-id space
-  * becomes a real `Table` whose scan plans ONE `InputPartition` per
+/** DataSource V2 form of the paginated REST source (SURVEY.md §2 SRC1;
+  * reference behavior `salesforce_extractor.py:106-136`): the page-id
+  * space becomes a real `Table` whose scan plans ONE `InputPartition` per
   * contiguous page run, so the planner sees the connector instead of an
-  * opaque `mapPartitions`.
+  * opaque closure.
   *
-  * Planner integration this buys over [[PaginatedSource.rawPages]]:
+  * Planner integration:
   *  - **page-range pruning**: `WHERE page >= k` (and =, <, <=, >) is pushed
   *    into the scan and narrows the fetched run BEFORE any HTTP call — the
   *    incremental high-watermark read becomes a plain filter;
@@ -26,15 +25,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    (the reader consults the pruned schema per column);
   *  - partition count = page-run count, visible to the scheduler.
   *
-  * The transport stays an injected [[PaginatedSource.PageClient]] (SRC2):
-  * DSv2 instantiates providers reflectively with string options, so clients
-  * are registered under a name on the driver ([[PaginatedTableProvider.registerClient]])
-  * and resolved at PLANNING time; the (Serializable) client instance then
-  * ships inside each `InputPartition`, exactly like the mapPartitions form.
+  * The transport stays an injected [[PaginatedSource.PageClient]] (SRC2).
+  * DSv2 instantiates providers reflectively with string options, so the
+  * entry points ([[PaginatedSource.rawPages]], [[PaginatedSource.streamPages]])
+  * register the client under a one-off key only while `load()` resolves the
+  * table; the [[PagesTable]] then holds the client for every later planning
+  * of that frame (re-planning, stream restarts), and the registry is empty
+  * again once the entry point returns. The (Serializable) client ships in
+  * the reader factory, which executors deserialize inside the running task,
+  * so accumulators the client carries register with that task and count
+  * every fetch.
   *
   * Scale: page runs distribute across executors with no driver
   * materialization; a 401 inside a task retries via whatever retry
-  * decoration the registered client carries (SRC3).
+  * decoration the client carries (SRC3).
   */
 class PaginatedTableProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-pages"
@@ -42,7 +46,7 @@ class PaginatedTableProvider extends TableProvider with DataSourceRegister {
     PaginatedTableProvider.Schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
-    new PagesTable()
+    new PagesTable(PaginatedTableProvider.client(properties.get("client")))
 }
 
 object PaginatedTableProvider {
@@ -54,24 +58,33 @@ object PaginatedTableProvider {
   private val clients =
     new java.util.concurrent.ConcurrentHashMap[String, PaginatedSource.PageClient]()
 
-  /** Driver-side injection point: name a client instance for `option("client", name)`. */
-  def registerClient(name: String, client: PaginatedSource.PageClient): Unit =
-    clients.put(name, client)
+  /** Runs `load` with `client` registered under a fresh key for
+    * `option("client", key)`, and unregisters it before returning. */
+  private[sources] def withClient[T](client: PaginatedSource.PageClient)(load: String => T): T = {
+    val key = java.util.UUID.randomUUID().toString
+    clients.put(key, client)
+    try load(key) finally clients.remove(key)
+  }
 
-  private[sources] def client(name: String): PaginatedSource.PageClient = {
-    val c = clients.get(name)
-    require(c != null, s"no PageClient registered under '$name' — call registerClient first")
+  /** Clients currently registered — zero whenever no entry point is mid-load. */
+  private[graft] def registeredClients: Int = clients.size
+
+  private def client(key: String): PaginatedSource.PageClient = {
+    val c = if (key == null) null else clients.get(key)
+    require(c != null,
+      "graft-pages has no PageClient: read it through PaginatedSource.rawPages or streamPages")
     c
   }
 }
 
-private[sources] class PagesTable extends Table with SupportsRead {
+private[sources] class PagesTable(client: PaginatedSource.PageClient)
+    extends Table with SupportsRead {
   override def name(): String = "graft_pages"
   override def schema(): StructType = PaginatedTableProvider.Schema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new PagesScanBuilder(options)
+    new PagesScanBuilder(client, options)
 }
 
 /** Narrows [startPage, endPage] with every pushable `page` predicate,
@@ -83,16 +96,12 @@ private[sources] class PagesTable extends Table with SupportsRead {
   * and no page body is ever fetched. Partial-pushdown contract: each
   * partition emits its page-run count and Spark's final aggregate merges
   * them. */
-private[sources] class PagesScanBuilder(options: CaseInsensitiveStringMap)
+private[sources] class PagesScanBuilder(client: PaginatedSource.PageClient,
+                                        options: CaseInsensitiveStringMap)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
     with SupportsPushDownLimit {
 
-  private val clientName = {
-    val n = options.get("client")
-    require(n != null, "option 'client' (registered PageClient name) is required")
-    n
-  }
   private var start: Int = options.getInt("startpage", 1)
   // Int.MaxValue = unbounded: fine for streaming (the offset loop bounds
   // each batch) and for batch scans that get bounded by a pushed `page`
@@ -144,7 +153,7 @@ private[sources] class PagesScanBuilder(options: CaseInsensitiveStringMap)
 
   override def build(): Scan =
     if (countPushed) new PagesCountScan(start, end)
-    else new PagesScan(PaginatedTableProvider.client(clientName), start, end,
+    else new PagesScan(client, start, end,
       parallelism, required, pushed, streamStartRows, pageSize)
 }
 
@@ -199,16 +208,16 @@ private[sources] class PagesScan(client: PaginatedSource.PageClient,
 
   /** One partition per contiguous page run; run sizes differ by at most 1. */
   override def planInputPartitions(): Array[InputPartition] =
-    PagesScan.planRuns(start, end, parallelism, client)
+    PagesScan.planRuns(start, end, parallelism)
 
-  override def createReaderFactory(): PartitionReaderFactory = new PagesReaderFactory(required)
+  override def createReaderFactory(): PartitionReaderFactory =
+    new PagesReaderFactory(client, required)
 }
 
 private[sources] object PagesScan {
   /** [start..end] as ≤ `parallelism` contiguous page runs (sizes differ by
     * at most 1) — shared by the batch scan and each micro-batch plan. */
-  def planRuns(start: Int, end: Int, parallelism: Int,
-               client: PaginatedSource.PageClient): Array[InputPartition] = {
+  def planRuns(start: Int, end: Int, parallelism: Int): Array[InputPartition] = {
     val n = end - start + 1
     if (n <= 0) Array.empty
     else {
@@ -216,7 +225,7 @@ private[sources] object PagesScan {
       (0 until runs).map { r =>
         val lo = start + (n.toLong * r / runs).toInt
         val hi = start + (n.toLong * (r + 1) / runs).toInt - 1
-        PagesInputPartition(lo, hi, client): InputPartition
+        PagesInputPartition(lo, hi): InputPartition
       }.toArray
     }
   }
@@ -251,24 +260,10 @@ private[sources] class PagesMicroBatchStream(client: PaginatedSource.PageClient,
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
 
-  /** A2 pre-flight against the envelope of page 1 — driver-side, one fetch
-    * per trigger (the reference does the identical probe per run). Parses
-    * the envelope's TOP-LEVEL `count` with a real JSON parser — a regex
-    * first-match would be corrupted by any record payload containing a
-    * `count` field before the envelope key (ADVICE r9); this is the same
-    * field PaginatedSource.fetchCount reads via from_json. */
-  private def apiRows(): Long = {
-    val body = client.fetchPage(1)
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(body)
-    val c = node.get("count")
-    if (c == null || !c.canConvertToLong)
-      throw new IllegalStateException(
-        "page-1 envelope has no numeric top-level \"count\" field — cannot derive the stream watermark")
-    c.asLong()
-  }
-
   override def initialOffset(): Offset = PageRowsOffset(startRows)
-  override def latestOffset(): Offset = PageRowsOffset(apiRows())
+  /** A2 pre-flight, driver-side, one page-1 fetch per trigger (the
+    * reference does the identical probe per run). */
+  override def latestOffset(): Offset = PageRowsOffset(PaginatedSource.totalCount(client))
   override def deserializeOffset(json: String): Offset =
     PageRowsOffset(json.trim.toLong)
 
@@ -278,21 +273,26 @@ private[sources] class PagesMicroBatchStream(client: PaginatedSource.PageClient,
     if (e <= s) Array.empty
     else PagesScan.planRuns(
       PaginatedSource.incrementalStartPage(s, pageSize),
-      PaginatedSource.totalPages(e, pageSize), parallelism, client)
+      PaginatedSource.totalPages(e, pageSize), parallelism)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PagesReaderFactory(required)
+    new PagesReaderFactory(client, required)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
-private[sources] case class PagesInputPartition(startPage: Int, endPage: Int,
-                                                client: PaginatedSource.PageClient)
+private[sources] case class PagesInputPartition(startPage: Int, endPage: Int)
     extends InputPartition
 
-private[sources] class PagesReaderFactory(required: StructType)
+/** Carries the client to the executors. Not the partition: Spark
+  * deserializes a task's partition before the task's `TaskContext` exists,
+  * so accumulators inside a partition-held client never register and their
+  * counts are lost; the factory travels in the task binary, deserialized
+  * inside the running task. */
+private[sources] class PagesReaderFactory(client: PaginatedSource.PageClient,
+                                          required: StructType)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[PagesInputPartition]
@@ -306,7 +306,7 @@ private[sources] class PagesReaderFactory(required: StructType)
           case "value" =>
             // the schema declares `value` non-nullable; a null fetch must be
             // a loud failure here, not a corrupt row downstream
-            val body = p.client.fetchPage(page)
+            val body = client.fetchPage(page)
             require(body != null, s"PageClient.fetchPage($page) returned null")
             UTF8String.fromString(body)
         })

@@ -127,11 +127,8 @@ class HttpSourceSpec extends SparkTestBase {
     val api = new LoopbackApi(items = 4000, pageSize = 100) // 40 pages
     try {
       val http = api.client()
-      graft.sources.PaginatedTableProvider.registerClient("http_limit", http)
-      val rows = spark.read.format("graft-pages")
-        .option("client", "http_limit")
-        .option("endpage", 40).option("parallelism", 4)
-        .load().select("value").limit(3).collect()
+      val rows = PS.rawPages(spark, http, 1, 40, parallelism = 4)
+        .select("value").limit(3).collect()
       assert(rows.length == 3)
       import scala.jdk.CollectionConverters._
       assert(api.pageLog.asScala.map(_.toInt) == Set(1, 2, 3),

@@ -71,7 +71,7 @@ class JdbcSinkSpec extends SparkTestBase {
     val start = PaginatedSource.incrementalStartPage(dbCount, PageSz)
     assert(start == 8, s"boundary page for dbCount=$dbCount should be 8, got $start")
     val end = PaginatedSource.totalPages(
-      PaginatedSource.totalCount(spark, clientB), PageSz)
+      PaginatedSource.totalCount(clientB), PageSz)
     val incoming = PaginatedSource.flattenPages(
       PaginatedSource.rawPages(spark, clientB, start, end, parallelism = 4))
     assert(incoming.count() == nB - (start - 1) * PageSz) // overlap included

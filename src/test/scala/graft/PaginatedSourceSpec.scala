@@ -13,6 +13,10 @@ class PaginatedSourceSpec extends SparkTestBase {
     assert(df.count() == 250)
     assert(df.columns.toSeq == Seq("lead_id", "url", "session_id", "order",
       "date", "type_id", "event_category", "event_name", "hash"))
+    // one fetch path: the graft-pages batch scan, no round-robin shuffle
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.contains("graft-pages pages=[1..3]"), plan)
+    assert(!plan.contains("RoundRobinPartitioning"), plan)
   }
 
   test("P1: absent keys become empty strings, not nulls; bad dates null") {
@@ -38,21 +42,32 @@ class PaginatedSourceSpec extends SparkTestBase {
     assert(PS.totalPages(5001, 2500) == 3)
   }
 
+  test("A2: the page-1 count is the envelope's top-level field; a missing one fails loudly") {
+    def page1(body: String): PS.PageClient = new PS.PageClient { def fetchPage(page: Int) = body }
+    assert(PS.totalCount(page1("""{"items":[{"count":7}],"count":250}""")) == 250L)
+    intercept[IllegalStateException](PS.totalCount(page1("""{"items":[{"count":7}]}""")))
+    intercept[IllegalStateException](PS.totalCount(page1("""{"count":"250","items":[]}""")))
+  }
+
   test("S1+SNK1: incremental after partial bulk equals full bulk") {
     val client = new SyntheticPageClient(350, pageSize = 100)
     val firstTwoPages = PS.flattenPages(PS.rawPages(spark, client, 1, 2, 2))
     val dbCount = firstTwoPages.count() // 200
-    val merged = PS.incrementalExtract(spark, client, firstTwoPages, dbCount, 2, 100)
+    // pages 2..4 are fetched (2 is the boundary page); only 201..350 are new
+    val fresh = PS.incrementalExtract(spark, client, firstTwoPages, dbCount, 2, 100)
+    assert(fresh.count() == 150)
+    val merged = firstTwoPages.unionByName(fresh)
     val bulk = PS.bulkExtract(spark, new SyntheticPageClient(350, 100), 2, 100)
     assert(merged.count() == 350)
     assert(merged.select("hash").except(bulk.select("hash")).count() == 0)
+    assert(bulk.select("hash").except(merged.select("hash")).count() == 0)
   }
 
   test("S1: no new data short-circuits to existing") {
     val client = new SyntheticPageClient(100, pageSize = 100)
     val existing = Seq(("x", 1)).toDF("hash", "v")
     val out = PS.incrementalExtract(spark, client, existing, dbCount = 100, 2, 100)
-    assert(out.collect().toSeq == existing.collect().toSeq)
+    assert(out.isEmpty)
   }
 
   test("SRC3: single 401 triggers re-auth + replay; success on retry") {
@@ -71,26 +86,19 @@ class PaginatedSourceSpec extends SparkTestBase {
     intercept[PS.UnauthorizedException](client.fetchPage(1))
   }
 
-  private def v2Reader(name: String, client: PS.PageClient, endPage: Int, parallelism: Int) = {
-    graft.sources.PaginatedTableProvider.registerClient(name, client)
-    spark.read.format("graft-pages")
-      .option("client", name).option("endpage", endPage).option("parallelism", parallelism)
-      .load()
-  }
-
   test("SRC1/DSv2: one InputPartition per page run") {
     val client = new SyntheticPageClient(1000, pageSize = 100)
-    assert(v2Reader("dsv2_runs", client, endPage = 10, parallelism = 4)
+    assert(PS.rawPages(spark, client, 1, 10, 4)
       .rdd.getNumPartitions == 4)
     // fewer pages than parallelism -> one run per page
-    assert(v2Reader("dsv2_runs", client, endPage = 3, parallelism = 8)
+    assert(PS.rawPages(spark, client, 1, 3, 8)
       .rdd.getNumPartitions == 3)
   }
 
   test("SRC1/DSv2: page predicates prune the fetched range at the scan") {
     FetchRecorder.pages.clear()
     val client = new RecordingClient(new SyntheticPageClient(1000, pageSize = 100))
-    val df = v2Reader("dsv2_prune", client, endPage = 10, parallelism = 4)
+    val df = PS.rawPages(spark, client, 1, 10, 4)
       .filter($"page" >= 4 && $"page" <= 6)
     assert(df.select("value").collect().length == 3)
     // only the surviving run was fetched — the pushed range never saw pages 1-3 or 7-10
@@ -101,7 +109,7 @@ class PaginatedSourceSpec extends SparkTestBase {
   test("SRC1/DSv2: page-only projection never fetches the body") {
     FetchRecorder.pages.clear()
     val client = new RecordingClient(new SyntheticPageClient(1000, pageSize = 100))
-    val df = v2Reader("dsv2_prunecols", client, endPage = 10, parallelism = 4).select("page")
+    val df = PS.rawPages(spark, client, 1, 10, 4).select("page")
     assert(df.count() == 10)
     assert(FetchRecorder.pages.isEmpty)
   }
@@ -109,7 +117,7 @@ class PaginatedSourceSpec extends SparkTestBase {
   test("SRC1/DSv2: LIMIT is pushed into the scan — fetches stop at the limit") {
     FetchRecorder.pages.clear()
     val client = new RecordingClient(new SyntheticPageClient(1000, pageSize = 100))
-    val rows = v2Reader("dsv2_limit", client, endPage = 100, parallelism = 4)
+    val rows = PS.rawPages(spark, client, 1, 100, 4)
       .select("value").limit(3).collect()
     assert(rows.length == 3)
     import scala.jdk.CollectionConverters._
@@ -117,18 +125,18 @@ class PaginatedSourceSpec extends SparkTestBase {
     assert(FetchRecorder.pages.asScala.map(_.toInt).toSet == Set(1, 2, 3))
     // limit composes with a pushed lower bound: first 2 pages OF the range
     FetchRecorder.pages.clear()
-    assert(v2Reader("dsv2_limit2", client, endPage = 100, parallelism = 4)
+    assert(PS.rawPages(spark, client, 1, 100, 4)
       .filter($"page" >= 50).select("value").limit(2).collect().length == 2)
     assert(FetchRecorder.pages.asScala.map(_.toInt).toSet == Set(50, 51))
     // limit larger than the run is a no-op
-    assert(v2Reader("dsv2_limit3", client, endPage = 3, parallelism = 2)
+    assert(PS.rawPages(spark, client, 1, 3, 2)
       .limit(10).count() == 3L)
   }
 
   test("SRC1/DSv2: ungrouped count(*) is answered from page math, zero fetches (A2)") {
     FetchRecorder.pages.clear()
     val client = new RecordingClient(new SyntheticPageClient(1000, pageSize = 100))
-    val df = v2Reader("dsv2_cnt", client, endPage = 10, parallelism = 4)
+    val df = PS.rawPages(spark, client, 1, 10, 4)
     // the aggregate must actually be IN the scan (not just column-pruned):
     // the pushed-count scan prints its page-math description
     val plan = df.groupBy().count().queryExecution.executedPlan.toString
@@ -139,7 +147,7 @@ class PaginatedSourceSpec extends SparkTestBase {
     assert(FetchRecorder.pages.isEmpty, "count(*) must not fetch any page body")
     // grouped/aggregate shapes the scan can't answer still work (not pushed)
     FetchRecorder.pages.clear()
-    assert(v2Reader("dsv2_cnt2", client, endPage = 5, parallelism = 2)
+    assert(PS.rawPages(spark, client, 1, 5, 2)
       .groupBy($"page" % 2).count().collect().map(_.getLong(1)).sum == 5L)
   }
 
@@ -149,7 +157,7 @@ class PaginatedSourceSpec extends SparkTestBase {
     // memory sink can't recover a checkpoint; foreachBatch can
     def drive(): Array[org.apache.spark.sql.Row] = {
       StreamCollector.rows.clear()
-      val sdf = PS.streamPages(spark, "dsv2_stream",
+      val sdf = PS.streamPages(spark,
         new RecordingClient(new GrowableClient(pageSize = 100)),
         startRows = 0, parallelism = 4, pageSize = 100)
       val q = sdf.writeStream
@@ -193,14 +201,65 @@ class PaginatedSourceSpec extends SparkTestBase {
     assert(FetchRecorder.pages.asScala.map(_.toInt).toSet.subsetOf(Set(1)))
   }
 
-  test("SRC1/DSv2: flattened output equals the mapPartitions path") {
-    val v2 = PS.bulkExtractV2(spark, "dsv2_eq",
-      new SyntheticPageClient(250, pageSize = 100), parallelism = 4, pageSize = 100)
-    val v1 = PS.bulkExtract(spark, new SyntheticPageClient(250, pageSize = 100),
-      parallelism = 4, pageSize = 100)
-    assert(v2.count() == 250)
-    assert(v2.select("hash").except(v1.select("hash")).count() == 0)
-    assert(v1.select("hash").except(v2.select("hash")).count() == 0)
+  test("SRC1/S1: client accumulators count every page fetched, batch and stream") {
+    def counting(inner: PS.PageClient) = {
+      FetchCounter.n.set(0)
+      val acc = spark.sparkContext.longAccumulator
+      (new AccumulatingClient(inner, acc), acc)
+    }
+    // bulk: the page-1 count pre-flight on the driver + pages 1..3 in tasks
+    val (bulkClient, bulkAcc) = counting(new SyntheticPageClient(250, pageSize = 100))
+    PS.bulkExtract(spark, bulkClient, parallelism = 2, pageSize = 100)
+      .write.format("noop").mode("overwrite").save()
+    assert(FetchCounter.n.get == 4)
+    assert(bulkAcc.value == 4L)
+    // stream: the per-trigger count probes + pages 1..3 in tasks
+    val (streamClient, streamAcc) = counting(new SyntheticPageClient(250, pageSize = 100))
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_acc").toString
+    PS.streamPages(spark, streamClient, parallelism = 2, pageSize = 100)
+      .writeStream.format("noop").option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      .awaitTermination()
+    assert(FetchCounter.n.get >= 4)
+    assert(streamAcc.value == FetchCounter.n.get,
+      s"accumulator saw ${streamAcc.value} of ${FetchCounter.n.get} fetches")
+  }
+
+  test("SRC1/S1: no PageClient outlives its DataFrame — the registry is empty after every entry point") {
+    def registered = graft.sources.PaginatedTableProvider.registeredClients
+    val df = PS.bulkExtract(spark, new SyntheticPageClient(250, pageSize = 100), 2, 100)
+    assert(registered == 0)
+    // the table holds its client: the frame still plans and runs, twice
+    assert(df.count() == 250)
+    assert(df.filter($"session_id" === "").count() == 5)
+    // ... and again inside another read's plan: every fetched row exists
+    assert(PS.incrementalExtract(spark, new SyntheticPageClient(250, 100), df, 200, 2, 100)
+      .count() == 0)
+    assert(registered == 0)
+    // stream: run, then restart the SAME frame from its checkpoint after the
+    // source grew — the restart re-plans from the offset log with no
+    // registry entry to look up
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_reg").toString
+    GrowableSource.total = 250
+    val sdf = PS.streamPages(spark, new GrowableClient(pageSize = 100),
+      parallelism = 2, pageSize = 100)
+    assert(registered == 0)
+    def drive(): Set[Int] = {
+      StreamCollector.rows.clear()
+      sdf.writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.collect().foreach(StreamCollector.rows.add)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .awaitTermination()
+      import scala.jdk.CollectionConverters._
+      StreamCollector.rows.asScala.map(_.getInt(0)).toSet
+    }
+    assert(drive() == Set(1, 2, 3))
+    assert(registered == 0)
+    GrowableSource.total = 420
+    assert(drive() == Set(3, 4, 5))
+    assert(registered == 0)
   }
 }
 
@@ -213,6 +272,23 @@ object FetchRecorder {
 
 class RecordingClient(inner: PS.PageClient) extends PS.PageClient {
   def fetchPage(page: Int): String = { FetchRecorder.pages.add(page); inner.fetchPage(page) }
+}
+
+/** JVM-wide fetch total, the ground truth an accumulator count is checked
+  * against (same per-classloader reasoning as [[FetchRecorder]]). */
+object FetchCounter {
+  val n = new java.util.concurrent.atomic.AtomicLong
+}
+
+/** Counts every fetch twice: into [[FetchCounter]] and into a Spark
+  * accumulator, which only sees fetches made where it is registered. */
+class AccumulatingClient(inner: PS.PageClient, acc: org.apache.spark.util.LongAccumulator)
+    extends PS.PageClient {
+  def fetchPage(page: Int): String = {
+    FetchCounter.n.incrementAndGet()
+    acc.add(1)
+    inner.fetchPage(page)
+  }
 }
 
 /** Mutable row count for the streaming test's growing source — a singleton

@@ -134,6 +134,15 @@ class RegistrySpec extends SparkTestBase {
     import org.apache.spark.sql.SparkSession
     import org.apache.spark.sql.functions._
     val prev = spark
+    // the names the runtime path installs, read off a session's registry
+    // before and after GraftFunctions.register
+    val installed = {
+      val s = spark.newSession()
+      val before = s.sessionState.functionRegistry.listFunction().toSet
+      graft.functions.GraftFunctions.register(s)
+      (s.sessionState.functionRegistry.listFunction().toSet -- before).map(_.funcName)
+    }
+    assert(installed.contains("topk_pairs") && installed.contains("vec_dot"), installed)
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
@@ -145,6 +154,12 @@ class RegistrySpec extends SparkTestBase {
         .withExtensions(new graft.functions.GraftExtensions())
         .getOrCreate()
       assert(s2 ne prev)
+      // every function the runtime path installs resolves here too,
+      // aggregates included
+      val missing = installed.filterNot(n =>
+        s2.sessionState.functionRegistry.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+      assert(missing.isEmpty, s"not injected by GraftExtensions: $missing")
       // injected native function resolves
       val d = s2.sql(
         """SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
