@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 /** Dev tool (r10 verdict "Next round #2"): deterministically scale the
   * driver fixtures M× for the EMPIRICAL scale-proof sweep — the 100 TB
   * design claims are plan-audited but were never measured past sf0.1, so
-  * this generates an "sf1" (M=10) from sf0.1 and QueryTimer measures
-  * t(sf1)/t(sf0.1) per query.
+  * this generates an "sf1" (M=10) from sf0.1 and `graft.Bench <names>`
+  * measures t(sf1)/t(sf0.1) per query.
   *
   * Clone semantics (clone 0 is the untouched original, so the generated
   * directory strictly CONTAINS the source fixture):

@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.sources.HttpPageClient.jstr
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -30,18 +31,6 @@ object Verify {
           .foreach(_.unpersist(blocking = false))
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // Null oracles are skipped loudly (not crashed on): one bad registry
     // entry must never erase the oracle file for the other ~200 queries —
     // round 8 lost its entire correctness artifact to exactly that (a
@@ -52,7 +41,7 @@ object Verify {
       bad.keys.foreach(k =>
         System.err.println(s"[verify] $k has a NULL oracle — skipped"))
       val json = good
-        .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+        .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
       Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     } catch { case e: Throwable =>
       System.err.println(s"[verify] oracle dump failed: ${e.getMessage}")

@@ -1,8 +1,8 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.queries.QueryUtil.{halfUp, halfUp4}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.queries.QueryUtil.{halfUp, halfUp4, md5Int, md5IntSql}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,17 +21,6 @@ object CurationQueries {
 
   private val NBuckets = 64
 
-  /** md5-salted token hash to a [0, 65535] integer — the x21 recipe. */
-  private def h16(salt: String, c: Column): Column =
-    conv(substring(md5(concat_ws("|", lit(salt), c)), 1, 4), 16, 10).cast("long")
-
-  /** The same 4-nibble hex-to-int conversion in DuckDB SQL. */
-  private def h16Sql(salt: String, expr: String): String = {
-    val h = s"md5(concat_ws('|', '$salt', $expr))"
-    (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)")
-      .reduce((a, b) => s"($a * 16 + $b)")
-  }
-
   /** x98: DSIR importance weights — target distribution = `lang = 'en'`
     * documents, background = the rest. Hashed-unigram bucket counts are
     * add-1 smoothed over a full 64-bucket spine (so zero-count buckets
@@ -46,7 +35,7 @@ object CurationQueries {
     import spark.implicits._
     val tok = Tables.documents(spark, dir)
       .select($"doc_id", $"lang", explode(split($"text", " ")).as("tok"))
-      .withColumn("bucket", h16("dsir", $"tok") % NBuckets)
+      .withColumn("bucket", md5Int(concat_ws("|", lit("dsir"), $"tok"), 4) % NBuckets)
     val spine = spark.range(NBuckets).select($"id".as("bucket"))
     def smoothed(df: DataFrame) = spine
       .join(df.groupBy($"bucket").agg(count(lit(1)).as("c")), Seq("bucket"), "left")
@@ -72,7 +61,7 @@ object CurationQueries {
   private val dsirWeightsOracle =
     s"""WITH tok AS MATERIALIZED (
        |  SELECT doc_id, lang,
-       |         CAST(${h16Sql("dsir", "tok")} % $NBuckets AS BIGINT) AS bucket
+       |         CAST(${md5IntSql("concat_ws('|', 'dsir', tok)", 4)} % $NBuckets AS BIGINT) AS bucket
        |  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
        |        FROM documents)),
        |spine AS (SELECT CAST(range AS BIGINT) AS bucket FROM range($NBuckets)),
@@ -118,10 +107,10 @@ object CurationQueries {
     import spark.implicits._
     val tok = docs
       .select($"doc_id", $"source", explode(split($"text", " ")).as("tok"))
-      .withColumn("bucket", h16("qc", $"tok") % NBuckets)
+      .withColumn("bucket", md5Int(concat_ws("|", lit("qc"), $"tok"), 4) % NBuckets)
     val weights = spark.range(NBuckets).select($"id".as("bucket"))
       .select($"bucket",
-        (h16("qw", $"bucket".cast("string")) % 2001 - 1000).as("w"))
+        (md5Int(concat_ws("|", lit("qw"), $"bucket".cast("string")), 4) % 2001 - 1000).as("w"))
     tok.join(broadcast(weights), "bucket")
       .groupBy($"doc_id", $"source")
       .agg(count(lit(1)).as("n_tok"), sum($"w").as("s"))
@@ -134,11 +123,11 @@ object CurationQueries {
   private val qualityClassifierOracle =
     s"""WITH tok AS (
        |  SELECT doc_id, source,
-       |         CAST(${h16Sql("qc", "tok")} % $NBuckets AS BIGINT) AS bucket
+       |         CAST(${md5IntSql("concat_ws('|', 'qc', tok)", 4)} % $NBuckets AS BIGINT) AS bucket
        |  FROM (SELECT doc_id, source, unnest(string_split(text, ' ')) AS tok
        |        FROM documents)),
        |w AS (SELECT CAST(range AS BIGINT) AS bucket,
-       |        CAST(${h16Sql("qw", "CAST(range AS VARCHAR)")} % 2001 - 1000 AS BIGINT) AS w
+       |        CAST(${md5IntSql("concat_ws('|', 'qw', CAST(range AS VARCHAR))", 4)} % 2001 - 1000 AS BIGINT) AS w
        |      FROM range($NBuckets))
        |SELECT doc_id, source, count(*) AS n_tok,
        |       floor((CAST(sum(w) AS DOUBLE)
@@ -262,10 +251,10 @@ object CurationQueries {
     import spark.implicits._
     val tok = Tables.documents(spark, dir)
       .select($"doc_id", $"lang", explode(split($"text", " ")).as("tok"))
-      .withColumn("bucket", h16("qc", $"tok") % NBuckets)
+      .withColumn("bucket", md5Int(concat_ws("|", lit("qc"), $"tok"), 4) % NBuckets)
     val weights = spark.range(NBuckets).select($"id".as("bucket"))
       .select($"bucket",
-        (h16("qw", $"bucket".cast("string")) % 2001 - 1000).as("w"))
+        (md5Int(concat_ws("|", lit("qw"), $"bucket".cast("string")), 4) % 2001 - 1000).as("w"))
     val scored = tok.join(broadcast(weights), "bucket")
       .groupBy($"doc_id", $"lang")
       .agg(count(lit(1)).as("n_tok"), sum($"w").as("s"))
@@ -289,11 +278,11 @@ object CurationQueries {
   private val scoreCalibrationOracle =
     s"""WITH tok AS (
        |  SELECT doc_id, lang,
-       |         CAST(${h16Sql("qc", "tok")} % $NBuckets AS BIGINT) AS bucket
+       |         CAST(${md5IntSql("concat_ws('|', 'qc', tok)", 4)} % $NBuckets AS BIGINT) AS bucket
        |  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok
        |        FROM documents)),
        |w AS (SELECT CAST(range AS BIGINT) AS bucket,
-       |        CAST(${h16Sql("qw", "CAST(range AS VARCHAR)")} % 2001 - 1000 AS BIGINT) AS w
+       |        CAST(${md5IntSql("concat_ws('|', 'qw', CAST(range AS VARCHAR))", 4)} % 2001 - 1000 AS BIGINT) AS w
        |      FROM range($NBuckets)),
        |scored AS (
        |  SELECT doc_id, lang, count(*) AS n_tok, CAST(sum(w) AS BIGINT) AS s,

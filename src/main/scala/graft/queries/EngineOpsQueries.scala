@@ -525,8 +525,7 @@ object EngineOpsQueries {
     import spark.implicits._
     val dec = "decimal(38,0)"
     val o = Tables.orders(spark, dir).select($"o_orderpriority",
-      conv(substring(md5(concat_ws("|", lit("aqp"), $"o_orderkey")), 1, 4), 16, 10)
-        .cast("long").as("h"),
+      QueryUtil.md5Int(concat_ws("|", lit("aqp"), $"o_orderkey"), 4).as("h"),
       floor($"o_totalprice" * 100 + 0.5).cast("long").as("c"))
     val sample = o.filter($"h" % AqpMod === 0)
       .groupBy($"o_orderpriority")
@@ -550,9 +549,7 @@ object EngineOpsQueries {
   }
 
   private val aqpGroupByOracle = {
-    val h = "md5(concat_ws('|', 'aqp', CAST(o_orderkey AS VARCHAR)))"
-    val hInt = (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)")
-      .reduce((a, b) => s"($a * 16 + $b)")
+    val hInt = QueryUtil.md5IntSql("concat_ws('|', 'aqp', CAST(o_orderkey AS VARCHAR))", 4)
     s"""WITH o AS (
        |  SELECT o_orderpriority, $hInt AS h,
        |         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c

@@ -97,8 +97,8 @@ object QueryUtil {
     *
     * STORAGE CONTRACT (applies to this and every other eager
     * `localCheckpoint(true)` a query function takes): the checkpoint
-    * blocks live until the harness frees them. Bench, QueryTimer and
-    * Verify all unpersist every persistent RDD between queries; a direct
+    * blocks live until the harness frees them. Bench and Verify both
+    * unpersist every persistent RDD between queries; a direct
     * caller that invokes many query functions in one SparkContext must do
     * the same (`spark.sparkContext.getPersistentRDDs.values.foreach(
     * _.unpersist(false))` after materializing each result) or cached

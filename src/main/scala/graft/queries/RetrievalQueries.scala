@@ -793,19 +793,11 @@ object RetrievalQueries {
        |ORDER BY q_id, rk""".stripMargin
   }
 
-  /** The x21/x99 md5-nibble hash in SQL, local copy for impact weights. */
-  private def sparseHashSql(salt: String, expr: String): String = {
-    val h = s"md5(concat_ws('|', '$salt', $expr))"
-    (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)")
-      .reduce((a, b) => s"($a * 16 + $b)")
-  }
-
   /** A frozen per-term "learned" impact weight in [1, 1000] — the
     * deployment shape of SPLADE-style models, where the expansion model
     * ran offline and the index stores integer impacts. */
   private def impact(salt: String, t: org.apache.spark.sql.Column) =
-    conv(substring(md5(concat_ws("|", lit(salt), t)), 1, 4), 16, 10)
-      .cast("long") % 1000L + 1L
+    QueryUtil.md5Int(concat_ws("|", lit(salt), t), 4) % 1000L + 1L
 
   /** x115: learned-sparse retrieval — the impact-weighted inverted-index
     * scoring that serves SPLADE/uniCOIL-class models: each posting
@@ -852,8 +844,8 @@ object RetrievalQueries {
        |q AS (SELECT doc_id AS q_id, t FROM tf WHERE doc_id % 100 = 0),
        |sc AS (
        |  SELECT q_id, tf.doc_id,
-       |         sum((${sparseHashSql("sq", "t")} % 1000 + 1) * tf.tf
-       |             * (${sparseHashSql("sw", "t")} % 1000 + 1)) AS score
+       |         sum((${QueryUtil.md5IntSql("concat_ws('|', 'sq', t)", 4)} % 1000 + 1) * tf.tf
+       |             * (${QueryUtil.md5IntSql("concat_ws('|', 'sw', t)", 4)} % 1000 + 1)) AS score
        |  FROM q JOIN tf USING (t) WHERE tf.doc_id <> q_id
        |  GROUP BY q_id, tf.doc_id),
        |r AS (SELECT *, row_number() OVER (PARTITION BY q_id

@@ -1,9 +1,9 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import QueryUtil.halfUp4
+import QueryUtil.{halfUp4, md5IntSql}
 
 /** Round-10 thirteenth tier: t-closeness (completing the k-anonymity →
   * l-diversity → t-closeness privacy triad), a reliability-diagram /
@@ -85,14 +85,6 @@ object Round10Queries13 {
   private val EceLabelChars = 300
   private val EceBins = 10
 
-  private def h16(salt: String, c: Column): Column =
-    conv(substring(md5(concat_ws("|", lit(salt), c)), 1, 4), 16, 10).cast("long")
-  private def h16Sql(salt: String, expr: String): String = {
-    val h = s"md5(concat_ws('|', '$salt', $expr))"
-    (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)")
-      .reduce((a, b) => s"($a * 16 + $b)")
-  }
-
   /** x166: classifier calibration audit (reliability diagram + per-bin
     * expected-calibration-error contributions) for the x99 hashed quality
     * classifier against a score-independent ground truth (doc length ≥
@@ -134,11 +126,11 @@ object Round10Queries13 {
     val nb = 64
     s"""WITH tok AS (
        |  SELECT doc_id, source,
-       |         CAST(${h16Sql("qc", "tok")} % $nb AS BIGINT) AS bucket
+       |         CAST(${md5IntSql("concat_ws('|', 'qc', tok)", 4)} % $nb AS BIGINT) AS bucket
        |  FROM (SELECT doc_id, source, unnest(string_split(text, ' ')) AS tok
        |        FROM documents)),
        |w AS (SELECT CAST(range AS BIGINT) AS bucket,
-       |        CAST(${h16Sql("qw", "CAST(range AS VARCHAR)")} % 2001 - 1000 AS BIGINT) AS w
+       |        CAST(${md5IntSql("concat_ws('|', 'qw', CAST(range AS VARCHAR))", 4)} % 2001 - 1000 AS BIGINT) AS w
        |      FROM range($nb)),
        |sc AS (SELECT doc_id,
        |         CAST(floor((floor((CAST(sum(w) AS DOUBLE)

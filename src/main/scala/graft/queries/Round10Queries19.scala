@@ -126,9 +126,7 @@ object Round10Queries19 {
   }
 
   private val ictPairsOracle = {
-    val h16 = "md5(concat('ict|', CAST(doc_id AS VARCHAR)))"
-    val hv = (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($h16, $i, 1)) - 1)")
-      .reduce((a, b) => s"($a * 16 + $b)")
+    val hv = QueryUtil.md5IntSql("concat('ict|', CAST(doc_id AS VARCHAR))", 4)
     s"""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
        |           WHERE len(string_split(text, ' ')) >= ${IctW * 2}),
        |c AS (SELECT doc_id,

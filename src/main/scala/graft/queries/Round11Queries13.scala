@@ -207,17 +207,12 @@ object Round11Queries13 {
 
   private val brierDecompositionOracle = {
     val nb = 64
-    def h16Sql(salt: String, expr: String): String = {
-      val h = s"md5(concat_ws('|', '$salt', $expr))"
-      (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)")
-        .reduce((a, b) => s"($a * 16 + $b)")
-    }
     s"""WITH tok AS (
-       |  SELECT doc_id, CAST(${h16Sql("qc", "tok")} % $nb AS BIGINT) AS bucket
+       |  SELECT doc_id, CAST(${QueryUtil.md5IntSql("concat_ws('|', 'qc', tok)", 4)} % $nb AS BIGINT) AS bucket
        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
        |        FROM documents)),
        |w AS (SELECT CAST(range AS BIGINT) AS bucket,
-       |        CAST(${h16Sql("qw", "CAST(range AS VARCHAR)")} % 2001 - 1000 AS BIGINT) AS w
+       |        CAST(${QueryUtil.md5IntSql("concat_ws('|', 'qw', CAST(range AS VARCHAR))", 4)} % 2001 - 1000 AS BIGINT) AS w
        |      FROM range($nb)),
        |sc AS (SELECT doc_id,
        |         CAST(floor((floor((CAST(sum(w) AS DOUBLE)

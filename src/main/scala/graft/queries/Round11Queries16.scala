@@ -86,18 +86,13 @@ object Round11Queries16 {
 
   private val pairedTtestOracle = {
     // x99 scorer CTEs (the x166/x275 rendering)
-    def h16Sql(salt: String, expr: String): String = {
-      val h = s"md5(concat_ws('|', '$salt', $expr))"
-      (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)")
-        .reduce((a, b) => s"($a * 16 + $b)")
-    }
     s"""WITH ${Round11Queries8.lrKeepCtes},
        |tok2 AS (
-       |  SELECT doc_id, CAST(${h16Sql("qc", "tok")} % 64 AS BIGINT) AS bucket
+       |  SELECT doc_id, CAST(${QueryUtil.md5IntSql("concat_ws('|', 'qc', tok)", 4)} % 64 AS BIGINT) AS bucket
        |  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
        |        FROM documents)),
        |w2 AS (SELECT CAST(range AS BIGINT) AS bucket,
-       |        CAST(${h16Sql("qw", "CAST(range AS VARCHAR)")} % 2001 - 1000 AS BIGINT) AS w
+       |        CAST(${QueryUtil.md5IntSql("concat_ws('|', 'qw', CAST(range AS VARCHAR))", 4)} % 2001 - 1000 AS BIGINT) AS w
        |      FROM range(64)),
        |scb AS (SELECT doc_id,
        |         floor((CAST(sum(w) AS DOUBLE)

@@ -118,9 +118,7 @@ object Round11Queries22 {
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select($"doc_id")
       .localCheckpoint(true)
-    def h(salt: String) =
-      conv(substring(md5(concat_ws("|", lit(salt), $"doc_id")), 1, 4), 16, 10)
-        .cast("long")
+    def h(salt: String) = QueryUtil.md5Int(concat_ws("|", lit(salt), $"doc_id"), 4)
     val s1 = docs.filter(h("cap1") % 4 === 0L) // ~25% capture
     val s2 = docs.filter(h("cap2") % 4 === 0L)
     val m = s1.join(s2, "doc_id")
@@ -136,11 +134,8 @@ object Round11Queries22 {
   }
 
   private val captureRecaptureOracle = {
-    def h(salt: String): String = {
-      val md = s"md5(concat_ws('|', '$salt', CAST(doc_id AS VARCHAR)))"
-      (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($md, $i, 1)) - 1)")
-        .reduce((a, b) => s"($a * 16 + $b)")
-    }
+    def h(salt: String): String =
+      QueryUtil.md5IntSql(s"concat_ws('|', '$salt', CAST(doc_id AS VARCHAR))", 4)
     s"""WITH s1 AS MATERIALIZED (
        |  SELECT doc_id FROM documents WHERE ${h("cap1")} % 4 = 0),
        |s2 AS MATERIALIZED (

@@ -4,6 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import QueryUtil.{md5Int, md5IntSql}
 
 /** Round-9 tier. Opens with the batch-parity pair for the stateful
   * streaming top-k (`IncrementalStream.topkStream`), closing the r8 gap
@@ -97,16 +98,6 @@ object Round9Queries {
   /** Fold count for [[clusteredKfold]]. */
   private val KFolds = 5
 
-  /** The x57 deterministic 16-bit hash, salted per use. */
-  private def h16(salt: String, c: org.apache.spark.sql.Column) =
-    conv(substring(md5(concat_ws("|", lit(salt), c)), 1, 4), 16, 10).cast("long")
-
-  private def h16Sql(salt: String, c: String): String = {
-    val h = s"md5(concat_ws('|', '$salt', CAST($c AS VARCHAR)))"
-    (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)")
-      .reduce((a, b) => s"($a * 16 + $b)")
-  }
-
   /** x118: near-dup-aware k-fold assignment — cross-validation folds hashed
     * on the x14 dedup CLUSTER id, not the document id, so near-duplicate
     * documents can never straddle folds (train/test leakage through
@@ -125,8 +116,8 @@ object Round9Queries {
     val cl = DedupQueries.dedupClusters(spark, dir)
       .select($"doc_id", $"cluster_id")
     val folded = cl.select($"doc_id", $"cluster_id",
-      (h16("fold", $"cluster_id") % KFolds).as("fold"),
-      (h16("fold", $"doc_id") % KFolds).as("naive_fold"))
+      (md5Int(concat_ws("|", lit("fold"), $"cluster_id"), 4) % KFolds).as("fold"),
+      (md5Int(concat_ws("|", lit("fold"), $"doc_id"), 4) % KFolds).as("naive_fold"))
     val naiveLeaky = folded.groupBy($"cluster_id")
       .agg(countDistinct($"naive_fold").as("nf"))
       .agg(sum(when($"nf" > 1, 1L).otherwise(0L)).as("naive_leaky_clusters"))
@@ -140,8 +131,8 @@ object Round9Queries {
   private lazy val clusteredKfoldOracle =
     DedupQueries.clustersOracleCtes +
       s""", folded AS (SELECT doc_id, cluster_id,
-         |    ${h16Sql("fold", "cluster_id")} % $KFolds AS fold,
-         |    ${h16Sql("fold", "doc_id")} % $KFolds AS naive_fold
+         |    ${md5IntSql("concat_ws('|', 'fold', CAST(cluster_id AS VARCHAR))", 4)} % $KFolds AS fold,
+         |    ${md5IntSql("concat_ws('|', 'fold', CAST(doc_id AS VARCHAR))", 4)} % $KFolds AS naive_fold
          |  FROM labeled),
          |leaky AS (SELECT CAST(sum(CASE WHEN nf > 1 THEN 1 ELSE 0 END) AS BIGINT) AS naive_leaky_clusters
          |          FROM (SELECT cluster_id, count(DISTINCT naive_fold) AS nf
@@ -331,9 +322,7 @@ object Round9Queries {
   }
 
   private val cdcChunksOracle = {
-    val hx = s"md5(substr(text, CAST(i AS INTEGER), $CdcW))"
-    val h16win = (1 to 4).map(j => s"(strpos('0123456789abcdef', substr($hx, $j, 1)) - 1)")
-      .reduce((a, b) => s"($a * 16 + $b)")
+    val h16win = md5IntSql(s"substr(text, CAST(i AS INTEGER), $CdcW)", 4)
     s"""WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents),
        |s AS (SELECT doc_id, text, len,
        |        list_concat([CAST(1 AS BIGINT)],
@@ -534,11 +523,8 @@ object Round9Queries {
   }
 
   private val spanCorruptionOracle = {
-    def h(salt: String) = {
-      val m = s"md5(concat_ws('|', '$salt', CAST(doc_id AS VARCHAR), CAST(k AS VARCHAR)))"
-      (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($m, $i, 1)) - 1)")
-        .reduce((a, b) => s"($a * 16 + $b)")
-    }
+    def h(salt: String) =
+      md5IntSql(s"concat_ws('|', '$salt', CAST(doc_id AS VARCHAR), CAST(k AS VARCHAR))", 4)
     s"""WITH b AS (
        |  SELECT doc_id, string_split(text, ' ') AS t, len(string_split(text, ' ')) AS n
        |  FROM documents),

@@ -323,11 +323,8 @@ object TextQueries {
   }
 
   private val countMinOracle = {
-    def hexVal(md: String) =
-      (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($md, $i, 1)) - 1)")
-        .reduce((a, b) => s"($a * 16 + $b)")
     val rows = (0 until CmsD).map(j =>
-      s"SELECT tok, c, $j AS j, ${hexVal(s"md5('$j' || ':' || tok)")} % $CmsW AS h FROM exact")
+      s"SELECT tok, c, $j AS j, ${QueryUtil.md5IntSql(s"'$j' || ':' || tok", 4)} % $CmsW AS h FROM exact")
       .mkString("\n       UNION ALL ")
     s"""WITH exact AS (SELECT tok, CAST(count(*) AS BIGINT) AS c
        |           FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)

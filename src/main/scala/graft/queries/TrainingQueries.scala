@@ -4,7 +4,7 @@ import graft.{QueryDef, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.QueryUtil.halfUp4
+import graft.queries.QueryUtil.{halfUp4, md5Int, md5IntSql}
 
 /** Training-corpus preparation operators beyond the x50–x53 tier (north
   * star: LLM-data-pipeline ops the reference never had — the reference is a
@@ -178,13 +178,8 @@ object TrainingQueries {
 
   /** 16-bit integer from the first 4 hex chars of md5 — same cross-engine
     * idiom as the x53 mixture hash (PipelineQueries), salted differently. */
-  private def splitHashCol =
-    conv(substring(md5(concat_ws("|", lit("split"), col("doc_id"))), 1, 4), 16, 10).cast("long")
-  private val splitHashSql = {
-    val h = "md5(concat_ws('|', 'split', CAST(doc_id AS VARCHAR)))"
-    (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)")
-      .reduce((a, b) => s"($a * 16 + $b)")
-  }
+  private def splitHashCol = md5Int(concat_ws("|", lit("split"), col("doc_id")), 4)
+  private val splitHashSql = md5IntSql("concat_ws('|', 'split', CAST(doc_id AS VARCHAR))", 4)
 
   /** x57: deterministic stratified train/val/test split — each doc lands in
     * a split by 16 bits of a salted md5 (~80/10/10), reproducible across
@@ -287,8 +282,7 @@ object TrainingQueries {
     * before the shuffle). */
   def weightedSample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val h = conv(substring(md5(concat_ws("|", lit("wsample"), col("doc_id"))), 1, 4), 16, 10)
-      .cast("long")
+    val h = md5Int(concat_ws("|", lit("wsample"), col("doc_id")), 4)
     val u = (h.cast("double") + lit(0.5)) / lit(65536.0)
     val lnfp = floor(log(u) * lit(1e9) + lit(0.5)).cast("long")
     val w = Window.partitionBy($"lang").orderBy($"key".desc, $"doc_id")
@@ -303,11 +297,7 @@ object TrainingQueries {
   }
 
   private val weightedSampleOracle = {
-    val h = {
-      val md = "md5(concat_ws('|', 'wsample', CAST(doc_id AS VARCHAR)))"
-      (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($md, $i, 1)) - 1)")
-        .reduce((a, b) => s"($a * 16 + $b)")
-    }
+    val h = md5IntSql("concat_ws('|', 'wsample', CAST(doc_id AS VARCHAR))", 4)
     s"""WITH k AS (SELECT lang, doc_id, n_chars,
        |        CAST(floor(ln((CAST($h AS DOUBLE) + 0.5) / 65536.0) * 1000000000.0 + 0.5) AS BIGINT) AS lnfp
        |      FROM documents WHERE n_chars > 0),
@@ -386,8 +376,7 @@ object TrainingQueries {
     val docs = Tables.documents(spark, dir)
     val counts = docs.groupBy($"lang").agg(count(lit(1)).as("n_in"))
     val nmin = counts.agg(min($"n_in").as("n_min"))
-    val hv = conv(substring(md5(concat_ws("|", lit("tmix"), $"doc_id")), 1, 4), 16, 10)
-      .cast("long")
+    val hv = md5Int(concat_ws("|", lit("tmix"), $"doc_id"), 4)
     docs.select($"lang", hv.as("hv"))
       .join(broadcast(counts), "lang")
       .crossJoin(broadcast(nmin))
@@ -401,9 +390,7 @@ object TrainingQueries {
   }
 
   private val temperatureMixtureOracle = {
-    val h = "md5(concat_ws('|', 'tmix', CAST(doc_id AS VARCHAR)))"
-    val hv = (1 to 4).map(i => s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)")
-      .reduce((a, b) => s"($a * 16 + $b)")
+    val hv = md5IntSql("concat_ws('|', 'tmix', CAST(doc_id AS VARCHAR))", 4)
     s"""WITH c AS (SELECT lang, count(*) AS n_in FROM documents GROUP BY lang),
        |m AS (SELECT min(n_in) AS n_min FROM c),
        |d AS (SELECT lang, $hv AS hv FROM documents),

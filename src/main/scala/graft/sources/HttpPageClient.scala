@@ -76,7 +76,9 @@ object HttpPageClient {
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]
 
   /** JSON string literal with quote/backslash/control-char escapes —
-    * the repo's ONE escaper (Bench's output line uses it too). */
+    * the repo's ONE escaper (Bench's output line and Verify's
+    * oracle_sql.json use it too; it escapes every control char, so a tab
+    * in an oracle's SQL cannot break a JSON reader). */
   private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"

@@ -1,13 +1,14 @@
 package org.apache.spark
 
-/** Bench-only shim: task-metric events arrive on the ASYNC listener bus, so
-  * a per-run metrics read right after an action can miss the run's last
+/** perfbench shim: task-metric events arrive on the ASYNC listener bus, so
+  * a metrics read right after an action can miss the action's last
   * tasks. `LiveListenerBus.waitUntilEmpty` is the public-in-class but
   * private[spark]-reachable drain (SparkContext.listenerBus is
   * private[spark]); this one-method object lives in the org.apache.spark
   * package purely to reach it — the same trick Spark's own tests use
   * (public Spark source, core/src/main/scala/.../LiveListenerBus.scala).
-  * Never on a query's timed path: Bench calls it only between runs. */
+  * Never on a timed path: perfbench's Harness and Tracer call it only at
+  * the edges of a traced or measured window. */
 object GraftSparkHooks {
   def drainListenerBus(sc: SparkContext, timeoutMs: Long = 10000L): Unit =
     try sc.listenerBus.waitUntilEmpty(timeoutMs)
