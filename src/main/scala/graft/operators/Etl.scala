@@ -64,8 +64,10 @@ object Etl {
     *
     * Lineage note: the result references `existing` twice, so folding this
     * in a loop without a materialization boundary grows the plan
-    * exponentially — write through a sink (Sinks.appendNew does) or
-    * `localCheckpoint` between merges. */
+    * exponentially — `localCheckpoint` between merges, or merge through a
+    * sink: Sinks.appendNew appends only the new rows in one write job and
+    * the next round reads the committed files back, so no plan carries
+    * the previous rounds. */
   def mergeIncremental(existing: DataFrame, incoming: DataFrame, hashCol: String = "hash"): DataFrame =
     existing.unionByName(
       incoming.join(existing.select(hashCol), Seq(hashCol), "left_anti"))

@@ -2,6 +2,8 @@ package graft.sinks
 
 import graft.operators.Etl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.types.StructType
 
 /** Sink-side operators re-expressing the reference's write path
@@ -16,9 +18,11 @@ import org.apache.spark.sql.types.StructType
   *    [[foreachBatched]] (foreachPartition + grouped iterator; for JDBC
   *    targets this is `option("batchsize", 2500)`)
   *
-  * Scale: appendNew's anti-join shuffles on the hash unless the existing
-  * key set broadcasts; at 100 TB the sink table is bucketed by hash so the
-  * big side never reshuffles. bulkReplace is a pure distributed write
+  * Scale: appendNew anti-joins against the sink's hash column as stored —
+  * no distinct key set, since a left-anti join needs no unique keys — and
+  * scans the sink once per round; the join shuffles on the hash unless the
+  * key set broadcasts, and at 100 TB the sink table is bucketed by hash so
+  * the big side never reshuffles. bulkReplace is a pure distributed write
   * (dynamic partition overwrite when the sink is partitioned).
   */
 object Sinks {
@@ -135,22 +139,53 @@ object Sinks {
   /** SNK1: append only rows whose `hashCol` is not already in the sink;
     * within-batch dups collapse deterministically first. Returns the number
     * of rows actually inserted (the reference's `total_inserted` counter,
-    * A3). The existing key set is materialized before the append so the
-    * read can't race its own write. */
+    * A3).
+    *
+    * One Spark write job per call. The sink is read with `df`'s schema (no
+    * schema-inference job) and anti-joined on its hash column as stored (a
+    * left-anti join needs no distinct keys). The rows land in `df`'s column
+    * order, so a sink loaded with one layout keeps it in every file; then a
+    * schema-inferring read of the sink, like the one `df` anti-joined in
+    * PaginatedSource.incrementalExtract, has the same relation as this read
+    * and AQE reuses its broadcast: the sink's hashes are scanned once. A
+    * missing sink path means "no sink yet" and every deduped row is new.
+    * The count comes from [[writeCounted]].
+    *
+    * Reading its own path is safe without materializing first: the sink's
+    * file list is fixed when the read is planned, and the appended files
+    * appear only at job commit, so the anti-join sees the old files only.
+    *
+    * Empty input: when the new rows' optimized plan is an empty
+    * LocalRelation (incrementalExtract's "API has nothing new"
+    * `existing.limit(0)`), nothing is written and 0 is returned. A replay
+    * whose rows all exist already also returns 0, but the write job still
+    * runs and may commit one zero-row file. */
   def appendNew(spark: SparkSession, df: DataFrame, path: String,
                 hashCol: String, tieBreak: Seq[String]): Long = {
     val deduped = Etl.dedupByHash(df, hashCol, tieBreak)
-    val existingOpt =
-      try Some(spark.read.parquet(path).select(hashCol).distinct())
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
-    val fresh = existingOpt
-      .map(e => deduped.join(e, Seq(hashCol), "left_anti"))
-      .getOrElse(deduped)
-      .cache()
-    val n = fresh.count() // materialize BEFORE writing to the same path
-    if (n > 0) fresh.write.mode(SaveMode.Append).parquet(path)
-    fresh.unpersist()
-    n
+    val fresh =
+      try {
+        val known = spark.read.schema(df.schema).parquet(path).select(hashCol)
+        deduped.join(known, deduped(hashCol) === known(hashCol), "left_anti")
+      } catch { case _: org.apache.spark.sql.AnalysisException => deduped }
+    fresh.queryExecution.optimizedPlan match {
+      case r: LocalRelation if r.data.isEmpty => 0L
+      case _ => writeCounted(fresh, path)
+    }
+  }
+
+  /** Append `rows` to the parquet sink at `path` in one job and return how
+    * many rows it wrote. The count is an always-true filter on top of
+    * `rows`, marked nondeterministic so the optimizer cannot push it below
+    * a join or window into an earlier stage; it runs in the write's result
+    * stage, where Spark applies a task's accumulator update once per
+    * partition and drops the updates of failed attempts, so a retried task
+    * is counted once. */
+  private[graft] def writeCounted(rows: DataFrame, path: String): Long = {
+    val written = rows.sparkSession.sparkContext.longAccumulator("graft.append.inserted")
+    val count = udf { () => written.add(1); true }.asNondeterministic()
+    rows.filter(count()).write.mode(SaveMode.Append).parquet(path)
+    written.value
   }
 
   /** S3: partition-local micro-batching — `sink` is invoked once per group

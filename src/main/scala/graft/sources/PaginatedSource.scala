@@ -177,8 +177,13 @@ object PaginatedSource {
     * `dbCount` already-loaded rows and return the rows whose hash `existing`
     * lacks — the overlap rows of the re-fetched boundary page drop out here.
     * Within-round duplicates stay; the sink's merge ([[graft.sinks.Sinks.appendNew]],
-    * the reference's ON DUPLICATE KEY no-op) collapses them. Returns no rows
-    * when the API has nothing new (salesforce_extractor.py:271-274). */
+    * the reference's ON DUPLICATE KEY no-op) collapses them. The rows keep
+    * the page columns' order (the bulk load's layout), so when `existing`
+    * reads the sink, appendNew's own read of it matches and AQE reuses this
+    * anti-join's broadcast: the round scans the sink's hashes once and lands
+    * in one write job. Returns `existing.limit(0)` when the API has nothing
+    * new (salesforce_extractor.py:271-274); appendNew writes nothing for
+    * it. */
   def incrementalExtract(spark: SparkSession, client: PageClient, existing: DataFrame,
                          dbCount: Long, parallelism: Int = 8,
                          pageSize: Int = PageSize): DataFrame = {
@@ -187,8 +192,9 @@ object PaginatedSource {
     else {
       val start = incrementalStartPage(dbCount, pageSize)
       val end = totalPages(apiCount, pageSize)
-      flattenPages(rawPages(spark, client, start, end, parallelism))
-        .join(existing.select("hash"), Seq("hash"), "left_anti")
+      val pages = flattenPages(rawPages(spark, client, start, end, parallelism))
+      val known = existing.select("hash")
+      pages.join(known, pages("hash") === known("hash"), "left_anti")
     }
   }
 }

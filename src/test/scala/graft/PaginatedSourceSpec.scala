@@ -225,6 +225,33 @@ class PaginatedSourceSpec extends SparkTestBase {
       s"accumulator saw ${streamAcc.value} of ${FetchCounter.n.get} fetches")
   }
 
+  test("S1+SNK1: an incremental round fetches each page of its range once, extract through append") {
+    val path = tmpDir("sink") + "/t"
+    graft.sinks.Sinks.bulkReplace(
+      PS.bulkExtract(spark, new SyntheticPageClient(200, pageSize = 100), 2, 100), path)
+    FetchCounter.n.set(0)
+    FetchRecorder.pages.clear()
+    val acc = spark.sparkContext.longAccumulator
+    val client = new AccumulatingClient(new RecordingClient(new SyntheticPageClient(350, pageSize = 100)), acc)
+    val existing = spark.read.parquet(path)
+    val fresh = PS.incrementalExtract(spark, client, existing, existing.count(), 2, 100)
+    val n = graft.sinks.Sinks.appendNew(spark, fresh, path, "hash", Seq("url", "order"))
+    assert(n == 150)
+    assert(spark.read.parquet(path).count() == 350)
+    // the round keeps the bulk load's column order in every file, so a
+    // schema-inferring read of the sink sees the schema appendNew reads with
+    assert(fresh.columns.toSeq == existing.columns.toSeq)
+    val fileColumns = new java.io.File(path).listFiles().filter(_.getName.startsWith("part-"))
+      .map(f => spark.read.parquet(f.getPath).columns.toSeq).distinct.toSeq
+    assert(fileColumns == Seq(existing.columns.toSeq), fileColumns)
+    // the page-1 count pre-flight, then pages 2..4 (2 is the boundary page)
+    // once each; counting before a separate write job would fetch them twice
+    import scala.jdk.CollectionConverters._
+    assert(FetchRecorder.pages.asScala.map(_.toInt).toSet == Set(1, 2, 3, 4))
+    assert(acc.value == 4L, s"${acc.value} fetches")
+    assert(FetchCounter.n.get == 4L)
+  }
+
   test("SRC1/S1: no PageClient outlives its DataFrame — the registry is empty after every entry point") {
     def registered = graft.sources.PaginatedTableProvider.registeredClients
     val df = PS.bulkExtract(spark, new SyntheticPageClient(250, pageSize = 100), 2, 100)

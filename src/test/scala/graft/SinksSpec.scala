@@ -127,6 +127,57 @@ class SinksSpec extends SparkTestBase {
     assert(Sinks.appendNew(spark, Seq(("b", 5), ("c", 3)).toDF("hash", "v"), path, "hash", Seq("v")) == 0)
   }
 
+  test("SNK1: appendNew writes nothing for statically empty input; a replay changes no rows") {
+    val path = tmpDir("sink") + "/t"
+    assert(Sinks.appendNew(spark, Seq(("a", 1), ("b", 2)).toDF("hash", "v"), path, "hash", Seq("v")) == 2)
+    def parts = new java.io.File(path).list().filter(_.startsWith("part-")).sorted.toSeq
+    def rows = spark.read.parquet(path).orderBy("hash").as[(String, Int)].collect().toSeq
+    val files0 = parts
+    // incrementalExtract's "API has nothing new" result is existing.limit(0)
+    val existing = spark.read.parquet(path)
+    val nothingNew = graft.sources.PaginatedSource.incrementalExtract(
+      spark, new graft.sources.SyntheticPageClient(2, pageSize = 100), existing, 2L, 2, 100)
+    assert(Sinks.appendNew(spark, nothingNew, path, "hash", Seq("v")) == 0)
+    assert(parts == files0)
+    // a replay of rows the sink already holds, read from the sink itself
+    assert(Sinks.appendNew(spark, existing, path, "hash", Seq("v")) == 0)
+    assert(rows == Seq(("a", 1), ("b", 2)))
+  }
+
+  test("SNK1: appendNew's count holds when a write task fails once and is retried") {
+    def seeded(): String = {
+      val path = tmpDir("sink") + "/t"
+      Sinks.appendNew(spark, (0 until 50).map(i => (s"k$i", i)).toDF("hash", "v"), path, "hash", Seq("v"))
+      path
+    }
+    // 100 hashes, 75 of them new, plus 10 within-batch duplicates
+    val batch = ((25 until 125) ++ (90 until 100)).map(i => (s"k$i", i)).toDF("hash", "v")
+    val clean = seeded()
+    val nClean = Sinks.appendNew(spark, batch, clean, "hash", Seq("v"))
+    assert(nClean == 75)
+    // The same new rows through the counted write, with a nondeterministic
+    // filter that fails the first attempt of the task holding "k99". It sits
+    // above the anti-join, so it runs in the write's result stage, and the
+    // rows that task counted before failing must not be counted again.
+    val retried = seeded()
+    RetryProbe.failed.set(false)
+    val failOnce = udf { (h: String) =>
+      if (h == "k99" && org.apache.spark.TaskContext.get().attemptNumber() == 0) {
+        RetryProbe.failed.set(true)
+        throw new RuntimeException("injected first-attempt failure")
+      }
+      true
+    }.asNondeterministic()
+    val fresh = graft.operators.Etl.dedupByHash(batch, "hash", Seq("v"))
+      .join(spark.read.parquet(retried).select("hash"), Seq("hash"), "left_anti")
+    val nRetried = Sinks.writeCounted(fresh.filter(failOnce($"hash")), retried)
+    assert(RetryProbe.failed.get, "the injected failure never ran")
+    val landed = spark.read.parquet(retried).count() - 50
+    assert(nRetried == landed, s"counted $nRetried, $landed landed")
+    assert(nRetried == nClean)
+    assert(spark.read.parquet(retried).select("hash").distinct().count() == 125)
+  }
+
   test("SNK1 CDC: insert/update/delete merge — latest op per key wins, replay-idempotent") {
     val existing = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
     val batch = Seq(
@@ -207,6 +258,12 @@ class SinksSpec extends SparkTestBase {
     assert(back.count() == docs.count())
     assert(back.distinct().count() == docs.count())
   }
+}
+
+/** Whether the retry test's injected failure ran: a singleton (per
+  * classloader) because the UDF closure is serialized into the task. */
+object RetryProbe {
+  val failed = new java.util.concurrent.atomic.AtomicBoolean(false)
 }
 
 /** In-JVM stand-in for a MySQL table with a unique key on `hash`
