@@ -1,6 +1,5 @@
 package graft
 import graft.sources.HttpPageClient.jstr
-import org.apache.spark.sql.SparkSession
 
 /** The repo's one way to time registry queries: each query is
   * materialized to the noop sink under the adaptive repeat rule
@@ -11,23 +10,10 @@ import org.apache.spark.sql.SparkSession
   *  - `sbt 'runMain graft.Bench <name>...'` times only the named queries
   *    (benchSkip or not) and prints the line; it never writes the file.
   *
-  * `SPARK_GRAFT_SF_DIR` picks the fixture directory and `SPARK_GRAFT_CPUS`
-  * the local core count (default 4). */
+  * `SPARK_GRAFT_SF_DIR` picks the fixture directory; the session comes
+  * from [[EngineSession]] (`SPARK_GRAFT_CPUS` cores, default the
+  * machine's). */
 object Bench {
-
-  private def newSession(cpus: String): SparkSession = {
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same pin as Verify/Smoke: the events NTZ normalization (Tables.events)
-      // casts an instant timestamp through the session zone, so an unpinned
-      // bench on a non-UTC host would run different plans than Verify.
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 
   /** Output-line stamp naming the repeat rule, so tooling can refuse to
     * diff sweeps taken under different rules. */
@@ -71,18 +57,17 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val unknown = args.filterNot(Registry.byName.contains)
     require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    // Superseded capstones / strictly-contained family members are
-    // verified by Verify/selfcheck but not re-timed (benchSkip).
+    // Queries a still-timed query contains are verified by
+    // Verify/selfcheck but not re-timed (benchSkip).
     val (timed, skipped) =
       if (args.nonEmpty) (args.toSeq.map(Registry.byName), Seq.empty[String])
       else (Registry.all.filterNot(_.benchSkip), Registry.all.filter(_.benchSkip).map(_.name))
     if (skipped.nonEmpty)
       System.err.println(s"[bench] benchSkip (verified, not timed): ${skipped.mkString(", ")}")
 
-    val spark = newSession(cpus)
+    val spark = EngineSession.create()
     // Materialize EVERY column: `.count()` would let Catalyst prune
     // computed projections that don't affect the row count, under-measuring
     // pure-projection queries. The noop sink consumes all rows/columns

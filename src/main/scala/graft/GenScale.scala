@@ -35,14 +35,7 @@ object GenScale {
 
   def main(args: Array[String]): Unit = {
     val Array(srcDir, outDir, mStr) = args.take(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = EngineSession.create()
     run(spark, srcDir, outDir, mStr.toInt)
     spark.stop()
   }

@@ -1,13 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev smoke harness: runs the flagship entry (driver checks rows > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = EngineSession.create()
     val n = SparkEntry.entry(spark).count()
     println(s"[smoke] entry rows=$n")
     require(n > 0, "entry returned 0 rows")

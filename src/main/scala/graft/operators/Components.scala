@@ -246,9 +246,8 @@ object Components {
     * (r16; the per-round driver action `notStar` above): a per-node
     * (out-degree s, in-degree d) census of the current edge state, reduced
     * to the single pending count chains + multiParent =
-    * Σ_{n: s>0} d + #{n: s>1}. Package-visible so GraphPlanAudit can print
-    * the shape without executing a components fixpoint. */
-  private[graft] def starCensusPending(cur: DataFrame): DataFrame = {
+    * Σ_{n: s>0} d + #{n: s>1}. */
+  private def starCensusPending(cur: DataFrame): DataFrame = {
     // fresh ExprIds for the second reference of `cur` — same
     // DeduplicateRelations-under-AQE hazard the loop's realias documents
     val dstSide = cur.select(cur.columns.map(c => col(c).as(c)).toIndexedSeq: _*)

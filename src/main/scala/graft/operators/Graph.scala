@@ -83,10 +83,9 @@ object Graph {
     sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
   }
 
-  /** One peeling round of [[kCore]] — the loop body, shared with
-    * [[graft.GraphPlanAudit]] so the audited per-iteration plan IS the
-    * executed one: degree aggregation → keep-set → two semi-joins. */
-  private[graft] def kCoreStep(sym: DataFrame, k: Int): DataFrame = {
+  /** One peeling round of [[kCore]] — the loop body: degree aggregation →
+    * keep-set → two semi-joins (per-round plan recorded in PLANS.md). */
+  private def kCoreStep(sym: DataFrame, k: Int): DataFrame = {
     val keep = sym.groupBy("src").agg(count(lit(1)).as("deg"))
       .filter(col("deg") >= k).select(col("src").as("node"))
     sym
@@ -138,15 +137,14 @@ object Graph {
   }
 
   /** One rank-update round of [[pageRank]]/[[personalizedPageRank]] — the
-    * loop body, shared with [[graft.GraphPlanAudit]]: edge ⋈ ranks keyed on
-    * src, contribution aggregation keyed on dst, left join back onto the
-    * node set.
+    * loop body: edge ⋈ ranks keyed on src, contribution aggregation keyed
+    * on dst, left join back onto the node set.
     * @param e      edges with `outw` already joined (src, dst, w, outw)
     * @param addCol the per-node teleport term for this round, resolvable
     *               against `nd`: a constant column (uniform base mass +
     *               dangling share) or `is_seed · base` (personalized) */
-  private[graft] def pageRankStep(nd: DataFrame, e: DataFrame, ranks: DataFrame,
-                                  addCol: org.apache.spark.sql.Column): DataFrame = {
+  private def pageRankStep(nd: DataFrame, e: DataFrame, ranks: DataFrame,
+                           addCol: org.apache.spark.sql.Column): DataFrame = {
     val inc = e.join(ranks.withColumnRenamed("node", "src"), "src")
       .select(col("dst"), expr("(85 * rank_fp * w) div (100 * outw)").as("c"))
       .groupBy("dst").agg(sum("c").as("inc"))
@@ -194,10 +192,9 @@ object Graph {
     visited
   }
 
-  /** One frontier expansion of [[bfsHops]] — the loop body, shared with
-    * [[graft.GraphPlanAudit]]: frontier ⋈ edges on src, distinct new
-    * nodes, anti-join against the visited set. */
-  private[graft] def bfsStep(frontier: DataFrame, e: DataFrame,
+  /** One frontier expansion of [[bfsHops]] — the loop body: frontier ⋈
+    * edges on src, distinct new nodes, anti-join against the visited set. */
+  private def bfsStep(frontier: DataFrame, e: DataFrame,
                              visited: DataFrame): DataFrame =
     frontier.join(e, frontier("node") === e("src"))
       .select(e("dst").as("node")).distinct()
@@ -301,10 +298,10 @@ object Graph {
     dist
   }
 
-  /** One Bellman-Ford relaxation of [[sssp]] — the loop body, shared with
-    * [[graft.GraphPlanAudit]]: dist ⋈ edges on src producing (dst, d+w)
-    * candidates, unioned with the current table, min per node. */
-  private[graft] def ssspStep(dist: DataFrame, e: DataFrame): DataFrame =
+  /** One Bellman-Ford relaxation of [[sssp]] — the loop body: dist ⋈ edges
+    * on src producing (dst, d+w) candidates, unioned with the current
+    * table, min per node. */
+  private def ssspStep(dist: DataFrame, e: DataFrame): DataFrame =
     dist.unionByName(
       e.join(dist.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), (col("d") + col("w")).as("d")))
@@ -344,10 +341,10 @@ object Graph {
     * hub update when reversed): scores ⋈ edges on the `from` endpoint,
     * w·score contributions aggregated on the `to` endpoint, left-joined
     * onto the node set with 0 for no-edge nodes. */
-  private[graft] def hitsHalfStep(nodes: DataFrame, e: DataFrame,
-                                  scores: DataFrame, fromCol: String,
-                                  toCol: String, inName: String,
-                                  outName: String): DataFrame = {
+  private def hitsHalfStep(nodes: DataFrame, e: DataFrame,
+                           scores: DataFrame, fromCol: String,
+                           toCol: String, inName: String,
+                           outName: String): DataFrame = {
     val contrib = e.join(scores.withColumnRenamed("node", fromCol), fromCol)
       .select(col(toCol).as("node"), (col("w") * col(inName)).as("c"))
       .groupBy("node").agg(sum(col("c")).as(outName))

@@ -239,8 +239,7 @@ object GraphQueries {
     * every nation keeps >= k heavy trade partners; output is core
     * membership with the within-core degree. Scale: each peeling round is
     * one degree aggregation + two semi-joins on the (already tiny after
-    * aggregation) edge list — the per-round plan audited by
-    * GraphPlanAudit. */
+    * aggregation) edge list — the per-round plan recorded in PLANS.md. */
   def tradeKCore(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val und = heavyTradeEdges(spark, dir)

@@ -6,15 +6,15 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.queries.QueryUtil.halfUp4
 
-/** Training-data logistics: the composite prep capstones (x90 cleans, x91
-  * goes all the way to a packed training corpus) plus the standalone
+/** Training-data logistics: the training-corpus capstone (x359, raw
+  * documents all the way to a packed training corpus) plus the standalone
   * pipeline operators a 100 TB pretraining corpus needs — sequence packing
   * (x50), decontamination (x51), epoch shuffle (x52), mixture sampling
   * (x53). Every query is paired with a DuckDB oracle generated from the
   * same Scala constants, so thresholds/hash families cannot drift. */
 object PipelineQueries {
 
-  /** x90 — the cleaning composite, end to end in ONE dataflow:
+  /** The cleaning stages of the x359 capstone, in ONE dataflow:
     *
     *   1. quality gate (x42's score >= 0.5),
     *   2. exact dedup survivors (x10's min-doc_id-per-content-hash),
@@ -22,10 +22,8 @@ object PipelineQueries {
     *      representative over MinHash-LSH pairs),
     *
     * emitting the surviving documents with language and token counts. Each
-    * stage is the already-oracle-verified operator; this query proves they
-    * COMPOSE — the oracle rebuilds the same three gates in one SQL statement
-    * (recursive-CTE transitive closure for the clusters, window dedup for
-    * exact, identical quality arithmetic) and must agree row-for-row.
+    * stage is an oracle-verified query of its own; [[gateCtes]] is the
+    * same three gates in SQL.
     *
     * Scale: quality is a narrow per-row stage; the dedup gates are the
     * LSH/band-capped shapes audited in PLANS.md; the final joins are
@@ -46,10 +44,9 @@ object PipelineQueries {
       .orderBy("doc_id")
   }
 
-  /** The x90 gate chain in SQL (near-dup clusters → canon, exact-dedup
-    * survivors, quality scores) — appended after
-    * [[DedupQueries.minhashCtes]] and shared by the x90 and x91 oracles so
-    * the gate arithmetic has exactly one rendering. */
+  /** [[prepPipeline]]'s gate chain in SQL (near-dup clusters → canon,
+    * exact-dedup survivors, quality scores), appended after
+    * [[DedupQueries.minhashCtes]] in the x359 oracle. */
   private val gateCtes =
     s"""pairs2 AS (SELECT a, b FROM j WHERE jaccard >= 0.5),
        |edges AS (SELECT a AS src, b AS dst FROM pairs2 UNION ALL SELECT b AS src, a AS dst FROM pairs2),
@@ -65,15 +62,6 @@ object PipelineQueries {
        |        CAST(len(toks) AS INTEGER) AS n_tok,
        |        floor(${TextAnalysis.qualityScoreSql("toks")} * 10000 + 0.5) / 10000.0 AS quality
        |      FROM (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents))""".stripMargin
-
-  private val prepOracle =
-    DedupQueries.minhashCtes("WITH RECURSIVE") +
-      s""", $gateCtes
-         |SELECT q.doc_id, lang, n_tok, quality
-         |FROM q JOIN canon ON canon.doc_id = q.doc_id
-         |       JOIN exact ON exact.doc_id = q.doc_id
-         |WHERE quality >= 0.5
-         |ORDER BY q.doc_id""".stripMargin
 
   /** Token budget per packed training sequence (x50). */
   private val PackBudget = 512L
@@ -91,7 +79,7 @@ object PipelineQueries {
     * keyed on shard, prefix sums inside each partition. */
   /** Append the packing columns (cum_before, seq_id, seq_off) to a frame
     * carrying (doc_id, shard, n_tok, …) — the ONE Spark rendering of the
-    * packing arithmetic, shared by x50 and x91 (package-visible so
+    * packing arithmetic, shared by x50 and x359 (package-visible so
     * PropertySpec can differential-test it against a sequential
     * reference). */
   private[graft] def withPacking(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
@@ -105,7 +93,7 @@ object PipelineQueries {
 
   /** SQL rendering of [[withPacking]] + final projection over CTE `$src`
     * (which must carry doc_id, shard, n_tok plus `$extra` columns) — the
-    * ONE oracle rendering of the packing arithmetic, shared by x50/x91. */
+    * ONE oracle rendering of the packing arithmetic, shared by x50/x359. */
   private def packTailSql(src: String, extra: String): String =
     s"""packed AS (SELECT *,
        |             CAST(coalesce(sum(n_tok) OVER (PARTITION BY shard ORDER BY doc_id
@@ -173,8 +161,9 @@ object PipelineQueries {
   }
 
   /** Contamination CTE chain (fingerprint → eval/train split), reused by
-    * x51 and the x91 capstone. CTE names are disjoint from the minhash
-    * chain in [[DedupQueries.minhashCtes]] so the two compose in one WITH. */
+    * the decontamination oracles and the x359 capstone. CTE names are
+    * disjoint from the minhash chain in [[DedupQueries.minhashCtes]] so the
+    * two compose in one WITH. */
   private[queries] val contamCtes =
     s"""fph AS (SELECT doc_id,
        |             list_transform(range(1, greatest(length(text) - ${ContamGram - 1}, 1) + 1),
@@ -277,7 +266,7 @@ object PipelineQueries {
     * per-row work + one small aggregate; the sampled corpus itself is the
     * same filter without the groupBy. */
   /** Shared mixture-selection pieces (Spark + SQL renderings kept adjacent
-    * so the integer arithmetic cannot drift; used by x53 and x91). */
+    * so the integer arithmetic cannot drift; used by x53 and x359). */
   private def srcGrpCol = substring(col("source"), 4, 10).cast("int") % 4
   private def mixHashCol =
     conv(substring(md5(concat_ws("|", lit("mix"), col("doc_id"))), 1, 4), 16, 10)
@@ -320,128 +309,52 @@ object PipelineQueries {
        |GROUP BY source, src_grp
        |ORDER BY source""".stripMargin
 
-  /** The round-5 capstone — the COMPLETE corpus→training-data flow, every
-    * gate this library ships composed in one dataflow:
+  /** x359 — the training-corpus capstone: the COMPLETE corpus→training-data
+    * flow, every gate this library ships composed in one dataflow:
     *
-    *   1. quality + exact-dedup + near-dup-canonical survivors (x90's
-    *      three gates),
+    *   1. quality + exact-dedup + near-dup-canonical survivors
+    *      ([[prepPipeline]]: x42, x10, x14),
     *   2. eval docs and contaminated train docs removed (x51's
     *      winnowing-fingerprint overlap, anti-join),
-    *   3. source-mixture sampling (x53's integer hash thresholds),
-    *   4. sequence packing of what remains (x50's per-shard prefix sums),
+    *   3. the keep-gate panel: repetition (x58), unigram surprisal, the
+    *      Gopher rules (x123), boilerplate span mass (x158), the TRAINED
+    *      logistic quality classifier (x259) and the Flesch–Kincaid
+    *      readability band (x345, [[Round13Queries16.FkLo]] ≤ grade ≤
+    *      [[Round13Queries16.FkHi]]),
+    *   4. source-mixture sampling (x53's integer hash thresholds),
+    *   5. per-doc token counts from the LEARNED BPE tokenizer (x236), which
+    *      replace the whitespace count — budgets and sequence boundaries
+    *      are in the trained tokenizer's tokens,
+    *   6. temperature rebalancing on the POST-GATE language census (x85's
+    *      exact integer predicate; the gates themselves shift the mix),
+    *   7. sequence packing of what remains (x50's per-shard prefix sums),
     *
     * emitting, for every document that makes it into the training corpus,
-    * its source, token count, and packed position (shard, seq_id, seq_off).
-    * The oracle rebuilds all SIX stages in ONE SQL statement — recursive
-    * CTE for clusters, fingerprint CTEs for contamination, the same
-    * integer mixture thresholds, the same window prefix sums — and must
-    * agree row-for-row, so the composition itself is correctness-gated.
+    * its language, source, token count and packed position (shard, seq_id,
+    * seq_off). FOURTEEN composed stages; the oracle rebuilds all of them in
+    * ONE SQL statement and must agree row-for-row, so the composition
+    * itself is correctness-gated.
     *
     * Scale: each stage keeps its audited shape (LSH band joins, broadcast
-    * eval side, narrow mixture filter, per-shard packing windows); the
-    * stage boundaries are doc_id equi-joins/anti-joins against survivor
-    * lists that only ever shrink. */
-  /** Shared capstone builder: the x91 stage chain with optional extra
-    * doc_id keep-gates spliced in before mixture sampling — ONE definition
-    * for both capstones, so the shared stages cannot drift. */
-  private def corpusKept(spark: SparkSession, dir: String,
-                         extraGates: Seq[org.apache.spark.sql.DataFrame]) = {
+    * eval side, per-document gate projections, narrow mixture filter,
+    * vocab-bounded BPE chain plus one broadcast vocab join, per-shard
+    * packing windows); the stage boundaries are doc_id equi-joins and
+    * anti-joins against survivor lists that only ever shrink. */
+  def trainingCorpusV8(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    val surv = prepPipeline(spark, dir).select($"doc_id", $"n_tok")
-    val contam = decontaminate(spark, dir).select($"train_id".as("doc_id")).distinct()
-    val src = Tables.documents(spark, dir).select($"doc_id", $"source")
-    val base = surv
-      .filter($"doc_id" % 40 =!= 0) // eval docs never train
-      .join(contam, Seq("doc_id"), "left_anti")
-    extraGates.foldLeft(base)((df, g) => df.join(g, "doc_id"))
-      .join(src, "doc_id")
-      .withColumn("src_grp", srcGrpCol)
-      .withColumn("hv", mixHashCol)
-      .filter($"hv" < mixThrCol)
-      .select($"doc_id", $"source", $"n_tok", ($"doc_id" % PackShards).as("shard"))
-  }
-
-  private def corpusPacked(spark: SparkSession, dir: String,
-                           extraGates: Seq[org.apache.spark.sql.DataFrame]) = {
-    import spark.implicits._
-    withPacking(corpusKept(spark, dir, extraGates))
-      .select($"doc_id", $"source", $"n_tok", $"shard", $"cum_before",
-        $"seq_id", $"seq_off")
-      .orderBy("doc_id")
-  }
-
-  /** Shared capstone oracle: x91's eight CTE stages with optional extra
-    * CTE blocks, extra base-filter predicates, and (for x93) extra
-    * post-mixture stages before packing. */
-  private def corpusOracleSql(extraCtes: String, extraPredSql: String,
-                              tailCtes: String = "", packSrc: String = "kept",
-                              packExtra: String = " source,",
-                              baseJoin: String = "",
-                              nTokSql: String = "s.n_tok"): String =
-    DedupQueries.minhashCtes("WITH RECURSIVE") +
-      s""", $gateCtes,
-         |surv AS (SELECT q.doc_id, n_tok
-         |         FROM q JOIN canon ON canon.doc_id = q.doc_id
-         |                JOIN exact ON exact.doc_id = q.doc_id
-         |         WHERE quality >= 0.5),
-         |$contamCtes,
-         |contam AS (SELECT DISTINCT train_id AS doc_id
-         |           FROM (SELECT train_id, eval_id FROM tr JOIN ev USING (fp)
-         |                 GROUP BY train_id, eval_id HAVING count(*) >= $ContamMinShared))$extraCtes,
-         |base AS (SELECT s.doc_id, d.source, $nTokSql AS n_tok,
-         |           $srcGrpSql AS src_grp,
-         |           ${hexValSql(s"md5('mix' || '|' || CAST(s.doc_id AS VARCHAR))")} AS hv
-         |         FROM surv s JOIN documents d ON d.doc_id = s.doc_id$baseJoin
-         |         WHERE s.doc_id % 40 <> 0
-         |           AND s.doc_id NOT IN (SELECT doc_id FROM contam)$extraPredSql),
-         |kept AS (SELECT doc_id, source, n_tok, doc_id % $PackShards AS shard
-         |         FROM base WHERE hv < ($mixThrSql))$tailCtes,
-         |${packTailSql(packSrc, packExtra)}""".stripMargin
-
-  def trainingCorpus(spark: SparkSession, dir: String) =
-    corpusPacked(spark, dir, Nil)
-
-  private val trainingCorpusOracle = corpusOracleSql("", "")
-
-  def trainingCorpusV2(spark: SparkSession, dir: String) =
-    corpusPacked(spark, dir, Seq(
-      TrainingQueries.repetitionKeepIds(spark, dir),
-      TrainingQueries.surprisalKeepIds(spark, dir)))
-
-  private val trainingCorpusV2Oracle = corpusOracleSql(
-    s""",
-       |${TrainingQueries.repCtes},
-       |${TrainingQueries.repKeepCte},
-       |${TrainingQueries.surCtes},
-       |${TrainingQueries.surKeepCte}""".stripMargin,
-    s"""
-       |           AND s.doc_id IN (SELECT doc_id FROM rep_keep)
-       |           AND s.doc_id IN (SELECT doc_id FROM sur_keep)""".stripMargin)
-
-  /** x93 — capstone v3: every v2 stage PLUS the round-7 temperature
-    * rebalancing (x85's exact integer predicate) applied to the POST-GATE
-    * language distribution — the order a real pipeline uses, since
-    * dedup/quality gates themselves shift the language mix. Nine stages,
-    * one dataflow, one oracle statement. */
-  def trainingCorpusV3(spark: SparkSession, dir: String) =
-    rebalancedPacked(spark, dir, corpusKept(spark, dir, Seq(
-      TrainingQueries.repetitionKeepIds(spark, dir),
-      TrainingQueries.surprisalKeepIds(spark, dir))))
-
-  /** The shared v3/v4 tail: post-gate temperature rebalancing (x85's exact
-    * integer predicate on the SURVIVOR language census) + packing. */
-  private def rebalancedPacked(spark: SparkSession, dir: String,
-                               kept: org.apache.spark.sql.DataFrame) = {
-    import spark.implicits._
-    // NO reuse-point repartition on k2 (tried, reverted): unlike x16, the
-    // census/rebalance fan-out does not re-run the upstream pipeline —
-    // measured no change at sf0.1, so the extra exchange is pure cost.
-    val k2 = kept.join(Tables.documents(spark, dir).select($"doc_id", $"lang"), "doc_id")
-    val counts = k2.groupBy($"lang").agg(count(lit(1)).as("n_in"))
+    // reuse point (x16 recipe): the kept frame feeds both the language
+    // census and the rebalance filter, and without one exchange each
+    // consumer re-runs the whole gate chain; kept rows are 4 narrow scalars
+    val kept = corpusKept(spark, dir)
+      .join(Round11Queries.bpeDocTokenCounts(spark, dir)
+        .select($"doc_id", $"n_tok"), "doc_id")
+      .repartition(col("doc_id"))
+      .join(Tables.documents(spark, dir).select($"doc_id", $"lang"), "doc_id")
+    val counts = kept.groupBy($"lang").agg(count(lit(1)).as("n_in"))
     val nmin = counts.agg(min($"n_in").as("n_min"))
     val thv = conv(substring(md5(concat_ws("|", lit("tmix"), $"doc_id")), 1, 4), 16, 10)
       .cast("long")
-    val rebal = k2.withColumn("thv", thv)
+    val rebal = kept.withColumn("thv", thv)
       .join(broadcast(counts), "lang")
       .crossJoin(broadcast(nmin))
       .filter($"thv" * $"thv" * $"n_in" < lit(4294967296L) * $"n_min")
@@ -452,213 +365,79 @@ object PipelineQueries {
       .orderBy("doc_id")
   }
 
-  /** x127 — capstone v4: v3's nine stages PLUS the round-9 Gopher rule
-    * panel (x123's five exact-integer predicates) as a pre-mixture gate —
-    * TEN composed stages (quality score, exact dedup, near-dup canonical,
-    * eval exclusion, decontamination, repetition gate, surprisal gate,
-    * Gopher panel, mixture sampling, temperature rebalancing) feeding
-    * sequence packing, one dataflow, one oracle statement. */
-  def trainingCorpusV4(spark: SparkSession, dir: String) =
-    rebalancedPacked(spark, dir, corpusKept(spark, dir, Seq(
-      TrainingQueries.repetitionKeepIds(spark, dir),
-      TrainingQueries.surprisalKeepIds(spark, dir),
-      Round9Queries.gopherKeepIds(spark, dir)))
-      // reuse point (x16 recipe): with THREE keep-gates the kept frame's
-      // census/rebalance fan-out re-runs the whole gate chain per consumer
-      // (v3's two-gate shape did not — its note below stands); kept rows
-      // are 4 narrow scalars, one exchange buys the chain running once
-      .repartition(col("doc_id")))
-
-  /** v3's extra gate CTEs / predicates / rebalance tail, shared with v4. */
-  private lazy val repSurExtraCtes =
-    s""",
-       |${TrainingQueries.repCtes},
-       |${TrainingQueries.repKeepCte},
-       |${TrainingQueries.surCtes},
-       |${TrainingQueries.surKeepCte}""".stripMargin
-  private val repSurPredSql =
-    s"""
-       |           AND s.doc_id IN (SELECT doc_id FROM rep_keep)
-       |           AND s.doc_id IN (SELECT doc_id FROM sur_keep)""".stripMargin
-  private lazy val rebalanceTailCtes =
-    s""",
-       |tc AS (SELECT d.lang, count(*) AS n_in
-       |       FROM kept k JOIN documents d ON d.doc_id = k.doc_id
-       |       GROUP BY d.lang),
-       |tm AS (SELECT min(n_in) AS n_min FROM tc),
-       |kept2 AS (SELECT k.doc_id, d.lang, k.source, k.n_tok, k.shard
-       |          FROM kept k
-       |          JOIN documents d ON d.doc_id = k.doc_id
-       |          JOIN tc ON tc.lang = d.lang, tm
-       |          WHERE ${hexValSql("md5('tmix' || '|' || CAST(k.doc_id AS VARCHAR))")}
-       |                * ${hexValSql("md5('tmix' || '|' || CAST(k.doc_id AS VARCHAR))")}
-       |                * tc.n_in < 4294967296 * tm.n_min)""".stripMargin
-
-  private lazy val trainingCorpusV3Oracle = corpusOracleSql(
-    repSurExtraCtes, repSurPredSql,
-    tailCtes = rebalanceTailCtes,
-    packSrc = "kept2", packExtra = " lang, source,")
-
-  /** x178 — capstone v5: v4's ten stages PLUS the round-10 boilerplate
-    * gate (x158's cross-document shared-span mass, keep iff
-    * 5·removed < spans) as one more pre-mixture keep-gate — ELEVEN
-    * composed stages, one dataflow, one oracle statement. v4 keeps its
-    * oracle and moves to benchSkip (the r9-advice pattern: every
-    * generation stays VERIFIED, only the newest is timed). */
-  def trainingCorpusV5(spark: SparkSession, dir: String) =
-    rebalancedPacked(spark, dir, corpusKept(spark, dir, Seq(
-      TrainingQueries.repetitionKeepIds(spark, dir),
-      TrainingQueries.surprisalKeepIds(spark, dir),
-      Round9Queries.gopherKeepIds(spark, dir),
-      Round10Queries10.boilerplateKeepIds(spark, dir)))
-      // reuse point — same rationale as v4 (four gates fan out)
-      .repartition(col("doc_id")))
-
-  /** x268 — capstone v6: v5's eleven stages PLUS the round-11 TRAINED
-    * logistic quality classifier (x259: 16 unrolled full-batch GD steps,
-    * Elliott rational sigmoid, fixed-point BIGINT gradients) as one more
-    * pre-mixture keep-gate — the C4/CCNet pattern where the pipeline
-    * first TRAINS a model on the corpus and then gates the corpus with
-    * it, all inside one dataflow and ONE oracle statement (the 16
-    * training iterations unroll as lr-prefixed CTE pairs). v5 keeps its
-    * oracle and moves to benchSkip (every generation stays VERIFIED,
-    * only the newest is timed). */
-  def trainingCorpusV6(spark: SparkSession, dir: String) =
-    rebalancedPacked(spark, dir, corpusKept(spark, dir, Seq(
-      TrainingQueries.repetitionKeepIds(spark, dir),
-      TrainingQueries.surprisalKeepIds(spark, dir),
-      Round9Queries.gopherKeepIds(spark, dir),
-      Round10Queries10.boilerplateKeepIds(spark, dir),
-      Round11Queries8.logisticKeepIds(spark, dir)))
-      // reuse point — same rationale as v4/v5 (five gates fan out)
-      .repartition(col("doc_id")))
-
-  /** v6's five-gate CTE/predicate blocks, shared verbatim by v7. */
-  private lazy val v6ExtraCtes =
-    repSurExtraCtes +
-      s""",
-         |${Round9Queries.gopherKeepCtes},
-         |${Round10Queries10.boilerKeepCtes},
-         |${Round11Queries8.lrKeepCtes}""".stripMargin
-  private lazy val v6PredSql =
-    repSurPredSql +
-      s"""
-         |           AND s.doc_id IN (SELECT doc_id FROM gopher_keep)
-         |           AND s.doc_id IN (SELECT doc_id FROM boiler_keep)
-         |           AND s.doc_id IN (SELECT doc_id FROM lr_keep)""".stripMargin
-
-  private lazy val trainingCorpusV6Oracle = corpusOracleSql(
-    v6ExtraCtes, v6PredSql,
-    tailCtes = rebalanceTailCtes,
-    packSrc = "kept2", packExtra = " lang, source,")
-
-  /** x292 — capstone v7: v6's twelve stages with the packing stage finally
-    * running on LEARNED-tokenizer counts (VERDICT r11 #5): the x236 BPE
-    * induction (learn [[Round11Queries.BpeMerges]] merges on the corpus,
-    * re-tokenize every document) feeds its per-doc BPE token count into
-    * the mixture/packing arithmetic in place of the whitespace `n_tok` —
-    * the order a real pretraining pipeline uses (the tokenizer is trained
-    * first, budgets and sequence boundaries are in ITS tokens). THIRTEEN
-    * composed stages, one dataflow, one oracle statement (the BPE chain
-    * embeds name-prefixed as `bpe_*` CTEs). v6 keeps its oracle and moves
-    * to benchSkip (every generation stays VERIFIED, only the newest is
-    * timed).
-    *
-    * Scale: the BPE chain is vocab-bounded (pair counting per vocab TYPE)
-    * plus one corpus explode + broadcast vocab join; everything else keeps
-    * v6's audited stage shapes. The swap changes only which integer rides
-    * the packing prefix sums. */
-  def trainingCorpusV7(spark: SparkSession, dir: String) = {
+  /** Stages 1–4 of [[trainingCorpusV8]]: the gated, mixture-sampled
+    * (doc_id, source, shard) set, before BPE counts and rebalancing. */
+  private def corpusKept(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    val kept = corpusKept(spark, dir, Seq(
-      TrainingQueries.repetitionKeepIds(spark, dir),
-      TrainingQueries.surprisalKeepIds(spark, dir),
-      Round9Queries.gopherKeepIds(spark, dir),
-      Round10Queries10.boilerplateKeepIds(spark, dir),
-      Round11Queries8.logisticKeepIds(spark, dir)))
-      .drop("n_tok")
-      .join(Round11Queries.bpeDocTokenCounts(spark, dir)
-        .select($"doc_id", $"n_tok"), "doc_id")
-      // reuse point — same rationale as v4/v5/v6 (five gates + the BPE
-      // tokenizer join all fan out into the census/rebalance consumers)
-      .repartition(col("doc_id"))
-    rebalancedPacked(spark, dir, kept)
-  }
-
-  private lazy val trainingCorpusV7Oracle = corpusOracleSql(
-    v6ExtraCtes +
-      s""",
-         |${Round11Queries.bpeChainCtes("bpe_")}""".stripMargin,
-    v6PredSql,
-    tailCtes = rebalanceTailCtes,
-    packSrc = "kept2", packExtra = " lang, source,",
-    baseJoin = " JOIN bpe_doc ON bpe_doc.doc_id = s.doc_id",
-    nTokSql = "bpe_doc.n_tok")
-
-  /** x359 — capstone v8: v7's thirteen stages plus the x345 READABILITY
-    * gate (Flesch–Kincaid band keep, [[Round13Queries16.FkLo]] ≤ grade ≤
-    * [[Round13Queries16.FkHi]]) — the document-quality dimension the gate
-    * panel lacked: Gopher rules catch structural junk, the logistic
-    * classifier catches learned badness, the boilerplate gate catches
-    * template mass, and the FK band catches degenerate reading-level
-    * outliers (too-telegraphic or too-run-on for the target register).
-    * FOURTEEN composed stages, one dataflow, one oracle statement. v7
-    * keeps its oracle and moves to benchSkip (every generation stays
-    * VERIFIED, only the newest is timed).
-    *
-    * Scale: the FK gate is an embarrassingly parallel per-document
-    * projection (one regex scan, zero shuffle) — the cheapest gate in
-    * the panel; everything else keeps v7's audited stage shapes. */
-  def trainingCorpusV8(spark: SparkSession, dir: String) = {
-    import spark.implicits._
-    val kept = corpusKept(spark, dir, Seq(
+    val surv = prepPipeline(spark, dir).select($"doc_id")
+    val contam = decontaminate(spark, dir).select($"train_id".as("doc_id")).distinct()
+    val src = Tables.documents(spark, dir).select($"doc_id", $"source")
+    val keepGates = Seq(
       TrainingQueries.repetitionKeepIds(spark, dir),
       TrainingQueries.surprisalKeepIds(spark, dir),
       Round9Queries.gopherKeepIds(spark, dir),
       Round10Queries10.boilerplateKeepIds(spark, dir),
       Round11Queries8.logisticKeepIds(spark, dir),
-      Round13Queries16.readabilityKeepIds(spark, dir)))
-      .drop("n_tok")
-      .join(Round11Queries.bpeDocTokenCounts(spark, dir)
-        .select($"doc_id", $"n_tok"), "doc_id")
-      .repartition(col("doc_id"))
-    rebalancedPacked(spark, dir, kept)
+      Round13Queries16.readabilityKeepIds(spark, dir))
+    val base = surv
+      .filter($"doc_id" % 40 =!= 0) // eval docs never train
+      .join(contam, Seq("doc_id"), "left_anti")
+    keepGates.foldLeft(base)((df, g) => df.join(g, "doc_id"))
+      .join(src, "doc_id")
+      .withColumn("src_grp", srcGrpCol)
+      .withColumn("hv", mixHashCol)
+      .filter($"hv" < mixThrCol)
+      .select($"doc_id", $"source", ($"doc_id" % PackShards).as("shard"))
   }
 
-  private lazy val trainingCorpusV8Oracle = corpusOracleSql(
-    v6ExtraCtes +
-      s""",
-         |${Round13Queries16.readKeepCtes},
-         |${Round11Queries.bpeChainCtes("bpe_")}""".stripMargin,
-    v6PredSql +
-      s"""
-         |           AND s.doc_id IN (SELECT doc_id FROM read_keep)""".stripMargin,
-    tailCtes = rebalanceTailCtes,
-    packSrc = "kept2", packExtra = " lang, source,",
-    baseJoin = " JOIN bpe_doc ON bpe_doc.doc_id = s.doc_id",
-    nTokSql = "bpe_doc.n_tok")
-
-  private lazy val trainingCorpusV5Oracle = corpusOracleSql(
-    repSurExtraCtes +
-      s""",
+  private lazy val trainingCorpusV8Oracle = {
+    val thv = hexValSql("md5('tmix' || '|' || CAST(k.doc_id AS VARCHAR))")
+    DedupQueries.minhashCtes("WITH RECURSIVE") +
+      s""", $gateCtes,
+         |surv AS (SELECT q.doc_id, n_tok
+         |         FROM q JOIN canon ON canon.doc_id = q.doc_id
+         |                JOIN exact ON exact.doc_id = q.doc_id
+         |         WHERE quality >= 0.5),
+         |$contamCtes,
+         |contam AS (SELECT DISTINCT train_id AS doc_id
+         |           FROM (SELECT train_id, eval_id FROM tr JOIN ev USING (fp)
+         |                 GROUP BY train_id, eval_id HAVING count(*) >= $ContamMinShared)),
+         |${TrainingQueries.repCtes},
+         |${TrainingQueries.repKeepCte},
+         |${TrainingQueries.surCtes},
+         |${TrainingQueries.surKeepCte},
          |${Round9Queries.gopherKeepCtes},
-         |${Round10Queries10.boilerKeepCtes}""".stripMargin,
-    repSurPredSql +
-      s"""
+         |${Round10Queries10.boilerKeepCtes},
+         |${Round11Queries8.lrKeepCtes},
+         |${Round13Queries16.readKeepCtes},
+         |${Round11Queries.bpeChainCtes("bpe_")},
+         |base AS (SELECT s.doc_id, d.source, bpe_doc.n_tok AS n_tok,
+         |           $srcGrpSql AS src_grp,
+         |           ${hexValSql(s"md5('mix' || '|' || CAST(s.doc_id AS VARCHAR))")} AS hv
+         |         FROM surv s JOIN documents d ON d.doc_id = s.doc_id JOIN bpe_doc ON bpe_doc.doc_id = s.doc_id
+         |         WHERE s.doc_id % 40 <> 0
+         |           AND s.doc_id NOT IN (SELECT doc_id FROM contam)
+         |           AND s.doc_id IN (SELECT doc_id FROM rep_keep)
+         |           AND s.doc_id IN (SELECT doc_id FROM sur_keep)
          |           AND s.doc_id IN (SELECT doc_id FROM gopher_keep)
-         |           AND s.doc_id IN (SELECT doc_id FROM boiler_keep)""".stripMargin,
-    tailCtes = rebalanceTailCtes,
-    packSrc = "kept2", packExtra = " lang, source,")
-
-  private lazy val trainingCorpusV4Oracle = corpusOracleSql(
-    repSurExtraCtes +
-      s""",
-         |${Round9Queries.gopherKeepCtes}""".stripMargin,
-    repSurPredSql +
-      s"""
-         |           AND s.doc_id IN (SELECT doc_id FROM gopher_keep)""".stripMargin,
-    tailCtes = rebalanceTailCtes,
-    packSrc = "kept2", packExtra = " lang, source,")
+         |           AND s.doc_id IN (SELECT doc_id FROM boiler_keep)
+         |           AND s.doc_id IN (SELECT doc_id FROM lr_keep)
+         |           AND s.doc_id IN (SELECT doc_id FROM read_keep)),
+         |kept AS (SELECT doc_id, source, n_tok, doc_id % $PackShards AS shard
+         |         FROM base WHERE hv < ($mixThrSql)),
+         |tc AS (SELECT d.lang, count(*) AS n_in
+         |       FROM kept k JOIN documents d ON d.doc_id = k.doc_id
+         |       GROUP BY d.lang),
+         |tm AS (SELECT min(n_in) AS n_min FROM tc),
+         |kept2 AS (SELECT k.doc_id, d.lang, k.source, k.n_tok, k.shard
+         |          FROM kept k
+         |          JOIN documents d ON d.doc_id = k.doc_id
+         |          JOIN tc ON tc.lang = d.lang, tm
+         |          WHERE $thv
+         |                * $thv
+         |                * tc.n_in < 4294967296 * tm.n_min),
+         |${packTailSql("kept2", " lang, source,")}""".stripMargin
+  }
 
   /** Bloom-filter sizing for x16: the bit array SELF-SIZES to the eval
     * set — m = smallest power of two >= BloomBitsPerFp * n_eval_fps, k = 3
@@ -703,7 +482,7 @@ object PipelineQueries {
     // exact-join probe) with no common shuffle of their own, so without a
     // reuse point the winnow_fps scan re-runs per consumer. Behind this
     // repartition, AQE's stage cache serves all four from ONE materialized
-    // stage (ReusedExchange — same mechanism ReuseAudit verifies for x84);
+    // stage (ReusedExchange — the mechanism PLANS.md records for x84);
     // the exchanged rows are just (doc_id, fp) longs, far cheaper than
     // re-winnowing the corpus. Measured 5.4 s → 1.9 s at sf0.1.
     val fps = Tables.documents(spark, dir)
@@ -824,33 +603,9 @@ object PipelineQueries {
     QueryDef("x16_bloom_decontaminate",
       "bloom-filter decontamination gate with in-result false-positive measurement",
       bloomDecontaminate, Some(bloomOracle)),
-    QueryDef("x93_training_corpus_v3",
-      "capstone v3: v2's eight stages + post-gate temperature language rebalancing (nine stages, one oracle)",
-      trainingCorpusV3, Some(trainingCorpusV3Oracle), benchSkip = true),
-    QueryDef("x127_training_corpus_v4",
-      "capstone v4: v3 + the Gopher rule panel as a pre-mixture gate (ten stages, one oracle)",
-      trainingCorpusV4, Some(trainingCorpusV4Oracle), benchSkip = true),
-    QueryDef("x178_training_corpus_v5",
-      "capstone v5: v4 + the x158 boilerplate-mass gate (eleven stages, one oracle)",
-      trainingCorpusV5, Some(trainingCorpusV5Oracle), benchSkip = true),
-    QueryDef("x268_training_corpus_v6",
-      "capstone v6: v5 + the x259 TRAINED logistic quality-classifier gate (twelve stages, one oracle)",
-      trainingCorpusV6, Some(trainingCorpusV6Oracle), benchSkip = true),
-    QueryDef("x292_training_corpus_v7",
-      "capstone v7: v6 packed on LEARNED BPE token counts (x236 induction feeds the packer; thirteen stages, one oracle)",
-      trainingCorpusV7, Some(trainingCorpusV7Oracle), benchSkip = true),
     QueryDef("x359_training_corpus_v8",
-      "capstone v8: v7 + the x345 Flesch-Kincaid readability band gate (fourteen stages, one oracle)",
+      "training-corpus capstone: quality/dedup/decontamination + six keep-gates -> mixture -> BPE counts -> rebalance -> pack (fourteen stages, one oracle)",
       trainingCorpusV8, Some(trainingCorpusV8Oracle)),
-    QueryDef("x92_training_corpus_v2",
-      "full capstone v2: x91 + repetition gate + surprisal gate (all eight stages, one oracle)",
-      trainingCorpusV2, Some(trainingCorpusV2Oracle), benchSkip = true),
-    QueryDef("x91_training_corpus",
-      "full corpus->training-data capstone: quality+dedup gates -> decontaminate -> mixture -> pack (X1+X2+X4+r5)",
-      trainingCorpus, Some(trainingCorpusOracle), benchSkip = true),
-    QueryDef("x90_prep_pipeline",
-      "composite corpus-prep pipeline: quality gate + exact dedup + near-dup canonical (X1+X2+X4)",
-      prepPipeline, Some(prepOracle), benchSkip = true),
     QueryDef("x50_pack_sequences",
       "concat-then-chunk sequence packing: per-shard token prefix sums -> (seq_id, seq_off)",
       packSequences, Some(packOracle)),

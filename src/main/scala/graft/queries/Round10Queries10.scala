@@ -70,7 +70,7 @@ object Round10Queries10 {
 
   /** The x158 gate reduced to surviving doc ids — keep a document iff
     * less than 20% of its spans are cross-document boilerplate (strict
-    * integer predicate 5·removed < spans). The capstone-v5 stage. */
+    * integer predicate 5·removed < spans). An x359 capstone stage. */
   private[queries] def boilerplateKeepIds(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val spans = Tables.documents(spark, dir)

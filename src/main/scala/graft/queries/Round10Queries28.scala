@@ -93,7 +93,7 @@ object Round10Queries28 {
   /** x190: unigram-entropy gibberish gate — per document, the Shannon
     * entropy of its own token distribution, H = ln n − (Σ c·ln c)/n in
     * 1e-9 fixed point (the x20/x59 per-value `floor(ln·1e9 + 0.5)` ln
-    * recipe, boundary-audited in LnBoundaryAudit: integer sums after
+    * recipe, boundary margins audited in PLANS.md round 8: integer sums after
     * quantization are accumulation-order-free). Low-entropy documents
     * (collapsed vocabulary: repeated tokens, boilerplate loops, keyword
     * stuffing) fall under the 2.4-nat gate — the C4/Gopher-family

@@ -89,7 +89,7 @@ object Round11Queries {
 
   /** Learn [[BpeMerges]] merges on `dir`'s documents and re-tokenize: per
     * doc the BPE token count and the in-order token-stream md5 pin —
-    * x236's core, package-visible so capstone v7 can pack on LEARNED
+    * x236's core, package-visible so the x359 capstone can pack on LEARNED
     * token counts instead of whitespace counts. */
   private[queries] def bpeDocTokenCounts(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -128,7 +128,7 @@ object Round11Queries {
 
   /** One unrolled merge round of the oracle (v$i from v${i-1}), with all
     * CTE names behind prefix `p` so the chain can embed inside a larger
-    * oracle (capstone v7) without name collisions. */
+    * oracle (the x359 capstone) without name collisions. */
   private def bpeRoundSql(i: Int, p: String): String = {
     val prev = s"${p}v${i - 1}"
     s"""${p}p$i AS (
@@ -153,7 +153,7 @@ object Round11Queries {
 
   /** The full BPE learn→apply oracle chain as CTE text (ends in
     * `${p}doc(doc_id, n_tok, toks_md5)`), name-prefixed for embedding.
-    * ONE rendering shared by x236's own oracle (p = "") and capstone v7
+    * ONE rendering shared by x236's own oracle (p = "") and the x359 capstone
     * (p = "bpe_") so the two can never drift. */
   private[queries] def bpeChainCtes(p: String): String = {
     val rounds = (1 to BpeMerges).map(bpeRoundSql(_, p)).mkString(",\n")

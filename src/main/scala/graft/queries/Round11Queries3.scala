@@ -165,8 +165,8 @@ object Round11Queries3 {
     * seen, else 0.4·0.4·(c(w₃)+1)/(N+V) (add-one on the final level so
     * OOV tokens stay finite). Per-token −ln S is quantized HALF-UP to
     * 1e-6 fixed point BEFORE the per-doc sum (order-free integer sums,
-    * the x56/x88 recipe; the ln-boundary-margin caveat measured in
-    * LnBoundaryAudit applies). Published per doc: scored-position count,
+    * the x56/x88 recipe; the ln-boundary-margin caveat recorded in
+    * PLANS.md round 8 applies). Published per doc: scored-position count,
     * how often each backoff level fired (the model-coverage diagnostic),
     * and the average score. 100 TB: all three count tables are
     * vocab-bounded and broadcast; the token stream shuffles once on

@@ -111,7 +111,7 @@ object Round11Queries8 {
     * shape); weight frames are broadcast one-row crosses. At 1000
     * executors each iteration is a single tree-aggregated pass — the
     * same plan MLlib's LogisticRegression runs per iteration. */
-  /** The unrolled training loop, shared by x259 and the x268 capstone
+  /** The unrolled training loop, shared by x259 and the x359 capstone
     * gate: returns the one-row weight frame after [[GdIters]] steps. */
   private def trainedW(feats: DataFrame): DataFrame = {
     import feats.sparkSession.implicits._
@@ -139,7 +139,7 @@ object Round11Queries8 {
     w
   }
 
-  /** Capstone gate (x268): doc_ids the TRAINED classifier scores
+  /** Capstone gate (x359): doc_ids the TRAINED classifier scores
     * positive — train on the corpus, then gate the corpus, the
     * C4/CCNet-style quality-classifier stage. */
   private[queries] def logisticKeepIds(spark: SparkSession, dir: String): DataFrame = {
@@ -175,7 +175,7 @@ object Round11Queries8 {
   }
 
   /** The GD iteration CTE chain with a name prefix (x259 uses "", the
-    * x268 capstone uses "lr" to avoid colliding with the capstone's
+    * x359 capstone uses "lr" to avoid colliding with the capstone's
     * other CTE names). Column names inside are unprefixed — only CTE
     * names collide. */
   private[queries] def gdIterCtes(prefix: String): String = {

@@ -47,28 +47,20 @@ object Round14Queries3 {
     * lookups per subspace.
     *
     * Rerank depth is CORPUS-PROPORTIONAL — max(Rerank, corpus/32) via a
-    * broadcast scalar, oracle re-derived (r15 verdict #2): the r15
-    * RecallSweep measured the fixed-64 depth decaying 0.917 → 0.628 →
-    * 0.532 recall@3 at 1x/10x/30x corpus while rerank ≈ 3% of corpus
+    * broadcast scalar, oracle re-derived (r15 verdict #2): a rerank-depth
+    * sweep (PLANS.md round 15, "Recall@3 at scale") measured the fixed-64
+    * depth decaying 0.917 → 0.628 → 0.532 recall@3 at 1x/10x/30x corpus
+    * while rerank ≈ 3% of corpus
     * (640 of 20k, 1800 of 60k) restores ≥ 0.95 at every scale, at no
     * extra wall cost (the ADC scan dominates). r16 correction: the r15
     * PLANS table overstated the corpora 3x (6k/60k/180k; the embeddings
     * tables actually hold 2k/20k/60k vectors), so the measured mitigation
     * is ~3%, not 1% — a 1% default re-measured at only 0.848/0.903.
-    * n/32 (3.125%) re-measures at 0.965/0.979 (RecallSweep auto, r16).
+    * n/32 (3.125%) re-measures at 0.965/0.979 (r16).
     * The shipped default IS the measured production guidance; at
     * sf ≤ 0.1 the floor (64) binds, so committed results are
     * unchanged. */
-  def pqResidualTopK(spark: SparkSession, dir: String): DataFrame =
-    pqResidualTopKWith(spark, dir, None)
-
-  /** The x363 pipeline with a parameterized rerank depth — the registered
-    * query passes None (= the corpus-proportional default above, which the
-    * oracle re-derives); the RecallSweep dev tool drives FIXED depths to
-    * measure the recall-vs-rerank mitigation curve at 10x/30x corpus
-    * scale, plus "auto" for the shipped default. */
-  private[graft] def pqResidualTopKWith(spark: SparkSession, dir: String,
-                                        rerank: Option[Int]): DataFrame = {
+  def pqResidualTopK(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (emb, subArr, sub0, cb0) = SimilarityQueries.pqParts(spark, dir)
     // the level-2 training loop and both encode passes re-reference these;
@@ -111,6 +103,9 @@ object Round14Queries3 {
     val wExact = Window.partitionBy($"q_id").orderBy($"cosine".desc, $"vec_id")
     // exact brute-force top-3 for the in-query recall audit (hit3)
     val wBt = Window.partitionBy($"q_id").orderBy($"bcos".desc, $"vec_id")
+    // corpus-proportional rerank depth: one broadcast scalar row
+    val rr = emb.agg(greatest(lit(Rerank.toLong),
+      floor(count(lit(1)) / lit(32)).cast("long")).as("rr"))
     val bt3 = emb.select($"vec_id", $"embedding".as("cv"), $"nrm".as("cn"))
       .join(broadcast(qs.select($"vec_id".as("q_id"), $"embedding".as("qv"),
         $"nrm".as("qn"))), $"vec_id" =!= $"q_id")
@@ -126,15 +121,7 @@ object Round14Queries3 {
       .groupBy($"q_id", $"vec_id")
       .agg(sum($"ip1_fp" + $"ip2_fp").as("aip_fp"))
       .withColumn("ark", row_number().over(wApprox))
-      .transform { ranked =>
-        rerank match {
-          case Some(r) => ranked.filter($"ark" <= r)
-          case None => // corpus-proportional: one broadcast scalar row
-            val rr = emb.agg(greatest(lit(Rerank.toLong),
-              floor(count(lit(1)) / lit(32)).cast("long")).as("rr"))
-            ranked.crossJoin(broadcast(rr)).filter($"ark" <= $"rr").drop("rr")
-        }
-      }
+      .crossJoin(broadcast(rr)).filter($"ark" <= $"rr").drop("rr")
       .join(emb.select($"vec_id", $"embedding".as("cv"), $"nrm".as("cn")), "vec_id")
       .join(broadcast(qs.select($"vec_id".as("q_id"), $"embedding".as("qv"),
         $"nrm".as("qn"))), "q_id")

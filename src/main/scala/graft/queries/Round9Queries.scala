@@ -443,7 +443,7 @@ object Round9Queries {
       s""",
          |gopher_keep AS (SELECT doc_id FROM gop_g WHERE $gopherAllPredSql)""".stripMargin
 
-  /** The x123 gate reduced to surviving doc ids — the capstone-v4 stage. */
+  /** The x123 gate reduced to surviving doc ids — an x359 capstone stage. */
   private[queries] def gopherKeepIds(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     gopherGate(spark, dir).filter($"keep" === 1).select($"doc_id")

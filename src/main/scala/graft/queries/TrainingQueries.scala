@@ -34,7 +34,7 @@ object TrainingQueries {
   private[queries] val TopShareMax = 0.11
   private[queries] val DupBigramMax = 0.05
 
-  /** Mean-surprisal ceiling for the x92 capstone's perplexity-outlier
+  /** Mean-surprisal ceiling for the x359 capstone's perplexity-outlier
     * gate (fixture distribution: median 3.402, p90 3.41, max ~4.0 — the
     * ceiling drops the ~5-8% high-perplexity tail). */
   private[queries] val SurprisalMax = 3.43
@@ -130,7 +130,7 @@ object TrainingQueries {
     * the model is a vocab-sized table broadcast to a narrow join; two
     * passes over the corpus, no wide shuffle. */
   /** Exact per-doc surprisal sums (doc_id, n_tok, sum_fp) — shared by the
-    * x56 report (which rounds for display) and the x92 capstone gate
+    * x56 report (which rounds for display) and the x359 capstone gate
     * (which filters on the EXACT rational so Spark and the oracle decide
     * identically at the threshold). */
   private[queries] def surprisalScores(spark: SparkSession, dir: String): DataFrame = {
@@ -148,7 +148,7 @@ object TrainingQueries {
       .agg(count(lit(1)).cast("int").as("n_tok"), sum($"sfp").as("sum_fp"))
   }
 
-  /** High-perplexity outlier gate for the x92 capstone: docs whose mean
+  /** High-perplexity outlier gate for the x359 capstone: docs whose mean
     * surprisal (exact rational) is at most [[SurprisalMax]]. */
   private[queries] def surprisalKeepIds(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -157,7 +157,7 @@ object TrainingQueries {
       .select($"doc_id")
   }
 
-  /** Repetition gate for the x92 capstone: keep-flagged doc ids. */
+  /** Repetition gate for the x359 capstone: keep-flagged doc ids. */
   private[queries] def repetitionKeepIds(spark: SparkSession, dir: String): DataFrame =
     repetitionStats(spark, dir).filter(col("keep")).select(col("doc_id"))
 
@@ -270,10 +270,10 @@ object TrainingQueries {
     * the sort key is a ratio of exact integers. Residual risk, stated
     * honestly: the quantization itself still evaluates libm ln() — a
     * sub-ulp JVM-vs-DuckDB log difference landing exactly on a floor
-    * boundary would flip lnfp by 1; the hash gate is the detector, and
-    * LnBoundaryAudit measures the margin EXHAUSTIVELY over the full
-    * 16-bit hash lattice: the closest y ever gets to a floor boundary is
-    * 9 ulps (PLANS.md round 8) — a flip needs a 9-ulp cross-libm ln()
+    * boundary would flip lnfp by 1; the hash gate is the detector. An
+    * exhaustive round-8 audit over the full 16-bit hash lattice (PLANS.md
+    * round 8) found the closest y ever gets to a floor boundary is
+    * 9 ulps — a flip needs a 9-ulp cross-libm ln()
     * divergence; real pairs differ by ≤1–2.
     * Empty docs (n_chars = 0) are excluded BEFORE the ratio — Spark's
     * Divide yields NULL where DuckDB yields -infinity, so the guard is
@@ -313,7 +313,7 @@ object TrainingQueries {
 
 
   /** Oracle CTE fragments for composition (used by the x56/x58 oracles
-    * here and the x92 capstone in PipelineQueries — one definition, no
+    * here and the x359 capstone in PipelineQueries — one definition, no
     * drift between the standalone queries and the composed pipeline). */
   private[queries] def surCtes: String =
     """sur_tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents),

@@ -20,10 +20,11 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale: appendNew anti-joins against the sink's hash column as stored —
   * no distinct key set, since a left-anti join needs no unique keys — and
-  * scans the sink once per round; the join shuffles on the hash unless the
-  * key set broadcasts, and at 100 TB the sink table is bucketed by hash so
-  * the big side never reshuffles. bulkReplace is a pure distributed write
-  * (dynamic partition overwrite when the sink is partitioned).
+  * scans the sink once per round; the join shuffles the sink's hashes
+  * unless the round's key set broadcasts. The sink is plain unbucketed
+  * parquet, so a round whose keys do not broadcast reshuffles every sink
+  * hash. bulkReplace is a pure distributed write
+  * ([[bulkReplacePartitions]] overwrites only the partitions it writes).
   */
 object Sinks {
 
@@ -67,9 +68,9 @@ object Sinks {
     * the existing table (anti-join), and surviving I/U rows append.
     * Replay-idempotent: applying the same batch twice equals once
     * (SinksSpec). Scale: one window over the batch (small side) and one
-    * anti-join shuffled on the key — the existing table is never
-    * rewritten beyond the touched keys' partitions when the sink is
-    * key-bucketed. */
+    * anti-join shuffled on the key. The result is the WHOLE new table
+    * (untouched rows ∪ upserts), so writing it back rewrites every row of
+    * the existing table, not only the touched keys. */
   def applyCdc(existing: DataFrame, batch: DataFrame,
                key: String, seqCol: String, opCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window

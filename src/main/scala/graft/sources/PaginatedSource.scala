@@ -125,13 +125,16 @@ object PaginatedSource {
   /** P1+F3+F4: envelope JSON → flattened lead-activity rows with the
     * reference's exact defaulting (absent keys → "", only `date` nullable)
     * and 16-hex content hash over the full projection. Reads the `value`
-    * column of [[rawPages]], of [[streamPages]] or of any string Dataset. */
+    * column of [[rawPages]], of [[streamPages]] or of any string Dataset.
+    * A page that is not valid envelope JSON (say, cut off mid-item) fails
+    * the job: FAILFAST parsing, where the default PERMISSIVE mode would turn
+    * it into a null envelope and drop all of its items without an error. */
   def flattenPages(pages: Dataset[_]): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
     val s = (c: org.apache.spark.sql.Column) => coalesce(c, lit(""))
     pages
-      .select(from_json($"value", envelopeSchema).as("page"))
+      .select(from_json($"value", envelopeSchema, Map("mode" -> "FAILFAST")).as("page"))
       .select(explode($"page.items").as("item"))
       .select(
         s($"item.keys.lead_id").as("lead_id"),

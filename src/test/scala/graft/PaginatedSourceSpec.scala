@@ -49,6 +49,13 @@ class PaginatedSourceSpec extends SparkTestBase {
     intercept[IllegalStateException](PS.totalCount(page1("""{"count":"250","items":[]}""")))
   }
 
+  test("P1: a page cut off mid-item fails the extract instead of dropping its rows") {
+    val client = new TruncatingClient(new SyntheticPageClient(250, pageSize = 100), cut = 2)
+    val e = intercept[org.apache.spark.SparkException](
+      PS.bulkExtract(spark, client, parallelism = 2, pageSize = 100).count())
+    assert(e.getMessage.contains("MALFORMED_RECORD_IN_PARSING"), e.getMessage)
+  }
+
   test("S1+SNK1: incremental after partial bulk equals full bulk") {
     val client = new SyntheticPageClient(350, pageSize = 100)
     val firstTwoPages = PS.flattenPages(PS.rawPages(spark, client, 1, 2, 2))
@@ -299,6 +306,15 @@ object FetchRecorder {
 
 class RecordingClient(inner: PS.PageClient) extends PS.PageClient {
   def fetchPage(page: Int): String = { FetchRecorder.pages.add(page); inner.fetchPage(page) }
+}
+
+/** Serves page `cut` cut in half (mid-item, so not valid JSON) and every
+  * other page whole. */
+class TruncatingClient(inner: PS.PageClient, cut: Int) extends PS.PageClient {
+  def fetchPage(page: Int): String = {
+    val body = inner.fetchPage(page)
+    if (page == cut) body.take(body.length / 2) else body
+  }
 }
 
 /** JVM-wide fetch total, the ground truth an accumulator count is checked

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 /** Registry-wide invariants: unique names, oracle coverage, and — cheap but
   * high-value — every query must pass ANALYSIS against the real fixture
   * schemas (catches column typos / type errors without executing). */
@@ -94,6 +96,35 @@ class RegistrySpec extends SparkTestBase {
     assert(missing.isEmpty && stale.isEmpty,
       s"SURVEY §2.R2 drift — run `sbt 'runMain graft.GenSurveyTable'`; " +
         s"missing=${missing.toSeq.sorted.take(10)} stale=${stale.toSeq.sorted.take(10)}")
+  }
+
+  test("EngineSession: UTC, one shuffle partition per core, natives and their agg threshold") {
+    // the shared test session is built by the factory (SparkTestBase)
+    assert(spark.sparkContext.master == "local[4, 2]")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(spark.conf.get("spark.sql.shuffle.partitions").toInt ==
+      spark.sparkContext.defaultParallelism)
+    assert(spark.conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") == "65536")
+    val d = spark.sql(
+      """SELECT vec_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)),
+        |               array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d""".stripMargin)
+      .collect()(0).getDouble(0)
+    assert(d == 11.0)
+  }
+
+  test("one session path: only EngineSession calls SparkSession.builder in src/main") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val stream = java.nio.file.Files.walk(root)
+    val builders =
+      try stream.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          .contains("SparkSession.builder"))
+        .map(p => root.relativize(p).toString).toSet
+      finally stream.close()
+    assert(builders == Set("graft/EngineSession.scala"),
+      s"build sessions through graft.EngineSession, not in: ${(builders - "graft/EngineSession.scala").toSeq.sorted}")
   }
 
   test("every query analyzes against sf0.001 schemas") {

@@ -4,25 +4,18 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (getOrCreate → one JVM-wide session,
-  * mirrors the driver harness config: UTC, small shuffle partitions). */
+  * built by [[EngineSession]] like every main's: UTC, natives registered). */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
     // keep catalog artifacts (derby metastore, warehouse) out of the repo
     val scratch = java.nio.file.Files.createTempDirectory("graft_test").toString
     System.setProperty("derby.system.home", scratch)
-    val s = SparkSession.builder()
-      // local[4, 2]: allow ONE task retry — the exactly-once sink spec
-      // (SinksSpec "task retry cannot double-apply") injects a first-attempt
-      // task failure and needs Spark to actually re-attempt it; suites that
-      // never fail tasks are unaffected.
-      .master("local[4, 2]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", s"$scratch/warehouse")
-      .getOrCreate()
-    graft.functions.GraftFunctions.register(s)
-    s
+    // local[4, 2]: allow ONE task retry — the exactly-once sink spec
+    // (SinksSpec "task retry cannot double-apply") injects a first-attempt
+    // task failure and needs Spark to actually re-attempt it; suites that
+    // never fail tasks are unaffected.
+    EngineSession.create(cores = 4, maxTaskFailures = 2,
+      warehouseDir = Some(s"$scratch/warehouse"))
   }
 
   def tmpDir(prefix: String): String =
