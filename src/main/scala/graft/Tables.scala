@@ -10,10 +10,8 @@ import org.apache.spark.sql.functions.expr
   * by the parquet source. Nothing is cached or collected here.
   */
 object Tables {
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark) // idempotent, cheap
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
-  }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "orders")

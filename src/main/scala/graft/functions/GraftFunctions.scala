@@ -790,13 +790,16 @@ object GraftFunctions {
   /** Idempotent registration of the native functions into the session's
     * FunctionRegistry (runtime equivalent of SparkSessionExtensions
     * injectFunction — the driver owns session construction, so injection
-    * at build time isn't available). */
+    * at build time isn't available). Installs only the natives the session
+    * lacks, so a repeat call replaces nothing (Spark logs a WARN for every
+    * replaced function); the fallback threshold is set on every call. */
   def register(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       ObjAggFallbackThreshold.toString)
     val reg = spark.sessionState.functionRegistry
     natives.foreach { case (name, _, builder) =>
-      reg.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, builder, "built-in")
     }
     // selective pushdown through fenced projections (see FencePushdown);
     // extraOptimizations is the runtime analogue of injectOptimizerRule

@@ -161,10 +161,6 @@ object ImageCodec {
     out
   }
 
-  /** Encoded PPM size under [[encodePpm]]'s canonical header. */
-  def ppmFileSize(width: Int, height: Int, comment: String): Int =
-    s"P6\n# $comment\n$width $height\n255\n".length + 3 * width * height
-
   /** PPM header parse (shared by decode and the length PEEK): returns
     * (width, height, raster start offset). Full grammar — whitespace runs
     * and `#`-to-EOL comments between tokens, exactly one whitespace byte

@@ -423,11 +423,6 @@ object JpegCodec {
       sof ++ driSeg ++ sos ++ chunks.flatten.toArray ++ Array(0xff.toByte, 0xd9.toByte)
   }
 
-  /** 4:2:0 convenience shape (the x389 fixture layout). */
-  def encodeJpeg420(yBlocks: Array[Int], cb: Array[Int], cr: Array[Int],
-                    mw: Int, mh: Int): Array[Byte] =
-    encodeJpegYcc(yBlocks, cb, cr, mw, mh, 2, 2)
-
   // -------------------------------------------------------------- decode --
 
   private def rdBe16(b: Array[Byte], o: Int): Int = {

@@ -47,12 +47,4 @@ object Cdc {
          |  substring($text, element_at($starts, k),
          |    IF(k < size($starts), element_at($starts, k + 1), $len + 1)
          |      - element_at($starts, k)))""".stripMargin)
-
-  /** Fixed-width counterfactual for the shift-robustness property: chunks
-    * of exactly [[Div]] chars at fixed offsets (what x55-style chunking
-    * does to raw text). */
-  def fixedChunkTexts(text: String, len: String): Column =
-    expr(
-      s"""transform(sequence(1, CAST(ceil(CAST($len AS DOUBLE) / $Div) AS INT)), k ->
-         |  substring($text, (k - 1) * $Div + 1, $Div))""".stripMargin)
 }

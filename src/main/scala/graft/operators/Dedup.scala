@@ -26,15 +26,6 @@ object Dedup {
     * SQL so implementation and oracle can't silently diverge. */
   val DefaultMaxBucket = 1000
 
-  /** MinHash signature columns mh0..mh{k-1} over a (distinct) shingle array.
-    * One-pass native expression (graft.functions.MinHashSig): same
-    * `min(md5(j || ':' || shingle))` family as the k-lambda declarative
-    * form, without k interpreted sweeps over the array. */
-  def minhashSig(shingles: Column, numHashes: Int): Seq[Column] = {
-    val sig = call_function("minhash_sig", shingles, lit(numHashes))
-    (0 until numHashes).map(j => element_at(sig, j + 1).as(s"mh$j"))
-  }
-
   /** Candidate near-dup pairs (a < b on `idCol`) from banded MinHash: docs
     * sharing any band bucket. Signature + band hashes come from the native
     * one-pass `minhash_bands` (band b = md5(mh[b*r] || '|' || ...)).

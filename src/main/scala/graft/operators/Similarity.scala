@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Requires GraftFunctions.register (done by Tables.load). */
+  /** Requires GraftFunctions.register (done by EngineSession.create and by
+    * SparkEntry for sessions a caller hands in). */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
 
   def norm(a: Column): Column = sqrt(dot(a, a))

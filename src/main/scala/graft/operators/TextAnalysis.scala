@@ -94,9 +94,4 @@ object TextAnalysis {
     require(k <= 4, "long packing holds at most 4 UTF-16 code units")
     call_function("char_ngram_longs", text, lit(k))
   }
-
-  def charNgrams(text: Column, k: Int): Column =
-    array_sort(array_distinct(transform(
-      sequence(lit(1), greatest(length(text) - (k - 1), lit(1))),
-      i => substr(text, i, lit(k)))))
 }

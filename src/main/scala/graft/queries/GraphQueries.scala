@@ -250,14 +250,6 @@ object GraphQueries {
       .orderBy("node")
   }
 
-  /** x68's undirected simple heavy graph, exposed for round-count audits. */
-  private[graft] def heavyUndirectedForAudit(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    heavyTradeEdges(spark, dir)
-      .select(least($"src", $"dst").as("a"), greatest($"src", $"dst").as("b"))
-      .distinct()
-  }
-
   private def kcoreRoundCtes: String = (1 to KcoreRounds).map { i =>
     val prev = s"kc${i - 1}"
     s"""kc$i AS MATERIALIZED (

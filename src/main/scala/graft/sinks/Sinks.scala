@@ -15,8 +15,8 @@ import org.apache.spark.sql.types.StructType
   *    [[appendNew]] (anti-join + append — the relational equivalent of
   *    `INSERT ... ON DUPLICATE KEY UPDATE hash=VALUES(hash)`)
   *  - S3 (:295-330) micro-batched sink writes (2500 rows/round-trip) →
-  *    [[foreachBatched]] (foreachPartition + grouped iterator; for JDBC
-  *    targets this is `option("batchsize", 2500)`)
+  *    [[upsertBatched]] (foreachPartition + grouped iterator; for a Spark
+  *    JDBC target this is `option("batchsize", 2500)`)
   *
   * Scale: appendNew anti-joins against the sink's hash column as stored —
   * no distinct key set, since a left-anti join needs no unique keys — and
@@ -160,7 +160,10 @@ object Sinks {
     * LocalRelation (incrementalExtract's "API has nothing new"
     * `existing.limit(0)`), nothing is written and 0 is returned. A replay
     * whose rows all exist already also returns 0, but the write job still
-    * runs and may commit one zero-row file. */
+    * runs and may commit one zero-row file.
+    *
+    * A stream lands through the same merge:
+    * `foreachBatch((b, _) => Sinks.appendNew(b.sparkSession, b, path, …))`. */
   def appendNew(spark: SparkSession, df: DataFrame, path: String,
                 hashCol: String, tieBreak: Seq[String]): Long = {
     val deduped = Etl.dedupByHash(df, hashCol, tieBreak)
@@ -188,14 +191,6 @@ object Sinks {
     rows.filter(count()).write.mode(SaveMode.Append).parquet(path)
     written.value
   }
-
-  /** S3: partition-local micro-batching — `sink` is invoked once per group
-    * of `batchSize` rows (the shape a JDBC multi-row INSERT wants). */
-  def foreachBatched(df: DataFrame, batchSize: Int = BatchSize)(
-      sink: Seq[org.apache.spark.sql.Row] => Unit): Unit =
-    df.foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-      it.grouped(batchSize).foreach(g => sink(g))
-    }
 
   /** SNK1+S3 in JDBC shape: stream `df` through `upsert` in `batchSize`-row
     * batches — the unit of the reference's multi-row
@@ -372,23 +367,4 @@ object Sinks {
       } finally conn.close()
     }
   }
-
-  /** Training-shard writer: materialize a corpus as one directory per
-    * shard with rows stored in the given visit order — the layout a
-    * sequential dataloader consumes (x52's epoch shuffle computes the
-    * order; this writes it). `repartition(shardCol)` co-locates each
-    * shard in one task, `sortWithinPartitions(shard, order)` makes every
-    * emitted file internally ordered (several shards may share a task;
-    * the dynamic-partition writer still splits them into their own
-    * directories), and `maxRecordsPerFile` bounds file size so a 100 TB
-    * corpus yields evenly-sized reader units instead of one file per
-    * shard. */
-  def writeShards(df: DataFrame, shardCol: String, orderCol: String,
-                  path: String, maxRecordsPerFile: Long = 1000000L): Unit =
-    df.repartition(org.apache.spark.sql.functions.col(shardCol))
-      .sortWithinPartitions(shardCol, orderCol)
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(shardCol)
-      .parquet(path)
 }

@@ -132,19 +132,18 @@ object PaginatedSource {
   def flattenPages(pages: Dataset[_]): DataFrame = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val s = (c: org.apache.spark.sql.Column) => coalesce(c, lit(""))
     pages
       .select(from_json($"value", envelopeSchema, Map("mode" -> "FAILFAST")).as("page"))
       .select(explode($"page.items").as("item"))
       .select(
-        s($"item.keys.lead_id").as("lead_id"),
-        s($"item.keys.url").as("url"),
-        s($"item.keys.session_id").as("session_id"),
-        s($"item.keys.order").as("order"),
+        Etl.emptyStringDefault($"item.keys.lead_id").as("lead_id"),
+        Etl.emptyStringDefault($"item.keys.url").as("url"),
+        Etl.emptyStringDefault($"item.keys.session_id").as("session_id"),
+        Etl.emptyStringDefault($"item.keys.order").as("order"),
         Etl.parseSfmcDate($"item.values.date").as("date"),
-        s($"item.values.type_id").as("type_id"),
-        s($"item.values.event_category").as("event_category"),
-        Etl.cleanEventName(s($"item.values.event_name")).as("event_name"),
+        Etl.emptyStringDefault($"item.values.type_id").as("type_id"),
+        Etl.emptyStringDefault($"item.values.event_category").as("event_category"),
+        Etl.cleanEventName(Etl.emptyStringDefault($"item.values.event_name")).as("event_name"),
         Etl.contentHash(
           $"item.keys.lead_id", $"item.keys.url", $"item.keys.session_id", $"item.keys.order",
           $"item.values.type_id", $"item.values.event_category", $"item.values.event_name",

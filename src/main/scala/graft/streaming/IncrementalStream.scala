@@ -1,49 +1,29 @@
 package graft.streaming
 
-import graft.operators.Etl
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
-/** Structured-Streaming re-expression of the reference's incremental mode
-  * (SURVEY.md §2 rows S1–S3): the reference simulates streaming with Python
-  * generators + offset CDC + DB-unique-key dedup; here the same semantics
-  * are file-source micro-batches with `Trigger.AvailableNow` and an
-  * idempotent per-batch merge (append only hashes not already in the sink).
+/** Stateful Structured-Streaming operators. Each keeps per-key state
+  * across micro-batches (checkpoint-carried), and each has a batch
+  * counterpart that registry queries or specs prove it equal to:
   *
-  * Scale: `foreachBatch` materializes the existing key set per micro-batch —
-  * fine while the sink's distinct-hash set broadcasts; at 100 TB the sink
-  * would be bucketed by hash and the anti-join stays shuffle-free on the
-  * batch side.
+  *  - keyed-state folds with `flatMapGroupsWithState`: sequence packing
+  *    ([[packStream]]), SCD2 versions ([[scd2Stream]]), the near-dup gate
+  *    ([[nearDupGate]]), top-k standings ([[topkStream]]) and decayed
+  *    counts ([[decayStream]]);
+  *  - `transformWithState` processors with value, list and map state,
+  *    initial state and event-time timers: running totals, per-type
+  *    counts, purchase logs, warm-started totals, a token bucket,
+  *    Page-Hinkley drift, gap and dynamic-gap timer sessions and SPRT
+  *    decisions (x207, x231, x362 and their neighbours);
+  *  - watermarked operators: the stream-stream interval join
+  *    ([[clickViewJoin]]) and session-window counts ([[sessionCounts]]).
+  *
+  * The reference's incremental load (SURVEY.md §2 rows S1–S3) streams
+  * through `PaginatedSource.streamPages` and lands in the sink through
+  * `Sinks.appendNew`, the one idempotent merge; it needs no operator here.
   */
 object IncrementalStream {
-
-  /** Per-user running aggregate carried as explicit state. */
-  final case class UserStats(user_id: Long, n_events: Long, sum_value: Double)
-
-  /** Custom keyed state via mapGroupsWithState: a running per-user
-    * (count, sum) that survives across micro-batches through the
-    * checkpoint — the Structured Streaming surface for state machines the
-    * built-in windowed aggregations can't express. NoTimeout here; an
-    * event-time timeout + watermark turns the same shape into expiring
-    * sessions. */
-  def runningUserStats(events: org.apache.spark.sql.Dataset[(Long, Double)]):
-      org.apache.spark.sql.Dataset[UserStats] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_._1)
-      .mapGroupsWithState[UserStats, UserStats](
-        org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout()) {
-        case (uid, rows, state) =>
-          val prev = state.getOption.getOrElse(UserStats(uid, 0L, 0.0))
-          val batch = rows.toSeq
-          val next = UserStats(uid, prev.n_events + batch.size,
-            prev.sum_value + batch.map(_._2).sum)
-          state.update(next)
-          next
-      }
-  }
 
   /** One packed document emitted by [[packStream]]. */
   final case class PackedDoc(doc_id: Long, shard: Long, n_tok: Int,
@@ -276,104 +256,6 @@ object IncrementalStream {
       }
   }
 
-  /** One closed (gap-expired) session. */
-  final case class SessionSummary(user_id: Long, n_events: Long,
-                                  first_ms: Long, last_ms: Long)
-
-  /** Expiring sessions via flatMapGroupsWithState with an EVENT-TIME
-    * timeout: per-user state accumulates (count, first, last) and arms a
-    * timeout at `last + gap`; when the watermark passes it, the group fires
-    * with zero input rows, emits the closed session, and drops its state —
-    * the state-machine shape `mapGroupsWithState` can't express (a timeout
-    * firing emits 0/1 rows, not exactly one). Input must carry a watermark
-    * on `ts`. Bounded state: one (3×Long) entry per OPEN session, removed
-    * at close — survives any scale the keyed state store survives.
-    *
-    * At-least-one-summary-per-session, NOT exactly-one: the close-now path
-    * below (sub-watermark straggler for an already-expired session) emits a
-    * summary built from the straggler rows alone, so a session whose
-    * regular timeout already fired can produce a SECOND summary with an
-    * overlapping time range for the same user. Downstream consumers of the
-    * append stream must either tolerate duplicate/overlapping sessions or
-    * re-aggregate by (user, overlapping-range); suppressing the straggler
-    * summary instead would silently DROP late rows, which is the worse
-    * default for an ETL whose sink dedups on content hash anyway. */
-  def expiringSessions(events: org.apache.spark.sql.Dataset[(Long, java.sql.Timestamp)],
-                       gapMs: Long): org.apache.spark.sql.Dataset[SessionSummary] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_._1)
-      .flatMapGroupsWithState[(Long, Long, Long), SessionSummary](
-        org.apache.spark.sql.streaming.OutputMode.Append(),
-        org.apache.spark.sql.streaming.GroupStateTimeout.EventTimeTimeout()) {
-        case (uid, rows, state) =>
-          if (state.hasTimedOut) {
-            val (n, first, last) = state.get
-            state.remove()
-            Iterator(SessionSummary(uid, n, first, last))
-          } else {
-            val times = rows.map(_._2.getTime).toSeq
-            val (n0, f0, l0) = state.getOption.getOrElse((0L, Long.MaxValue, Long.MinValue))
-            val next = (n0 + times.size, math.min(f0, times.min), math.max(l0, times.max))
-            // flatMapGroupsWithState does NOT drop late rows itself: a
-            // straggler for a session whose `last + gap` is already behind
-            // the watermark would make setTimeoutTimestamp throw (timeouts
-            // must be in the watermark's future) and fail the whole stream.
-            // Such a session is by definition expired — close it now.
-            val target = next._3 + gapMs
-            if (target <= state.getCurrentWatermarkMs()) {
-              if (state.exists) state.remove()
-              Iterator(SessionSummary(uid, next._1, next._2, next._3))
-            } else {
-              state.update(next)
-              state.setTimeoutTimestamp(target)
-              Iterator.empty
-            }
-          }
-      }
-  }
-
-  /** Drain all available source files (JSON lines with `schema`) into the
-    * parquet sink at `sinkDir`, idempotently: within-batch dedup on
-    * `hashCol`, then anti-join against the hashes already present. Returns
-    * when the AvailableNow drain finishes.
-    *
-    * `mode` is the JSON parse mode: PERMISSIVE (default) nulls out
-    * malformed lines; FAILFAST fails the stream on the first bad line —
-    * the reference's raise-on-bad-input behavior
-    * (salesforce_extractor.py:126-136). */
-  def mergeAvailableNow(spark: SparkSession, srcDir: String, schema: StructType,
-                        hashExprCols: Seq[String], sinkDir: String,
-                        checkpoint: String, mode: String = "PERMISSIVE"): Unit = {
-    val stream = spark.readStream.schema(schema).option("mode", mode).json(srcDir)
-    val hashed = stream.withColumn("hash",
-      Etl.contentHash(hashExprCols.map(col): _*))
-    val query = hashed.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val ss = batch.sparkSession
-        val deduped = Etl.dedupByHash(batch, "hash", hashExprCols.take(1))
-        // Only AnalysisException (sink doesn't exist yet) means "no keys";
-        // a real read failure (corrupt footer, IO) must propagate — treating
-        // it as empty would disable the anti-join and append duplicates,
-        // the exact idempotence guarantee this operator provides.
-        val existingHashes =
-          try ss.read.parquet(sinkDir).select("hash").distinct()
-          catch { case _: org.apache.spark.sql.AnalysisException =>
-            ss.emptyDataFrame.withColumn("hash", lit("")) }
-        // Materialize the existing key set BEFORE appending to the same
-        // path — a lazy scan would race its own write.
-        existingHashes.cache().count()
-        deduped.join(existingHashes, Seq("hash"), "left_anti")
-          .write.mode("append").parquet(sinkDir)
-        existingHashes.unpersist()
-        ()
-      }
-      .start()
-    query.awaitTermination()
-  }
-
   /** Stream-stream INNER join with an event-time range condition: each
     * click joins the views of the same user at most `windowSec` seconds
     * BEFORE it (attribution). Both sides carry watermarks, and the range
@@ -415,7 +297,7 @@ object IncrementalStream {
     * (count, sum, max) over purchase cents held in an explicit typed
     * `ValueState`. This is the NEW arbitrary-state API (state variables +
     * TTL + timers on a RocksDB store) — the successor surface to the
-    * `mapGroupsWithState` operators above; the semantics here are kept
+    * `flatMapGroupsWithState` operators above; the semantics here are kept
     * deliberately re-derivable (a plain keyed aggregate) so a batch
     * oracle can gate the plumbing. */
   final class TwsTotalsProcessor

@@ -12,7 +12,7 @@ import graft.sources.{PaginatedSource, SyntheticPageClient}
   * ON-DUPLICATE-KEY no-op), then offset-CDC incremental with the
   * boundary-page overlap (:250-280) — proving inserted-count and
   * idempotency semantics through a real JDBC driver, unique index, and
-  * transaction commit rather than the in-memory UpsertSink double. */
+  * transaction commit. */
 class JdbcSinkSpec extends SparkTestBase {
 
   private val url = "jdbc:derby:memory:graftjdbc;create=true"

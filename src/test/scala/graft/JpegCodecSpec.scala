@@ -108,7 +108,7 @@ class JpegCodecSpec extends SparkTestBase {
       val yB = Array.fill(4 * mw * mh)(rnd.nextInt(256))
       val cb = Array.fill(mw * mh)(rnd.nextInt(256))
       val cr = Array.fill(mw * mh)(rnd.nextInt(256))
-      val enc = JpegCodec.encodeJpeg420(yB, cb, cr, mw, mh)
+      val enc = JpegCodec.encodeJpegYcc(yB, cb, cr, mw, mh, 2, 2)
       val (img, len) = JpegCodec.decodeJpeg(enc)
       assert(len == enc.length)
       assert(img.width == 16 * mw && img.height == 16 * mh)

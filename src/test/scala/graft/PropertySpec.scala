@@ -96,8 +96,8 @@ class PropertySpec extends SparkTestBase {
           graft.operators.TextAnalysis.charNgramLongs($"a", 3),
           graft.operators.TextAnalysis.charNgramLongs($"b", 3)).as("n"),
         size(array_intersect(
-          graft.operators.TextAnalysis.charNgrams($"a", 3),
-          graft.operators.TextAnalysis.charNgrams($"b", 3))).as("d"))
+          ReferenceImpls.charNgrams($"a", 3),
+          ReferenceImpls.charNgrams($"b", 3))).as("d"))
         .as[(Int, Int)].collect()
       cnt.foreach { case (n, d) => assert(n == d, s"charNgramLongs seed=$seed") }
     }
@@ -381,7 +381,7 @@ class PropertySpec extends SparkTestBase {
           .withColumn("len", length($"text"))
           .withColumn("starts", Cdc.chunkStarts("text", "len"))
           .select(Cdc.chunkTexts("text", "starts", "len").as("cdc"),
-            Cdc.fixedChunkTexts("text", "len").as("fix"))
+            ReferenceImpls.fixedChunkTexts("text", "len").as("fix"))
           .head()
         (r.getSeq[String](0), r.getSeq[String](1))
       }

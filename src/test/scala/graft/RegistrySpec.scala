@@ -127,9 +127,41 @@ class RegistrySpec extends SparkTestBase {
       s"build sessions through graft.EngineSession, not in: ${(builders - "graft/EngineSession.scala").toSeq.sorted}")
   }
 
+  test("every DataSourceRegister in src/main is listed in META-INF/services, and every listed class exists") {
+    val services = java.nio.file.Paths.get(
+      "src/main/resources/META-INF/services/org.apache.spark.sql.sources.DataSourceRegister")
+    val listed = java.nio.file.Files.readAllLines(services).asScala
+      .map(_.trim).filterNot(l => l.isEmpty || l.startsWith("#")).toSet
+    // a class header up to its body, not running into a comment or another
+    // declaration
+    val decl = """class\s+(\w+)(?:(?!\bclass\b|\bobject\b|\btrait\b|/\*)[^{])*?\bDataSourceRegister\b""".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val stream = java.nio.file.Files.walk(root)
+    val declared =
+      try stream.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap { p =>
+          val src = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          val pkg = """(?m)^package\s+([\w.]+)""".r.findFirstMatchIn(src).map(_.group(1) + ".")
+          decl.findAllMatchIn(src).map(m => pkg.getOrElse("") + m.group(1))
+        }.toSet
+      finally stream.close()
+    assert(declared.nonEmpty)
+    assert(declared == listed,
+      s"declared but unlisted: ${declared -- listed}; listed but undeclared: ${listed -- declared}")
+    listed.foreach { c =>
+      assert(classOf[org.apache.spark.sql.sources.DataSourceRegister]
+        .isAssignableFrom(Class.forName(c)), s"$c is not a DataSourceRegister")
+    }
+  }
+
   test("every query analyzes against sf0.001 schemas") {
     Registry.all.foreach { q =>
-      val schema = q.fn(spark, sfDir).schema // analysis only, no execution
+      // Only the returned plan is analyzed, not run, but building it does
+      // run jobs (about 2,700 over the registry): parquet schema inference
+      // per table read, eager localCheckpoints in graph and training
+      // fixpoints, and the streaming runs some fns make.
+      val schema = q.fn(spark, sfDir).schema
       assert(schema.nonEmpty, s"${q.name} produced empty schema")
       assert(schema.fieldNames.toSeq.distinct.size == schema.size,
         s"${q.name} has duplicate column names")
@@ -159,6 +191,40 @@ class RegistrySpec extends SparkTestBase {
 
   test("driver contract: entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
+  }
+
+  test("SparkEntry.queries registers the natives into a fresh session") {
+    val s = spark.newSession()
+    val vecDot = org.apache.spark.sql.catalyst.FunctionIdentifier("vec_dot")
+    assert(!s.sessionState.functionRegistry.functionExists(vecDot))
+    assert(SparkEntry.queries("x30_cosine_topk")(s, sfDir).count() > 0)
+    assert(s.sessionState.functionRegistry.functionExists(vecDot))
+  }
+
+  test("building a query on the factory session replaces no registered function") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val replaced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new AbstractAppender("replace-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("replaced a previously registered function")) replaced.add(m)
+      }
+    }
+    probe.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getRootLogger
+    root.addAppender(probe)
+    try {
+      // a registry query built through SparkEntry, then a repeat registration
+      SparkEntry.queries("q02_filter_pushdown")(spark, sfDir).schema
+      graft.functions.GraftFunctions.register(spark)
+    } finally {
+      root.removeAppender(probe)
+      probe.stop()
+    }
+    assert(replaced.isEmpty, replaced.asScala.take(3).mkString("\n"))
   }
 
   test("cluster deploy path: GraftExtensions injects functions AND FencePushdown at session build") {

@@ -5,100 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Sink-side semantics: create-if-absent, full refresh, idempotent append,
-  * partition-local batching (SNK1-SNK3, S3). */
+  * CDC merge and the JDBC-shaped batched upsert (SNK1-SNK3, S3). */
 class SinksSpec extends SparkTestBase {
   import spark.implicits._
 
   private val schema = StructType(Seq(
     StructField("hash", StringType), StructField("v", IntegerType)))
-
-  test("SNK1 DSv2: batched upsert write — exactly-once commit, flush cadence, truncate") {
-    import graft.sinks.UpsertSink
-    val fmt = classOf[graft.sinks.UpsertSinkProvider].getName
-    UpsertSink.clear("t1")
-    // 120 rows in ONE partition with batchsize=50 -> 3 sealed flushes
-    spark.range(0, 120).select(concat(lit("k"), $"id").as("k"), $"id".as("v"))
-      .coalesce(1)
-      .write.format(fmt).mode("append")
-      .option("target", "t1").option("key", "k").option("batchsize", "50")
-      .save()
-    val s = UpsertSink.store("t1")
-    assert(s.rows.size() == 120)
-    assert(s.flushes.get() == 3, s"expected ceil(120/50)=3 flushes, got ${s.flushes.get()}")
-    // idempotent upsert: re-append 40 overlapping keys with NEW values ->
-    // count unchanged, values updated (DB unique-key semantics without a DB)
-    spark.range(0, 40).select(concat(lit("k"), $"id").as("k"), ($"id" + 1000).as("v"))
-      .coalesce(1)
-      .write.format(fmt).mode("append")
-      .option("target", "t1").option("key", "k").option("batchsize", "50")
-      .save()
-    assert(s.rows.size() == 120)
-    assert(s.rows.get(UpsertSink.keyOf("k7")) == Seq("k7", 1007L))
-    assert(s.rows.get(UpsertSink.keyOf("k100")) == Seq("k100", 100L))
-    // SNK3: overwrite negotiates SupportsTruncate -> full refresh in one commit
-    Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
-      .write.format(fmt).mode("overwrite")
-      .option("target", "t1").option("key", "k")
-      .save()
-    assert(s.rows.size() == 2 && s.rows.get(UpsertSink.keyOf("a")) == Seq("a", 1L))
-    UpsertSink.clear("t1")
-  }
-
-  test("SNK1 DSv2: task retry cannot double-apply (exactly-once under retries)") {
-    // VERDICT r11 #6: the buffer-into-commit-message design was asserted by
-    // design but never adversarially tested. Inject a REAL task failure —
-    // partition 2's first attempt throws midway, AFTER the writer has
-    // sealed one full batch and buffered part of the next (the hard case:
-    // those buffered rows must die with the attempt) — and let Spark retry
-    // it (SparkTestBase runs local[4, 2]). The committed store must equal
-    // the single-attempt run exactly, batch count included.
-    import graft.sinks.UpsertSink
-    val fmt = classOf[graft.sinks.UpsertSinkProvider].getName
-    UpsertSink.clear("t_retry")
-    val ds = spark.range(0, 100, 1, 4).map { i =>
-      val tc = org.apache.spark.TaskContext.get()
-      // partition 2 holds ids 50..74; with batchsize 10 the writer has
-      // sealed [50..59] and buffered [60..64] when 65 throws on attempt 0
-      if (tc != null && tc.partitionId() == 2 && tc.attemptNumber() == 0 && i == 65)
-        throw new RuntimeException("injected first-attempt failure")
-      (i, i * 2)
-    }.toDF("k", "v")
-    ds.write.format(fmt).mode("append")
-      .option("target", "t_retry").option("key", "k").option("batchsize", "10")
-      .save()
-    val s = UpsertSink.store("t_retry")
-    assert(s.rows.size() == 100)
-    (0L until 100L).foreach { i =>
-      assert(s.rows.get(UpsertSink.keyOf(i)) == Seq(i, i * 2), s"row $i")
-    }
-    // exactly-once at the BATCH level too: 4 partitions x ceil(25/10) = 12
-    // applied flushes — a leaked first-attempt batch would make this 13+
-    assert(s.flushes.get() == 12,
-      s"expected exactly 12 applied batches, got ${s.flushes.get()}")
-    UpsertSink.clear("t_retry")
-  }
-
-  test("SNK1 DSv2: complex-typed rows are deep-copied out of the reused InternalRow") {
-    import graft.sinks.UpsertSink
-    val fmt = classOf[graft.sinks.UpsertSinkProvider].getName
-    UpsertSink.clear("t2")
-    // many rows per partition with an ARRAY column: the DataWriter receives
-    // a REUSED row buffer, so values must be detached copies — an aliased
-    // UnsafeArrayData would make every buffered row report the last row's
-    // array (the round-5 review catch)
-    spark.range(0, 50)
-      .select($"id".as("k"), array($"id", $"id" * 10).as("arr"))
-      .coalesce(1)
-      .write.format(fmt).mode("append")
-      .option("target", "t2").option("key", "k")
-      .save()
-    val s2 = UpsertSink.store("t2")
-    assert(s2.rows.size() == 50)
-    (0L until 50L).foreach { i =>
-      assert(s2.rows.get(UpsertSink.keyOf(i)) == Seq(i, Seq(i, i * 10)), s"row $i")
-    }
-    UpsertSink.clear("t2")
-  }
 
   test("SNK2: ensureExists creates empty sink once, second call no-ops") {
     val path = tmpDir("sink") + "/t"
@@ -219,44 +131,6 @@ class SinksSpec extends SparkTestBase {
     val n2 = runOnce()
     assert(n2 == 0)
     assert(FakeJdbcTable.size == 6000)
-  }
-
-  test("S3: foreachBatched groups rows into batch-size chunks") {
-    // closure ships to executors — collect batch sizes via accumulator
-    val acc = spark.sparkContext.collectionAccumulator[Int]("batchSizes")
-    Sinks.foreachBatched(spark.range(0, 25).toDF().coalesce(1), batchSize = 10) { g =>
-      acc.add(g.size); ()
-    }
-    val s = scala.jdk.CollectionConverters.ListHasAsScala(acc.value).asScala.toSeq
-    assert(s.nonEmpty && s.sum == 25 && s.forall(_ <= 10))
-  }
-
-  test("writeShards: one directory per shard, rows file-ordered by the visit rank") {
-    import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("shards").toString
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select($"doc_id", $"text",
-        ($"doc_id" % 4).as("shard"),
-        substring(md5(concat_ws("|", lit("e1"), $"doc_id")), 1, 8).as("rank"))
-    Sinks.writeShards(docs, "shard", "rank", out, maxRecordsPerFile = 50)
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("shard=0", "shard=1", "shard=2", "shard=3"))
-    // Within every emitted file the visit rank is non-decreasing (what a
-    // sequential reader observes), and nothing was lost or duplicated.
-    val back = spark.read.parquet(out).select($"doc_id")
-    // Read each emitted file INDIVIDUALLY (single small file -> one input
-    // partition, storage order preserved); a grouped shuffle read could
-    // interleave a file's splits and report spurious disorder.
-    val files = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .flatMap(_.listFiles().filter(_.getName.endsWith(".parquet")))
-    assert(files.nonEmpty)
-    files.foreach { f =>
-      val rs = spark.read.parquet(f.getAbsolutePath)
-        .select($"rank").collect().map(_.getString(0)).toSeq
-      assert(rs == rs.sorted, s"shard file ${f.getName} must be internally rank-ordered")
-    }
-    assert(back.count() == docs.count())
-    assert(back.distinct().count() == docs.count())
   }
 }
 

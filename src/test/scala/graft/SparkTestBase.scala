@@ -10,10 +10,10 @@ trait SparkTestBase extends AnyFunSuite {
     // keep catalog artifacts (derby metastore, warehouse) out of the repo
     val scratch = java.nio.file.Files.createTempDirectory("graft_test").toString
     System.setProperty("derby.system.home", scratch)
-    // local[4, 2]: allow ONE task retry — the exactly-once sink spec
-    // (SinksSpec "task retry cannot double-apply") injects a first-attempt
-    // task failure and needs Spark to actually re-attempt it; suites that
-    // never fail tasks are unaffected.
+    // local[4, 2]: allow ONE task retry — the sink's retried-task count
+    // spec (SinksSpec "appendNew's count holds when a write task fails
+    // once") injects a first-attempt task failure and needs Spark to
+    // actually re-attempt it; suites that never fail tasks are unaffected.
     EngineSession.create(cores = 4, maxTaskFailures = 2,
       warehouseDir = Some(s"$scratch/warehouse"))
   }

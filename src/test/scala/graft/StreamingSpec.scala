@@ -4,8 +4,9 @@ import graft.streaming.IncrementalStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Structured-Streaming incremental semantics (S1–S3): AvailableNow drain,
-  * idempotent merge across overlapping batches, session windows. */
+/** Structured-Streaming semantics (S1–S3): watermarked dedup, keyed-state
+  * operators against their batch counterparts, stream-stream joins,
+  * session windows and transformWithState timers. */
 class StreamingSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -17,47 +18,6 @@ class StreamingSpec extends SparkTestBase {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, name),
       lines.mkString("\n").getBytes("UTF-8"))
-  }
-
-  test("S1-S3: AvailableNow drain merges idempotently across overlapping files") {
-    val src = tmpDir("stream_src")
-    val sink = tmpDir("stream_sink") + "/out"
-    val cp1 = tmpDir("stream_cp1")
-    val cp2 = tmpDir("stream_cp2")
-
-    writeBatch(src, "b1.json", (0L until 10L).map(i => i -> s"p$i"))
-    IncrementalStream.mergeAvailableNow(spark, src, schema, Seq("id", "payload"), sink, cp1)
-    assert(spark.read.parquet(sink).count() == 10)
-
-    // second drain with fresh checkpoint re-reads b1 AND new overlapping b2:
-    // rows 5..14 overlap 5..9 — the merge must swallow the overlap (D1/SNK1)
-    writeBatch(src, "b2.json", (5L until 15L).map(i => i -> s"p$i"))
-    IncrementalStream.mergeAvailableNow(spark, src, schema, Seq("id", "payload"), sink, cp2)
-    val out = spark.read.parquet(sink)
-    assert(out.count() == 15)
-    assert(out.select("hash").distinct().count() == 15)
-  }
-
-  test("F-modes: FAILFAST fails the drain on a malformed line; PERMISSIVE nulls it") {
-    val src = tmpDir("ff_src")
-    val sinkF = tmpDir("ff_sink") + "/out"
-    val sinkP = tmpDir("ff_sinkp") + "/out"
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(src, "bad.json"),
-      Seq("""{"id":1,"payload":"ok"}""", """{"id":2,""", """{"id":3,"payload":"ok3"}""")
-        .mkString("\n").getBytes("UTF-8"))
-    // reference behavior (raise on bad input): the stream must FAIL, not
-    // silently load a partial page
-    intercept[Exception] {
-      IncrementalStream.mergeAvailableNow(spark, src, schema, Seq("id", "payload"),
-        sinkF, tmpDir("ff_cp"), mode = "FAILFAST")
-    }
-    // PERMISSIVE keeps draining: the malformed line becomes a null row
-    IncrementalStream.mergeAvailableNow(spark, src, schema, Seq("id", "payload"),
-      sinkP, tmpDir("ff_cpp"), mode = "PERMISSIVE")
-    val out = spark.read.parquet(sinkP)
-    assert(out.count() == 3)
-    assert(out.filter(col("id").isNull).count() == 1)
   }
 
   test("S1 streaming: watermarked dropDuplicates dedups across micro-batches") {
@@ -78,46 +38,6 @@ class StreamingSpec extends SparkTestBase {
     val out = spark.table("wm_dedup")
     assert(out.count() == 3)
     assert(out.select("id").distinct().count() == 3)
-  }
-
-  test("S3 custom state: mapGroupsWithState accumulates across micro-batches") {
-    val src = tmpDir("mgs_src")
-    val cp = tmpDir("mgs_cp")
-    val out = tmpDir("mgs_out") + "/updates"
-    def drain(): Unit = {
-      val stream = spark.readStream.schema(
-        StructType(Seq(StructField("user_id", LongType), StructField("value", DoubleType))))
-        .json(src)
-      import spark.implicits._
-      // memory sink can't recover a checkpoint; foreachBatch can
-      val q = IncrementalStream.runningUserStats(stream.as[(Long, Double)])
-        .writeStream
-        .outputMode("update")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[IncrementalStream.UserStats], _: Long) =>
-          batch.write.mode("append").parquet(out); ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    java.nio.file.Files.write(java.nio.file.Paths.get(src, "b1.json"),
-      Seq("""{"user_id":1,"value":2.0}""", """{"user_id":1,"value":3.0}""",
-        """{"user_id":2,"value":5.0}""").mkString("\n").getBytes)
-    drain()
-    // second batch, SAME checkpoint -> state must carry over
-    java.nio.file.Files.write(java.nio.file.Paths.get(src, "b2.json"),
-      Seq("""{"user_id":1,"value":10.0}""").mkString("\n").getBytes)
-    drain()
-    import spark.implicits._
-    val latest = spark.read.parquet(out)
-      .groupBy($"user_id")
-      .agg(org.apache.spark.sql.functions.max($"n_events").as("n"),
-        org.apache.spark.sql.functions.max($"sum_value").as("s"))
-      .orderBy("user_id")
-      .as[(Long, Long, Double)].collect().toSeq
-    // user 1: batch1 state (2, 5.0) then batch2 accumulates to (3, 15.0)
-    assert(latest == Seq((1L, 3L, 15.0), (2L, 1L, 5.0)))
   }
 
   test("S3 streaming packer: per-shard token totals carry across micro-batches") {
@@ -451,47 +371,6 @@ class StreamingSpec extends SparkTestBase {
     val streamAdmitted = spark.read.parquet(out).as[Long].collect().toSet
     assert(streamAdmitted == batchAdmitted)
     assert(batchAdmitted.nonEmpty && batchAdmitted.size < newDocs.count())
-  }
-
-  test("S3 custom state: event-time timeout closes sessions after the gap") {
-    val src = tmpDir("exp_src")
-    val cp = tmpDir("exp_cp")
-    val out = tmpDir("exp_out") + "/sessions"
-    def drain(): Unit = {
-      val stream = spark.readStream.schema(
-        StructType(Seq(StructField("user_id", LongType), StructField("sec", LongType))))
-        .json(src)
-        .select(col("user_id"), timestamp_seconds(col("sec")).as("ts"))
-        .withWatermark("ts", "0 seconds")
-      import spark.implicits._
-      val q = IncrementalStream.expiringSessions(
-        stream.as[(Long, java.sql.Timestamp)], gapMs = 60000L)
-        .writeStream
-        .outputMode("append")
-        .option("checkpointLocation", cp)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[IncrementalStream.SessionSummary], _: Long) =>
-          b.write.mode("append").parquet(out); ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    def file(name: String, rows: (Long, Long)*): Unit =
-      java.nio.file.Files.write(java.nio.file.Paths.get(src, name),
-        rows.map { case (u, s) => s"""{"user_id":$u,"sec":$s}""" }.mkString("\n").getBytes)
-    file("b1.json", (1L, 1000L), (1L, 1010L))          // user 1: two events 10s apart
-    drain()
-    file("b2.json", (2L, 2000L))                        // advances watermark past 1010+60
-    drain()
-    file("b3.json", (2L, 2001L))                        // next batch fires user 1's timeout
-    drain()
-    import spark.implicits._
-    val sessions = spark.read.parquet(out)
-      .as[IncrementalStream.SessionSummary].collect().toSeq
-    val u1 = sessions.filter(_.user_id == 1L)
-    assert(u1 == Seq(IncrementalStream.SessionSummary(1L, 2L, 1000000L, 1010000L)))
-    // user 2's session is still open (watermark hasn't passed 2001+60)
-    assert(!sessions.exists(_.user_id == 2L))
   }
 
   test("stream-stream interval join: clicks attribute to in-window views only") {

@@ -42,9 +42,14 @@ def norm(df):
             df[c] = df[c].astype("float64")
     return df
 
-fails = []
-for name in sorted(oracle):
-    if only and name not in only: continue
+# A requested name without an oracle key fails; the summary counts only the
+# names asked for (every oracle key when none are).
+missing = sorted(only - oracle.keys())
+checked = sorted(only & oracle.keys()) if only else sorted(oracle)
+fails = list(missing)
+for name in missing:
+    print(f"FAIL {name}: no oracle key in {outdir}/oracle_sql.json")
+for name in checked:
     try:
         spark_raw = pd.read_parquet(f"{outdir}/{name}")
         duck_raw = con.execute(oracle[name]).fetchdf()
@@ -79,5 +84,6 @@ for name in sorted(oracle):
             print(f"OK   {name} ({len(spark_df)} rows)")
     except Exception as e:
         fails.append(name); print(f"ERROR {name}: {type(e).__name__}: {str(e)[:300]}")
-print(f"\n{len(oracle)-len(fails)}/{len(oracle)} passed")
+total = len(missing) + len(checked)
+print(f"\n{total-len(fails)}/{total} passed")
 sys.exit(1 if fails else 0)
