@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * because every generated field is a pure function of the item index, the
   * DuckDB oracle regenerates the expected rows directly from `range()` —
   * the Spark side additionally exercises the real JSON envelope layer
-  * (from_json + explode). */
+  * (the graft-pages reader's parse of each page into item rows). */
 object ConnectorQueries {
 
   private val TotalItems = 1234

@@ -157,4 +157,13 @@ object QueryUtil {
     (1 to hexChars).map(i => s"(strpos('0123456789abcdef', substr($h, $i, 1)) - 1)")
       .reduce((a, b) => s"($a * 16 + $b)")
   }
+
+  /** Deterministic 31-bit xor-shift mix (the x183 recipe): nonlinear so
+    * consecutive keys get independent-looking residues; every
+    * intermediate stays under 2^62 for ANSI-safe arithmetic. */
+  def mix31(k: Column, salt: Long): Column = {
+    val h1 = pmod(pmod(k * 7919L + lit(salt), lit(1048576L)) * 2654435761L,
+      lit(2147483648L))
+    pmod(h1.bitwiseXOR(shiftright(h1, 13)) * 2246822519L, lit(2147483648L))
+  }
 }

@@ -100,7 +100,7 @@ object Round10Queries {
     * offset 0; phase B reopens the SAME checkpoint after the API grew to
     * 1234 items, so Spark's offset log (committed rows=730) drives the
     * boundary-page re-fetch and pages 1..7 are never re-read. The
-    * collected envelopes from both runs are flattened (P1+F1-F4) and
+    * staged item rows from both runs are flattened (P1+F1-F4) and
     * hash-deduped (D1 — the ON-DUPLICATE-KEY no-op that makes the
     * overlap exactly-once), and the oracle regenerates every expected
     * row of the FULL 1234-item corpus from `range()` arithmetic — the
@@ -115,8 +115,6 @@ object Round10Queries {
     * rows) work per trigger regardless of history; the dedup is one
     * hash shuffle over the merged batch, not the corpus. */
   def streamPagesParity(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.streaming.Trigger
     // Both phases share ONE temp tree: the same checkpoint (that is the
     // point — phase B must reopen phase A's offset log) and the same
     // executor-side parquet staging dir, so the second stageStream read
@@ -128,12 +126,12 @@ object Round10Queries {
       val sdf = PaginatedSource.streamPages(spark,
         new SyntheticPageClient(totalItems, StreamPageSize),
         startRows = 0L, parallelism = 4, pageSize = StreamPageSize)
-      QueryUtil.stageStream(spark, sdf.select("value"), base, "append")
+      QueryUtil.stageStream(spark, sdf, base, "append")
     }
     drive(StreamN1)
     val emitted = drive(StreamN2)
     QueryUtil.deleteRecursively(base)
-    PaginatedSource.flattenPages(emitted.as[String])
+    PaginatedSource.flattenPages(emitted)
       .dropDuplicates("hash")
       .orderBy("hash")
   }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -92,14 +92,6 @@ object Round10Queries26 {
 
   // ---------------------------------------------------------------- x186
 
-  /** Deterministic 31-bit xor-shift mix (the x183 recipe): nonlinear so
-    * consecutive keys get independent-looking residues; every
-    * intermediate stays under 2^62 for ANSI-safe arithmetic. */
-  private def mix31(k: Column, salt: Long): Column = {
-    val h1 = pmod(pmod(k * 7919L + lit(salt), lit(1048576L)) * 2654435761L,
-      lit(2147483648L))
-    pmod(h1.bitwiseXOR(shiftright(h1, 13)) * 2246822519L, lit(2147483648L))
-  }
 
   /** x186: differentially-private histogram release — customers per
     * nation under the discrete-Laplace (two-sided geometric) mechanism
@@ -117,7 +109,7 @@ object Round10Queries26 {
     * mechanism composes with any groupBy the engine already does. */
   def dpHistogram(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val h = mix31($"n_nationkey".cast("long"), 104729L)
+    val h = QueryUtil.mix31($"n_nationkey".cast("long"), 104729L)
     val u = pmod(h.bitwiseXOR(shiftright(h, 16)), lit(1000000L))
     val noise = when(u < 333334L, 0L).when(u < 500000L, 1L).when(u < 666666L, -1L)
       .when(u < 750000L, 2L).when(u < 833334L, -2L).when(u < 875000L, 3L)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -11,12 +11,6 @@ import org.apache.spark.sql.expressions.Window
   * corpus toward a reference distribution). */
 object Round10Queries27 {
 
-  /** Deterministic 31-bit xor-shift mix (x183's recipe). */
-  private def mix31(k: Column, salt: Long): Column = {
-    val h1 = pmod(pmod(k * 7919L + lit(salt), lit(1048576L)) * 2654435761L,
-      lit(2147483648L))
-    pmod(h1.bitwiseXOR(shiftright(h1, 13)) * 2246822519L, lit(2147483648L))
-  }
 
   // ---------------------------------------------------------------- x185
 
@@ -133,7 +127,7 @@ object Round10Queries27 {
     val ratios = before.crossJoin(broadcast(total))
       .select($"bucket", $"n_before", $"nn",
         least(lit(1000000L), expr("(nn * 1000000) div (4 * n_before)")).as("ratio_fp"))
-    val h = mix31($"doc_id", 7L)
+    val h = QueryUtil.mix31($"doc_id", 7L)
     val kept = docs
       .select($"bucket", pmod(h.bitwiseXOR(shiftright(h, 16)), lit(1000000L)).as("u"))
       .join(broadcast(ratios.select($"bucket", $"ratio_fp")), "bucket")

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -57,12 +57,6 @@ object Round10Queries31 {
 
   private val SampleBudget = 100L
 
-  /** Deterministic 31-bit xor-shift mix (x183's recipe). */
-  private def mix31(k: Column, salt: Long): Column = {
-    val h1 = pmod(pmod(k * 7919L + lit(salt), lit(1048576L)) * 2654435761L,
-      lit(2147483648L))
-    pmod(h1.bitwiseXOR(shiftright(h1, 13)) * 2246822519L, lit(2147483648L))
-  }
 
   /** x194: exact Neyman-allocation stratified sample — the
     * variance-optimal way to build an eval set under a fixed labeling
@@ -99,7 +93,7 @@ object Round10Queries31 {
           .as("extras"))))
       .select($"lang", $"n", $"sx", $"mass",
         ($"fl" + when($"rr" <= $"extras", 1L).otherwise(0L)).as("alloc"))
-    val h = mix31($"doc_id", 31L)
+    val h = QueryUtil.mix31($"doc_id", 31L)
     val wRank = Window.partitionBy($"lang")
       .orderBy(pmod(h.bitwiseXOR(shiftright(h, 16)), lit(1000000L)), $"doc_id")
     val sampled = docs

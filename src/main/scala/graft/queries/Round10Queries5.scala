@@ -37,16 +37,10 @@ object Round10Queries5 {
     // scans); the slices now filter the in-memory snapshot. Bench/Verify
     // unpersist checkpoint blocks between queries.
     val snap = df.localCheckpoint(true)
-    stageFrames(bounds.map { case (lo, hi) =>
+    QueryUtil.stageFrames(bounds.map { case (lo, hi) =>
       snap.filter(col(colName) >= lo && col(colName) < hi)
     }, dir)
   }
-
-  /** Stage each frame as one parquet file with strictly increasing mtimes
-    * so the file source replays them in sequence order (shared impl in
-    * [[QueryUtil.stageFrames]] since r11). */
-  private def stageFrames(frames: Seq[DataFrame], dir: String): Unit =
-    QueryUtil.stageFrames(frames, dir)
 
   /** x148: streaming SCD2 batch parity — the driver-visible oracle pair
     * for `IncrementalStream.scd2Stream` (the q47/SCD-Type-2 semantics as
@@ -308,7 +302,7 @@ object Round10Queries5 {
     val sentinel = spark.range(1)
       .select(expr("TIMESTAMP_NTZ'2024-03-01 00:00:30'").as("ts"),
         lit(-1L).as("event_id"))
-    stageFrames(Seq(
+    QueryUtil.stageFrames(Seq(
       ev.filter($"ts" < cut1 && !isLate),
       ev.filter($"ts" >= cut1 && $"ts" < cut2),
       ev.filter($"ts" >= cut2),

@@ -1,9 +1,16 @@
 package graft.sources
 
+import scala.collection.mutable.ArrayBuffer
+
+import com.fasterxml.jackson.core.{JsonFactory, JsonParser}
+import com.fasterxml.jackson.core.JsonToken._
 import graft.operators.Etl
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Paginated REST source re-expressing the reference connector
   * (`/root/reference/app/salesforce_extractor.py`) Spark-first:
@@ -11,8 +18,9 @@ import org.apache.spark.sql.types._
   *  - SRC1 (:106-136, :248): page-numbered GET with envelope
   *    `{count, items[]}`, page size 2500, read through the DataSource V2
   *    `graft-pages` table ([[PaginatedTableProvider]]) — one Spark task per
-  *    contiguous page run, with page predicates, column pruning, LIMIT and
-  *    ungrouped `count(*)` pushed into the scan.
+  *    contiguous page run, whose reader parses each page once, straight
+  *    into item rows, and fails a page whose item count disagrees with its
+  *    envelope `count`.
   *  - SRC2 (:86-104): auth is a connector concern — the transport is an
   *    injected [[PageClient]]; a real HTTP client holds a lazy bearer token
   *    per executor. Keeping the transport injectable makes the connector
@@ -30,7 +38,8 @@ import org.apache.spark.sql.types._
   * contiguous page run; no driver materialization (only the page-1 count
   * pre-flight runs on the driver, as one plain fetch and parse). At 100
   * TB-equivalent page counts the same shape holds — the scan splits the
-  * page id space evenly and each reader fetches its run lazily.
+  * page id space evenly and each reader fetches its run lazily, holding
+  * one page at a time.
   */
 object PaginatedSource {
 
@@ -58,45 +67,118 @@ object PaginatedSource {
       }
   }
 
-  /** Page envelope schema (salesforce_extractor.py:268,:291,:345 and
-    * FIXTURES.md "Reference-shape fixtures"). */
-  val envelopeSchema: StructType = StructType(Seq(
-    StructField("count", LongType),
-    StructField("items", ArrayType(StructType(Seq(
-      StructField("keys", StructType(Seq(
-        StructField("lead_id", StringType),
-        StructField("url", StringType),
-        StructField("session_id", StringType),
-        StructField("order", StringType)))),
-      StructField("values", StructType(Seq(
-        StructField("type_id", StringType),
-        StructField("event_category", StringType),
-        StructField("event_name", StringType),
-        StructField("date", StringType))))))))))
+  /** An envelope item's `keys` and `values` fields
+    * (salesforce_extractor.py:268,:291,:345 and FIXTURES.md
+    * "Reference-shape fixtures"). */
+  private val KeyFields = Array("lead_id", "url", "session_id", "order")
+  private val ValueFields = Array("type_id", "event_category", "event_name", "date")
 
-  private val json = new com.fasterxml.jackson.core.JsonFactory()
+  /** The `graft-pages` scan row: one envelope item's raw fields, `keys`
+    * then `values`, each a nullable string. */
+  private[sources] val ItemSchema: StructType =
+    StructType((KeyFields ++ ValueFields).map(StructField(_, StringType)))
+
+  private val json = new JsonFactory()
+
+  /** The one reader of the page envelope: a Jackson streaming walk that
+    * returns the TOP-LEVEL numeric `count`, or None when it is missing or
+    * not an integer (a `count` inside an item can't shadow it). With
+    * `items` null it skips every nested value and stops at the count;
+    * otherwise it appends each item to `items` as an [[ItemSchema]] row.
+    * A field holds a string token's text, null for JSON `null` or an absent
+    * key, and the JSON text of any other token — what `from_json` gives a
+    * string field. Unknown fields are skipped and fields may come in any
+    * order; malformed JSON, or an item, `keys` or `values` that is neither
+    * an object nor null, throws. */
+  private def walkEnvelope(body: String, items: ArrayBuffer[InternalRow]): Option[Long] = {
+    val p = json.createParser(body)
+    try {
+      var count: Option[Long] = None
+      if (p.nextToken() == START_OBJECT)
+        while ((items != null || count.isEmpty) && p.nextToken() == FIELD_NAME) {
+          val field = p.currentName()
+          val v = p.nextToken()
+          if (field == "count" && v == VALUE_NUMBER_INT) count = Some(p.getLongValue)
+          else if (field == "items" && items != null && v == START_ARRAY)
+            while (p.nextToken() != END_ARRAY) items += readItem(p)
+          else p.skipChildren()
+        }
+      count
+    } finally p.close()
+  }
+
+  /** One item at its opening token; JSON `null` is a row of nulls, as an
+    * exploded null array element was. */
+  private def readItem(p: JsonParser): InternalRow = {
+    val row = new Array[Any](KeyFields.length + ValueFields.length)
+    if (objectOrNull(p, "item"))
+      while (p.nextToken() == FIELD_NAME) {
+        val group = p.currentName()
+        p.nextToken()
+        val (names, at) =
+          if (group == "keys") (KeyFields, 0)
+          else if (group == "values") (ValueFields, KeyFields.length)
+          else (null, 0)
+        if (names != null && objectOrNull(p, group))
+          while (p.nextToken() == FIELD_NAME) {
+            val i = names.indexOf(p.currentName())
+            p.nextToken()
+            if (i < 0) p.skipChildren() else row(at + i) = fieldText(p)
+          }
+        else p.skipChildren()
+      }
+    new GenericInternalRow(row)
+  }
+
+  private def objectOrNull(p: JsonParser, what: String): Boolean = {
+    val t = p.currentToken()
+    if (t != START_OBJECT && t != VALUE_NULL)
+      throw new IllegalStateException(s"envelope $what is $t, not an object")
+    t == START_OBJECT
+  }
+
+  private def fieldText(p: JsonParser): UTF8String = p.currentToken() match {
+    case VALUE_STRING => UTF8String.fromString(p.getText)
+    case VALUE_NULL => null
+    case _ =>
+      val text = new java.io.StringWriter
+      val g = json.createGenerator(text)
+      try g.copyCurrentStructure(p) finally g.close()
+      UTF8String.fromString(text.toString)
+  }
 
   /** A2: driver-side pre-flight — fetch page 1 and read the envelope's
     * TOP-LEVEL numeric `count` (salesforce_extractor.py:263-269); also the
-    * streaming source's per-trigger probe. A streaming parser skips every
-    * nested value, so a `count` inside an item can't shadow the envelope's
-    * and the items are never materialized. A missing or non-numeric `count`
-    * fails loudly: every page plan and the stream watermark derive from it. */
-  def totalCount(client: PageClient): Long = {
-    import com.fasterxml.jackson.core.JsonToken
-    val p = json.createParser(client.fetchPage(1))
-    try {
-      var count: Option[Long] = None
-      if (p.nextToken() == JsonToken.START_OBJECT)
-        while (count.isEmpty && p.nextToken() == JsonToken.FIELD_NAME) {
-          val field = p.currentName()
-          val v = p.nextToken()
-          if (field == "count" && v == JsonToken.VALUE_NUMBER_INT) count = Some(p.getLongValue)
-          else p.skipChildren()
-        }
-      count.getOrElse(throw new IllegalStateException(
-        "page-1 envelope has no numeric top-level \"count\" field"))
-    } finally p.close()
+    * streaming source's probe. The walk never materializes an item. A
+    * missing or non-numeric `count` fails loudly: every page plan and the
+    * stream watermark derive from it. */
+  def totalCount(client: PageClient): Long =
+    walkEnvelope(client.fetchPage(1), null).getOrElse(throw new IllegalStateException(
+      "page-1 envelope has no numeric top-level \"count\" field"))
+
+  /** Page `page` of a `pageSize`-item paged API as [[ItemSchema]] rows, in
+    * one parse. The page must hold `max(0, min(pageSize, count −
+    * (page−1)·pageSize))` items, `count` read from its own envelope;
+    * otherwise, and on a null body, malformed JSON or no numeric `count`,
+    * it throws an error that names the page. The graft-pages reader emits
+    * none of a page's rows before this check, so no write sees part of a
+    * bad page. */
+  private[sources] def readPage(client: PageClient, page: Int,
+                                pageSize: Int): ArrayBuffer[InternalRow] = {
+    val body = client.fetchPage(page)
+    require(body != null, s"PageClient.fetchPage($page) returned null")
+    val items = ArrayBuffer.empty[InternalRow]
+    val count = try walkEnvelope(body, items) catch {
+      case e @ (_: java.io.IOException | _: IllegalStateException) =>
+        throw new IllegalStateException(s"page $page is not a page envelope: ${e.getMessage}", e)
+    }
+    val expected = count.map(c => math.max(0L, math.min(pageSize.toLong, c - (page - 1L) * pageSize)))
+    if (!expected.contains(items.length.toLong)) throw new IllegalStateException(count match {
+      case None => s"page $page has no numeric top-level \"count\" field"
+      case Some(c) => s"page $page holds ${items.length} items, but count $c at page size " +
+        s"$pageSize puts ${expected.get} on it"
+    })
+    items
   }
 
   /** S1: `start_page = max(1, ceil(db_count / page_size))`
@@ -107,48 +189,36 @@ object PaginatedSource {
   def totalPages(apiCount: Long, pageSize: Int = PageSize): Int =
     ((apiCount + pageSize - 1) / pageSize).toInt
 
-  /** SRC1: the `graft-pages` scan of pages [startPage, endPage] as a
-    * `(page, value)` frame, `value` the raw envelope JSON. Planner-visible:
-    * `page` predicates and LIMIT prune the fetched range before any fetch,
-    * and a `page`-only projection never fetches a body. */
-  def rawPages(spark: SparkSession, client: PageClient,
-               startPage: Int, endPage: Int, parallelism: Int = 8): DataFrame =
+  /** SRC1: the `graft-pages` scan of pages [startPage, endPage] of a
+    * `pageSize`-item paged API, one row per item of raw fields. */
+  def pageItems(spark: SparkSession, client: PageClient, startPage: Int, endPage: Int,
+                parallelism: Int = 8, pageSize: Int = PageSize): DataFrame =
     PaginatedTableProvider.withClient(client) { key =>
       spark.read.format("graft-pages")
         .option("client", key)
         .option("startpage", startPage)
         .option("endpage", endPage)
+        .option("pagesize", pageSize)
         .option("parallelism", parallelism)
         .load()
     }
 
-  /** P1+F3+F4: envelope JSON → flattened lead-activity rows with the
+  /** P1+F3+F4: raw item rows → flattened lead-activity rows with the
     * reference's exact defaulting (absent keys → "", only `date` nullable)
-    * and 16-hex content hash over the full projection. Reads the `value`
-    * column of [[rawPages]], of [[streamPages]] or of any string Dataset.
-    * A page that is not valid envelope JSON (say, cut off mid-item) fails
-    * the job: FAILFAST parsing, where the default PERMISSIVE mode would turn
-    * it into a null envelope and drop all of its items without an error. */
-  def flattenPages(pages: Dataset[_]): DataFrame = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    pages
-      .select(from_json($"value", envelopeSchema, Map("mode" -> "FAILFAST")).as("page"))
-      .select(explode($"page.items").as("item"))
-      .select(
-        Etl.emptyStringDefault($"item.keys.lead_id").as("lead_id"),
-        Etl.emptyStringDefault($"item.keys.url").as("url"),
-        Etl.emptyStringDefault($"item.keys.session_id").as("session_id"),
-        Etl.emptyStringDefault($"item.keys.order").as("order"),
-        Etl.parseSfmcDate($"item.values.date").as("date"),
-        Etl.emptyStringDefault($"item.values.type_id").as("type_id"),
-        Etl.emptyStringDefault($"item.values.event_category").as("event_category"),
-        Etl.cleanEventName(Etl.emptyStringDefault($"item.values.event_name")).as("event_name"),
-        Etl.contentHash(
-          $"item.keys.lead_id", $"item.keys.url", $"item.keys.session_id", $"item.keys.order",
-          $"item.values.type_id", $"item.values.event_category", $"item.values.event_name",
-          $"item.values.date").as("hash"))
-  }
+    * and 16-hex content hash over the full projection. Reads the item
+    * columns of [[pageItems]], of [[streamPages]] or of a staged copy of
+    * either. */
+  def flattenPages(items: Dataset[_]): DataFrame =
+    items.select(
+      Etl.emptyStringDefault(col("lead_id")).as("lead_id"),
+      Etl.emptyStringDefault(col("url")).as("url"),
+      Etl.emptyStringDefault(col("session_id")).as("session_id"),
+      Etl.emptyStringDefault(col("order")).as("order"),
+      Etl.parseSfmcDate(col("date")).as("date"),
+      Etl.emptyStringDefault(col("type_id")).as("type_id"),
+      Etl.emptyStringDefault(col("event_category")).as("event_category"),
+      Etl.cleanEventName(Etl.emptyStringDefault(col("event_name"))).as("event_name"),
+      Etl.contentHash((KeyFields ++ ValueFields).toIndexedSeq.map(col): _*).as("hash"))
 
   /** S1 as Structured Streaming: the paginated source as a DSv2
     * `MicroBatchStream` — each trigger probes the API row count (A2
@@ -173,7 +243,8 @@ object PaginatedSource {
     * first = SaveMode.Overwrite downstream). */
   def bulkExtract(spark: SparkSession, client: PageClient, parallelism: Int = 8,
                   pageSize: Int = PageSize): DataFrame =
-    flattenPages(rawPages(spark, client, 1, totalPages(totalCount(client), pageSize), parallelism))
+    flattenPages(pageItems(spark, client, 1, totalPages(totalCount(client), pageSize),
+      parallelism, pageSize))
 
   /** T6+S1 incremental mode: scan only pages >= the high-watermark page for
     * `dbCount` already-loaded rows and return the rows whose hash `existing`
@@ -194,7 +265,7 @@ object PaginatedSource {
     else {
       val start = incrementalStartPage(dbCount, pageSize)
       val end = totalPages(apiCount, pageSize)
-      val pages = flattenPages(rawPages(spark, client, start, end, parallelism))
+      val pages = flattenPages(pageItems(spark, client, start, end, parallelism, pageSize))
       val known = existing.select("hash")
       pages.join(known, pages("hash") === known("hash"), "left_anti")
     }

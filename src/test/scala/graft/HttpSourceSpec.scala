@@ -122,17 +122,4 @@ class HttpSourceSpec extends SparkTestBase {
         s"exactly two wire 401s (attempt + single replay), got ${api.unauthorized.get()}")
     } finally api.stop()
   }
-
-  test("SRC1/DSv2 over a real socket: LIMIT pushdown bounds wire fetches") {
-    val api = new LoopbackApi(items = 4000, pageSize = 100) // 40 pages
-    try {
-      val http = api.client()
-      val rows = PS.rawPages(spark, http, 1, 40, parallelism = 4)
-        .select("value").limit(3).collect()
-      assert(rows.length == 3)
-      import scala.jdk.CollectionConverters._
-      assert(api.pageLog.asScala.map(_.toInt) == Set(1, 2, 3),
-        s"pages 4..40 must never cross the wire: ${api.pageLog}")
-    } finally api.stop()
-  }
 }

@@ -73,7 +73,7 @@ class JdbcSinkSpec extends SparkTestBase {
     val end = PaginatedSource.totalPages(
       PaginatedSource.totalCount(clientB), PageSz)
     val incoming = PaginatedSource.flattenPages(
-      PaginatedSource.rawPages(spark, clientB, start, end, parallelism = 4))
+      PaginatedSource.pageItems(spark, clientB, start, end, parallelism = 4, pageSize = PageSz))
     assert(incoming.count() == nB - (start - 1) * PageSz) // overlap included
     val insertedB = Sinks.upsertBatched(incoming, batchSize = 200)(upsert)
     assert(insertedB == nB - nA, s"incremental inserted $insertedB, expected ${nB - nA}")

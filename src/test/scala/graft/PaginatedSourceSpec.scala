@@ -1,11 +1,23 @@
 package graft
 
 import graft.sources.{PaginatedSource => PS, SyntheticPageClient}
+import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
 
 /** Connector semantics without network (SURVEY.md §5.4): envelope parse,
   * P1 empty-string defaults, S1 page math + boundary overlap, SRC3 retry. */
 class PaginatedSourceSpec extends SparkTestBase {
   import spark.implicits._
+
+  /** The scan parses each page once: no JSON-to-struct expression and no
+    * explode (Generate) left anywhere in the plan. */
+  private def assertOneParse(df: DataFrame): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    val plan = df.queryExecution.analyzed // a stream's plan only analyzes
+    assert(!plan.exists(_.isInstanceOf[Generate]), plan)
+    assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs]))), plan)
+  }
 
   test("SRC1: bulk extract flattens all pages") {
     val client = new SyntheticPageClient(250, pageSize = 100)
@@ -17,6 +29,10 @@ class PaginatedSourceSpec extends SparkTestBase {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("graft-pages pages=[1..3]"), plan)
     assert(!plan.contains("RoundRobinPartitioning"), plan)
+    // one parse path: bulk, incremental and stream plans all read items
+    assertOneParse(df)
+    assertOneParse(PS.incrementalExtract(spark, client, df, 150, 2, 100))
+    assertOneParse(PS.flattenPages(PS.streamPages(spark, client, pageSize = 100)))
   }
 
   test("P1: absent keys become empty strings, not nulls; bad dates null") {
@@ -53,12 +69,78 @@ class PaginatedSourceSpec extends SparkTestBase {
     val client = new TruncatingClient(new SyntheticPageClient(250, pageSize = 100), cut = 2)
     val e = intercept[org.apache.spark.SparkException](
       PS.bulkExtract(spark, client, parallelism = 2, pageSize = 100).count())
-    assert(e.getMessage.contains("MALFORMED_RECORD_IN_PARSING"), e.getMessage)
+    assert(e.getMessage.contains("page 2 is not a page envelope"), e.getMessage)
+  }
+
+  test("P1: a short page that is still valid JSON fails, naming the page, before any of its rows leave the scan") {
+    // page 2 of a 250-item API must hold 100 items; this one holds 99
+    val short = new SyntheticPageClient(199, pageSize = 100).fetchPage(2)
+      .replace("\"count\":199", "\"count\":250")
+    val client = new PageOverride(new SyntheticPageClient(250, 100), 2, short)
+    UpsertRecorder.urls.clear()
+    // one task reads pages 1..3 in order and sends rows in batches of 10
+    val e = intercept[org.apache.spark.SparkException](graft.sinks.Sinks.upsertBatched(
+      PS.bulkExtract(spark, client, parallelism = 1, pageSize = 100), batchSize = 10) { rows =>
+      rows.foreach(r => UpsertRecorder.urls.add(r.getAs[String]("url")))
+      rows.size
+    })
+    assert(e.getMessage.contains("page 2 holds 99 items, but count 250 at page size 100 puts 100 on it"),
+      e.getMessage)
+    // page 1's items went out; none of page 2's did
+    assert(UpsertRecorder.urls.asScala.toSet == (0 until 100).map(i => s"https://x/p/$i?utm=$i").toSet)
+  }
+
+  test("P1: a page holding more items than its count allows fails, naming the page") {
+    // the last page of a 250-item API holds 50 items; this one holds 100
+    val long = new SyntheticPageClient(300, pageSize = 100).fetchPage(3)
+      .replace("\"count\":300", "\"count\":250")
+    val e = intercept[org.apache.spark.SparkException](
+      PS.bulkExtract(spark, new PageOverride(new SyntheticPageClient(250, 100), 3, long),
+        parallelism = 2, pageSize = 100).count())
+    assert(e.getMessage.contains("page 3 holds 100 items, but count 250 at page size 100 puts 50 on it"),
+      e.getMessage)
+  }
+
+  test("P1: a data page without a numeric count fails, naming the page") {
+    val countless = new SyntheticPageClient(250, pageSize = 100).fetchPage(2)
+      .replace("\"count\":250,", "")
+    val e = intercept[org.apache.spark.SparkException](
+      PS.bulkExtract(spark, new PageOverride(new SyntheticPageClient(250, 100), 2, countless),
+        parallelism = 2, pageSize = 100).count())
+    assert(e.getMessage.contains("page 2 has no numeric top-level \"count\" field"), e.getMessage)
+  }
+
+  test("P1: the scan's items flatten row for row like from_json + explode over tricky envelopes") {
+    // page size 4, count 7: page 1 holds 4 items, page 2 holds 3
+    val page1 =
+      """{"count":7,"extra":{"count":99,"items":[1]},"items":[
+        | {"keys":{"lead_id":"L-1","url":"https://x/a?b=1","session_id":"S-1","order":"1"},
+        |  "values":{"type_id":"T","event_category":"c","event_name":"e?x","date":"1/2/2025 3:04:05 PM"}},
+        | {"keys":{"lead_id":"L-2","url":null},"values":{"date":null,"event_name":"only"}},
+        | {"values":{"date":"2/3/2025 1:00:00 AM","type_id":7,"event_category":1.50,
+        |    "event_name":{"a":[1, 2,{"b":null}],"c":"d?e"}},
+        |  "keys":{"order":true,"lead_id":1e3,"unknown":{"x":1},"url":12345678901234567890},"other":[1,2]},
+        | {"keys":null,"values":{"type_id":"T-9","event_name":"x\u00e9\"q\"?z","date":"not-a-date","session_id":"v"}}
+        |]}""".stripMargin
+    val page2 =
+      """{"items":[
+        | {"keys":{"lead_id":"L-5","url":"u","session_id":"","order":"0"},
+        |  "values":{"type_id":"T","event_category":"c","event_name":"","date":"12/31/2025 11:59:59 PM"}},
+        | {"keys":{"lead_id":"L-6","order":-0.0},"values":{"type_id":[],"event_category":{}}},
+        | {"keys":{"lead_id":"L-7","count":3},"values":null,"count":4}
+        |],"count":7}""".stripMargin
+    val client = new PageOverride(new PageOverride(new SyntheticPageClient(0), 1, page1), 2, page2)
+    def rows(df: DataFrame) = df.orderBy(df.columns.map(org.apache.spark.sql.functions.col): _*)
+      .collect().toSeq
+    val scanned = rows(PS.bulkExtract(spark, client, parallelism = 2, pageSize = 4))
+    val reference = rows(ReferenceImpls.flattenEnvelopes(Seq(page1, page2).toDS()))
+    assert(scanned.length == 7)
+    assert(scanned == reference, s"\nscan:      $scanned\nreference: $reference")
   }
 
   test("S1+SNK1: incremental after partial bulk equals full bulk") {
     val client = new SyntheticPageClient(350, pageSize = 100)
-    val firstTwoPages = PS.flattenPages(PS.rawPages(spark, client, 1, 2, 2))
+    val firstTwoPages = PS.flattenPages(PS.pageItems(spark, client, 1, 2, 2, 100))
     val dbCount = firstTwoPages.count() // 200
     // pages 2..4 are fetched (2 is the boundary page); only 201..350 are new
     val fresh = PS.incrementalExtract(spark, client, firstTwoPages, dbCount, 2, 100)
@@ -95,67 +177,11 @@ class PaginatedSourceSpec extends SparkTestBase {
 
   test("SRC1/DSv2: one InputPartition per page run") {
     val client = new SyntheticPageClient(1000, pageSize = 100)
-    assert(PS.rawPages(spark, client, 1, 10, 4)
+    assert(PS.pageItems(spark, client, 1, 10, 4, 100)
       .rdd.getNumPartitions == 4)
     // fewer pages than parallelism -> one run per page
-    assert(PS.rawPages(spark, client, 1, 3, 8)
+    assert(PS.pageItems(spark, client, 1, 3, 8, 100)
       .rdd.getNumPartitions == 3)
-  }
-
-  test("SRC1/DSv2: page predicates prune the fetched range at the scan") {
-    FetchRecorder.pages.clear()
-    val client = new RecordingClient(new SyntheticPageClient(1000, pageSize = 100))
-    val df = PS.rawPages(spark, client, 1, 10, 4)
-      .filter($"page" >= 4 && $"page" <= 6)
-    assert(df.select("value").collect().length == 3)
-    // only the surviving run was fetched — the pushed range never saw pages 1-3 or 7-10
-    import scala.jdk.CollectionConverters._
-    assert(FetchRecorder.pages.asScala.map(_.toInt).toSet == Set(4, 5, 6))
-  }
-
-  test("SRC1/DSv2: page-only projection never fetches the body") {
-    FetchRecorder.pages.clear()
-    val client = new RecordingClient(new SyntheticPageClient(1000, pageSize = 100))
-    val df = PS.rawPages(spark, client, 1, 10, 4).select("page")
-    assert(df.count() == 10)
-    assert(FetchRecorder.pages.isEmpty)
-  }
-
-  test("SRC1/DSv2: LIMIT is pushed into the scan — fetches stop at the limit") {
-    FetchRecorder.pages.clear()
-    val client = new RecordingClient(new SyntheticPageClient(1000, pageSize = 100))
-    val rows = PS.rawPages(spark, client, 1, 100, 4)
-      .select("value").limit(3).collect()
-    assert(rows.length == 3)
-    import scala.jdk.CollectionConverters._
-    // pages 4..100 were never fetched — the limit truncated the run itself
-    assert(FetchRecorder.pages.asScala.map(_.toInt).toSet == Set(1, 2, 3))
-    // limit composes with a pushed lower bound: first 2 pages OF the range
-    FetchRecorder.pages.clear()
-    assert(PS.rawPages(spark, client, 1, 100, 4)
-      .filter($"page" >= 50).select("value").limit(2).collect().length == 2)
-    assert(FetchRecorder.pages.asScala.map(_.toInt).toSet == Set(50, 51))
-    // limit larger than the run is a no-op
-    assert(PS.rawPages(spark, client, 1, 3, 2)
-      .limit(10).count() == 3L)
-  }
-
-  test("SRC1/DSv2: ungrouped count(*) is answered from page math, zero fetches (A2)") {
-    FetchRecorder.pages.clear()
-    val client = new RecordingClient(new SyntheticPageClient(1000, pageSize = 100))
-    val df = PS.rawPages(spark, client, 1, 10, 4)
-    // the aggregate must actually be IN the scan (not just column-pruned):
-    // the pushed-count scan prints its page-math description
-    val plan = df.groupBy().count().queryExecution.executedPlan.toString
-    assert(plan.contains("graft-pages COUNT(*) pages=[1..10]"), plan)
-    assert(df.count() == 10L)
-    // pushed AFTER the page filters: a pruned range counts the pruned run
-    assert(df.filter($"page" >= 4 && $"page" <= 6).count() == 3L)
-    assert(FetchRecorder.pages.isEmpty, "count(*) must not fetch any page body")
-    // grouped/aggregate shapes the scan can't answer still work (not pushed)
-    FetchRecorder.pages.clear()
-    assert(PS.rawPages(spark, client, 1, 5, 2)
-      .groupBy($"page" % 2).count().collect().map(_.getLong(1)).sum == 5L)
   }
 
   test("S1/DSv2 streaming: row-watermark micro-batches, boundary re-fetch, checkpoint resume") {
@@ -174,15 +200,13 @@ class PaginatedSourceSpec extends SparkTestBase {
         }
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      import scala.jdk.CollectionConverters._
       StreamCollector.rows.asScala.toArray
     }
-    import scala.jdk.CollectionConverters._
     // run 1: 250 rows → pages 1..3 (page 3 partial: 50 of 100 rows)
     GrowableSource.total = 250
     FetchRecorder.pages.clear()
     val b1 = drive()
-    assert(b1.map(_.getInt(0)).toSet == Set(1, 2, 3))
+    assert(b1.length == 250)
     // fetched: the A2 page-1 count probe + the three planned pages
     assert(FetchRecorder.pages.asScala.map(_.toInt).toSet == Set(1, 2, 3))
     // run 2 from the same checkpoint: source grew to 420 rows. The committed
@@ -193,11 +217,11 @@ class PaginatedSourceSpec extends SparkTestBase {
     GrowableSource.total = 420
     FetchRecorder.pages.clear()
     val b2 = drive()
-    assert(b2.map(_.getInt(0)).toSet == Set(3, 4, 5))
+    assert(b2.length == 220) // pages 3 (now full), 4 and 5 (20 rows)
     assert(FetchRecorder.pages.asScala.map(_.toInt).toSet == Set(1, 3, 4, 5))
-    // exactly-once END TO END: flatten both runs' envelopes, dedup by hash
+    // exactly-once END TO END: flatten both runs' items, dedup by hash
     // (D1 — the reference's ON DUPLICATE KEY no-op) == one bulk extract
-    val all = (b1 ++ b2).map(_.getString(1)).toSeq.toDS()
+    val all = spark.createDataFrame((b1 ++ b2).toSeq.asJava, b1.head.schema)
     val merged = PS.flattenPages(all).dropDuplicates("hash")
     val bulk = PS.bulkExtract(spark, new SyntheticPageClient(420, 100), 4, 100)
     assert(merged.count() == 420)
@@ -206,6 +230,52 @@ class PaginatedSourceSpec extends SparkTestBase {
     FetchRecorder.pages.clear()
     assert(drive().isEmpty)
     assert(FetchRecorder.pages.asScala.map(_.toInt).toSet.subsetOf(Set(1)))
+  }
+
+  test("S1/DSv2 streaming: an AvailableNow restart past an uncommitted batch drains to the API's end") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_avnow").toString
+    def drive(): Unit =
+      PS.streamPages(spark, new GrowableClient(pageSize = 100), parallelism = 2, pageSize = 100)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: DataFrame, _: Long) => b.collect().foreach(StreamCollector.rows.add) }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+        .awaitTermination()
+    val fallbacks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val probe = new AbstractAppender("avnow-probe", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("does not support Trigger.AvailableNow")) fallbacks.add(m)
+      }
+    }
+    probe.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getRootLogger
+    root.addAppender(probe)
+    try {
+      StreamCollector.rows.clear()
+      GrowableSource.total = 250
+      drive()
+      // un-commit the last batch: the restart finds its offsets logged but
+      // not committed, and must replay it, then go on to the API's end
+      val commits = new java.io.File(ckpt, "commits")
+      val last = commits.listFiles().map(_.getName).filter(_.forall(_.isDigit)).maxBy(_.toInt)
+      Seq(last, s".$last.crc").foreach(n => new java.io.File(commits, n).delete())
+      GrowableSource.total = 420
+      drive()
+    } finally {
+      root.removeAppender(probe)
+      probe.stop()
+    }
+    assert(fallbacks.isEmpty, fallbacks.asScala.mkString("\n"))
+    val rows = StreamCollector.rows.asScala.toSeq
+    val landed = PS.flattenPages(spark.createDataFrame(rows.asJava, rows.head.schema))
+      .select("hash").distinct()
+    val bulk = PS.bulkExtract(spark, new SyntheticPageClient(420, 100), 2, 100).select("hash")
+    assert(landed.count() == 420)
+    assert(landed.except(bulk).isEmpty && bulk.except(landed).isEmpty)
   }
 
   test("SRC1/S1: client accumulators count every page fetched, batch and stream") {
@@ -253,7 +323,6 @@ class PaginatedSourceSpec extends SparkTestBase {
     assert(fileColumns == Seq(existing.columns.toSeq), fileColumns)
     // the page-1 count pre-flight, then pages 2..4 (2 is the boundary page)
     // once each; counting before a separate write job would fetch them twice
-    import scala.jdk.CollectionConverters._
     assert(FetchRecorder.pages.asScala.map(_.toInt).toSet == Set(1, 2, 3, 4))
     assert(acc.value == 4L, s"${acc.value} fetches")
     assert(FetchCounter.n.get == 4L)
@@ -275,24 +344,21 @@ class PaginatedSourceSpec extends SparkTestBase {
     // registry entry to look up
     val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_reg").toString
     GrowableSource.total = 250
-    val sdf = PS.streamPages(spark, new GrowableClient(pageSize = 100),
+    val sdf = PS.streamPages(spark, new RecordingClient(new GrowableClient(pageSize = 100)),
       parallelism = 2, pageSize = 100)
     assert(registered == 0)
     def drive(): Set[Int] = {
-      StreamCollector.rows.clear()
+      FetchRecorder.pages.clear()
       sdf.writeStream.option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.collect().foreach(StreamCollector.rows.add)
-        }
+        .foreachBatch { (b: DataFrame, _: Long) => b.collect(); () }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
         .awaitTermination()
-      import scala.jdk.CollectionConverters._
-      StreamCollector.rows.asScala.map(_.getInt(0)).toSet
+      FetchRecorder.pages.asScala.map(_.toInt).toSet
     }
     assert(drive() == Set(1, 2, 3))
     assert(registered == 0)
     GrowableSource.total = 420
-    assert(drive() == Set(3, 4, 5))
+    assert(drive() == Set(1, 3, 4, 5)) // the page-1 count probe, then 3..5
     assert(registered == 0)
   }
 }
@@ -308,6 +374,11 @@ class RecordingClient(inner: PS.PageClient) extends PS.PageClient {
   def fetchPage(page: Int): String = { FetchRecorder.pages.add(page); inner.fetchPage(page) }
 }
 
+/** Serves `body` as page `page` and every other page from `inner`. */
+class PageOverride(inner: PS.PageClient, page: Int, body: String) extends PS.PageClient {
+  def fetchPage(p: Int): String = if (p == page) body else inner.fetchPage(p)
+}
+
 /** Serves page `cut` cut in half (mid-item, so not valid JSON) and every
   * other page whole. */
 class TruncatingClient(inner: PS.PageClient, cut: Int) extends PS.PageClient {
@@ -315,6 +386,11 @@ class TruncatingClient(inner: PS.PageClient, cut: Int) extends PS.PageClient {
     val body = inner.fetchPage(page)
     if (page == cut) body.take(body.length / 2) else body
   }
+}
+
+/** JVM-wide log of the urls a test's upsert function was sent. */
+object UpsertRecorder {
+  val urls: java.util.Set[String] = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 }
 
 /** JVM-wide fetch total, the ground truth an accumulator count is checked
