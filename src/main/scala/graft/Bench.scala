@@ -78,7 +78,7 @@ object Bench {
     // for JVM+Spark startup (measures queries, not initialization).
     try materialize(SparkEntry.entry(spark)) catch { case _: Throwable => () }
     val benchOutPath =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/root/repo/bench_last.json")
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_last.json")
 
     // A failing query must be VISIBLE, not a suspiciously-fast timing: its
     // message lands in the line's "errors" map (and stderr).

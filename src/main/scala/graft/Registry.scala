@@ -20,145 +20,39 @@ final case class QueryDef(
       * them re-measures the same operators; verification is unaffected. */
     benchSkip: Boolean = false)
 
+/** Every registered query, grouped by operator family. The ten families
+  * that perfbench's analytics mix samples (`relational` … `pipeline`) come
+  * first, spelled as in its `MIX_POOL`, then the five it does not sample.
+  * Each family is one `<Family>Queries` object; a family too large for one
+  * file is split into objects named by topic (stats: `TimeSeriesQueries`;
+  * analytics: `ExperimentQueries`), listed here under the family.
+  *
+  * A query that fits two families lives where its main operator lives:
+  * a streaming-vs-batch parity check is `streaming` whatever it computes,
+  * a media decode is `multimodal`, an estimator audited against the
+  * engine's own statistics is `engine_ops`. Helpers live with the family
+  * whose queries use them most; other families call them qualified. */
 object Registry {
-  lazy val all: Seq[QueryDef] = Seq(
-    queries.CoreEtlQueries.defs,
-    queries.RelationalQueries.defs,
-    queries.RelationalQueries2.defs,
-    queries.RelationalQueries3.defs,
-    queries.RelationalQueries4.defs,
-    queries.JoinOpQueries.defs,
-    queries.GraphQueries.defs,
-    queries.TextQueries.defs,
-    queries.DedupQueries.defs,
-    queries.SimilarityQueries.defs,
-    queries.ConnectorQueries.defs,
-    queries.PipelineQueries.defs,
-    queries.TrainingQueries.defs,
-    queries.RetrievalQueries.defs,
-    queries.Round8Queries.defs,
-    queries.AnalyticsQueries.defs,
-    queries.CurationQueries.defs,
-    queries.StatsQueries.defs,
-    queries.EngineOpsQueries.defs,
-    queries.Round9Queries.defs,
-    queries.Round10Queries.defs,
-    queries.Round10Queries2.defs,
-    queries.Round10Queries3.defs,
-    queries.Round10Queries4.defs,
-    queries.Round10Queries5.defs,
-    queries.Round10Queries6.defs,
-    queries.Round10Queries7.defs,
-    queries.Round10Queries8.defs,
-    queries.Round10Queries9.defs,
-    queries.Round10Queries10.defs,
-    queries.Round10Queries11.defs,
-    queries.Round10Queries12.defs,
-    queries.Round10Queries13.defs,
-    queries.Round10Queries14.defs,
-    queries.Round10Queries15.defs,
-    queries.Round10Queries16.defs,
-    queries.Round10Queries17.defs,
-    queries.Round10Queries18.defs,
-    queries.Round10Queries19.defs,
-    queries.Round10Queries20.defs,
-    queries.Round10Queries21.defs,
-    queries.Round10Queries22.defs,
-    queries.Round10Queries23.defs,
-    queries.Round10Queries24.defs,
-    queries.Round10Queries25.defs,
-    queries.Round10Queries26.defs,
-    queries.Round10Queries27.defs,
-    queries.Round10Queries28.defs,
-    queries.Round10Queries29.defs,
-    queries.Round10Queries30.defs,
-    queries.Round10Queries31.defs,
-    queries.Round10Queries32.defs,
-    queries.Round10Queries33.defs,
-    queries.Round10Queries34.defs,
-    queries.Round10Queries35.defs,
-    queries.Round10Queries36.defs,
-    queries.Round10Queries37.defs,
-    queries.Round10Queries38.defs,
-    queries.Round10Queries39.defs,
-    queries.Round10Queries40.defs,
-    queries.Round10Queries41.defs,
-    queries.Round10Queries42.defs,
-    queries.Round10Queries43.defs,
-    queries.Round10Queries44.defs,
-    queries.Round10Queries45.defs,
-    queries.Round10Queries46.defs,
-    queries.Round10Queries47.defs,
-    queries.Round10Queries48.defs,
-    queries.Round10Queries49.defs,
-    queries.Round10Queries50.defs,
-    queries.Round10Queries51.defs,
-    queries.Round10Queries52.defs,
-    queries.Round10Queries53.defs,
-    queries.Round10Queries54.defs,
-    queries.Round10Queries55.defs,
-    queries.Round10Queries56.defs,
-    queries.Round10Queries57.defs,
-    queries.Round10Queries58.defs,
-    queries.Round11Queries.defs,
-    queries.Round11Queries2.defs,
-    queries.Round11Queries3.defs,
-    queries.Round11Queries4.defs,
-    queries.Round11Queries5.defs,
-    queries.Round11Queries6.defs,
-    queries.Round11Queries7.defs,
-    queries.Round11Queries8.defs,
-    queries.Round11Queries9.defs,
-    queries.Round11Queries10.defs,
-    queries.Round11Queries11.defs,
-    queries.Round11Queries12.defs,
-    queries.Round11Queries13.defs,
-    queries.Round11Queries14.defs,
-    queries.Round11Queries15.defs,
-    queries.Round11Queries16.defs,
-    queries.Round11Queries17.defs,
-    queries.Round11Queries18.defs,
-    queries.Round11Queries19.defs,
-    queries.Round11Queries20.defs,
-    queries.Round11Queries21.defs,
-    queries.Round11Queries22.defs,
-    queries.Round12Queries.defs,
-    queries.Round13Queries1.defs,
-    queries.Round13Queries2.defs,
-    queries.Round13Queries3.defs,
-    queries.Round13Queries4.defs,
-    queries.Round13Queries5.defs,
-    queries.Round13Queries6.defs,
-    queries.Round13Queries7.defs,
-    queries.Round13Queries8.defs,
-    queries.Round13Queries9.defs,
-    queries.Round13Queries10.defs,
-    queries.Round13Queries11.defs,
-    queries.Round13Queries12.defs,
-    queries.Round13Queries13.defs,
-    queries.Round13Queries14.defs,
-    queries.Round13Queries15.defs,
-    queries.Round13Queries16.defs,
-    queries.Round13Queries17.defs,
-    queries.Round13Queries18.defs,
-    queries.Round13Queries19.defs,
-    queries.Round13Queries20.defs,
-    queries.Round13Queries21.defs,
-    queries.Round13Queries22.defs,
-    queries.Round14Queries1.defs,
-    queries.Round14Queries2.defs,
-    queries.Round14Queries3.defs,
-    queries.Round14Queries4.defs,
-    queries.Round14Queries5.defs,
-    queries.Round14Queries6.defs,
-    queries.Round14Queries7.defs,
-    queries.Round14Queries8.defs,
-    queries.Round14Queries9.defs,
-    queries.Round14Queries10.defs,
-    queries.Round14Queries11.defs,
-    queries.Round14Queries12.defs,
-    queries.Round15Queries.defs
-  ).flatten
+  import queries._
+
+  lazy val families: Seq[(String, Seq[QueryDef])] = Seq(
+    "relational" -> RelationalQueries.defs,
+    "etl" -> EtlQueries.defs,
+    "text" -> TextQueries.defs,
+    "dedup" -> DedupQueries.defs,
+    "similarity" -> SimilarityQueries.defs,
+    "retrieval" -> RetrievalQueries.defs,
+    "graph" -> GraphQueries.defs,
+    "streaming" -> StreamingQueries.defs,
+    "multimodal" -> MultimodalQueries.defs,
+    "pipeline" -> PipelineQueries.defs,
+    "stats" -> (StatsQueries.defs ++ TimeSeriesQueries.defs),
+    "analytics" -> (AnalyticsQueries.defs ++ ExperimentQueries.defs),
+    "training" -> TrainingQueries.defs,
+    "curation" -> CurationQueries.defs,
+    "engine_ops" -> EngineOpsQueries.defs)
+
+  lazy val all: Seq[QueryDef] = families.flatMap(_._2)
 
   lazy val byName: Map[String, QueryDef] = all.map(q => q.name -> q).toMap
 }

@@ -17,7 +17,7 @@ object SparkEntry {
     * Runs the reference's core ETL pipeline (P1+F1+F2+F4+D1) end to end. */
   def entry(spark: SparkSession): DataFrame = {
     GraftFunctions.register(spark)
-    graft.queries.CoreEtlQueries.etlLeadActivity(spark, "/root/testdata/sf0.001")
+    graft.queries.EtlQueries.etlLeadActivity(spark, "/root/testdata/sf0.001")
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */

@@ -56,8 +56,7 @@ object QueryUtil {
   /** Stage each frame as ONE parquet file with strictly increasing
     * mtimes so a maxFilesPerTrigger=1 file source replays them in
     * sequence order — the discipline a production file-drop pipeline
-    * provides naturally. Shared by the streaming parity harnesses
-    * (promoted from Round10Queries5 in r11). */
+    * provides naturally. Shared by the streaming parity harnesses. */
   def stageFrames(frames: Seq[org.apache.spark.sql.DataFrame], dir: String): Unit = {
     frames.zipWithIndex.foreach { case (f, i) =>
       f.coalesce(1).write.parquet(s"$dir/s$i")
@@ -73,7 +72,7 @@ object QueryUtil {
   /** Recursive delete (best-effort) for the parity harnesses' temp
     * trees — source slices, checkpoints (RocksDB included), staged
     * emissions. Repeated bench/verify runs must not accumulate
-    * checkpoint state on disk (ADVICE r10). */
+    * checkpoint state on disk. */
   def deleteRecursively(path: String): Unit = try {
     import java.nio.file._
     val p = Paths.get(path)

@@ -2,11 +2,14 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Retrieval tier (north star X3/X4 continuation): the library's ANN family
+/** Retrieval family: sparse, dense and fused ranking plus the evaluation
+  * metrics that compare the arms.
+  *
+  * Retrieval tier (north star X3/X4 continuation): the library's ANN family
   * covers DENSE retrieval; these queries add SPARSE lexical retrieval
   * (BM25 over an inverted-index join) and dense+sparse fusion (reciprocal
   * rank fusion) — the full modern retrieval stack, all oracle-paired.
@@ -22,8 +25,8 @@ object RetrievalQueries {
   /** BM25 constants (standard Robertson defaults). */
   private val K1 = 1.2
   private val B = 0.75
-  private[queries] val TopK = 5
-  private[queries] val RrfK = 60
+  private val TopK = 5
+  private val RrfK = 60
 
   /** x80: BM25 top-5 docs per query doc (doc_id % 100 = 0, self excluded).
     * The scoring join is the inverted-index shape — query terms broadcast,
@@ -113,7 +116,7 @@ object RetrievalQueries {
        |                 * CAST(s.n_docs AS DOUBLE) / CAST(s.tot AS DOUBLE))))""".stripMargin
 
   /** Postings + corpus-statistics CTEs shared by the x80 and x81 oracles. */
-  private[queries] def bm25Ctes: String =
+  private def bm25Ctes: String =
     s"""tf AS (SELECT doc_id, t, count(*) AS tf
        |     FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents)
        |     GROUP BY doc_id, t),
@@ -174,20 +177,25 @@ object RetrievalQueries {
       .orderBy("q_id", "rk")
   }
 
+  /** Dense-arm oracle CTEs `e → dq → dp → dr`: every 100th vector queries
+    * all others by rounded cosine and `dr.drk` ranks them; `drCols` lists
+    * extra `dr` columns (with a leading space and trailing comma). */
+  private def denseRankCtes(drCols: String): String =
+    s"""e AS (SELECT vec_id, embedding,
+       |       sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
+       |            i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
+       |     FROM embeddings),
+       |dq AS (SELECT vec_id AS q_id, embedding AS qv, nrm AS qn FROM e WHERE vec_id % 100 = 0),
+       |dp AS (SELECT q_id, e.vec_id AS id,
+       |        round(list_sum(list_transform(range(1, len(qv) + 1),
+       |              i -> CAST(qv[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))) / (qn * e.nrm), 4) AS cosine
+       |      FROM e JOIN dq ON e.vec_id <> dq.q_id),
+       |dr AS (SELECT q_id, id,$drCols
+       |        row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, id) AS drk
+       |      FROM dp)""".stripMargin
+
   private val rrfOracle = {
-    val denseCte =
-      s"""e AS (SELECT vec_id, embedding,
-         |       sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-         |            i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-         |     FROM embeddings),
-         |dq AS (SELECT vec_id AS q_id, embedding AS qv, nrm AS qn FROM e WHERE vec_id % 100 = 0),
-         |dp AS (SELECT q_id, e.vec_id AS id,
-         |        round(list_sum(list_transform(range(1, len(qv) + 1),
-         |              i -> CAST(qv[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))) / (qn * e.nrm), 4) AS cosine
-         |      FROM e JOIN dq ON e.vec_id <> dq.q_id),
-         |dr AS (SELECT q_id, id,
-         |        row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, id) AS drk
-         |      FROM dp)""".stripMargin
+    val denseCte = denseRankCtes("")
     s"""WITH $bm25Ctes,
        |$denseCte,
        |dense AS (SELECT q_id, id, drk FROM dr WHERE drk <= $TopK),
@@ -743,19 +751,7 @@ object RetrievalQueries {
   }
 
   private val hybridOracle = {
-    val denseCte =
-      s"""e AS (SELECT vec_id, embedding,
-         |       sqrt(list_sum(list_transform(range(1, len(embedding) + 1),
-         |            i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))) AS nrm
-         |     FROM embeddings),
-         |dq AS (SELECT vec_id AS q_id, embedding AS qv, nrm AS qn FROM e WHERE vec_id % 100 = 0),
-         |dp AS (SELECT q_id, e.vec_id AS id,
-         |        round(list_sum(list_transform(range(1, len(qv) + 1),
-         |              i -> CAST(qv[i] AS DOUBLE) * CAST(e.embedding[i] AS DOUBLE))) / (qn * e.nrm), 4) AS cosine
-         |      FROM e JOIN dq ON e.vec_id <> dq.q_id),
-         |dr AS (SELECT q_id, id, cosine,
-         |        row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, id) AS drk
-         |      FROM dp)""".stripMargin
+    val denseCte = denseRankCtes(" cosine,")
     s"""WITH $bm25Ctes,
        |$denseCte,
        |dtop AS (SELECT q_id, id, drk, cosine FROM dr WHERE drk <= $TopK),
@@ -854,7 +850,320 @@ object RetrievalQueries {
        |FROM r WHERE rk <= $TopK
        |ORDER BY q_id, rk""".stripMargin
 
-  lazy val defs: Seq[QueryDef] = Seq(
+  /* Retrieval-arm comparison — the evaluation
+   * harness that closes the loop between the retrieval family (dense x30,
+   * sparse x80, hybrid x81) and the eval family (x83 MRR): all three arms
+   * scored on one ground truth in one query. */
+
+  /** x170: fusion A/B evaluation — MRR@3 and hits@3 for the dense, BM25,
+    * and RRF-fused rankings on the SAME query cohort (the %100 query docs
+    * that carry an embedding label) with label agreement as relevance.
+    * Reciprocal ranks are exact integer rationals (10⁶ div rank — the x83
+    * convention), so per-arm sums are order-free; candidates without an
+    * embedding label (possible: the document table outgrows the embedding
+    * table at sf0.1) count as non-relevant in both engines. This is the
+    * measurement that justifies (or kills) the fusion layer: it must beat
+    * the better single arm to earn its cost.
+    *
+    * Scale: each arm keeps its own audited plan (broadcast queries /
+    * inverted index / rank-pair fusion); the eval tail touches only
+    * K·|queries| rows per arm. */
+  def fusionEval(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val lab = Tables.embeddings(spark, dir).select($"vec_id", $"label")
+    val qlab = lab.filter($"vec_id" % 100 === 0)
+      .select($"vec_id".as("q_id"), $"label".as("qlab"))
+    def armMrr(name: String, list: DataFrame) =
+      list.filter($"rk" <= 3)
+        .join(broadcast(qlab), "q_id")
+        .join(lab.select($"vec_id".as("id"), $"label".as("clab")), Seq("id"), "left")
+        .groupBy($"q_id")
+        .agg(min(when($"clab" === $"qlab", $"rk")).as("fr"))
+        .agg(count(lit(1)).as("n_q"),
+          sum(when($"fr".isNotNull, 1L).otherwise(0L)).as("hits3"),
+          sum(when($"fr".isNotNull, expr("1000000 div fr")).otherwise(0L)).as("mrr_fp"))
+        .select(lit(name).as("arm"), $"n_q", $"hits3", $"mrr_fp",
+          QueryUtil.halfUp4($"mrr_fp".cast("double") / 1e6 / $"n_q".cast("double"))
+            .as("mrr"))
+    val dense = SimilarityQueries.cosineTopK(spark, dir)
+      .select($"q_id", $"vec_id".as("id"), $"rk")
+    val sparse = bm25TopK(spark, dir)
+      .select($"q_id", $"doc_id".as("id"), $"rk")
+    val fused = rrfFusion(spark, dir)
+      .select($"q_id", $"id", $"rk")
+    armMrr("bm25", sparse)
+      .unionByName(armMrr("dense", dense))
+      .unionByName(armMrr("rrf", fused))
+      .orderBy("arm")
+  }
+
+  private val fusionEvalOracle = {
+    val denseCte = denseRankCtes("")
+    s"""WITH ${bm25Ctes},
+       |$denseCte,
+       |dense5 AS (SELECT q_id, id, drk FROM dr WHERE drk <= ${TopK}),
+       |sparse5 AS (SELECT q_id, doc_id AS id, rk AS srk FROM bmr
+       |            WHERE rk <= ${TopK}),
+       |fused AS (SELECT coalesce(dense5.q_id, sparse5.q_id) AS q_id,
+       |            coalesce(dense5.id, sparse5.id) AS id,
+       |            coalesce(1.0 / (${RrfK} + drk), 0.0)
+       |              + coalesce(1.0 / (${RrfK} + srk), 0.0) AS rrf
+       |          FROM dense5 FULL OUTER JOIN sparse5
+       |            ON dense5.q_id = sparse5.q_id AND dense5.id = sparse5.id),
+       |fr3 AS (SELECT q_id, id, rk FROM (
+       |          SELECT q_id, id, row_number() OVER (PARTITION BY q_id
+       |                   ORDER BY rrf DESC, id) AS rk
+       |          FROM fused) WHERE rk <= 3),
+       |lab AS (SELECT vec_id, label FROM embeddings),
+       |qlab AS (SELECT vec_id AS q_id, label AS qlab FROM lab WHERE vec_id % 100 = 0),
+       |arms AS (
+       |  SELECT 'dense' AS arm, q_id, id, drk AS rk FROM dense5 WHERE drk <= 3
+       |  UNION ALL
+       |  SELECT 'bm25', q_id, id, srk FROM sparse5 WHERE srk <= 3
+       |  UNION ALL
+       |  SELECT 'rrf', q_id, id, rk FROM fr3),
+       |per_q AS (
+       |  SELECT a.arm, a.q_id,
+       |         min(CASE WHEN c.label = q.qlab THEN a.rk END) AS fr
+       |  FROM arms a
+       |  JOIN qlab q ON a.q_id = q.q_id
+       |  LEFT JOIN lab c ON a.id = c.vec_id
+       |  GROUP BY a.arm, a.q_id)
+       |SELECT arm,
+       |       CAST(count(*) AS BIGINT) AS n_q,
+       |       CAST(sum(CASE WHEN fr IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS hits3,
+       |       CAST(sum(CASE WHEN fr IS NOT NULL THEN 1000000 // fr ELSE 0 END) AS BIGINT) AS mrr_fp,
+       |       floor(CAST(sum(CASE WHEN fr IS NOT NULL THEN 1000000 // fr ELSE 0 END) AS DOUBLE)
+       |             / 1e6 / count(*) * 10000 + 0.5) / 10000.0 AS mrr
+       |FROM per_q
+       |GROUP BY arm
+       |ORDER BY arm""".stripMargin
+  }
+
+  /* Ranking stability and marketing
+   * attribution — rank-biased overlap between two revenue rankings
+   * (x202) and Markov removal-effect attribution over user journeys
+   * (x203, the absorbing-chain upgrade of q49's positional rules).
+   * Elsewhere: x203 (ExperimentQueries).
+   */
+
+  /** RBO persistence parameter (p = 0.9 ⇒ top ~10 ranks carry most
+    * weight) and evaluation depth. */
+  private val RboDepth = 50
+
+  /** Integer suffix-sum table S(m) = Σ_{d=m..k} p^{d-1}/d in 1e-9 fixed
+    * point, precomputed in Scala and emitted as literals into BOTH
+    * engines (the x87 nDCG literal-discount-table recipe) — the
+    * engines never run their own pow(), so there is no libm boundary
+    * to disagree on. */
+  private val rboSuffixFp: IndexedSeq[Long] = {
+    val terms = (1 to RboDepth).map(d => math.pow(0.9, d - 1) / d)
+    val suffix = terms.scanRight(0.0)(_ + _).init
+    suffix.map(s => math.floor(s * 1e9 + 0.5).toLong)
+  }
+
+  // ---------------------------------------------------------------- x202
+
+  /** x202: rank-biased overlap (RBO, Webber et al.) between the
+    * part-revenue top-[[RboDepth]] of 1995 and of 1996 — the
+    * top-weighted answer to "how stable is this ranking?", where
+    * Kendall/Spearman over-penalize tail churn. Identity used:
+    * RBO = (1−p)·Σ_d p^{d-1}·|A_d∩B_d|/d, and each common item with
+    * ranks (ra, rb) contributes the SUFFIX sum S(max(ra,rb)) — so the
+    * whole statistic is one integer sum of table lookups over the
+    * joined top-k lists, no per-depth loop. The suffix table is a
+    * Scala-precomputed literal in both engines.
+    *
+    * Scale: two filtered fact aggregates to part grain; the global
+    * top-k rank is a WindowGroupLimit-pruned sort on a 2-column
+    * frame; the RBO join touches ≤ k rows. */
+  def rbo(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    def topK(yr: Int): DataFrame = {
+      val rev = Tables.lineitem(spark, dir)
+        .filter(year($"l_shipdate") === yr)
+        .groupBy($"l_partkey")
+        .agg(sum(floor($"l_extendedprice" * (lit(1.0) - $"l_discount") * 100 + 0.5)
+          .cast("long")).as("cents"))
+      rev.select($"l_partkey",
+        row_number().over(Window.orderBy($"cents".desc, $"l_partkey")).cast("long")
+          .as("rk"))
+        .filter($"rk" <= RboDepth)
+    }
+    val a = topK(1995).toDF("pk", "ra")
+    val b = topK(1996).toDF("pk", "rb")
+    val sfCase = (1 to RboDepth)
+      .map(m => s"WHEN $m THEN ${rboSuffixFp(m - 1)}L")
+      .mkString("CASE greatest(ra, rb) ", " ", " END")
+    a.join(b, "pk")
+      .select(expr(sfCase).as("s_fp"))
+      .agg(count(lit(1)).as("n_common"), coalesce(sum($"s_fp"), lit(0L)).as("ssum_fp"))
+      .select(lit(RboDepth.toLong).as("k"), $"n_common",
+        expr("CAST(floor(0.1 * CAST(ssum_fp AS DOUBLE) / 1000.0 + 0.5)" +
+          " AS BIGINT)").as("rbo_fp"))
+  }
+
+  private val rboOracle = {
+    val sfCase = (1 to RboDepth)
+      .map(m => s"WHEN $m THEN ${rboSuffixFp(m - 1)}")
+      .mkString("CASE greatest(ra, rb) ", " ", " END")
+    def topSql(year: Int, rank: String) =
+      s"""SELECT l_partkey AS pk, rk AS $rank FROM (
+         |  SELECT l_partkey,
+         |         CAST(row_number() OVER (ORDER BY cents DESC, l_partkey)
+         |              AS BIGINT) AS rk
+         |  FROM (SELECT l_partkey,
+         |          CAST(sum(CAST(floor(l_extendedprice * (1.0 - l_discount)
+         |            * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+         |        FROM lineitem WHERE year(l_shipdate) = $year
+         |        GROUP BY l_partkey) r) t
+         |WHERE rk <= $RboDepth""".stripMargin
+    s"""WITH a AS (${topSql(1995, "ra")}),
+       |b AS (${topSql(1996, "rb")}),
+       |j AS (SELECT $sfCase AS s_fp FROM a JOIN b USING (pk))
+       |SELECT CAST($RboDepth AS BIGINT) AS k,
+       |       CAST(count(*) AS BIGINT) AS n_common,
+       |       CAST(floor(0.1 * CAST(COALESCE(sum(s_fp), 0) AS DOUBLE) / 1000.0 + 0.5)
+       |            AS BIGINT) AS rbo_fp
+       |FROM j""".stripMargin
+  }
+
+  // ---------------------------------------------------------------- x328
+
+  /** Terms reported (by descending document frequency). */
+  private val PostTopK = 30
+
+  /** x328: posting-list compression sizing — the storage arithmetic of
+    * every inverted index at scale (Lucene/Tantivy postings are
+    * delta + varint encoded): per term, sort the distinct doc_ids,
+    * delta-encode (first id raw), and charge LEB128 varint bytes per
+    * gap with threshold CASEs (< 2⁷ → 1B, < 2¹⁴ → 2B, < 2²¹ → 3B,
+    * < 2²⁸ → 4B, else 5B — log-free, exact). Emits raw-int64 vs varint
+    * bytes and the compression ratio for the [[PostTopK]] heaviest
+    * terms — the numbers an index-layout planner trades off.
+    *
+    * Scale: one explode + distinct (hash shuffle on (term, doc)), one
+    * term-keyed window for the lag — postings density grows linearly
+    * with the corpus, never quadratically. */
+  def postingsCompression(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val postings = Tables.documents(spark, dir)
+      .select($"doc_id", explode(split($"text", " ")).as("term"))
+      .filter(length($"term") > 0)
+      .distinct()
+    val gaps = postings
+      .withColumn("prev", lag($"doc_id", 1).over(
+        Window.partitionBy($"term").orderBy($"doc_id")))
+      .withColumn("gap", when($"prev".isNull, $"doc_id").otherwise($"doc_id" - $"prev"))
+    def vbytes(c: Column): Column =
+      when(c < 128L, 1L).when(c < 16384L, 2L).when(c < 2097152L, 3L)
+        .when(c < 268435456L, 4L).otherwise(5L)
+    gaps.groupBy($"term")
+      .agg(count(lit(1)).as("df"), sum(vbytes($"gap")).as("varint_bytes"))
+      .withColumn("raw_bytes", $"df" * 8L)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(lit(1)).orderBy($"df".desc, $"term")))
+      .filter($"rk" <= PostTopK)
+      .select($"term", $"df", $"raw_bytes", $"varint_bytes",
+        QueryUtil.halfUp4($"varint_bytes".cast("double") / $"raw_bytes".cast("double"))
+          .as("ratio"))
+      .orderBy($"term")
+  }
+
+  private val postingsOracle =
+    s"""WITH postings AS MATERIALIZED (
+       |  SELECT DISTINCT doc_id, t.term
+       |  FROM documents, unnest(string_split(text, ' ')) AS t(term)
+       |  WHERE length(t.term) > 0),
+       |gaps AS (
+       |  SELECT term,
+       |         COALESCE(doc_id - lag(doc_id) OVER (PARTITION BY term ORDER BY doc_id),
+       |                  doc_id) AS gap
+       |  FROM postings),
+       |sized AS (
+       |  SELECT term, CAST(count(*) AS BIGINT) AS df,
+       |         CAST(sum(CASE WHEN gap < 128 THEN 1 WHEN gap < 16384 THEN 2
+       |                       WHEN gap < 2097152 THEN 3 WHEN gap < 268435456 THEN 4
+       |                       ELSE 5 END) AS BIGINT) AS varint_bytes
+       |  FROM gaps GROUP BY 1),
+       |ranked AS (
+       |  SELECT *, df * 8 AS raw_bytes,
+       |         row_number() OVER (ORDER BY df DESC, term) AS rk
+       |  FROM sized)
+       |SELECT term, df, raw_bytes, varint_bytes,
+       |       floor(CAST(varint_bytes AS DOUBLE) / CAST(raw_bytes AS DOUBLE)
+       |             * 10000 + 0.5) / 10000.0 AS ratio
+       |FROM ranked WHERE rk <= $PostTopK
+       |ORDER BY term""".stripMargin
+
+  // ---------------------------------------------------------------- x342
+
+  /** x342: Mean Average Precision of the dense-retrieval arm (x83's
+    * query/corpus frame: every vec_id % 100 = 0 embedding queries the
+    * rest of the corpus by the x30 cosine key; a doc is relevant iff it
+    * shares the query's label). AP_q = (Σ_{k rel} P@k)/R with every
+    * precision term micro-quantized ((cumrel·10⁶) DIV k) so the per-query
+    * sum and the corpus-level macro average are pure BIGINT — no
+    * accumulation-order-dependent double sums (the x327 float-free
+    * macro-average convention). Emits per-query (R, Σp, AP micro) plus
+    * the global MAP replicated.
+    *
+    * Scale: the one pair scan is broadcast-queries × corpus (x83's
+    * audited shape); everything downstream is per-query census sums. */
+  def mapEval(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val emb = Tables.embeddings(spark, dir)
+      .select($"vec_id", $"label", $"embedding", Similarity.norm($"embedding").as("nrm"))
+    val q = emb.filter($"vec_id" % 100 === 0)
+      .select($"vec_id".as("q_id"), $"label".as("qlab"), $"embedding".as("qv"),
+        $"nrm".as("qn"))
+    val w = Window.partitionBy($"q_id").orderBy($"cosine".desc, $"vec_id")
+    val wrel = Window.partitionBy($"q_id").orderBy($"rk")
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val perQuery = emb.join(broadcast(q), $"vec_id" =!= $"q_id")
+      .select($"q_id", $"qlab", $"vec_id", $"label",
+        round(Similarity.dot($"qv", $"embedding") / ($"qn" * $"nrm"), 4).as("cosine"))
+      .withColumn("rk", row_number().over(w).cast("long"))
+      .withColumn("rel", ($"label" === $"qlab").cast("long"))
+      .withColumn("cumrel", sum($"rel").over(wrel))
+      .withColumn("p_micro",
+        when($"rel" === 1L, expr("(cumrel * 1000000) DIV rk")).otherwise(0L))
+      .groupBy($"q_id")
+      .agg(sum($"rel").as("n_rel"), sum($"p_micro").as("sum_p"))
+      .withColumn("ap_micro",
+        when($"n_rel" > 0L, expr("sum_p DIV n_rel")).otherwise(0L))
+    val wAll = Window.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    perQuery
+      .withColumn("sum_ap_all", sum($"ap_micro").over(wAll))
+      .withColumn("n_q", count(lit(1)).over(wAll))
+      .withColumn("map_micro", expr("sum_ap_all DIV n_q"))
+      .select($"q_id", $"n_rel", $"sum_p", $"ap_micro", $"map_micro")
+      .orderBy($"q_id")
+  }
+
+  private val mapEvalOracle =
+    s"""WITH q AS (SELECT vec_id AS q_id, label AS qlab, embedding AS qv
+       |           FROM embeddings WHERE vec_id % 100 = 0),
+       |p AS (SELECT q.q_id, q.qlab, e.vec_id, e.label,
+       |        round(${SimilarityQueries.cosineSql("e.embedding", "qv")}, 4) AS cosine
+       |      FROM embeddings e JOIN q ON e.vec_id <> q.q_id),
+       |r AS (SELECT q_id, CAST(row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS BIGINT) AS rk,
+       |        CAST(CASE WHEN label = qlab THEN 1 ELSE 0 END AS BIGINT) AS rel
+       |      FROM p),
+       |c AS (SELECT *, sum(rel) OVER (PARTITION BY q_id ORDER BY rk ROWS UNBOUNDED PRECEDING) AS cumrel
+       |      FROM r),
+       |pq AS (
+       |  SELECT q_id, CAST(sum(rel) AS BIGINT) AS n_rel,
+       |         CAST(sum(CASE WHEN rel = 1 THEN (cumrel * 1000000) // rk ELSE 0 END) AS BIGINT) AS sum_p
+       |  FROM c GROUP BY 1),
+       |ap AS (
+       |  SELECT *, CASE WHEN n_rel > 0 THEN sum_p // n_rel ELSE 0 END AS ap_micro
+       |  FROM pq)
+       |SELECT q_id, n_rel, sum_p, ap_micro,
+       |       CAST(sum(ap_micro) OVER () // count(*) OVER () AS BIGINT) AS map_micro
+       |FROM ap ORDER BY q_id""".stripMargin
+
+  val defs: Seq[QueryDef] = Seq(
     QueryDef("x115_sparse_topk",
       "learned-sparse (SPLADE-shaped) impact-weighted retrieval: exact integer dot products",
       sparseTopK, Some(sparseTopKOracle)),
@@ -884,5 +1193,17 @@ object RetrievalQueries {
       rrfFusion, Some(rrfOracle)),
     QueryDef("x82_mmr_rerank",
       "maximal-marginal-relevance diversity rerank of the dense top-N",
-      mmrRerank, Some(mmrOracle)))
+      mmrRerank, Some(mmrOracle)),
+    QueryDef("x170_fusion_eval",
+      "retrieval-arm comparison: MRR@3 / hits@3 for dense, BM25, and RRF on one labeled query cohort",
+      fusionEval, Some(fusionEvalOracle)),
+    QueryDef("x202_rbo",
+      "rank-biased overlap between the 1995 and 1996 part-revenue top-50: literal suffix-weight table, one integer sum over the joined lists",
+      rbo, Some(rboOracle)),
+    QueryDef("x328_postings_compression",
+      "inverted-index posting sizing: delta + LEB128 varint byte counts per term, log-free threshold CASEs, exact ints",
+      postingsCompression, Some(postingsOracle)),
+    QueryDef("x342_map_eval",
+      "Mean Average Precision of the dense arm: micro-quantized precision terms, float-free macro average (x327 convention)",
+      mapEval, Some(mapEvalOracle)))
 }

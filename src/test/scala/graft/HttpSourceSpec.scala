@@ -31,6 +31,10 @@ class HttpSourceSpec extends SparkTestBase {
     val unauthorized = new AtomicInteger(0)
     val pageLog: java.util.Set[Integer] =
       java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    /** Client ports of every exchange: one entry per TCP connection. */
+    val clientPorts: java.util.Set[Integer] =
+      java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+    val requests = new AtomicInteger(0)
     private val server =
       HttpServer.create(new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(8))
@@ -41,6 +45,7 @@ class HttpSourceSpec extends SparkTestBase {
       try os.write(b) finally os.close()
     }
     server.createContext("/auth", (x: HttpExchange) => {
+      requests.incrementAndGet(); clientPorts.add(x.getRemoteAddress.getPort)
       authHits.incrementAndGet()
       val req = new String(x.getRequestBody.readAllBytes(), "UTF-8")
       if (x.getRequestMethod != "POST" || !req.contains("\"client_id\":\"cid\"") ||
@@ -52,6 +57,7 @@ class HttpSourceSpec extends SparkTestBase {
       }
     })
     server.createContext("/activities", (x: HttpExchange) => {
+      requests.incrementAndGet(); clientPorts.add(x.getRemoteAddress.getPort)
       val auth = Option(x.getRequestHeaders.getFirst("Authorization"))
       if (!auth.contains(s"Bearer tok-${epoch.get}")) {
         unauthorized.incrementAndGet()
@@ -84,7 +90,12 @@ class HttpSourceSpec extends SparkTestBase {
         parallelism = 4, pageSize = 100)
       val inProc = PS.bulkExtract(spark, new SyntheticPageClient(1234, 100),
         parallelism = 4, pageSize = 100)
+      val (r0, c0) = (api.requests.get(), api.clientPorts.size)
       assert(overHttp.count() == 1234)
+      // keep-alive: the count's 13 GETs share at most one connection per
+      // concurrent task (local[4, 2] runs four)
+      val (requests, conns) = (api.requests.get() - r0, api.clientPorts.size - c0)
+      assert(requests == 13 && conns <= 4, s"$requests requests over $conns connections")
       assert(overHttp.except(inProc).count() == 0)
       assert(inProc.except(overHttp).count() == 0)
       assert(api.authHits.get() >= 1, "bearer auth never crossed the wire")

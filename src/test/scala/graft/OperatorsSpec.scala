@@ -231,7 +231,7 @@ class OperatorsSpec extends SparkTestBase {
     // the registered query is self-cleaning since r11 (drops its tables +
     // warehouse dir after checkpointing), so sanity-check its result and
     // then create fresh bucketed tables HERE for the plan assertion
-    val out = graft.queries.Round10Queries2.bucketJoin(spark, "/root/testdata/sf0.001")
+    val out = graft.queries.EngineOpsQueries.bucketJoin(spark, "/root/testdata/sf0.001")
     assert(out.count() == 5)
     val wh = tmpDir("graft_x137_spec")
     spark.sql("DROP TABLE IF EXISTS graft_x137_orders")
@@ -244,7 +244,7 @@ class OperatorsSpec extends SparkTestBase {
       .select($"l_orderkey", $"l_extendedprice")
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .option("path", s"$wh/lineitem").saveAsTable("graft_x137_lineitem")
-    val plan = graft.queries.Round10Queries2.bucketJoinOn(spark)
+    val plan = graft.queries.EngineOpsQueries.bucketJoinOn(spark)
       .queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), s"bucketed join must be SMJ:\n$plan")
     // the whole point of bucketing: the join keys are never re-shuffled
@@ -267,7 +267,7 @@ class OperatorsSpec extends SparkTestBase {
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice",
         year($"o_orderdate".cast("date")).as("o_year"))
       .write.partitionBy("o_year").parquet(s"$base/orders")
-    val df = graft.queries.Round10Queries2.partitionPruneOn(spark, base)
+    val df = graft.queries.EngineOpsQueries.partitionPruneOn(spark, base)
     val plan = df.queryExecution.executedPlan.toString
     // the filter must bind to the PARTITION column, not a data filter
     assert(plan.contains("PartitionFilters"), plan)
@@ -289,7 +289,7 @@ class OperatorsSpec extends SparkTestBase {
     spark.range(1995, 2002)
       .select($"id".cast("int").as("d_year"), ($"id" % 3 === 0).cast("int").as("in_season"))
       .write.parquet(s"$base/dim")
-    val df = graft.queries.Round10Queries3.dynPartitionPruneOn(spark, base)
+    val df = graft.queries.EngineOpsQueries.dynPartitionPruneOn(spark, base)
     val plan = df.queryExecution.executedPlan.toString
     // unlike x139's static prune, the year set is only known at RUNTIME:
     // the fact scan's PartitionFilters must carry a dynamicpruning subquery
@@ -307,11 +307,11 @@ class OperatorsSpec extends SparkTestBase {
     try {
       conf.set(keys(0), "1024"); conf.set(keys(1), "2"); conf.set(keys(2), "1024")
       val base = java.nio.file.Files.createTempDirectory("graft_x146_spec").toString
-      graft.queries.Round10Queries4.skewEvents(spark, "/root/testdata/sf0.001")
+      graft.queries.EngineOpsQueries.skewEvents(spark, "/root/testdata/sf0.001")
         .select($"grp").distinct()
         .select($"grp", (abs($"grp") % 3).as("cat"))
         .write.parquet(s"$base/dim")
-      val df = graft.queries.Round10Queries4.skewJoinPlan(spark, "/root/testdata/sf0.001", s"$base/dim")
+      val df = graft.queries.EngineOpsQueries.skewJoinPlan(spark, "/root/testdata/sf0.001", s"$base/dim")
       PlanAudit.assertSkewHandled(df) // loud on either silent-no-op precondition
     } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
   }
@@ -325,7 +325,7 @@ class OperatorsSpec extends SparkTestBase {
     val saved = keys.map(k => k -> conf.getOption(k)).toMap
     try {
       conf.set(keys(0), "true"); conf.set(keys(1), "1024"); conf.set(keys(2), "-1")
-      val df = graft.queries.Round10Queries6.runtimeFilterPlan(spark, "/root/testdata/sf0.001")
+      val df = graft.queries.EngineOpsQueries.runtimeFilterPlan(spark, "/root/testdata/sf0.001")
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"demo degraded from SMJ:\n$plan")
@@ -339,19 +339,19 @@ class OperatorsSpec extends SparkTestBase {
     // array_sort(struct(turn, line)) — prove the md5 survives an
     // adversarial repartition (the property a distributed template
     // renderer must have; a bare collect_list would flake here).
-    val a = graft.queries.Round10Queries12.chatAssembly(spark, "/root/testdata/sf0.001")
+    val a = graft.queries.PipelineQueries.chatAssembly(spark, "/root/testdata/sf0.001")
       .collect().map(_.toSeq)
     val ev = graft.Tables.events(spark, "/root/testdata/sf0.001").repartition(7)
     val tmp = java.nio.file.Files.createTempDirectory("graft_chat").toString
     // the query touches only events, so a directory with events alone works
     ev.write.parquet(s"$tmp/events.parquet")
-    val b = graft.queries.Round10Queries12.chatAssembly(spark, tmp)
+    val b = graft.queries.PipelineQueries.chatAssembly(spark, tmp)
       .collect().map(_.toSeq)
     assert(a.toSeq == b.toSeq)
   }
 
   test("q102 lateral top-k plan: WindowGroupLimit below the exchange") {
-    val df = graft.queries.Round10Queries9.lateralTopk(spark, "/root/testdata/sf0.001")
+    val df = graft.queries.RelationalQueries.lateralTopk(spark, "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), s"no group-limit pushdown:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested loop crept in:\n$plan")

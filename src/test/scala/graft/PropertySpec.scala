@@ -600,7 +600,7 @@ class PropertySpec extends SparkTestBase {
         sample(Gen.choose(-300L, 300L), seed * 37))
       val feats = rows.toDF("c", "y").repartition(7) // force partial aggs
       val (mis, gb, gc) =
-        graft.queries.Round10Queries25.perceptronStep(feats, wb, wc)
+        graft.queries.TrainingQueries.perceptronStep(feats, wb, wc)
       // sequential reference fold
       val misq = rows.filter { case (c, y) => y * (wb + wc * c) <= 0 }
       assert(mis == misq.size && gb == misq.map(_._2).sum
@@ -615,7 +615,7 @@ class PropertySpec extends SparkTestBase {
         .map { case ((c, t), i) => (i.toLong, c, t) }
       val pred = labs.map { case (d, c, _) => (d, c) }.toDF("doc_id", "c")
       val truth = labs.map { case (d, _, t) => (d, t) }.toDF("doc_id", "t")
-      val r = graft.queries.Round10Queries27.bcubedFromLabels(pred, truth).head()
+      val r = graft.queries.DedupQueries.bcubedFromLabels(pred, truth).head()
       // exact rational per-document brute force
       val byC = labs.groupBy(_._2).view.mapValues(_.size).toMap
       val byT = labs.groupBy(_._3).view.mapValues(_.size).toMap

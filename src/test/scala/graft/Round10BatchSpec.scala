@@ -1,6 +1,6 @@
 package graft
 
-import graft.queries.{Round10Queries25, Round10Queries26, Round10Queries27, Round10Queries28, Round10Queries29, Round10Queries30, Round10Queries31, Round10Queries32, Round10Queries33, Round10Queries34, Round10Queries35, Round10Queries36, Round10Queries37, Round10Queries39, Round10Queries40, Round10Queries41, Round10Queries42, Round10Queries43, Round10Queries44, Round10Queries45, Round10Queries46, Round10Queries47, Round10Queries48, Round10Queries49, Round10Queries50, Round10Queries51, Round10Queries52, Round10Queries53, Round10Queries55, Round10Queries56, Round10Queries57}
+import graft.queries.{AnalyticsQueries, CurationQueries, DedupQueries, EngineOpsQueries, EtlQueries, ExperimentQueries, GraphQueries, MultimodalQueries, PipelineQueries, RelationalQueries, RetrievalQueries, SimilarityQueries, StatsQueries, TextQueries, TimeSeriesQueries, TrainingQueries}
 import org.apache.spark.sql.functions._
 
 /** Semantics of the x181–x183 tier: the invariants the oracle pairing
@@ -12,7 +12,7 @@ class Round10BatchSpec extends SparkTestBase {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("x181: perceptron training reaches zero training error") {
-    val out = Round10Queries25.perceptronTrain(spark, sfDir).cache()
+    val out = TrainingQueries.perceptronTrain(spark, sfDir).cache()
     val rows = out.orderBy($"it").collect()
     assert(rows.length == 6)
     val mis = rows.map(_.getAs[Long]("n_mis"))
@@ -29,7 +29,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x182: bootstrap interval brackets the point estimate and is ordered") {
-    val r = Round10Queries25.bootstrapCi(spark, sfDir).head()
+    val r = ExperimentQueries.bootstrapCi(spark, sfDir).head()
     assert(r.getAs[Long]("n_reps") == 32L)
     assert(r.getAs[Long]("boot_lo_fp") <= r.getAs[Long]("boot_hi_fp"))
     // With 1500 orders the replicate-mean spread is ~2.6% (sd/sqrt(n));
@@ -51,7 +51,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x184: stump argmin beats the majority baseline and is exhaustively optimal") {
-    val r = Round10Queries26.stumpTrain(spark, sfDir).head()
+    val r = TrainingQueries.stumpTrain(spark, sfDir).head()
     val (bestT, polGe, errBest) =
       (r.getAs[Long]("best_t"), r.getAs[Int]("pol_ge"), r.getAs[Long]("err_best"))
     assert(errBest < r.getAs[Long]("base_err"))
@@ -67,14 +67,14 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x186: DP release clamps at zero and noise stays in the documented tail") {
-    val out = Round10Queries26.dpHistogram(spark, sfDir).cache()
+    val out = AnalyticsQueries.dpHistogram(spark, sfDir).cache()
     assert(out.filter($"released" < 0).count() == 0)
     assert(out.filter($"within_clamp" =!= 1).count() == 0)
     assert(out.filter($"released" =!= greatest($"true_n" + $"noise", lit(0L))).count() == 0)
   }
 
   test("x187: conformal interval covers ~90% out of sample") {
-    val r = Round10Queries26.conformalCoverage(spark, sfDir).head()
+    val r = TrainingQueries.conformalCoverage(spark, sfDir).head()
     assert(r.getAs[Int]("covers_nominal") == 1)
     assert(r.getAs[Long]("q") > 0)
     // Halves partition the orders table.
@@ -83,7 +83,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x185: B-cubed recall is exactly 1 (exact dups always co-cluster) and precision <= 1") {
-    val r = Round10Queries27.bcubedEval(spark, sfDir).head()
+    val r = DedupQueries.bcubedEval(spark, sfDir).head()
     // Identical texts have identical shingle sets -> identical signatures
     // -> LSH pairs them at jaccard 1 -> same component. So the clustering
     // can only MERGE truth classes, never split them: recall == 1.
@@ -95,7 +95,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x188: resampling conserves mass per bucket and moves shares toward target") {
-    val out = Round10Queries27.targetResample(spark, sfDir).cache()
+    val out = CurationQueries.targetResample(spark, sfDir).cache()
     assert(out.count() == 4)
     // A sampler cannot create documents, and uncapped buckets pass whole.
     assert(out.filter($"n_after" > $"n_before").count() == 0)
@@ -108,7 +108,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x189: fairness rates are consistent with their confusion counts") {
-    val out = Round10Queries28.fairnessAudit(spark, sfDir).cache()
+    val out = TrainingQueries.fairnessAudit(spark, sfDir).cache()
     assert(out.count() == 5) // one row per lang
     // Rates live in [0, 1e6] (or -1 when undefined); the gap equals the
     // spread of the published rates.
@@ -124,7 +124,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x190: entropy gate keeps the bulk and the repeated-token floor is low") {
-    val out = Round10Queries28.entropyGate(spark, sfDir).cache()
+    val out = CurationQueries.entropyGate(spark, sfDir).cache()
     val agg = out.agg(sum($"n_docs").as("n"), sum($"n_kept").as("k")).head()
     val (n, k) = (agg.getAs[Long]("n"), agg.getAs[Long]("k"))
     assert(n == Tables.documents(spark, sfDir).count())
@@ -136,7 +136,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x191: measured S-curve is monotone along the theory and hits both tails") {
-    val out = Round10Queries29.lshScurve(spark, sfDir).orderBy($"bin").collect()
+    val out = DedupQueries.lshScurve(spark, sfDir).orderBy($"bin").collect()
     assert(out.length == 10) // every decile populated by constructed probes
     // Tails: near-zero candidacy at bin 0, near-certain at bin 9 (these
     // are 1e-6 fixed-point rates).
@@ -156,7 +156,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x192: topk_pairs aggregates (no Window) and matches row_number across forced merges") {
-    val out = Round10Queries30.topkAgg(spark, sfDir)
+    val out = EngineOpsQueries.topkAgg(spark, sfDir)
     val plan = out.queryExecution.executedPlan.toString
     // A TypedImperativeAggregate plans as ObjectHashAggregate with a
     // partial pass — the map-side-k contract; the window shape must be gone.
@@ -179,7 +179,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x193: dup-matrix mass equals the pair count and pairs are normalized") {
-    val out = Round10Queries31.crossSourceDupMatrix(spark, sfDir).cache()
+    val out = DedupQueries.crossSourceDupMatrix(spark, sfDir).cache()
     val total = out.agg(sum($"n_pairs")).as[Long].head()
     val pairs = graft.queries.DedupQueries.minhashLsh(spark, sfDir).count()
     assert(total == pairs, s"matrix mass $total != pair count $pairs")
@@ -188,7 +188,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x194: allocation sums exactly to the budget and the draw hits it") {
-    val out = Round10Queries31.neymanSample(spark, sfDir).cache()
+    val out = CurationQueries.neymanSample(spark, sfDir).cache()
     assert(out.agg(sum($"alloc")).as[Long].head() == 100L)
     // The rank draw is exact: sampled counts equal allocations (each
     // stratum has far more docs than its allocation at every SF).
@@ -197,7 +197,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x195: normalized deciles are near-uniform within each language") {
-    val out = Round10Queries32.quantileNormalize(spark, sfDir).cache()
+    val out = StatsQueries.quantileNormalize(spark, sfDir).cache()
     // Mass conservation.
     assert(out.agg(sum($"n_docs")).as[Long].head()
       == Tables.documents(spark, sfDir).count())
@@ -210,7 +210,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x196: IPW beats naive extrapolation on thinned buckets") {
-    val out = Round10Queries32.ipwRecovery(spark, sfDir).cache()
+    val out = CurationQueries.ipwRecovery(spark, sfDir).cache()
     val thinned = out.filter($"ratio_fp" < 1000000L)
     assert(thinned.count() > 0)
     val r = thinned.agg(sum($"err_naive").as("en"), sum($"err_ipw").as("ei")).head()
@@ -219,7 +219,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("q112: cascade counts are consistent across the key chain") {
-    val out = Round10Queries32.deleteCascade(spark, sfDir).collect()
+    val out = RelationalQueries.deleteCascade(spark, sfDir).collect()
       .map(r => r.getAs[String]("table_name") ->
         (r.getAs[Long]("n_rows"), r.getAs[Long]("n_affected"))).toMap
     // Every affected lineitem references an affected order; cohorts are
@@ -229,7 +229,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x197: KM curve is a valid survival function") {
-    val rows = Round10Queries33.kaplanMeier(spark, sfDir)
+    val rows = ExperimentQueries.kaplanMeier(spark, sfDir)
       .orderBy($"t").collect()
     assert(rows.nonEmpty)
     val nUsers = Tables.events(spark, sfDir)
@@ -253,7 +253,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x198: log-rank expectations and variance are internally consistent") {
-    val r = Round10Queries33.logRank(spark, sfDir).head()
+    val r = ExperimentQueries.logRank(spark, sfDir).head()
     val converters = Tables.events(spark, sfDir)
       .filter($"event_type" === "purchase")
       .select($"user_id").distinct().count()
@@ -269,7 +269,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x199: WoE bins partition the customers and IV is the published sum") {
-    val out = Round10Queries34.woeIv(spark, sfDir).cache()
+    val out = AnalyticsQueries.woeIv(spark, sfDir).cache()
     val rows = out.orderBy($"bin").collect()
     assert(rows.length == 10)
     val total = rows.map(r => r.getAs[Long]("n_good") + r.getAs[Long]("n_bad")).sum
@@ -279,7 +279,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("q113: Gini matches the O(n^2) mean-absolute-difference definition") {
-    val r = Round10Queries34.giniRevenue(spark, sfDir).head()
+    val r = AnalyticsQueries.giniRevenue(spark, sfDir).head()
     val g = r.getAs[Long]("gini_fp")
     assert(g >= 0L && g <= 1000000L)
     // Recompute from first principles at this SF: G = Σ|x_i−x_j| / (2n²μ̄)
@@ -301,7 +301,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x200: CUPED reduces variance and covers all purchasing users") {
-    val r = Round10Queries35.cuped(spark, sfDir).head()
+    val r = ExperimentQueries.cuped(spark, sfDir).head()
     val purchasers = Tables.events(spark, sfDir)
       .filter($"event_type" === "purchase")
       .select($"user_id").distinct().count()
@@ -315,7 +315,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x201: ANOVA decomposition is exhaustive and F is consistent") {
-    val rows = Round10Queries35.anova(spark, sfDir).collect()
+    val rows = StatsQueries.anova(spark, sfDir).collect()
     assert(rows.length == 5)
     assert(rows.map(_.getAs[Long]("ng")).sum ==
       Tables.orders(spark, sfDir).count())
@@ -342,7 +342,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x202: RBO is a bounded overlap measure over the joined top-k") {
-    val r = Round10Queries36.rbo(spark, sfDir).head()
+    val r = RetrievalQueries.rbo(spark, sfDir).head()
     assert(r.getAs[Long]("k") == 50L)
     val (nc, rbo) = (r.getAs[Long]("n_common"), r.getAs[Long]("rbo_fp"))
     assert(nc >= 0L && nc <= 50L)
@@ -352,7 +352,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x203: removal effects are non-negative and shares apportion the total") {
-    val rows = Round10Queries36.markovAttribution(spark, sfDir).collect()
+    val rows = ExperimentQueries.markovAttribution(spark, sfDir).collect()
     assert(rows.length == 4)
     val vb = rows.map(_.getAs[Long]("v_base_fp")).distinct
     assert(vb.length == 1 && vb.head > 0L)
@@ -368,7 +368,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x204: isotonic fit is monotone and stays inside the raw-rate hull") {
-    val out = Round10Queries37.isotonic(spark, sfDir).orderBy($"bin").collect()
+    val out = StatsQueries.isotonic(spark, sfDir).orderBy($"bin").collect()
     assert(out.length == 12)
     // Monotone non-decreasing — THE isotonic property.
     out.sliding(2).foreach { case Array(a, b) =>
@@ -382,7 +382,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x205: W1 is non-negative and bounded by the grid span") {
-    val r = Round10Queries37.wasserstein(spark, sfDir).head()
+    val r = StatsQueries.wasserstein(spark, sfDir).head()
     val w1 = r.getAs[Long]("w1_fp")
     assert(w1 >= 0L)
     assert(r.getAs[Long]("w1_cents") >= 0L)
@@ -392,7 +392,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x206: Holt backtest covers every 1998 day with consistent errors") {
-    val out = Round10Queries37.holtBacktest(spark, sfDir).cache()
+    val out = TimeSeriesQueries.holtBacktest(spark, sfDir).cache()
     val days = Tables.orders(spark, sfDir)
       .filter(year($"o_orderdate") === 1998)
       .select(to_date($"o_orderdate")).distinct().count()
@@ -405,7 +405,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x208: DTW equals the naive DP and never exceeds the lock-step L1") {
-    val r = Round10Queries39.dtw(spark, sfDir).head()
+    val r = TimeSeriesQueries.dtw(spark, sfDir).head()
     val (dtw, l1) = (r.getAs[Long]("dtw_cents"), r.getAs[Long]("l1_cents"))
     assert(dtw >= 0L && dtw <= l1, s"dtw $dtw l1 $l1")
     // First-principles recompute of the same 12x12 DP in Scala.
@@ -432,7 +432,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x209: Shapley values satisfy the efficiency axiom exactly") {
-    val rows = Round10Queries39.shapley(spark, sfDir).collect()
+    val rows = ExperimentQueries.shapley(spark, sfDir).collect()
     assert(rows.length == 4)
     // Σ_c φ12_c = 12·(v(full) − v(∅)) — the telescoping identity holds
     // EXACTLY on the quantized v's because every coalition's v appears
@@ -455,7 +455,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x210: modularity decomposition respects the degree identity") {
-    val out = Round10Queries40.modularity(spark, sfDir).collect()
+    val out = GraphQueries.modularity(spark, sfDir).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       // e_c = 2·intra ≤ d_c = 2·intra + inter, and each term is a valid
@@ -469,14 +469,14 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x211: assortativity is a correlation in [-1, 1]") {
-    val r = Round10Queries40.assortativity(spark, sfDir).head()
+    val r = GraphQueries.assortativity(spark, sfDir).head()
     assert(r.getAs[Long]("m") > 0L)
     val rho = r.getAs[Long]("r_fp")
     assert(rho >= -1000000L && rho <= 1000000L, s"r $rho")
   }
 
   test("x212: burstiness stays in the Goh-Barabasi range per type") {
-    val out = Round10Queries40.burstiness(spark, sfDir).collect()
+    val out = AnalyticsQueries.burstiness(spark, sfDir).collect()
     assert(out.length == 5)
     out.foreach { r =>
       val (lo, mid, hi) = (r.getAs[Long]("min_b_fp"),
@@ -488,7 +488,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x213: published LOF outliers are ranked, positive, and genuinely sparse") {
-    val out = Round10Queries41.lof(spark, sfDir).orderBy($"rk").collect()
+    val out = SimilarityQueries.lof(spark, sfDir).orderBy($"rk").collect()
     assert(out.length == 20)
     // Scores ordered with the ranking, all positive; the top outlier's
     // density must be visibly below its neighborhood (LOF > 1).
@@ -501,7 +501,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x215: RAKE phrases are capped, stopword-free, and rank-ordered") {
-    val out = Round10Queries42.rake(spark, sfDir).orderBy($"rk").collect()
+    val out = TextQueries.rake(spark, sfDir).orderBy($"rk").collect()
     assert(out.length == 20)
     out.foreach { r =>
       val words = r.getAs[String]("phrase").split(" ")
@@ -516,7 +516,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x216/x217: CSLS demotes hubs that the k-occurrence audit identifies") {
-    val hubs = Round10Queries43.hubnessAudit(spark, sfDir).orderBy($"rk").collect()
+    val hubs = SimilarityQueries.hubnessAudit(spark, sfDir).orderBy($"rk").collect()
     assert(hubs.length == 10)
     // k-occurrence ordering and panel consistency.
     hubs.sliding(2).foreach { case Array(a, b) =>
@@ -526,7 +526,7 @@ class Round10BatchSpec extends SparkTestBase {
     // Mean N_k is exactly K: Σ N_k = n·K (every list has K members), so a
     // max above K certifies genuine hubness in the fixture.
     assert(hubs.head.getAs[Long]("max_k_occ") > 10L)
-    val csls = Round10Queries43.cslsTopk(spark, sfDir).collect()
+    val csls = SimilarityQueries.cslsTopk(spark, sfDir).collect()
     assert(csls.length % 5 == 0 && csls.nonEmpty)
     // CSLS = 2cos − r(a) − r(b) can never exceed plain 2·cos; spot-check
     // the published rows' internal consistency.
@@ -536,7 +536,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x218: seasonal effects are mean-centered and the panel is a valid share") {
-    val out = Round10Queries44.seasonalDecompose(spark, sfDir).collect()
+    val out = TimeSeriesQueries.seasonalDecompose(spark, sfDir).collect()
     assert(out.length == 7)
     // Seasonal effects are deviations from the trend: they must straddle
     // zero (can't all be positive — means of a centered series).
@@ -552,7 +552,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x219: CCF values are correlations and lag 0 matches the direct compute") {
-    val out = Round10Queries44.ccf(spark, sfDir).collect()
+    val out = TimeSeriesQueries.ccf(spark, sfDir).collect()
     assert(out.nonEmpty)
     out.foreach { r =>
       val v = r.getAs[Long]("r_fp")
@@ -565,7 +565,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x220: changepoints respect segment bounds and children split the root") {
-    val out = Round10Queries45.binsegChangepoints(spark, sfDir).collect()
+    val out = TimeSeriesQueries.binsegChangepoints(spark, sfDir).collect()
       .map(r => r.getAs[String]("phase") ->
         (r.getAs[Long]("tau_di"), r.getAs[Long]("gain_d100"))).toMap
     assert(out.keySet == Set("root", "left", "right"))
@@ -581,7 +581,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x221: ABC/XYZ cells partition the parts and shares sum to one") {
-    val out = Round10Queries45.abcXyz(spark, sfDir).collect()
+    val out = AnalyticsQueries.abcXyz(spark, sfDir).collect()
     val nParts = Tables.lineitem(spark, sfDir)
       .select($"l_partkey").distinct().count()
     assert(out.map(_.getAs[Long]("n_parts")).sum == nParts)
@@ -602,7 +602,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x222: PACF lag 1 equals ACF lag 1 and all values are correlations") {
-    val out = Round10Queries46.pacf(spark, sfDir).orderBy($"lag").collect()
+    val out = TimeSeriesQueries.pacf(spark, sfDir).orderBy($"lag").collect()
     assert(out.length == 5)
     out.foreach { r =>
       val v = r.getAs[Long]("pacf_fp")
@@ -626,7 +626,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x223: harmonic closeness covers the trade graph and ranks correctly") {
-    val out = Round10Queries47.harmonicCloseness(spark, sfDir).collect()
+    val out = GraphQueries.harmonicCloseness(spark, sfDir).collect()
     assert(out.length == 25)
     out.foreach { r =>
       assert(r.getAs[Long]("hc_fp") > 0L)
@@ -641,7 +641,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x224: Moran's I is a bounded autocorrelation with positive weight mass") {
-    val r = Round10Queries47.moransI(spark, sfDir).head()
+    val r = GraphQueries.moransI(spark, sfDir).head()
     assert(r.getAs[Long]("wsum") > 0L)
     val i = r.getAs[Long]("moran_fp")
     // Moran's I lives in approximately [-1, 1] (exact bounds depend on
@@ -650,7 +650,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x225: Delta is symmetric-complete over source pairs and non-negative") {
-    val out = Round10Queries48.burrowsDelta(spark, sfDir).collect()
+    val out = TextQueries.burrowsDelta(spark, sfDir).collect()
     val ns = Tables.documents(spark, sfDir)
       .select($"source").distinct().count()
     assert(out.length == ns * (ns - 1) / 2)
@@ -662,14 +662,14 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("q114/q115: storage round-trips preserve cohort identities") {
-    val se = Round10Queries49.schemaEvolution(spark, sfDir).collect()
+    val se = EtlQueries.schemaEvolution(spark, sfDir).collect()
     val totalRows = se.map(_.getAs[Long]("n_rows")).sum
     assert(totalRows == Tables.orders(spark, sfDir).count())
     // v1 rows (null evolved column) are exactly the pre-1996 cohort.
     val v1 = Tables.orders(spark, sfDir)
       .filter(year($"o_orderdate") <= 1995).count()
     assert(se.map(_.getAs[Long]("n_v1_rows")).sum == v1)
-    val pd = Round10Queries49.partitionDiscovery(spark, sfDir).collect()
+    val pd = EtlQueries.partitionDiscovery(spark, sfDir).collect()
     assert(pd.length == 5)
     assert(pd.map(_.getAs[Long]("n_rows")).sum ==
       Tables.orders(spark, sfDir).count())
@@ -678,7 +678,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x226: TWAP lies within the user's value range and bias ranks descend") {
-    val out = Round10Queries50.twap(spark, sfDir).orderBy($"rk").collect()
+    val out = AnalyticsQueries.twap(spark, sfDir).orderBy($"rk").collect()
     assert(out.nonEmpty && out.length <= 20)
     out.sliding(2).foreach { case Array(a, b) =>
       assert(a.getAs[Long]("bias_c") >= b.getAs[Long]("bias_c"))
@@ -694,7 +694,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x227: the tail cut is exact and CVaR is at most VaR") {
-    val r = Round10Queries50.cvar(spark, sfDir).head()
+    val r = AnalyticsQueries.cvar(spark, sfDir).head()
     val (n, k) = (r.getAs[Long]("n"), r.getAs[Long]("k"))
     assert(k == math.max(1L, n * 50 / 1000))
     // CVaR (mean of the worst k) can never exceed VaR (the best of the
@@ -703,7 +703,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x228: variant extraction agrees with the string-path JSON functions") {
-    val out = Round10Queries51.variantExtract(spark, sfDir).cache()
+    val out = RelationalQueries.variantExtract(spark, sfDir).cache()
     assert(out.count() == 5)
     // Missing path is null for EVERY row (try_variant_get, no errors).
     assert(out.filter($"n_missing" =!= $"n").count() == 0)
@@ -715,7 +715,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x229: the recursive roll-up partitions customers and conserves revenue") {
-    val out = Round10Queries52.recursiveRollup(spark, sfDir).collect()
+    val out = RelationalQueries.recursiveRollup(spark, sfDir).collect()
     assert(out.map(_.getAs[Long]("n_cust")).sum ==
       Tables.customer(spark, sfDir).count())
     // Revenue mass conservation: every order's customer reaches exactly
@@ -731,7 +731,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x230: straddle counts are bounded by the sequence count per shard") {
-    val out = Round10Queries53.packStraddle(spark, sfDir).collect()
+    val out = PipelineQueries.packStraddle(spark, sfDir).collect()
     assert(out.length == 8)
     assert(out.map(_.getAs[Long]("n_docs")).sum ==
       Tables.documents(spark, sfDir).count())
@@ -747,7 +747,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x232: the constructed offset clones match their originals") {
-    val out = Round10Queries55.audioFingerprint(spark, sfDir)
+    val out = MultimodalQueries.audioFingerprint(spark, sfDir)
       .orderBy($"rk").collect()
     assert(out.length == 20)
     out.sliding(2).foreach { case Array(x, y) =>
@@ -763,7 +763,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("q116: PSI terms are non-negative and deciles partition the expected side") {
-    val out = Round10Queries56.psi(spark, sfDir).orderBy($"bin").collect()
+    val out = AnalyticsQueries.psi(spark, sfDir).orderBy($"bin").collect()
     assert(out.length == 10)
     // Each (p−q)ln(p/q) term is ≥ 0 (same sign factors), so the total is
     // the sum of non-negative contributions.
@@ -779,7 +779,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x233: pinball losses are non-negative and coverage tracks tau") {
-    val out = Round10Queries57.pinball(spark, sfDir).orderBy($"tau_pm").collect()
+    val out = StatsQueries.pinball(spark, sfDir).orderBy($"tau_pm").collect()
     assert(out.length == 3)
     out.foreach(r => assert(r.getAs[Long]("loss_pm") >= 0L))
     // Higher quantiles must cover at least as often as lower ones, and
@@ -791,7 +791,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x234: Kendall pair counts partition the top-100 pairs and tau is bounded") {
-    val r = Round10Queries57.kendallTau(spark, sfDir).head()
+    val r = StatsQueries.kendallTau(spark, sfDir).head()
     val (nc, nd) = (r.getAs[Long]("nc"), r.getAs[Long]("nd"))
     // Unique ranks (key tie-breaks): every pair is concordant or
     // discordant, so C + D = C(100, 2).
@@ -801,7 +801,7 @@ class Round10BatchSpec extends SparkTestBase {
   }
 
   test("x183: AMS estimate lands within the audited 3x envelope") {
-    val r = Round10Queries25.amsF2(spark, sfDir).head()
+    val r = EngineOpsQueries.amsF2(spark, sfDir).head()
     assert(r.getAs[Int]("within_3x") == 1)
     // Exact F2 >= n (every key contributes at least count^2 >= count).
     val n = Tables.lineitem(spark, sfDir).count()

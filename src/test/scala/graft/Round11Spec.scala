@@ -27,7 +27,7 @@ class Round11Spec extends SparkTestBase {
     // r3: (aa,ab)=3 -> aaab=[aaab]
     // r4..r6: no pairs left -> sentinel no-op (must NOT erase the vocab)
     val dir = writeDocs(Seq(1L -> "aaab aaab ab", 2L -> "aaab b"))
-    val out = graft.queries.Round11Queries.bpeApply(spark, dir)
+    val out = graft.queries.TextQueries.bpeApply(spark, dir)
       .orderBy("doc_id").collect()
     assert(out.length == 2)
     val d1 = out(0); val d2 = out(1)
@@ -52,7 +52,7 @@ class Round11Spec extends SparkTestBase {
       3L -> (shared8 ++ u ++ shared8).mkString(" "),           // two separated runs
       4L -> (v ++ Seq("w") ++ v).mkString(" "),                // within-doc repeat only
       5L -> "a b c")                                           // < 8 tokens: trivial keep
-    val out = graft.queries.Round11Queries.spanDedup(spark, writeDocs(docs))
+    val out = graft.queries.DedupQueries.spanDedup(spark, writeDocs(docs))
       .orderBy("doc_id").collect()
     def row(i: Int) = out(i)
     // doc1: 12 toks, one run covering t3..t10
@@ -99,7 +99,7 @@ class Round11Spec extends SparkTestBase {
       .groupBy(_._1).map { case (v, es) => v -> es.map(_._2).toSet }
     val pri = (v: Long) => (v * 2654435761L) % 1000000007L
 
-    val out = graft.queries.Round11Queries9.lubyMis(spark, dir).collect()
+    val out = graft.queries.GraphQueries.lubyMis(spark, dir).collect()
     val mis = out.map(_.getAs[Long]("nationkey")).toSet
     assert(out.forall(_.getAs[Long]("live_final") == 0L), "peel must converge")
     assert(out.head.getAs[Long]("n_nodes") == adj.size.toLong)
@@ -130,7 +130,7 @@ class Round11Spec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
     Seq((0L, "TESTLAND")).toDF("n_nationkey", "n_name")
       .write.mode("overwrite").parquet(s"$dir/nation.parquet")
-    val out = graft.queries.Round11Queries9.theilSen(spark, dir).collect()
+    val out = graft.queries.StatsQueries.theilSenX263(spark, dir).collect()
     assert(out.length == 1)
     val r = out.head
     assert(r.getAs[Long]("n_months") == 10 && r.getAs[Long]("n_pairs") == 45)
@@ -157,7 +157,7 @@ class Round11Spec extends SparkTestBase {
       (4L, t("2024-01-01 00:10:00"), "click"))
       .toDF("user_id", "ts", "event_type")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val out = graft.queries.Round11Queries14.shapleyAttribution(spark, dir)
+    val out = graft.queries.ExperimentQueries.shapleyAttribution(spark, dir)
       .collect().map(r => r.getAs[String]("channel") -> r).toMap
     assert(out("view").getAs[Long]("phi24") == 36L)
     assert(out("click").getAs[Long]("phi24") == 12L)
@@ -183,7 +183,7 @@ class Round11Spec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     Seq((77L, 5L)).toDF("s_suppkey", "s_nationkey")
       .write.mode("overwrite").parquet(s"$dir/supplier.parquet")
-    val r = graft.queries.Round11Queries13.clampedBalance(spark, dir)
+    val r = graft.queries.RelationalQueries.clampedBalance(spark, dir)
       .collect().head
     assert(r.getAs[Long]("nation") == 5L)
     assert(r.getAs[Long]("n_days") == 5L)
@@ -196,7 +196,7 @@ class Round11Spec extends SparkTestBase {
     val dir = tmpDir("graft_r11_hsel")
     (1 to 100).map(i => i.toDouble).toDF("l_extendedprice")
       .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val out = graft.queries.Round11Queries8.histogramSelect(spark, dir)
+    val out = graft.queries.EngineOpsQueries.histogramSelect(spark, dir)
       .collect().map(r => r.getAs[String]("rk") -> r).toMap
     // n=100: p50 rank (n+1)//2 = 50 -> $50; p99 rank 99n//100+1 = 100 -> $100
     assert(out("p50").getAs[Long]("sel_cents") == 5000L)
@@ -214,7 +214,7 @@ class Round11Spec extends SparkTestBase {
       .map { case (id, n, s) => (id, "x" * n.toInt, "en", s, n) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val out = graft.queries.Round11Queries10.quantileNormalize(spark, dir)
+    val out = graft.queries.StatsQueries.quantileNormalizeX266(spark, dir)
       .collect().map(r => r.getAs[String]("source") -> r).toMap
     assert(out("srcA").getAs[Double]("mean_before") == 15.0)
     assert(out("srcB").getAs[Double]("mean_before") == 35.0)
@@ -235,7 +235,7 @@ class Round11Spec extends SparkTestBase {
       (3L, ts(1997), "1-URGENT", 1.0))
       .toDF("o_custkey", "o_orderdate", "o_orderpriority", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val out = graft.queries.Round11Queries21.bagSetOps(spark, dir)
+    val out = graft.queries.RelationalQueries.bagSetOps(spark, dir)
       .collect().map(r => r.getAs[String]("metric") -> r.getAs[Long]("cnt")).toMap
     // A's distinct keys are {(1,1995),(3,1997)} — (1,1995) repeats, so
     // except DISTINCT keeps only (3,1997) while except ALL keeps 2 rows
@@ -253,7 +253,7 @@ class Round11Spec extends SparkTestBase {
       (0 until 20).map(i => (100L + i, "x" * (60 + i), "fr", "s", (60 + i).toLong))
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val r = graft.queries.Round11Queries19.ksTest(spark, dir).collect().head
+    val r = graft.queries.StatsQueries.ksTestX285(spark, dir).collect().head
     assert(r.getAs[Long]("n1") == 20 && r.getAs[Long]("n2") == 20)
     // sup at the last en value: F1=20/20, F2=0/20 -> d_num = 20*20
     assert(r.getAs[Long]("d_num") == 400L)
@@ -270,7 +270,7 @@ class Round11Spec extends SparkTestBase {
       (11 to 20).flatMap(d => Seq.fill(8)(ts(d)))
     rows.map(t => (t, 1.0)).toDF("o_orderdate", "o_totalprice")
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    val r = graft.queries.Round11Queries12.changepoint(spark, dir).collect().head
+    val r = graft.queries.TimeSeriesQueries.changepoint(spark, dir).collect().head
     assert(r.getAs[java.sql.Date]("split_day").toString == "1995-01-10")
     assert(r.getAs[Long]("n_left") == 10 && r.getAs[Long]("n_right") == 10)
     assert(r.getAs[Double]("mean_left") == 2.0)
@@ -292,7 +292,7 @@ class Round11Spec extends SparkTestBase {
       .write.mode("overwrite").parquet(s"$dir/orders.parquet")
     Seq((1L, "AUTOMOBILE"), (2L, "BUILDING")).toDF("c_custkey", "c_mktsegment")
       .write.mode("overwrite").parquet(s"$dir/customer.parquet")
-    val r = graft.queries.Round11Queries17.diffInDiff(spark, dir).collect().head
+    val r = graft.queries.ExperimentQueries.diffInDiff(spark, dir).collect().head
     assert(r.getAs[Long]("n_t_pre") == 10 && r.getAs[Long]("u_t_pre") == 2)
     assert(r.getAs[Long]("n_t_post") == 10 && r.getAs[Long]("u_t_post") == 6)
     assert(r.getAs[Double]("did") == 0.3)
@@ -304,7 +304,7 @@ class Round11Spec extends SparkTestBase {
     (0 until 100).map(u => (u.toLong, t0))
       .toDF("user_id", "ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val r = graft.queries.Round11Queries9.amsF2(spark, dir).collect().head
+    val r = graft.queries.EngineOpsQueries.amsF2X264(spark, dir).collect().head
     assert(r.getAs[Long]("n_users") == 100 && r.getAs[Long]("exact_f2") == 100)
     val est = r.getAs[Double]("est_f2")
     // E[c^2] = F2 = 100; median-of-8-means of chi2_16/16 stays well inside

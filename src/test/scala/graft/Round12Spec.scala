@@ -7,7 +7,7 @@ class Round12Spec extends SparkTestBase {
   import spark.implicits._
 
   /** Scala transcription of the x279 DuckDB oracle pipeline
-    * (Round11Queries15.soundexBlockingOracle): translate through the code
+    * (DedupQueries.soundexBlockingOracle): translate through the code
     * table with H/W as sentinel 7, delete sentinels after the head slot,
     * collapse adjacent equal codes, drop the leading code, strip zeros,
     * pad to 3. Running the same string algorithm here pins the oracle's
@@ -48,7 +48,7 @@ class Round12Spec extends SparkTestBase {
   private val sfDir = "/root/testdata/sf0.001"
 
   test("x293: exact permutation p-values obey the enumeration invariants") {
-    val rows = queries.Round12Queries.permTest(spark, sfDir).collect()
+    val rows = queries.StatsQueries.permTest(spark, sfDir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (pn, pd) = (r.getAs[Long]("p_num"), r.getAs[Long]("p_den"))
@@ -62,7 +62,7 @@ class Round12Spec extends SparkTestBase {
   }
 
   test("x294: BH step-up rejects a prefix of the p-value ranking") {
-    val rows = queries.Round12Queries.bhFdr(spark, sfDir).collect()
+    val rows = queries.StatsQueries.bhFdr(spark, sfDir).collect()
     val byK = rows.sortBy(_.getAs[Long]("k"))
     val rejected = byK.map(_.getAs[Long]("rejected"))
     // rejected must be a (possibly empty) prefix of the k-ordering
@@ -75,7 +75,7 @@ class Round12Spec extends SparkTestBase {
   }
 
   test("x295: recursive closure visits every supplier exactly once at its binary-tree depth") {
-    val rows = queries.Round12Queries.recursiveCte(spark, sfDir).collect()
+    val rows = queries.RelationalQueries.recursiveCte(spark, sfDir).collect()
     val n = Tables.supplier(spark, sfDir).count()
     assert(rows.map(_.getAs[Long]("n_nodes")).sum == n)
     rows.foreach { r =>
@@ -88,7 +88,7 @@ class Round12Spec extends SparkTestBase {
 
   test("x296: Hodges-Lehmann pair census covers exactly n(n+1)/2 Walsh pairs per group") {
     import org.apache.spark.sql.functions._
-    val rows = queries.Round12Queries.hodgesLehmann(spark, sfDir).collect()
+    val rows = queries.StatsQueries.hodgesLehmann(spark, sfDir).collect()
     val groupN = Tables.lineitem(spark, sfDir)
       .groupBy(col("l_returnflag")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -104,7 +104,7 @@ class Round12Spec extends SparkTestBase {
   }
 
   test("x297: mined bitext pairs are cross-side and mutually agreed") {
-    val rows = queries.Round12Queries.marginBitext(spark, sfDir).collect()
+    val rows = queries.SimilarityQueries.marginBitext(spark, sfDir).collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       assert(r.getAs[Long]("a") % 2 == 0 && r.getAs[Long]("b") % 2 == 1)
@@ -124,14 +124,14 @@ class Round12Spec extends SparkTestBase {
     // reused stages, so a refactor can't silently regress to four
     // independent pair computations (or back to a checkpoint).
     val plan = PlanAudit.finalizedPlan(
-      queries.Round12Queries.marginBitext(spark, sfDir))
+      queries.SimilarityQueries.marginBitext(spark, sfDir))
     assert(plan.contains("ReusedQueryStage") || plan.contains("ReusedExchange"),
       s"x297 plan lost its pair-exchange reuse point:\n${plan.take(2000)}")
   }
 
   test("x303: token-bucket admission counters reconcile with event counts") {
     import org.apache.spark.sql.functions._
-    val rows = queries.Round12Queries.tokenBucketParity(spark, sfDir).collect()
+    val rows = queries.StreamingQueries.tokenBucketParity(spark, sfDir).collect()
     val perUser = Tables.events(spark, sfDir)
       .groupBy(col("user_id")).count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -148,7 +148,7 @@ class Round12Spec extends SparkTestBase {
   }
 
   test("x298: packing never wastes more than padding at any budget") {
-    val rows = queries.Round12Queries.padVsPack(spark, sfDir).collect()
+    val rows = queries.PipelineQueries.padVsPack(spark, sfDir).collect()
     assert(rows.length == 4)
     rows.foreach { r =>
       assert(r.getAs[Long]("pack_waste") <= r.getAs[Long]("pad_waste"),

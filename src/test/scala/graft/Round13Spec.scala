@@ -60,7 +60,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("McNemar cells partition the users and chi2 matches the hand formula") {
-    val out = queries.Round13Queries1.mcnemar(spark, "/root/testdata/sf0.001")
+    val out = queries.StatsQueries.mcnemar(spark, "/root/testdata/sf0.001")
       .collect().head
     val (yy, b, c, nn) = (out.getLong(0), out.getLong(1), out.getLong(2), out.getLong(3))
     val users = Tables.events(spark, "/root/testdata/sf0.001")
@@ -74,7 +74,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("filtered-ANN audit: hits never exceed the truth and recall is their exact ratio") {
-    val rows = queries.Round13Queries2.filteredAnn(spark, "/root/testdata/sf0.001").collect()
+    val rows = queries.SimilarityQueries.filteredAnn(spark, "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
       val (nTrue, hits, recall) = (r.getLong(2), r.getLong(3), r.getDouble(4))
@@ -136,7 +136,7 @@ class Round13Spec extends SparkTestBase {
     val sxy = (for (a <- xs; b <- ys) yield math.abs(a - b)).sum
     val sxx = (for (a <- xs; b <- xs) yield math.abs(a - b)).sum
     val syy = (for (a <- ys; b <- ys) yield math.abs(a - b)).sum
-    val row = queries.Round13Queries5.energyDistance(spark, "/root/testdata/sf0.001")
+    val row = queries.StatsQueries.energyDistance(spark, "/root/testdata/sf0.001")
       .collect().head
     assert(row.getLong(0) == xs.length && row.getLong(1) == ys.length)
     assert(row.getLong(2) == sxy, s"sxy ${row.getLong(2)} != $sxy")
@@ -148,7 +148,7 @@ class Round13Spec extends SparkTestBase {
     // e2jt must be sum over g<h of n_g*n_h -- the count of cross-group
     // pairs (an earlier draft emitted the ORDERED count, inflating |z|
     // ~40x; this identity pins the fix).
-    val r = queries.Round13Queries1.jonckheere(spark, "/root/testdata/sf0.001")
+    val r = queries.StatsQueries.jonckheere(spark, "/root/testdata/sf0.001")
       .collect().head
     val counts = Tables.orders(spark, "/root/testdata/sf0.001")
       .groupBy(substring($"o_orderpriority", 1, 1)).count()
@@ -162,7 +162,7 @@ class Round13Spec extends SparkTestBase {
   test("Kruskal-Wallis doubled rank sums add up to the full rank mass N(N+1)") {
     // Σ_g R2_g = 2·Σ ranks = N(N+1) — an identity any correct census
     // ranking must satisfy regardless of the data.
-    val r = queries.Round13Queries1.kruskalWallis(spark, "/root/testdata/sf0.001")
+    val r = queries.StatsQueries.kruskalWallis(spark, "/root/testdata/sf0.001")
       .collect().head
     val n = r.getLong(0)
     val r2sum = r.getLong(4) + r.getLong(5) + r.getLong(6)
@@ -224,7 +224,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("Cochran Q fixture invariants: column totals bounded by blocks, N = sum Cj") {
-    val r = queries.Round13Queries8.cochranQ(spark, "/root/testdata/sf0.001")
+    val r = queries.StatsQueries.cochranQ(spark, "/root/testdata/sf0.001")
       .collect().head
     val b = r.getLong(0); val n = r.getLong(1)
     val cjs = (3 to 7).map(r.getLong)
@@ -293,7 +293,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("Durbin-Watson fixture statistic lies in the admissible (0, 4) band") {
-    val r = queries.Round13Queries9.durbinWatson(spark, "/root/testdata/sf0.001")
+    val r = queries.TimeSeriesQueries.durbinWatson(spark, "/root/testdata/sf0.001")
       .collect().head
     val dw = r.getDouble(5)
     assert(dw > 0.0 && dw < 4.0, s"dw=$dw out of band")
@@ -387,7 +387,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("x337 fixture trace: total cost drops by exactly the claimed benefit each round") {
-    val rows = queries.Round13Queries11.viewSelection(spark, "/root/testdata/sf0.001")
+    val rows = queries.EngineOpsQueries.viewSelection(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.length == 3)
     // initial total = 8 * |top view|; each greedy round's post-pick total
@@ -407,7 +407,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("x338 advisor invariants: ndv <= runs <= n, best is the argmin under dict<rle<plain ties") {
-    val rows = queries.Round13Queries12.encodingAdvisor(spark, "/root/testdata/sf0.001")
+    val rows = queries.EngineOpsQueries.encodingAdvisor(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.length == 5)
     rows.foreach { r =>
@@ -444,7 +444,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("x339 fixture 4-truss is a true fixed point: every surviving edge has support >= 2") {
-    val rows = queries.Round13Queries13.kTruss(spark, "/root/testdata/sf0.001").collect()
+    val rows = queries.GraphQueries.kTruss(spark, "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getLong(2) >= 2L),
       s"min support ${rows.map(_.getLong(2)).min} < k-2 — TrussRounds too small for fixture")
@@ -473,7 +473,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("x340 fixture: exactly one best round, dens equals m/n on every row") {
-    val rows = queries.Round13Queries13.densestSubgraph(spark, "/root/testdata/sf0.001")
+    val rows = queries.GraphQueries.densestSubgraph(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.map(_.getLong(4)).sum == 1L, "exactly one best flag expected")
     rows.foreach { r =>
@@ -513,7 +513,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("x342 fixture: ap_micro bounded by 1e6 and map_micro is the truncated mean") {
-    val rows = queries.Round13Queries14.mapEval(spark, "/root/testdata/sf0.001").collect()
+    val rows = queries.RetrievalQueries.mapEval(spark, "/root/testdata/sf0.001").collect()
     assert(rows.nonEmpty)
     rows.foreach(r => assert(r.getLong(3) >= 0L && r.getLong(3) <= 1000000L))
     val expect = rows.map(_.getLong(3)).sum / rows.length
@@ -566,7 +566,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("x344 fixture: every per-doc average probability lies in (0, 1]") {
-    val rows = queries.Round13Queries15.wittenBell(spark, "/root/testdata/sf0.001")
+    val rows = queries.TextQueries.wittenBell(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -612,7 +612,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("x346 fixture: c_micro consistent with the (nc, nt, ncomp) censuses") {
-    val r = queries.Round13Queries16.harrellC(spark, "/root/testdata/sf0.001")
+    val r = queries.ExperimentQueries.harrellC(spark, "/root/testdata/sf0.001")
       .collect().head
     val (ncomp, nc, nt) = (r.getLong(0), r.getLong(1), r.getLong(2))
     assert(ncomp > 0 && nc + nt <= ncomp)
@@ -650,7 +650,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("x348 fixture: run census bounded by cardinality and best_b is the admissible min") {
-    val rows = queries.Round13Queries17.roaringSizing(spark, "/root/testdata/sf0.001")
+    val rows = queries.EngineOpsQueries.roaringSizing(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -664,7 +664,7 @@ class Round13Spec extends SparkTestBase {
 
   test("x349 streaming Page-Hinkley trajectory equals the batch window recomputation") {
     import org.apache.spark.sql.expressions.Window
-    val streamed = queries.Round13Queries18
+    val streamed = queries.StreamingQueries
       .streamPageHinkley(spark, "/root/testdata/sf0.001").collect()
     val wc = Window.orderBy($"day").rowsBetween(Window.unboundedPreceding, 0)
     val batch = Tables.events(spark, "/root/testdata/sf0.001")
@@ -731,7 +731,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("x352 fixture: per-candidate totals add up and exactly one best flag") {
-    val rows = queries.Round13Queries19.sortOrderAdvisor(spark, "/root/testdata/sf0.001")
+    val rows = queries.EngineOpsQueries.sortOrderAdvisor(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.length == 9)
     val byCand = rows.groupBy(_.getString(0))
@@ -764,11 +764,11 @@ class Round13Spec extends SparkTestBase {
   test("SQL Hilbert chain equals the reference transform and is a unit-step bijection") {
     val grid = spark.range(256).selectExpr("CAST(id % 16 AS BIGINT) AS cx",
       "CAST(id DIV 16 AS BIGINT) AS cy")
-    val indexed = queries.Round13Queries20.hilbertSqlSteps("cx", "cy")
+    val indexed = queries.EngineOpsQueries.hilbertSqlSteps("cx", "cy")
       .foldLeft(grid.toDF()) { (df, s) => df.selectExpr("*", s) }
       .selectExpr("CAST(cx AS BIGINT) AS cx", "CAST(cy AS BIGINT) AS cy",
         "CAST(hd4 AS BIGINT) AS hidx",
-        s"CAST(${queries.Round13Queries20.zorderSql("cx", "cy")} AS BIGINT) AS zidx")
+        s"CAST(${queries.EngineOpsQueries.zorderSql("cx", "cy")} AS BIGINT) AS zidx")
       .collect()
     val byD = indexed.map(r => r.getLong(2) -> (r.getLong(0), r.getLong(1))).toMap
     assert(byD.size == 256, "Hilbert index must be a bijection on the grid")
@@ -831,10 +831,10 @@ class Round13Spec extends SparkTestBase {
     // The oracle already proves Boruvka(Spark) == Prim(DuckDB); this adds
     // Kruskal as an independent third derivation, all meeting at the
     // UNIQUE MST the distinct perturbed costs guarantee.
-    val edges = queries.Round13Queries21.tradeWeighted(spark, "/root/testdata/sf0.001")
+    val edges = queries.GraphQueries.tradeWeighted(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3)))
     val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    val got = queries.Round13Queries21.mstBoruvka(spark, "/root/testdata/sf0.001")
+    val got = queries.GraphQueries.mstBoruvka(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got == kruskal(edges.toSeq), "Boruvka and Kruskal disagree")
     assert(got.size == nodes.length - 1,
@@ -842,7 +842,7 @@ class Round13Spec extends SparkTestBase {
   }
 
   test("x356 fixture invariants: above-cells bounded by group totals, groups partition N") {
-    val r = queries.Round13Queries22.moodsMedian(spark, "/root/testdata/sf0.001")
+    val r = queries.StatsQueries.moodsMedian(spark, "/root/testdata/sf0.001")
       .collect().head
     val nn = r.getLong(0)
     val (aab, nab, rab) = (r.getLong(2), r.getLong(3), r.getLong(4))
@@ -884,7 +884,7 @@ class Round13Spec extends SparkTestBase {
     // spans (1,1,2), events (1,1,0): at t=1 two events with three at
     // risk -> increment floor(2e6/3) = 666666; t=2 has no event row.
     assert(2L * 1000000L / 3L == 666666L)
-    val rows = queries.Round13Queries22.nelsonAalen(spark, "/root/testdata/sf0.001")
+    val rows = queries.ExperimentQueries.nelsonAalen(spark, "/root/testdata/sf0.001")
       .collect()
     assert(rows.nonEmpty)
     var (prevRisk, prevCum) = (Long.MaxValue, 0L)
@@ -899,7 +899,7 @@ class Round13Spec extends SparkTestBase {
 
   test("capstone-v8 readability gate is a real filter and every v8 doc passes it") {
     val dir = "/root/testdata/sf0.001"
-    val readKeep = queries.Round13Queries16.readabilityKeepIds(spark, dir)
+    val readKeep = queries.PipelineQueries.readabilityKeepIds(spark, dir)
     val total = Tables.documents(spark, dir).count()
     val kept = readKeep.count()
     assert(kept > 0 && kept < total,

@@ -182,7 +182,7 @@ class ScaleSpec extends SparkTestBase {
       }.mkString("\n")
       assert(!liveExprs.toLowerCase.contains("minhash"),
         s"consumer must not recompute the LSH pipeline:\n$logical")
-      val standalone2 = graft.queries.RelationalQueries4.x48(spark, sfDir)
+      val standalone2 = graft.queries.RelationalQueries.x48(spark, sfDir)
         .select($"a", $"b", $"edit_dist")
       assert(lev.except(standalone2).count() == 0 &&
         standalone2.except(lev).count() == 0)

@@ -714,7 +714,7 @@ class StreamingSpec extends SparkTestBase {
         max(when($"sec" >= cut, 1).otherwise(0)).as("hi"))
       .filter($"lo" === 1 && $"hi" === 1).count()
     assert(sides > 0, "fixture has no cross-slice purchaser; cuts need moving")
-    val out = queries.Round10Queries38.twsParity(spark, sfDir)
+    val out = queries.StreamingQueries.twsParity(spark, sfDir)
     val expected = Tables.events(spark, sfDir)
       .filter($"event_type" === "purchase")
       .groupBy($"user_id")
