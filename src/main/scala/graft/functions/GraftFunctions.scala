@@ -212,28 +212,18 @@ private[functions] object Hex {
   }
 }
 
-/** `minhash_sig(array<string>, k) -> array<string>`: k lexicographic-min
-  * md5 hex digests of `"<j>:<shingle>"` in one pass over the shingle array —
-  * same family as `array_min(transform(shingles, s -> md5(concat(j, ':',
-  * s))))` per j, without k interpreted lambda sweeps. */
-case class MinHashSig(child: Expression, numHashes: Expression)
-    extends BinaryExpression with CodegenFallback {
-  override def left: Expression = child
-  override def right: Expression = numHashes
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  override def foldable: Boolean = children.forall(_.foldable)
-
-  private lazy val k: Int = numHashes.eval(null).asInstanceOf[Int]
-
-  // "<j>:" prefixes pre-encoded once; per (shingle, j) we feed the digest
-  // two byte chunks instead of building and encoding a fresh string.
-  private lazy val prefixes: Array[Array[Byte]] =
+/** The md5 minhash signature shared by `minhash_sig` and `minhash_bands`. */
+object MinHashSig {
+  /** `"<j>:"` prefixes, encoded once: per (shingle, j) the digest gets two
+    * byte chunks instead of a freshly built and encoded string. */
+  def prefixes(k: Int): Array[Array[Byte]] =
     (0 until k).map(j => s"$j:".getBytes("UTF-8")).toArray
 
-  override protected def nullSafeEval(input: Any, kAny: Any): Any = {
-    val shingles = input.asInstanceOf[ArrayData]
-    val md = java.security.MessageDigest.getInstance("MD5")
+  /** For each j, the lexicographic-min md5 hex of `"<j>:<shingle>"` over
+    * the non-null shingles; null where there are none. */
+  def mins(shingles: ArrayData, prefixes: Array[Array[Byte]],
+           md: java.security.MessageDigest): Array[String] = {
+    val k = prefixes.length
     val mins = Array.fill[String](k)(null)
     var s = 0
     val n = shingles.numElements()
@@ -251,6 +241,30 @@ case class MinHashSig(child: Expression, numHashes: Expression)
       }
       s += 1
     }
+    mins
+  }
+}
+
+/** `minhash_sig(array<string>, k) -> array<string>`: k lexicographic-min
+  * md5 hex digests of `"<j>:<shingle>"` in one pass over the shingle array —
+  * same family as `array_min(transform(shingles, s -> md5(concat(j, ':',
+  * s))))` per j, without k interpreted lambda sweeps. */
+case class MinHashSig(child: Expression, numHashes: Expression)
+    extends BinaryExpression with CodegenFallback {
+  override def left: Expression = child
+  override def right: Expression = numHashes
+  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def prettyName: String = "minhash_sig"
+  override def foldable: Boolean = children.forall(_.foldable)
+
+  private lazy val k: Int = numHashes.eval(null).asInstanceOf[Int]
+
+  private lazy val prefixes: Array[Array[Byte]] = MinHashSig.prefixes(k)
+
+  override protected def nullSafeEval(input: Any, kAny: Any): Any = {
+    val shingles = input.asInstanceOf[ArrayData]
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val mins = MinHashSig.mins(shingles, prefixes, md)
     new GenericArrayData(mins.map(m => UTF8String.fromString(if (m == null) "" else m)))
   }
 
@@ -505,29 +519,12 @@ case class MinHashBands(first: Expression, second: Expression, third: Expression
 
   private lazy val k: Int = second.eval(null).asInstanceOf[Int]
   private lazy val rowsPerBand: Int = third.eval(null).asInstanceOf[Int]
-  private lazy val prefixes: Array[Array[Byte]] =
-    (0 until k).map(j => s"$j:".getBytes("UTF-8")).toArray
+  private lazy val prefixes: Array[Array[Byte]] = MinHashSig.prefixes(k)
 
   override protected def nullSafeEval(shinglesAny: Any, kAny: Any, rAny: Any): Any = {
     val shingles = shinglesAny.asInstanceOf[ArrayData]
     val md = java.security.MessageDigest.getInstance("MD5")
-    val mins = Array.fill[String](k)(null)
-    var s = 0
-    val n = shingles.numElements()
-    while (s < n) {
-      if (!shingles.isNullAt(s)) {
-        val shBytes = shingles.getUTF8String(s).getBytes
-        var j = 0
-        while (j < k) {
-          md.update(prefixes(j))
-          md.update(shBytes)
-          val hex = Hex.toHex(md.digest())
-          if (mins(j) == null || hex < mins(j)) mins(j) = hex
-          j += 1
-        }
-      }
-      s += 1
-    }
+    val mins = MinHashSig.mins(shingles, prefixes, md)
     val numBands = k / rowsPerBand
     val bands = new Array[AnyRef](numBands)
     var b = 0

@@ -87,26 +87,38 @@ object MediaSynth {
   }
 
   /** Synthesize the per-doc video payload: REAL encoded bytes. */
-  def synthVideos(docs: DataFrame): Dataset[VideoDoc] = {
+  def synthVideos(docs: DataFrame): Dataset[VideoDoc] =
+    perDoc(docs) { (md, docId, text) =>
+      val frames = videoFrames(md, text)
+      if (docId % 2 == 0) VideoDoc(docId, bmps(frames), "bmp")
+      else VideoDoc(docId, ppms(frames), "ppm")
+    }
+
+  /** `f(md, doc_id, text)` over each document, with one md5 digest per
+    * partition: the shape of every synthesizer in this object. */
+  private def perDoc[T <: Product : scala.reflect.runtime.universe.TypeTag](
+      docs: DataFrame)(f: (MessageDigest, Long, String) => T): Dataset[T] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)].mapPartitions { it =>
       val md = MessageDigest.getInstance("MD5")
-      it.map { case (docId, text) =>
-        val (nf, w, h, stride) = geom(md, text)
-        val bmp = docId % 2 == 0
-        val frames = (0 until nf).map { i =>
-          val img = framePixels(md, text, i, w, h, stride)
-          if (bmp) ImageCodec.encodeBmp(img) else ImageCodec.encodePpm(img, s"f$i")
-        }
-        val total = frames.map(_.length).sum
-        val out = new Array[Byte](total)
-        var off = 0
-        frames.foreach { f => System.arraycopy(f, 0, out, off, f.length); off += f.length }
-        VideoDoc(docId, out, if (bmp) "bmp" else "ppm")
-      }
+      it.map { case (docId, text) => f(md, docId, text) }
     }
   }
+
+  /** The frames of a doc's video: [[geom]]'s geometry, [[framePixels]]. */
+  private def videoFrames(md: MessageDigest, text: String): IndexedSeq[ImageCodec.Image] = {
+    val (nf, w, h, stride) = geom(md, text)
+    (0 until nf).map(i => framePixels(md, text, i, w, h, stride))
+  }
+
+  /** Concatenated BMP, PPM and PNG containers of a frame sequence. */
+  private def bmps(frames: Seq[ImageCodec.Image]): Array[Byte] =
+    frames.map(ImageCodec.encodeBmp).reduce(_ ++ _)
+  private def ppms(frames: Seq[ImageCodec.Image]): Array[Byte] =
+    frames.zipWithIndex.map { case (f, i) => ImageCodec.encodePpm(f, s"f$i") }.reduce(_ ++ _)
+  private def pngs(frames: Seq[ImageCodec.Image]): Array[Byte] =
+    frames.map(PngCodec.encodePng).reduce(_ ++ _)
 
   private def quadSums(img: ImageCodec.Image): (Long, Long, Long, Long, Long) = {
     var s0 = 0L; var s1 = 0L; var s2 = 0L; var s3 = 0L
@@ -159,35 +171,17 @@ object MediaSynth {
     * pixels, but the payload is ONE real GIF89a file per doc — palette
     * index = integer luma (the 256-gray ramp), so the md5-pixel oracles
     * gate the LZW round trip itself. */
-  def synthGifVideos(docs: DataFrame): Dataset[VideoDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)].mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5")
-      it.map { case (docId, text) =>
-        val (nf, w, h, stride) = geom(md, text)
-        val frames = (0 until nf).map(i => framePixels(md, text, i, w, h, stride))
-        VideoDoc(docId, GifCodec.encodeGif(frames), "gif")
-      }
+  def synthGifVideos(docs: DataFrame): Dataset[VideoDoc] =
+    perDoc(docs) { (md, docId, text) =>
+      VideoDoc(docId, GifCodec.encodeGif(videoFrames(md, text)), "gif")
     }
-  }
 
   /** PNG variant of [[synthVideos]]: one concatenated-PNG container per
     * doc (each frame its own CRC-framed, DEFLATE-compressed image; the
     * encoder cycles the filter type per row so decode reconstructs
     * through all five PNG filters). Pixels = the md5 luma plane. */
-  def synthPngVideos(docs: DataFrame): Dataset[VideoDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)].mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5")
-      it.map { case (docId, text) =>
-        val (nf, w, h, stride) = geom(md, text)
-        val frames = (0 until nf).map(i => framePixels(md, text, i, w, h, stride))
-        VideoDoc(docId, frames.map(PngCodec.encodePng).reduce(_ ++ _), "png")
-      }
-    }
-  }
+  def synthPngVideos(docs: DataFrame): Dataset[VideoDoc] =
+    perDoc(docs)((md, docId, text) => VideoDoc(docId, pngs(videoFrames(md, text)), "png"))
 
   /** MIXED-format variant: the per-doc container format cycles
     * doc_id % 4 → BMP frames / PPM frames / animated GIF / concatenated
@@ -195,27 +189,16 @@ object MediaSynth {
     * Pixels identical to [[synthVideos]] in every branch (PNG/GIF carry
     * luma; BMP/PPM carry RGB whose luma matches), so one pixel oracle
     * covers all four codecs. */
-  def synthMixedVideos(docs: DataFrame): Dataset[VideoDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)].mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5")
-      it.map { case (docId, text) =>
-        val (nf, w, h, stride) = geom(md, text)
-        val frames = (0 until nf).map(i => framePixels(md, text, i, w, h, stride))
-        (docId % 4) match {
-          case 0 => VideoDoc(docId,
-            frames.map(ImageCodec.encodeBmp).reduce(_ ++ _), "bmp")
-          case 1 => VideoDoc(docId,
-            frames.zipWithIndex.map { case (f, i) => ImageCodec.encodePpm(f, s"f$i") }
-              .reduce(_ ++ _), "ppm")
-          case 2 => VideoDoc(docId, GifCodec.encodeGif(frames), "gif")
-          case _ => VideoDoc(docId,
-            frames.map(PngCodec.encodePng).reduce(_ ++ _), "png")
-        }
+  def synthMixedVideos(docs: DataFrame): Dataset[VideoDoc] =
+    perDoc(docs) { (md, docId, text) =>
+      val frames = videoFrames(md, text)
+      (docId % 4) match {
+        case 0 => VideoDoc(docId, bmps(frames), "bmp")
+        case 1 => VideoDoc(docId, ppms(frames), "ppm")
+        case 2 => VideoDoc(docId, GifCodec.encodeGif(frames), "gif")
+        case _ => VideoDoc(docId, pngs(frames), "png")
       }
     }
-  }
 
   /** One channel-histogram cell of a doc's decoded pixels. */
   final case class ChannelBin(doc_id: Long, channel: String, bin: Int, n: Long)
@@ -329,21 +312,22 @@ object MediaSynth {
   /** Grayscale JPEG container: one baseline JPEG per frame, concatenated
     * (same MJPEG shape as the other containers); block (by,bx) of frame i
     * carries value md5-byte0 of cell (i·bh+by)·bw+bx. */
-  def synthJpegVideos(docs: DataFrame): Dataset[VideoDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)].mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5")
-      it.map { case (docId, text) =>
-        val (nf, bw, bh) = jpegGeom(md, text)
-        val frames = (0 until nf).map { i =>
-          val blocks = Array.tabulate(bh * bw)(j =>
-            cellByte(md, text, i * bh * bw + j, JpegYMult, 0))
-          JpegCodec.encodeJpegGray(blocks, bw, bh, dri = jpegDri(docId))
-        }
-        VideoDoc(docId, frames.reduce(_ ++ _), "jpg")
-      }
-    }
+  def synthJpegVideos(docs: DataFrame): Dataset[VideoDoc] =
+    perDoc(docs)((md, docId, text) => VideoDoc(docId, grayJpegs(md, docId, text).reduce(_ ++ _), "jpg"))
+
+  /** Block values of each gray JPEG frame of a doc ([[jpegGeom]]'s nf
+    * frames of bh·bw blocks), with the block-grid width and height. */
+  private def grayBlockGrids(md: MessageDigest, text: String): (IndexedSeq[Array[Int]], Int, Int) = {
+    val (nf, bw, bh) = jpegGeom(md, text)
+    ((0 until nf).map { i =>
+      Array.tabulate(bh * bw)(j => cellByte(md, text, i * bh * bw + j, JpegYMult, 0))
+    }, bw, bh)
+  }
+
+  /** One baseline gray JPEG per frame of [[grayBlockGrids]]. */
+  private def grayJpegs(md: MessageDigest, docId: Long, text: String): IndexedSeq[Array[Byte]] = {
+    val (grids, bw, bh) = grayBlockGrids(md, text)
+    grids.map(bl => JpegCodec.encodeJpegGray(bl, bw, bh, dri = jpegDri(docId)))
   }
 
   /** One decoded JPEG block: frame/grid position + the block's uniform
@@ -401,64 +385,49 @@ object MediaSynth {
   /** Encode-decode both paths and sum decoded luma per doc: the
     * entropy-coded pipeline and the flat-raster pipeline must agree
     * pixel-for-pixel, and BOTH must agree with the md5 oracle. */
-  def jpegBmpParity(docs: DataFrame): Dataset[ParityStats] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)].mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5")
-      it.map { case (docId, text) =>
-        val (nf, bw, bh) = jpegGeom(md, text)
-        val blockGrids = (0 until nf).map { i =>
-          Array.tabulate(bh * bw)(j => cellByte(md, text, i * bh * bw + j, JpegYMult, 0))
+  def jpegBmpParity(docs: DataFrame): Dataset[ParityStats] =
+    perDoc(docs) { (md, docId, text) =>
+      val (blockGrids, bw, bh) = grayBlockGrids(md, text)
+      val jpegBytes = blockGrids
+        .map(bl => JpegCodec.encodeJpegGray(bl, bw, bh, dri = jpegDri(docId)))
+        .reduce(_ ++ _)
+      val bmpBytes = blockGrids.map { bl =>
+        val w = 8 * bw; val h = 8 * bh
+        val ch = Array.tabulate(w * h)(p => bl((p / w / 8) * bw + (p % w) / 8))
+        ImageCodec.encodeBmp(ImageCodec.Image(w, h, ch, ch.clone(), ch.clone()))
+      }.reduce(_ ++ _)
+      def lumaSum(bytes: Array[Byte]): Long = {
+        var s = 0L
+        ImageCodec.decodeFrames(bytes).foreach { img =>
+          var i = 0
+          val n = img.width * img.height
+          while (i < n) { s += img.luma(i); i += 1 }
         }
-        val jpegBytes = blockGrids
-          .map(bl => JpegCodec.encodeJpegGray(bl, bw, bh, dri = jpegDri(docId)))
-          .reduce(_ ++ _)
-        val bmpBytes = blockGrids.map { bl =>
-          val w = 8 * bw; val h = 8 * bh
-          val ch = Array.tabulate(w * h)(p => bl((p / w / 8) * bw + (p % w) / 8))
-          ImageCodec.encodeBmp(ImageCodec.Image(w, h, ch, ch.clone(), ch.clone()))
-        }.reduce(_ ++ _)
-        def lumaSum(bytes: Array[Byte]): Long = {
-          var s = 0L
-          ImageCodec.decodeFrames(bytes).foreach { img =>
-            var i = 0
-            val n = img.width * img.height
-            while (i < n) { s += img.luma(i); i += 1 }
-          }
-          s
-        }
-        ParityStats(docId, nf, lumaSum(jpegBytes), lumaSum(bmpBytes))
+        s
       }
+      ParityStats(docId, blockGrids.size, lumaSum(jpegBytes), lumaSum(bmpBytes))
     }
-  }
 
   /** Color JPEG container at Y sampling (hy, vy): Y constant per 8x8
     * block (md5 byte 0, cell stride [[JpegYMult]]), Cb/Cr constant per
     * MCU (md5 bytes 1 and 2, stride [[JpegChromaMult]]). (2,2) = 4:2:0,
     * (2,1) = 4:2:2, (1,1) = 4:4:4 — one fixture family covers every
     * sampling the decoder accepts. */
-  def synthJpegYccVideos(docs: DataFrame, hy: Int, vy: Int, fmt: String): Dataset[VideoDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)].mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5")
-      it.map { case (docId, text) =>
-        val (nf, mw, mh) = jpeg420Geom(md, text)
-        val bpm = hy * vy // Y blocks per MCU
-        val frames = (0 until nf).map { i =>
-          val yB = Array.tabulate(bpm * mw * mh)(j =>
-            cellByte(md, text, i * bpm * mw * mh + j, JpegYMult, 0))
-          val cb = Array.tabulate(mw * mh)(j =>
-            cellByte(md, text, i * mw * mh + j, JpegChromaMult, 1))
-          val cr = Array.tabulate(mw * mh)(j =>
-            cellByte(md, text, i * mw * mh + j, JpegChromaMult, 2))
-          JpegCodec.encodeJpegYcc(yB, cb, cr, mw, mh, hy, vy, dri = jpegDri(docId))
-        }
-        VideoDoc(docId, frames.reduce(_ ++ _), fmt)
+  def synthJpegYccVideos(docs: DataFrame, hy: Int, vy: Int, fmt: String): Dataset[VideoDoc] =
+    perDoc(docs) { (md, docId, text) =>
+      val (nf, mw, mh) = jpeg420Geom(md, text)
+      val bpm = hy * vy // Y blocks per MCU
+      val frames = (0 until nf).map { i =>
+        val yB = Array.tabulate(bpm * mw * mh)(j =>
+          cellByte(md, text, i * bpm * mw * mh + j, JpegYMult, 0))
+        val cb = Array.tabulate(mw * mh)(j =>
+          cellByte(md, text, i * mw * mh + j, JpegChromaMult, 1))
+        val cr = Array.tabulate(mw * mh)(j =>
+          cellByte(md, text, i * mw * mh + j, JpegChromaMult, 2))
+        JpegCodec.encodeJpegYcc(yB, cb, cr, mw, mh, hy, vy, dri = jpegDri(docId))
       }
+      VideoDoc(docId, frames.reduce(_ ++ _), fmt)
     }
-  }
 
   /** The x389 fixture shape: 4:2:0. */
   def synthJpeg420Videos(docs: DataFrame): Dataset[VideoDoc] =
@@ -497,24 +466,14 @@ object MediaSynth {
     * frame N by Huffman-walking frames 0..N-1; the index prefix is what a
     * real media lake stores so a decode-budget sampler can seek). Same
     * grayscale block-constant pixels as [[synthJpegVideos]]. */
-  def synthMjpegIndexed(docs: DataFrame): Dataset[VideoDoc] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)].mapPartitions { it =>
-      val md = MessageDigest.getInstance("MD5")
-      it.map { case (docId, text) =>
-        val (nf, bw, bh) = jpegGeom(md, text)
-        val frames = (0 until nf).map { i =>
-          val blocks = Array.tabulate(bh * bw)(j =>
-            cellByte(md, text, i * bh * bw + j, JpegYMult, 0))
-          val jp = JpegCodec.encodeJpegGray(blocks, bw, bh, dri = jpegDri(docId))
-          Array[Byte]((jp.length & 0xff).toByte, ((jp.length >> 8) & 0xff).toByte,
-            ((jp.length >> 16) & 0xff).toByte, ((jp.length >> 24) & 0xff).toByte) ++ jp
-        }
-        VideoDoc(docId, frames.reduce(_ ++ _), "mjpgi")
+  def synthMjpegIndexed(docs: DataFrame): Dataset[VideoDoc] =
+    perDoc(docs) { (md, docId, text) =>
+      val frames = grayJpegs(md, docId, text).map { jp =>
+        Array[Byte]((jp.length & 0xff).toByte, ((jp.length >> 8) & 0xff).toByte,
+          ((jp.length >> 16) & 0xff).toByte, ((jp.length >> 24) & 0xff).toByte) ++ jp
       }
+      VideoDoc(docId, frames.reduce(_ ++ _), "mjpgi")
     }
-  }
 
   /** Sampled-decode audit for [[synthMjpegIndexed]]: decode every
     * `everyK`-th frame through the full baseline JPEG pipeline, SKIP the

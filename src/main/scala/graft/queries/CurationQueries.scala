@@ -624,6 +624,22 @@ object CurationQueries {
 
   // ---------------------------------------------------------------- x188
 
+  /** Documents in four n_chars buckets (doc_id, bucket), and each
+    * bucket's admission ratio toward an equal share of the corpus, in 1e6
+    * fixed point and capped at 1e6: (bucket, n_before, nn, ratio_fp). */
+  private def lengthBucketRatios(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val docs = Tables.documents(spark, dir).select($"doc_id",
+      when($"n_chars" < 150, 0L).when($"n_chars" < 300, 1L)
+        .when($"n_chars" < 450, 2L).otherwise(3L).as("bucket"))
+    val before = docs.groupBy($"bucket").agg(count(lit(1)).as("n_before"))
+    val total = before.agg(sum($"n_before").as("nn"))
+    val ratios = before.crossJoin(broadcast(total))
+      .select($"bucket", $"n_before", $"nn",
+        least(lit(1000000L), expr("(nn * 1000000) div (4 * n_before)")).as("ratio_fp"))
+    (docs, ratios)
+  }
+
   /** x188: target-distribution resampling — reshape the corpus's length
     * distribution toward uniform over four length buckets by per-bucket
     * deterministic rejection. Acceptance ratio r_b = min(1, target_b /
@@ -641,14 +657,7 @@ object CurationQueries {
     * (each row's fate is a pure function of its id). */
   def targetResample(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir).select($"doc_id",
-      when($"n_chars" < 150, 0L).when($"n_chars" < 300, 1L)
-        .when($"n_chars" < 450, 2L).otherwise(3L).as("bucket"))
-    val before = docs.groupBy($"bucket").agg(count(lit(1)).as("n_before"))
-    val total = before.agg(sum($"n_before").as("nn"))
-    val ratios = before.crossJoin(broadcast(total))
-      .select($"bucket", $"n_before", $"nn",
-        least(lit(1000000L), expr("(nn * 1000000) div (4 * n_before)")).as("ratio_fp"))
+    val (docs, ratios) = lengthBucketRatios(spark, dir)
     val h = QueryUtil.mix31($"doc_id", 7L)
     val kept = docs
       .select($"bucket", pmod(h.bitwiseXOR(shiftright(h, 16)), lit(1000000L)).as("u"))
@@ -863,14 +872,7 @@ object CurationQueries {
     * full corpus. */
   def ipwRecovery(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val docs = Tables.documents(spark, dir).select($"doc_id",
-      when($"n_chars" < 150, 0L).when($"n_chars" < 300, 1L)
-        .when($"n_chars" < 450, 2L).otherwise(3L).as("bucket"))
-    val before = docs.groupBy($"bucket").agg(count(lit(1)).as("n_before"))
-    val total = before.agg(sum($"n_before").as("nn"))
-    val ratios = before.crossJoin(broadcast(total))
-      .select($"bucket", $"n_before", $"nn",
-        least(lit(1000000L), expr("(nn * 1000000) div (4 * n_before)")).as("ratio_fp"))
+    val (docs, ratios) = lengthBucketRatios(spark, dir)
     val h1 = pmod(pmod($"doc_id" * 7919L + lit(7L), lit(1048576L)) * 2654435761L,
       lit(2147483648L))
     val h3 = pmod(h1.bitwiseXOR(shiftright(h1, 13)) * 2246822519L, lit(2147483648L))

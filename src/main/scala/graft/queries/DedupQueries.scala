@@ -120,11 +120,18 @@ object DedupQueries {
     * round 8; the min-label + pointer-jumping loop remains available);
     * oracle: recursive-CTE transitive closure — independent algorithms,
     * same fixpoint. */
-  def dedupClusters(spark: SparkSession, dir: String): DataFrame = {
+  def dedupClusters(spark: SparkSession, dir: String): DataFrame =
+    docClusters(spark, dir, minhashLsh(spark, dir))
+
+  /** Connected components of the documents under the (a, b) pair graph:
+    * (doc_id, cluster_id = min doc_id reachable, is_canonical = the
+    * cluster's keeper). */
+  private[queries] def docClusters(spark: SparkSession, dir: String,
+                                   pairs: DataFrame): DataFrame = {
     import spark.implicits._
-    val pairs = minhashLsh(spark, dir).select($"a", $"b")
     val nodes = Tables.documents(spark, dir).select($"doc_id")
-    graft.operators.Components.connectedComponentsStars(spark, nodes, pairs, "doc_id")
+    graft.operators.Components.connectedComponentsStars(spark, nodes,
+        pairs.select($"a", $"b"), "doc_id")
       .select($"doc_id", $"component".as("cluster_id"),
         ($"doc_id" === $"component").cast("int").as("is_canonical"))
       .orderBy("doc_id")
@@ -344,12 +351,7 @@ object DedupQueries {
     val seed = emb.filter($"vec_id" % 97 === 0)
       .select($"vec_id".as("cent_id"), $"embedding".as("cv"), $"nrm".as("cn"))
     val cents = Similarity.refineCentroids(emb, seed, iters = SemTrainIters)
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id")
-    val assigned = emb.crossJoin(broadcast(cents))
-      .select($"vec_id", $"embedding", $"nrm", $"cent_id",
-        (Similarity.dot($"embedding", $"cv") / ($"nrm" * $"cn")).as("ccos"))
-      .withColumn("arn", row_number().over(wAssign)).filter($"arn" === 1)
-      .select($"vec_id", $"embedding", $"nrm", $"cent_id")
+    val assigned = SimilarityQueries.assignNearest(emb, cents)
     val mates = assigned.select($"cent_id", $"vec_id".as("b_id"),
       $"embedding".as("bv"), $"nrm".as("bn"))
     val dropped = assigned.join(mates, Seq("cent_id"))

@@ -176,6 +176,16 @@ object ExperimentQueries {
 
   // ---------------------------------------------------------------- x197
 
+  /** Per user, in epoch µs: first event `t0`, last event `tend` and first
+    * purchase `tp` (null without one) — the survival queries' durations. */
+  private def userSpans(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Tables.events(spark, dir).groupBy($"user_id").agg(
+      min(unix_micros($"ts".cast("timestamp"))).as("t0"),
+      max(unix_micros($"ts".cast("timestamp"))).as("tend"),
+      min(when($"event_type" === "purchase", unix_micros($"ts".cast("timestamp")))).as("tp"))
+  }
+
   /** x197: Kaplan–Meier survival curve for time-to-first-purchase.
     * Per user: duration = hours from their first event to their first
     * `purchase` (event observed), or to their last event when they
@@ -197,10 +207,7 @@ object ExperimentQueries {
     * few hundred structs on one task. */
   def kaplanMeier(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val perUser = Tables.events(spark, dir).groupBy($"user_id").agg(
-      min(unix_micros($"ts".cast("timestamp"))).as("t0"),
-      max(unix_micros($"ts".cast("timestamp"))).as("tend"),
-      min(when($"event_type" === "purchase", unix_micros($"ts".cast("timestamp")))).as("tp"))
+    val perUser = userSpans(spark, dir)
     val durs = perUser.select(
       when($"tp".isNotNull, expr(s"(tp - t0) div $UsPerHour"))
         .otherwise(expr(s"(tend - t0) div $UsPerHour")).as("t"),
@@ -277,10 +284,7 @@ object ExperimentQueries {
     * the grid cross join is a broadcast of a window-bounded frame. */
   def logRank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val perUser = Tables.events(spark, dir).groupBy($"user_id").agg(
-      min(unix_micros($"ts".cast("timestamp"))).as("t0"),
-      max(unix_micros($"ts".cast("timestamp"))).as("tend"),
-      min(when($"event_type" === "purchase", unix_micros($"ts".cast("timestamp")))).as("tp"))
+    val perUser = userSpans(spark, dir)
     val durs = perUser.select(
       pmod($"user_id", lit(2L)).as("g"),
       when($"tp".isNotNull, expr(s"(tp - t0) div $UsPerHour"))

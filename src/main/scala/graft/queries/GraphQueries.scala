@@ -23,6 +23,70 @@ object GraphQueries {
 
   private val Iters = 3
 
+  /** The nation-trade join every trade-graph query starts from: lineitem ⋈
+    * orders ⋈ customer ⋈ supplier, kept where the customer's nation is not
+    * the supplier's. Each caller projects and aggregates it its own way. */
+  private def crossNationTrade(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey")
+      .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
+        $"l_orderkey" === $"o_orderkey")
+      .join(broadcast(Tables.customer(spark, dir).select($"c_custkey", $"c_nationkey")),
+        $"o_custkey" === $"c_custkey")
+      .join(broadcast(Tables.supplier(spark, dir).select($"s_suppkey", $"s_nationkey")),
+        $"l_suppkey" === $"s_suppkey")
+      .filter($"c_nationkey" =!= $"s_nationkey")
+  }
+
+  /** The symmetric weighted trade graph (src, dst, w = lineitem count in
+    * either direction) over [[crossNationTrade]]. */
+  private def tradeEdges(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val trade = crossNationTrade(spark, dir)
+      .select($"c_nationkey".as("cn"), $"s_nationkey".as("sn"))
+    trade.select($"cn".as("src"), $"sn".as("dst"))
+      .unionByName(trade.select($"sn".as("src"), $"cn".as("dst")))
+      .groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
+  }
+
+  /** Oracle rendering of [[crossNationTrade]] as (cn, sn): the `dir0` CTE. */
+  private val crossNationTradeSql =
+    """dir0 AS MATERIALIZED (
+      |  SELECT c.c_nationkey AS cn, s.s_nationkey AS sn
+      |  FROM lineitem l
+      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
+      |  JOIN customer c ON o.o_custkey = c.c_custkey
+      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
+      |  WHERE c.c_nationkey <> s.s_nationkey)""".stripMargin
+
+  /** Oracle rendering of [[tradeEdges]]: `dir0`, then `e0(src, dst, w)`. */
+  private val tradeEdgesSql =
+    s"""$crossNationTradeSql,
+       |sym AS (SELECT cn AS src, sn AS dst FROM dir0 UNION ALL SELECT sn, cn FROM dir0),
+       |e0 AS MATERIALIZED (SELECT src, dst, count(*) AS w FROM sym GROUP BY 1, 2)""".stripMargin
+
+  /** The oracle's unrolled [[Graph.pageRank]] over weighted edges
+    * `e0(src, dst, w)`: out-weights, nodes, the fixed-point init and base,
+    * and three iterations `r1`…`r3`. */
+  private[queries] def pageRankSql: String = {
+    def iter(prev: String, cur: String): String =
+      s"""$cur AS MATERIALIZED (SELECT n.node,
+         |  (SELECT base FROM params) + COALESCE(s.inc, 0) AS rank_fp
+         |  FROM n LEFT JOIN (
+         |    SELECT e.dst, CAST(sum((85 * r.rank_fp * e.w) // (100 * e.outw)) AS BIGINT) AS inc
+         |    FROM e JOIN $prev r ON e.src = r.node
+         |    GROUP BY e.dst) s ON n.node = s.dst)""".stripMargin
+    s"""ow AS (SELECT src, CAST(sum(w) AS BIGINT) AS outw FROM e0 GROUP BY 1),
+       |e AS MATERIALIZED (SELECT e0.src, e0.dst, e0.w, ow.outw FROM e0 JOIN ow ON e0.src = ow.src),
+       |n AS MATERIALIZED (SELECT DISTINCT src AS node FROM e0),
+       |params AS MATERIALIZED (SELECT count(*) AS nn, 1000000000 // count(*) AS init,
+       |                  150000000 // count(*) AS base FROM n),
+       |r0 AS (SELECT node, (SELECT init FROM params) AS rank_fp FROM n),
+       |${iter("r0", "r1")},
+       |${iter("r1", "r2")},
+       |${iter("r2", "r3")}""".stripMargin
+  }
+
   /** x63: PageRank centrality of each nation in the (symmetrized) trade
     * graph. Edge (a,b) weight = number of lineitems shipped between a
     * customer in nation a and a supplier in nation b, either direction;
@@ -31,18 +95,7 @@ object GraphQueries {
     * still handles it). */
   def tradePageRank(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val trade = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(Tables.customer(spark, dir).select($"c_custkey", $"c_nationkey")),
-        $"o_custkey" === $"c_custkey")
-      .join(broadcast(Tables.supplier(spark, dir).select($"s_suppkey", $"s_nationkey")),
-        $"l_suppkey" === $"s_suppkey")
-      .filter($"c_nationkey" =!= $"s_nationkey")
-      .select($"c_nationkey".as("cn"), $"s_nationkey".as("sn"))
-    val edges = trade.select($"cn".as("src"), $"sn".as("dst"))
-      .unionByName(trade.select($"sn".as("src"), $"cn".as("dst")))
-      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
+    val edges = tradeEdges(spark, dir)
     Graph.pageRank(edges, Iters)
       .join(broadcast(Tables.nation(spark, dir)), $"node" === $"n_nationkey")
       .select($"node".cast("long").as("nationkey"), $"n_name",
@@ -60,31 +113,8 @@ object GraphQueries {
     * re-execute each time (minutes + tens of GB at sf0.1; 7 s
     * materialized). */
   private val pageRankOracle: String = {
-    def iter(prev: String, cur: String): String =
-      s"""$cur AS MATERIALIZED (SELECT n.node,
-         |  (SELECT base FROM params) + COALESCE(s.inc, 0) AS rank_fp
-         |  FROM n LEFT JOIN (
-         |    SELECT e.dst, CAST(sum((85 * r.rank_fp * e.w) // (100 * e.outw)) AS BIGINT) AS inc
-         |    FROM e JOIN $prev r ON e.src = r.node
-         |    GROUP BY e.dst) s ON n.node = s.dst)""".stripMargin
-    s"""WITH dir0 AS MATERIALIZED (
-       |  SELECT c.c_nationkey AS cn, s.s_nationkey AS sn
-       |  FROM lineitem l
-       |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-       |  JOIN customer c ON o.o_custkey = c.c_custkey
-       |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-       |  WHERE c.c_nationkey <> s.s_nationkey),
-       |sym AS (SELECT cn AS src, sn AS dst FROM dir0 UNION ALL SELECT sn, cn FROM dir0),
-       |e0 AS MATERIALIZED (SELECT src, dst, count(*) AS w FROM sym GROUP BY 1, 2),
-       |ow AS (SELECT src, CAST(sum(w) AS BIGINT) AS outw FROM e0 GROUP BY 1),
-       |e AS MATERIALIZED (SELECT e0.src, e0.dst, e0.w, ow.outw FROM e0 JOIN ow ON e0.src = ow.src),
-       |n AS MATERIALIZED (SELECT DISTINCT src AS node FROM e0),
-       |params AS MATERIALIZED (SELECT count(*) AS nn, 1000000000 // count(*) AS init,
-       |                  150000000 // count(*) AS base FROM n),
-       |r0 AS (SELECT node, (SELECT init FROM params) AS rank_fp FROM n),
-       |${iter("r0", "r1")},
-       |${iter("r1", "r2")},
-       |${iter("r2", "r3")}
+    s"""WITH $tradeEdgesSql,
+       |$pageRankSql
        |SELECT CAST(t.node AS BIGINT) AS nationkey, nat.n_name, t.rank_fp,
        |       t.rank_fp / 1000000000.0 AS rank
        |FROM r3 t JOIN nation nat ON t.node = nat.n_nationkey
@@ -103,14 +133,7 @@ object GraphQueries {
     * orientation already halves the heaviest wedge fan-out). */
   def tradeTriangles(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val trade = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(Tables.customer(spark, dir).select($"c_custkey", $"c_nationkey")),
-        $"o_custkey" === $"c_custkey")
-      .join(broadcast(Tables.supplier(spark, dir).select($"s_suppkey", $"s_nationkey")),
-        $"l_suppkey" === $"s_suppkey")
-      .filter($"c_nationkey" =!= $"s_nationkey")
+    val trade = crossNationTrade(spark, dir)
       .select(least($"c_nationkey", $"s_nationkey").as("a"),
         greatest($"c_nationkey", $"s_nationkey").as("b"))
       .distinct()
@@ -174,18 +197,7 @@ object GraphQueries {
     * mean edge weight (exact integer predicate, no float threshold). */
   private def heavyTradeEdges(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val trade = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(Tables.customer(spark, dir).select($"c_custkey", $"c_nationkey")),
-        $"o_custkey" === $"c_custkey")
-      .join(broadcast(Tables.supplier(spark, dir).select($"s_suppkey", $"s_nationkey")),
-        $"l_suppkey" === $"s_suppkey")
-      .filter($"c_nationkey" =!= $"s_nationkey")
-      .select($"c_nationkey".as("cn"), $"s_nationkey".as("sn"))
-    val e0 = trade.select($"cn".as("src"), $"sn".as("dst"))
-      .unionByName(trade.select($"sn".as("src"), $"cn".as("dst")))
-      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
+    val e0 = tradeEdges(spark, dir)
     val tot = e0.agg(sum($"w").as("tw"), count(lit(1)).as("ne"))
     e0.crossJoin(broadcast(tot))
       .filter($"w" * $"ne" >= $"tw").select($"src", $"dst")
@@ -203,15 +215,7 @@ object GraphQueries {
   }
 
   private val bfsHopsOracle =
-    """WITH RECURSIVE dir0 AS MATERIALIZED (
-      |  SELECT c.c_nationkey AS cn, s.s_nationkey AS sn
-      |  FROM lineitem l
-      |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |  JOIN customer c ON o.o_custkey = c.c_custkey
-      |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-      |  WHERE c.c_nationkey <> s.s_nationkey),
-      |sym AS (SELECT cn AS src, sn AS dst FROM dir0 UNION ALL SELECT sn, cn FROM dir0),
-      |e0 AS MATERIALIZED (SELECT src, dst, count(*) AS w FROM sym GROUP BY 1, 2),
+    s"""WITH RECURSIVE $tradeEdgesSql,
       |tot AS (SELECT CAST(sum(w) AS BIGINT) AS tw, count(*) AS ne FROM e0),
       |e AS MATERIALIZED (SELECT src, dst FROM e0, tot WHERE w * ne >= tw),
       |walk(node, hop) AS (
@@ -265,15 +269,7 @@ object GraphQueries {
   }.mkString(",\n")
 
   private val kcoreOracle =
-    s"""WITH dir0 AS MATERIALIZED (
-       |  SELECT c.c_nationkey AS cn, s.s_nationkey AS sn
-       |  FROM lineitem l
-       |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-       |  JOIN customer c ON o.o_custkey = c.c_custkey
-       |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-       |  WHERE c.c_nationkey <> s.s_nationkey),
-       |sym AS (SELECT cn AS src, sn AS dst FROM dir0 UNION ALL SELECT sn, cn FROM dir0),
-       |e0 AS MATERIALIZED (SELECT src, dst, count(*) AS w FROM sym GROUP BY 1, 2),
+    s"""WITH $tradeEdgesSql,
        |tot AS (SELECT CAST(sum(w) AS BIGINT) AS tw, count(*) AS ne FROM e0),
        |und AS MATERIALIZED (
        |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
@@ -351,18 +347,7 @@ object GraphQueries {
     * aggregated (tiny) graph. */
   def tradeSssp(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val trade = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(Tables.customer(spark, dir).select($"c_custkey", $"c_nationkey")),
-        $"o_custkey" === $"c_custkey")
-      .join(broadcast(Tables.supplier(spark, dir).select($"s_suppkey", $"s_nationkey")),
-        $"l_suppkey" === $"s_suppkey")
-      .filter($"c_nationkey" =!= $"s_nationkey")
-      .select($"c_nationkey".as("cn"), $"s_nationkey".as("sn"))
-    val edges = trade.select($"cn".as("src"), $"sn".as("dst"))
-      .unionByName(trade.select($"sn".as("src"), $"cn".as("dst")))
-      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
+    val edges = tradeEdges(spark, dir)
     val sources = Tables.nation(spark, dir)
       .filter($"n_nationkey" === 0).select($"n_nationkey".as("node"))
     Graph.sssp(sources, edges, maxIter = SsspRounds)
@@ -382,15 +367,7 @@ object GraphQueries {
          |  GROUP BY node)""".stripMargin
     val rounds = (1 to SsspRounds)
       .map(i => round(s"d${i - 1}", s"d$i")).mkString(",\n")
-    s"""WITH dir0 AS MATERIALIZED (
-       |  SELECT c.c_nationkey AS cn, s.s_nationkey AS sn
-       |  FROM lineitem l
-       |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-       |  JOIN customer c ON o.o_custkey = c.c_custkey
-       |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-       |  WHERE c.c_nationkey <> s.s_nationkey),
-       |sym AS (SELECT cn AS src, sn AS dst FROM dir0 UNION ALL SELECT sn, cn FROM dir0),
-       |e0 AS MATERIALIZED (SELECT src, dst, count(*) AS w FROM sym GROUP BY 1, 2),
+    s"""WITH $tradeEdgesSql,
        |d0 AS (SELECT n_nationkey AS node, CAST(0 AS BIGINT) AS d
        |       FROM nation WHERE n_nationkey = 0),
        |$rounds
@@ -412,14 +389,7 @@ object GraphQueries {
     * relative scores carry no accumulated float error. */
   def tradeHits(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val edges = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(Tables.customer(spark, dir).select($"c_custkey", $"c_nationkey")),
-        $"o_custkey" === $"c_custkey")
-      .join(broadcast(Tables.supplier(spark, dir).select($"s_suppkey", $"s_nationkey")),
-        $"l_suppkey" === $"s_suppkey")
-      .filter($"c_nationkey" =!= $"s_nationkey")
+    val edges = crossNationTrade(spark, dir)
       .groupBy($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
       .agg(count(lit(1)).as("w"))
     val scores = Graph.hits(edges, HitsIters)
@@ -448,13 +418,7 @@ object GraphQueries {
       half(hPrev, "hub", "src", "dst", s"a$i", "auth") + ",\n" +
         half(s"a$i", "auth", "dst", "src", s"h$i", "hub")
     }.mkString(",\n")
-    s"""WITH dir0 AS MATERIALIZED (
-       |  SELECT c.c_nationkey AS cn, s.s_nationkey AS sn
-       |  FROM lineitem l
-       |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-       |  JOIN customer c ON o.o_custkey = c.c_custkey
-       |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-       |  WHERE c.c_nationkey <> s.s_nationkey),
+    s"""WITH $crossNationTradeSql,
        |e0 AS MATERIALIZED (SELECT cn AS src, sn AS dst, count(*) AS w
        |                    FROM dir0 GROUP BY 1, 2),
        |n AS MATERIALIZED (SELECT src AS node FROM e0 UNION SELECT dst FROM e0),
@@ -476,18 +440,7 @@ object GraphQueries {
     * trajectory with the teleport CASE-gated to the seed rows. */
   def tradePpr(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val trade = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(Tables.customer(spark, dir).select($"c_custkey", $"c_nationkey")),
-        $"o_custkey" === $"c_custkey")
-      .join(broadcast(Tables.supplier(spark, dir).select($"s_suppkey", $"s_nationkey")),
-        $"l_suppkey" === $"s_suppkey")
-      .filter($"c_nationkey" =!= $"s_nationkey")
-      .select($"c_nationkey".as("cn"), $"s_nationkey".as("sn"))
-    val edges = trade.select($"cn".as("src"), $"sn".as("dst"))
-      .unionByName(trade.select($"sn".as("src"), $"cn".as("dst")))
-      .groupBy("src", "dst").agg(count(lit(1)).as("w"))
+    val edges = tradeEdges(spark, dir)
     val seeds = Tables.nation(spark, dir)
       .filter($"n_regionkey" === 0).select($"n_nationkey".as("node"))
     // edges-only overload: the 4-way trade join materializes ONCE and the
@@ -508,15 +461,7 @@ object GraphQueries {
          |    SELECT e.dst, CAST(sum((85 * r.rank_fp * e.w) // (100 * e.outw)) AS BIGINT) AS inc
          |    FROM e JOIN $prev r ON e.src = r.node
          |    GROUP BY e.dst) s ON n.node = s.dst)""".stripMargin
-    s"""WITH dir0 AS MATERIALIZED (
-       |  SELECT c.c_nationkey AS cn, s.s_nationkey AS sn
-       |  FROM lineitem l
-       |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-       |  JOIN customer c ON o.o_custkey = c.c_custkey
-       |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-       |  WHERE c.c_nationkey <> s.s_nationkey),
-       |sym AS (SELECT cn AS src, sn AS dst FROM dir0 UNION ALL SELECT sn, cn FROM dir0),
-       |e0 AS MATERIALIZED (SELECT src, dst, count(*) AS w FROM sym GROUP BY 1, 2),
+    s"""WITH $tradeEdgesSql,
        |ow AS (SELECT src, CAST(sum(w) AS BIGINT) AS outw FROM e0 GROUP BY 1),
        |e AS MATERIALIZED (SELECT e0.src, e0.dst, e0.w, ow.outw FROM e0 JOIN ow ON e0.src = ow.src),
        |sd AS (SELECT n_nationkey AS node FROM nation WHERE n_regionkey = 0),
@@ -940,22 +885,6 @@ object GraphQueries {
       |    SELECT cn AS src, sn AS dst FROM trade
       |    UNION ALL SELECT sn AS src, cn AS dst FROM trade) u
       |  GROUP BY src, dst)""".stripMargin
-
-  private def tradeEdges(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val trade = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(Tables.customer(spark, dir)
-        .select($"c_custkey", $"c_nationkey")), $"o_custkey" === $"c_custkey")
-      .join(broadcast(Tables.supplier(spark, dir)
-        .select($"s_suppkey", $"s_nationkey")), $"l_suppkey" === $"s_suppkey")
-      .filter($"c_nationkey" =!= $"s_nationkey")
-      .select($"c_nationkey".as("cn"), $"s_nationkey".as("sn"))
-    trade.select($"cn".as("src"), $"sn".as("dst"))
-      .unionByName(trade.select($"sn".as("src"), $"cn".as("dst")))
-      .groupBy($"src", $"dst").agg(count(lit(1)).as("w"))
-  }
 
   // ---------------------------------------------------------------- x223
 
@@ -1438,14 +1367,7 @@ object GraphQueries {
     * re-executes. */
   def katzCentrality(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val trade = Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(Tables.customer(spark, dir).select($"c_custkey", $"c_nationkey")),
-        $"o_custkey" === $"c_custkey")
-      .join(broadcast(Tables.supplier(spark, dir).select($"s_suppkey", $"s_nationkey")),
-        $"l_suppkey" === $"s_suppkey")
-      .filter($"c_nationkey" =!= $"s_nationkey")
+    val trade = crossNationTrade(spark, dir)
       .select($"c_nationkey".as("src"), $"s_nationkey".as("dst"))
     val edges = trade
       .unionByName(trade.select($"dst".as("src"), $"src".as("dst")))
@@ -1596,14 +1518,7 @@ object GraphQueries {
     * copy was an r13 review finding). */
   private def nationPairCensus(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    Tables.lineitem(spark, dir).select($"l_orderkey", $"l_suppkey")
-      .join(Tables.orders(spark, dir).select($"o_orderkey", $"o_custkey"),
-        $"l_orderkey" === $"o_orderkey")
-      .join(broadcast(Tables.customer(spark, dir).select($"c_custkey", $"c_nationkey")),
-        $"o_custkey" === $"c_custkey")
-      .join(broadcast(Tables.supplier(spark, dir).select($"s_suppkey", $"s_nationkey")),
-        $"l_suppkey" === $"s_suppkey")
-      .filter($"c_nationkey" =!= $"s_nationkey")
+    crossNationTrade(spark, dir)
       .select(least($"c_nationkey", $"s_nationkey").cast("long").as("a"),
         greatest($"c_nationkey", $"s_nationkey").cast("long").as("b"))
       .groupBy($"a", $"b").agg(count(lit(1)).as("w"))

@@ -746,15 +746,8 @@ object MultimodalQueries {
     * cluster id = min doc_id reachable, canonical = the cluster's keeper.
     * Scale: pairs come from the banded Hamming join (never all-pairs);
     * components converge in O(log diameter) star rounds. */
-  def phashClusters(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val pairs = phashNearDup(spark, dir).select($"a", $"b")
-    val nodes = Tables.documents(spark, dir).select($"doc_id")
-    graft.operators.Components.connectedComponentsStars(spark, nodes, pairs, "doc_id")
-      .select($"doc_id", $"component".as("cluster_id"),
-        ($"doc_id" === $"component").cast("int").as("is_canonical"))
-      .orderBy("doc_id")
-  }
+  def phashClusters(spark: SparkSession, dir: String): DataFrame =
+    DedupQueries.docClusters(spark, dir, phashNearDup(spark, dir))
 
   private val phashClustersOracle =
     dhashCtesWith("WITH RECURSIVE") + s""",
@@ -1161,31 +1154,7 @@ object MultimodalQueries {
       .toDF().orderBy("doc_id", "frame_idx")
 
   private def dbl(x: String) = s"CAST($x AS DOUBLE)"
-  private val jpeg420Oracle = {
-    val yv = md5Byte(cellExpr("(i * 4 * mw * mh) + by * (2 * mw) + bx", MediaSynth.JpegYMult), 0)
-    val cbv = md5Byte(cellExpr("(i * mw * mh) + (by // 2) * mw + (bx // 2)", MediaSynth.JpegChromaMult), 1)
-    val crv = md5Byte(cellExpr("(i * mw * mh) + (by // 2) * mw + (bx // 2)", MediaSynth.JpegChromaMult), 2)
-    s"""WITH m AS (SELECT doc_id, text, greatest(1, length(text)) AS clen,
-       |             1 + ${nib("text", 0)} % ${MediaSynth.JpegNFramesMod} AS nf,
-       |             1 + ${nib("text", 1)} % ${MediaSynth.JpegMcuMod} AS mw,
-       |             1 + ${nib("text", 2)} % ${MediaSynth.JpegMcuMod} AS mh
-       |           FROM documents),
-       |fr AS (SELECT doc_id, text, clen, mw, mh, unnest(range(0, nf)) AS i FROM m),
-       |rw AS (SELECT *, unnest(range(0, 2 * mh)) AS by FROM fr),
-       |cl AS (SELECT *, unnest(range(0, 2 * mw)) AS bx FROM rw),
-       |ycc AS (SELECT doc_id, i, $yv AS y, $cbv AS cb, $crv AS cr FROM cl),
-       |rgb AS (SELECT doc_id, i,
-       |          least(255, greatest(0, CAST(floor(y + ${dbl("1.402")} * (cr - 128) + 0.5) AS INTEGER))) AS r,
-       |          least(255, greatest(0, CAST(floor(y - ${dbl("0.344136")} * (cb - 128) - ${dbl("0.714136")} * (cr - 128) + 0.5) AS INTEGER))) AS g,
-       |          least(255, greatest(0, CAST(floor(y + ${dbl("1.772")} * (cb - 128) + 0.5) AS INTEGER))) AS b
-       |        FROM ycc)
-       |SELECT doc_id, CAST(i AS INTEGER) AS frame_idx,
-       |       CAST(64 * sum(r) AS BIGINT) AS r_sum,
-       |       CAST(64 * sum(g) AS BIGINT) AS g_sum,
-       |       CAST(64 * sum(b) AS BIGINT) AS b_sum
-       |FROM rgb GROUP BY doc_id, i
-       |ORDER BY doc_id, frame_idx""".stripMargin
-  }
+  private val jpeg420Oracle = jpegYccOracle(2, 2)
 
   // --------------------------------------------------------- x391 / x392 --
 

@@ -546,13 +546,18 @@ object RelationalQueries {
       .orderBy($"user_id")
   }
 
-  private val q22Oracle =
-    """WITH flagged AS (
+  /** `flagged`: each event with `brk` = 1 where it follows its user's
+    * previous event (by ts, event_id) by more than 30 minutes. */
+  private def sessionBreaksSql: String =
+    """flagged AS (
       |  SELECT user_id, ts, event_id,
       |         CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
       |                   - CAST(floor(epoch(lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT) > 1800
       |              THEN 1 ELSE 0 END AS brk
-      |  FROM events),
+      |  FROM events)""".stripMargin
+
+  private val q22Oracle =
+    s"""WITH $sessionBreaksSql,
       |sessions AS (
       |  SELECT user_id,
       |         sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
@@ -1713,10 +1718,11 @@ object RelationalQueries {
    * DuckDB oracles use its native ASOF JOIN / inequality join — strong
    * cross-checks since the implementations share nothing. */
 
-  /** AS-OF: each order gets the customer's most recent strictly-earlier
-    * order date + (deduped) price. Right side pre-aggregated per
-    * (custkey, date) so the match is deterministic. */
-  def asofPriorOrder(spark: SparkSession, dir: String) = {
+  /** Each order (o_orderkey, o_custkey, o_orderdate) AS-OF joined to its
+    * customer's most recent strictly-earlier order date (`asof_ts`) and
+    * that date's max price (`asof_mp`): the quote side is pre-aggregated
+    * per (custkey, date) so the match is deterministic. */
+  private def priorQuotes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ord = Tables.orders(spark, dir)
     val quotes = ord.groupBy($"o_custkey", $"o_orderdate")
@@ -1725,6 +1731,14 @@ object RelationalQueries {
     AsOf.joinPrior(
       ord.select($"o_orderkey", $"o_custkey", $"o_orderdate"),
       quotes, "o_custkey", "o_orderdate", "q_date", Seq("mp"))
+  }
+
+  /** AS-OF: each order gets the customer's most recent strictly-earlier
+    * order date + (deduped) price. Right side pre-aggregated per
+    * (custkey, date) so the match is deterministic. */
+  def asofPriorOrder(spark: SparkSession, dir: String) = {
+    import spark.implicits._
+    priorQuotes(spark, dir)
       .select(
         $"o_orderkey", $"o_custkey",
         date_format($"o_orderdate", "yyyy-MM-dd").as("d0"),
@@ -1757,14 +1771,8 @@ object RelationalQueries {
     * x60; the tolerance is a post-window integer date predicate. */
   def asofTolerance(spark: SparkSession, dir: String) = {
     import spark.implicits._
-    val ord = Tables.orders(spark, dir)
-    val quotes = ord.groupBy($"o_custkey", $"o_orderdate")
-      .agg(round(max($"o_totalprice"), 2).as("mp"))
-      .select($"o_custkey", $"o_orderdate".as("q_date"), $"mp")
     val inTol = datediff($"o_orderdate", $"asof_ts") <= AsofTolDays
-    AsOf.joinPrior(
-      ord.select($"o_orderkey", $"o_custkey", $"o_orderdate"),
-      quotes, "o_custkey", "o_orderdate", "q_date", Seq("mp"))
+    priorQuotes(spark, dir)
       .select(
         $"o_orderkey", $"o_custkey",
         date_format($"o_orderdate", "yyyy-MM-dd").as("d0"),
@@ -1838,12 +1846,7 @@ object RelationalQueries {
   }
 
   private val overlapOracle =
-    """WITH flagged AS (
-      |  SELECT user_id, ts, event_id,
-      |         CASE WHEN CAST(floor(epoch(ts)) AS BIGINT)
-      |                   - CAST(floor(epoch(lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id))) AS BIGINT) > 1800
-      |              THEN 1 ELSE 0 END AS brk
-      |  FROM events),
+    s"""WITH $sessionBreaksSql,
       |sess AS (
       |  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec,
       |         sum(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id

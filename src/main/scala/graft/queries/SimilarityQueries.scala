@@ -69,15 +69,32 @@ object SimilarityQueries {
         Similarity.norm($"embedding").as("nrm"))
     val q = emb.filter($"vec_id" % 25 === 0)
       .select($"vec_id".as("q_id"), $"embedding".as("qv"), $"bkt", $"nrm".as("qn"))
-    val w = Window.partitionBy($"q_id").orderBy($"cosine".desc, $"vec_id")
-    emb.join(broadcast(q), Seq("bkt")).filter($"vec_id" =!= $"q_id")
-      .select($"q_id", $"vec_id",
-        round(Similarity.dot($"qv", $"embedding") / ($"qn" * $"nrm"), 4).as("cosine"))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" <= 3)
-      .select($"q_id", $"rk", $"vec_id", $"cosine")
-      .orderBy("q_id", "rk")
+    top3Cosine(emb.join(broadcast(q), Seq("bkt")).filter($"vec_id" =!= $"q_id"))
   }
+
+  /** Oracle rendering of [[top3Cosine]] over `p(q_id, vec_id, cosine)`. */
+  private def top3CosineSql: String =
+    """r AS (SELECT q_id, vec_id, cosine,
+      |        row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rk
+      |      FROM p)
+      |SELECT q_id, rk, vec_id, cosine FROM r
+      |WHERE rk <= 3
+      |ORDER BY q_id, rk""".stripMargin
+
+  /** Each query's 3 best candidates by cosine rounded to 4 places (ties to
+    * the lower vec_id), from candidate rows carrying the query (q_id, qv,
+    * qn) and corpus (vec_id, embedding, nrm) vectors and norms:
+    * (q_id, rk, vec_id, cosine). */
+  private def top3Cosine(cands: DataFrame): DataFrame =
+    cands
+      .select(col("q_id"), col("vec_id"),
+        round(Similarity.dot(col("qv"), col("embedding")) / (col("qn") * col("nrm")), 4)
+          .as("cosine"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))))
+      .filter(col("rk") <= 3)
+      .select(col("q_id"), col("rk"), col("vec_id"), col("cosine"))
+      .orderBy("q_id", "rk")
 
   private def bucketSql(v: String, bits: Int = 8): String =
     (1 to bits).map(i => s"CASE WHEN $v[$i] >= 0 THEN '1' ELSE '0' END").mkString(" || ")
@@ -101,14 +118,7 @@ object SimilarityQueries {
     val q = emb.filter($"vec_id" % 25 === 0)
       .select($"vec_id".as("q_id"), $"embedding".as("qv"), $"bkt", $"nrm".as("qn"))
     val probes = probeSet(q)
-    val w = Window.partitionBy($"q_id").orderBy($"cosine".desc, $"vec_id")
-    emb.join(broadcast(probes), $"bkt" === $"pbkt").filter($"vec_id" =!= $"q_id")
-      .select($"q_id", $"vec_id",
-        round(Similarity.dot($"qv", $"embedding") / ($"qn" * $"nrm"), 4).as("cosine"))
-      .withColumn("rk", row_number().over(w))
-      .filter($"rk" <= 3)
-      .select($"q_id", $"rk", $"vec_id", $"cosine")
-      .orderBy("q_id", "rk")
+    top3Cosine(emb.join(broadcast(probes), $"bkt" === $"pbkt").filter($"vec_id" =!= $"q_id"))
   }
 
   /** The base bucket + its 8 Hamming-1 flips per query — x36's probe set,
@@ -140,12 +150,7 @@ object SimilarityQueries {
        |p AS (SELECT probes.q_id, e.vec_id,
        |        round(${dotSql("probes.qv", "e.embedding")} / (probes.qn * e.nrm), 4) AS cosine
        |      FROM e JOIN probes ON e.bkt = probes.pbkt AND e.vec_id <> probes.q_id),
-       |r AS (SELECT q_id, vec_id, cosine,
-       |        row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rk
-       |      FROM p)
-       |SELECT q_id, rk, vec_id, cosine FROM r
-       |WHERE rk <= 3
-       |ORDER BY q_id, rk""".stripMargin
+       |$top3CosineSql""".stripMargin
   }
 
   private val signLshOracle =
@@ -154,12 +159,7 @@ object SimilarityQueries {
        |p AS (SELECT q.q_id, e.vec_id AS vec_id,
        |        round(${cosineSql("q.qv", "e.embedding")}, 4) AS cosine
        |      FROM e JOIN q ON e.bkt = q.bkt AND e.vec_id <> q.q_id),
-       |r AS (SELECT q_id, vec_id, cosine,
-       |        row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rk
-       |      FROM p)
-       |SELECT q_id, rk, vec_id, cosine FROM r
-       |WHERE rk <= 3
-       |ORDER BY q_id, rk""".stripMargin
+       |$top3CosineSql""".stripMargin
 
   /** x32 banding: 8 bands × 4 sign bits over dims 1..32. A pair collides
     * when any band's 4 signs all agree. At a realistic near-dup threshold
@@ -516,18 +516,25 @@ object SimilarityQueries {
     ivfSearch(spark, emb, cents)
   }
 
+  /** Each (vec_id, embedding, nrm) row with its nearest (cent_id, cv, cn)
+    * centroid by unrounded cosine, ties to the lower cent_id:
+    * (vec_id, embedding, nrm, cent_id). */
+  private[queries] def assignNearest(emb: DataFrame, cents: DataFrame): DataFrame =
+    emb.crossJoin(broadcast(cents))
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"),
+        (Similarity.dot(col("embedding"), col("cv")) / (col("nrm") * col("cn"))).as("ccos"))
+      .withColumn("arn", row_number().over(
+        Window.partitionBy(col("vec_id")).orderBy(col("ccos").desc, col("cent_id"))))
+      .filter(col("arn") === 1)
+      .select(col("vec_id"), col("embedding"), col("nrm"), col("cent_id"))
+
   /** nprobe=2 IVF search against an arbitrary (cent_id, cv, cn) quantizer —
     * shared by x34 (fixed seed centroids) and x35 (Lloyd-trained centroids).
     * Centroids are broadcast twice (corpus assignment + query probing);
     * the search join meets only vectors in a query's 2 probed clusters. */
   private def ivfSearch(spark: SparkSession, emb: DataFrame, cents: DataFrame): DataFrame = {
     import spark.implicits._
-    val wAssign = Window.partitionBy($"vec_id").orderBy($"ccos".desc, $"cent_id")
-    val assigned = emb.crossJoin(broadcast(cents))
-      .select($"vec_id", $"embedding", $"nrm", $"cent_id",
-        (Similarity.dot($"embedding", $"cv") / ($"nrm" * $"cn")).as("ccos"))
-      .withColumn("arn", row_number().over(wAssign)).filter($"arn" === 1)
-      .select($"vec_id", $"embedding", $"nrm", $"cent_id")
+    val assigned = assignNearest(emb, cents)
     val wProbe = Window.partitionBy($"q_id").orderBy($"ccos".desc, $"cent_id")
     val probes = emb.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("q_id"), $"embedding".as("qv"), $"nrm".as("qn"))
@@ -536,13 +543,7 @@ object SimilarityQueries {
         (Similarity.dot($"qv", $"cv") / ($"qn" * $"cn")).as("ccos"))
       .withColumn("prn", row_number().over(wProbe)).filter($"prn" <= 2)
       .select($"q_id", $"qv", $"qn", $"cent_id")
-    val wTop = Window.partitionBy($"q_id").orderBy($"cosine".desc, $"vec_id")
-    probes.join(assigned, "cent_id").filter($"vec_id" =!= $"q_id")
-      .select($"q_id", $"vec_id",
-        round(Similarity.dot($"qv", $"embedding") / ($"qn" * $"nrm"), 4).as("cosine"))
-      .withColumn("rk", row_number().over(wTop)).filter($"rk" <= 3)
-      .select($"q_id", $"rk", $"vec_id", $"cosine")
-      .orderBy("q_id", "rk")
+    top3Cosine(probes.join(assigned, "cent_id").filter($"vec_id" =!= $"q_id"))
   }
 
   private[queries] def dotSql(a: String, b: String): String =
@@ -581,12 +582,7 @@ object SimilarityQueries {
        |        round(${dotSql("probes.qv", "assigned.embedding")} / (probes.qn * assigned.nrm), 4) AS cosine
        |      FROM probes JOIN assigned USING (cent_id)
        |      WHERE assigned.vec_id <> probes.q_id),
-       |r AS (SELECT q_id, vec_id, cosine,
-       |        row_number() OVER (PARTITION BY q_id ORDER BY cosine DESC, vec_id) AS rk
-       |      FROM p)
-       |SELECT q_id, rk, vec_id, cosine FROM r
-       |WHERE rk <= 3
-       |ORDER BY q_id, rk""".stripMargin
+       |$top3CosineSql""".stripMargin
 
   private val ivfOracle =
     s"""WITH $ivfSeedSql,
@@ -822,6 +818,19 @@ object SimilarityQueries {
     (emb, subArr, sub, cb0)
   }
 
+  /** PQ codes (vec_id, s, c): each sub-vector's nearest codeword in `cb`
+    * by unrounded squared distance, ties to the lower c. */
+  private def pqEncode(sub: DataFrame, cb: DataFrame): DataFrame =
+    sub
+      .join(broadcast(cb), "s")
+      .select(col("vec_id"), col("s"), col("c"),
+        (Similarity.dot(col("sv"), col("sv")) - lit(2.0) * Similarity.dot(col("sv"), col("cv"))
+          + Similarity.dot(col("cv"), col("cv"))).as("d2"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("vec_id"), col("s")).orderBy(col("d2"), col("c"))))
+      .filter(col("rn") === 1)
+      .select(col("vec_id"), col("s"), col("c"))
+
   /** Shared PQ search: encode the corpus against `cb`, ADC-score the
     * broadcast query tables (fixed-point entries, integer pair sums),
     * exact-rerank the top-[[PqRerank]], emit top-3. */
@@ -830,15 +839,7 @@ object SimilarityQueries {
                        sub: DataFrame,
                        cb: DataFrame): DataFrame = {
     import spark.implicits._
-    val wCode = Window.partitionBy($"vec_id", $"s").orderBy($"d2", $"c")
-    val codes = sub
-      .join(broadcast(cb), "s")
-      .select($"vec_id", $"s", $"c",
-        (Similarity.dot($"sv", $"sv") - lit(2.0) * Similarity.dot($"sv", $"cv")
-          + Similarity.dot($"cv", $"cv")).as("d2"))
-      .withColumn("rn", row_number().over(wCode))
-      .filter($"rn" === 1)
-      .select($"vec_id", $"s", $"c")
+    val codes = pqEncode(sub, cb)
     val qdt = emb.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("q_id"), explode(subArr).as("sub"))
       .join(broadcast(cb), col("sub.s") === cb("s"))
@@ -946,14 +947,16 @@ object SimilarityQueries {
 
   private val pqTopKOracle = pqPrefixSql + ",\n" + pqSearchTailSql("cb0")
 
-  /** One unrolled Lloyd iteration `$prev` -> `$next`: UNROUNDED-d2 argmin
-    * assignment, fixed-point per-dim means, empty cells fall back to the
-    * PREVIOUS codebook — generated once per [[PqTrainIters]] so the oracle
-    * unroll can never drift from the Spark-side loop count. */
-  private def pqTrainIterSql(prev: String, next: String): String =
-    s"""td_$next AS (SELECT sub.vec_id, sub.s, $prev.c,
+  /** One unrolled Lloyd iteration over sub-vector table `sub`,
+    * `prev` -> `next`: UNROUNDED-d2 argmin assignment, fixed-point per-dim
+    * means, empty cells fall back to the PREVIOUS codebook — generated
+    * once per training round so the oracle unroll can never drift from
+    * the Spark-side loop count (x39 trains over `sub`, x363 also over the
+    * residuals `rsub`). */
+  private def trainIter(sub: String, prev: String, next: String): String =
+    s"""td_$next AS (SELECT $sub.vec_id, $sub.s, $prev.c,
        |         ${pqDotS("sv", "sv")} - 2.0 * ${pqDotS("sv", "cv")} + ${pqDotS("cv", "cv")} AS d2
-       |       FROM sub JOIN $prev ON sub.s = $prev.s),
+       |       FROM $sub JOIN $prev ON $sub.s = $prev.s),
        |ta_$next AS (SELECT vec_id, s, c
        |       FROM (SELECT vec_id, s, c,
        |               row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, c) AS rn
@@ -963,7 +966,7 @@ object SimilarityQueries {
        |         CAST(CAST(sum(CAST(floor(CAST(sv[j] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
        |              / (CAST(count(*) AS DOUBLE) * 1000000.0) AS FLOAT) AS m
        |       FROM ta_$next
-       |       JOIN sub ON ta_$next.vec_id = sub.vec_id AND ta_$next.s = sub.s
+       |       JOIN $sub ON ta_$next.vec_id = $sub.vec_id AND ta_$next.s = $sub.s
        |       CROSS JOIN (SELECT unnest(range(1, ${PqSubD + 1})) AS j) jj
        |       GROUP BY ta_$next.s, ta_$next.c, j),
        |tmv_$next AS (SELECT s, c, list(m ORDER BY j) AS mv FROM tm_$next GROUP BY s, c),
@@ -972,7 +975,7 @@ object SimilarityQueries {
 
   private val pqTrainedOracle = {
     val iters = (0 until PqTrainIters)
-      .map(k => pqTrainIterSql(s"cb$k", s"cb${k + 1}")).mkString(",\n")
+      .map(k => trainIter("sub", s"cb$k", s"cb${k + 1}")).mkString(",\n")
     pqPrefixSql + ",\n" + iters + ",\n" + pqSearchTailSql(s"cb$PqTrainIters")
   }
 
@@ -1015,15 +1018,7 @@ object SimilarityQueries {
       .withColumn("prn", row_number().over(wProbe))
       .filter($"prn" <= IvfPqNprobe)
       .select($"q_id", $"cent_id")
-    val wCode = Window.partitionBy($"vec_id", $"s").orderBy($"d2", $"c")
-    val codes = sub
-      .join(broadcast(cb0), "s")
-      .select($"vec_id", $"s", $"c",
-        (Similarity.dot($"sv", $"sv") - lit(2.0) * Similarity.dot($"sv", $"cv")
-          + Similarity.dot($"cv", $"cv")).as("d2"))
-      .withColumn("rn", row_number().over(wCode))
-      .filter($"rn" === 1)
-      .select($"vec_id", $"s", $"c")
+    val codes = pqEncode(sub, cb0)
     val qdt = emb.filter($"vec_id" % 100 === 0)
       .select($"vec_id".as("q_id"), explode(subArr).as("sub"))
       .join(broadcast(cb0), col("sub.s") === cb0("s"))
@@ -1717,6 +1712,65 @@ object SimilarityQueries {
       .repartition(spark.sparkContext.defaultParallelism)
       .localCheckpoint(true)
 
+  /** The k nearest neighbours of each point from (a, b, d2fp) pairs, as
+    * (a, rk, b, d2fp): the bounded `topk_pairs` aggregate ships at most k
+    * pairs per point per map task, so the exchange is O(n·k). */
+  private def knnOf(pairs: DataFrame, k: Int): DataFrame =
+    pairs.groupBy(col("a"))
+      .agg(expr(s"topk_pairs(-d2fp, b, $k)").as("top"))
+      .select(col("a"), posexplode(col("top")))
+      .select(col("a"), (col("pos") + 1).as("rk"), col("col.id").as("b"),
+        (-col("col.v")).as("d2fp"))
+      .localCheckpoint(true)
+
+  /** LOF reachability (a, b, rd_fp) over a [[knnOf]] frame:
+    * rd(a, b) = max(kdist(b), d(a, b)) in 1e-6 fixed point, at least 1,
+    * where kdist(b) is the d2fp of b's own rk = k row. */
+  private def reachOf(knn: DataFrame, k: Int): DataFrame = {
+    val kdistOf = knn.filter(col("rk") === k)
+      .select(col("a").as("o"), col("d2fp").as("kd2"))
+    knn
+      .join(kdistOf.toDF("b", "kd2_b"), "b")
+      .select(col("a"), col("b"),
+        expr("greatest(CAST(floor(sqrt(greatest(kd2_b, d2fp) / 1000000.0)" +
+          " * 1000000 + 0.5) AS BIGINT), CAST(1 AS BIGINT))").as("rd_fp"))
+  }
+
+  /** The `top` highest (vec_id, lof_fp) scores, ranked. */
+  private def topLof(scores: DataFrame, top: Int): DataFrame =
+    scores
+      .withColumn("rk", row_number().over(
+        Window.orderBy(col("lof_fp").desc, col("vec_id"))).cast("long"))
+      .filter(col("rk") <= top)
+      .select(col("rk"), col("vec_id"), col("lof_fp"))
+      .orderBy(col("rk"))
+
+  /** Oracle rendering of [[knnOf]] and [[reachOf]] over a pairs CTE:
+    * `knn`, `kdist_of` and `reach`. */
+  private def reachSql(pairs: String, k: Int): String =
+    s"""knn AS MATERIALIZED (
+       |  SELECT a, b, d2fp, rk FROM (
+       |    SELECT a, b, d2fp,
+       |           row_number() OVER (PARTITION BY a ORDER BY d2fp, b) AS rk
+       |    FROM $pairs) t
+       |  WHERE rk <= $k),
+       |kdist_of AS MATERIALIZED (
+       |  SELECT a AS o, d2fp AS kd2 FROM knn WHERE rk = $k),
+       |reach AS (
+       |  SELECT k.a, k.b,
+       |         greatest(CAST(floor(sqrt(greatest(kd.kd2, k.d2fp) / 1000000.0)
+       |              * 1000000 + 0.5) AS BIGINT), 1) AS rd_fp
+       |  FROM knn k JOIN kdist_of kd ON kd.o = k.b)""".stripMargin
+
+  /** Oracle rendering of [[topLof]] over the `scores` CTE. */
+  private def topLofSql(top: Int): String =
+    s"""SELECT rk, vec_id, lof_fp FROM (
+       |  SELECT CAST(row_number() OVER (ORDER BY lof_fp DESC, vec_id)
+       |              AS BIGINT) AS rk, vec_id, lof_fp
+       |  FROM scores) t
+       |WHERE rk <= $top
+       |ORDER BY rk""".stripMargin
+
   /** x213: Local Outlier Factor, exactly: kNN for EVERY corpus vector
     * (squared L2 via the precomputed-norm identity ‖a‖²+‖b‖²−2a·b, the
     * x30 recipe), k-distance per point, reachability
@@ -1748,19 +1802,8 @@ object SimilarityQueries {
       .select($"a", $"b",
         floor(($"na2" + $"nb2" - Similarity.dot($"av", $"bv") * 2) * 1e6 + 0.5)
           .cast("long").as("d2fp"))
-    val knn = pairs.groupBy($"a")
-      .agg(expr(s"topk_pairs(-d2fp, b, $LofK)").as("top"))
-      .select($"a", posexplode($"top"))
-      .select($"a", ($"pos" + 1).as("rk"), $"col.id".as("b"),
-        (-$"col.v").as("d2fp"))
-      .localCheckpoint(true)
-    // kdist keyed by the POINT whose neighborhood it is: rk==K row of a.
-    val kdistOf = knn.filter($"rk" === LofK).select($"a".as("o"), $"d2fp".as("kd2"))
-    val reach = knn
-      .join(kdistOf.toDF("b", "kd2_b"), "b")
-      .select($"a", $"b",
-        expr("greatest(CAST(floor(sqrt(greatest(kd2_b, d2fp) / 1000000.0)" +
-          " * 1000000 + 0.5) AS BIGINT), CAST(1 AS BIGINT))").as("rd_fp"))
+    val knn = knnOf(pairs, LofK)
+    val reach = reachOf(knn, LofK)
     val lrd = reach.groupBy($"a")
       .agg(sum($"rd_fp").as("srd"))
       .select($"a", expr(s"CAST($LofK AS BIGINT) * 1000000000000 div srd")
@@ -1772,41 +1815,19 @@ object SimilarityQueries {
       .join(lrd.toDF("a", "lrd_p"), "a")
       .select($"a".as("vec_id"),
         expr(s"(slrd * 1000000) div ($LofK * lrd_p)").as("lof_fp"))
-    lofScores
-      .withColumn("rk", row_number().over(
-        Window.orderBy($"lof_fp".desc, $"vec_id")).cast("long"))
-      .filter($"rk" <= LofTop)
-      .select($"rk", $"vec_id", $"lof_fp")
-      .orderBy($"rk")
+    topLof(lofScores, LofTop)
   }
 
   private val lofOracle = {
     val dot = "list_sum(list_transform(range(1, len(e1.embedding) + 1)," +
       " i -> CAST(e1.embedding[i] AS DOUBLE) * CAST(e2.embedding[i] AS DOUBLE)))"
-    s"""WITH norms AS MATERIALIZED (
-       |  SELECT vec_id, embedding,
-       |         list_sum(list_transform(range(1, len(embedding) + 1),
-       |           i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))
-       |           AS n2
-       |  FROM embeddings),
+    s"""WITH $normsCte,
        |pairs AS MATERIALIZED (
        |  SELECT e1.vec_id AS a, e2.vec_id AS b,
        |         CAST(floor((e1.n2 + e2.n2 - $dot * 2) * 1000000 + 0.5)
        |              AS BIGINT) AS d2fp
        |  FROM norms e1 JOIN norms e2 ON e1.vec_id <> e2.vec_id),
-       |knn AS MATERIALIZED (
-       |  SELECT a, b, d2fp, rk FROM (
-       |    SELECT a, b, d2fp,
-       |           row_number() OVER (PARTITION BY a ORDER BY d2fp, b) AS rk
-       |    FROM pairs) t
-       |  WHERE rk <= $LofK),
-       |kdist_of AS MATERIALIZED (
-       |  SELECT a AS o, d2fp AS kd2 FROM knn WHERE rk = $LofK),
-       |reach AS (
-       |  SELECT k.a, k.b,
-       |         greatest(CAST(floor(sqrt(greatest(kd.kd2, k.d2fp) / 1000000.0)
-       |              * 1000000 + 0.5) AS BIGINT), 1) AS rd_fp
-       |  FROM knn k JOIN kdist_of kd ON kd.o = k.b),
+       |${reachSql("pairs", LofK)},
        |lrd AS MATERIALIZED (
        |  SELECT a, CAST($LofK * 1000000000000 // sum(rd_fp) AS BIGINT) AS lrd_fp
        |  FROM reach GROUP BY a),
@@ -1818,12 +1839,7 @@ object SimilarityQueries {
        |  JOIN lrd lo ON lo.a = k.b
        |  JOIN lrd lp ON lp.a = k.a
        |  GROUP BY k.a)
-       |SELECT rk, vec_id, lof_fp FROM (
-       |  SELECT CAST(row_number() OVER (ORDER BY lof_fp DESC, vec_id)
-       |              AS BIGINT) AS rk, vec_id, lof_fp
-       |  FROM scores) t
-       |WHERE rk <= $LofTop
-       |ORDER BY rk""".stripMargin
+       |${topLofSql(LofTop)}""".stripMargin
   }
 
   /* Hubness in high-dimensional retrieval —
@@ -1860,15 +1876,7 @@ object SimilarityQueries {
     // rank stages run as the x192 bounded top-k AGGREGATE — map tasks
     // ship ≤k pairs per point, so no n²-row window shuffle anywhere; the
     // result order (cos_fp DESC, b ASC) is exactly the old window's.
-    val pairs = emb.toDF("a", "av", "n2a")
-      .join(broadcast(emb.toDF("b", "bv", "n2b")), $"a" =!= $"b")
-      .select($"a", $"b",
-        expr(cosFpSql("vec_dot(av, bv)")).as("cos_fp"))
-    val knn = pairs.groupBy($"a")
-      .agg(expr(s"topk_pairs(cos_fp, b, $CslsK)").as("top"))
-      .select($"a", explode($"top").as("p"))
-      .select($"a", $"p.id".as("b"), $"p.v".as("cos_fp"))
-    val r = knn.groupBy($"a")
+    val r = cosKnn(emb).groupBy($"a")
       .agg(expr("sum(cos_fp) div count(1)").as("r_fp"))
       .localCheckpoint(true)
     val q = emb.filter($"vec_id" % 50 === 0)
@@ -1894,12 +1902,36 @@ object SimilarityQueries {
       .orderBy($"qid", $"rk")
   }
 
+  /** The [[CslsK]] cosine nearest neighbours (a, b, cos_fp) of every
+    * [[pairStageEmbeddings]] vector, ranked by (cos_fp DESC, b) with the
+    * bounded `topk_pairs` aggregate. */
+  private def cosKnn(emb: DataFrame): DataFrame =
+    emb.toDF("a", "av", "n2a")
+      .join(broadcast(emb.toDF("b", "bv", "n2b")), col("a") =!= col("b"))
+      .select(col("a"), col("b"),
+        expr(cosFpSql("vec_dot(av, bv)")).as("cos_fp"))
+      .groupBy(col("a"))
+      .agg(expr(s"topk_pairs(cos_fp, b, $CslsK)").as("top"))
+      .select(col("a"), explode(col("top")).as("p"))
+      .select(col("a"), col("p.id").as("b"), col("p.v").as("cos_fp"))
+
+  /** `norms`, then `pairs(a, b, cos_fp)` over all ordered pairs: the
+    * oracle side of [[cosKnn]] before its ranking. */
+  private def cosPairsSql: String =
+    s"""$normsCte,
+       |pairs AS MATERIALIZED (
+       |  SELECT e1.vec_id AS a, e2.vec_id AS b,
+       |         ${oracleCos("e1", "e2")} AS cos_fp
+       |  FROM norms e1 JOIN norms e2 ON e1.vec_id <> e2.vec_id)""".stripMargin
+
   private def oracleCos(a: String, b: String) =
     s"""CAST(floor(list_sum(list_transform(range(1, len($a.embedding) + 1),
        |    i -> CAST($a.embedding[i] AS DOUBLE) * CAST($b.embedding[i] AS DOUBLE)))
        |  / (sqrt($a.n2) * sqrt($b.n2)) * 1000000 + 0.5) AS BIGINT)""".stripMargin
 
-  private val normsCte =
+  /** Squared norms of the corpus vectors: the `norms(vec_id, embedding,
+    * n2)` CTE (a def: oracles above it in this object read it). */
+  private def normsCte: String =
     """norms AS MATERIALIZED (
       |  SELECT vec_id, embedding,
       |         list_sum(list_transform(range(1, len(embedding) + 1),
@@ -1908,11 +1940,7 @@ object SimilarityQueries {
       |  FROM embeddings)""".stripMargin
 
   private val cslsOracle =
-    s"""WITH $normsCte,
-       |pairs AS MATERIALIZED (
-       |  SELECT e1.vec_id AS a, e2.vec_id AS b,
-       |         ${oracleCos("e1", "e2")} AS cos_fp
-       |  FROM norms e1 JOIN norms e2 ON e1.vec_id <> e2.vec_id),
+    s"""WITH $cosPairsSql,
        |knn AS (
        |  SELECT a, b, cos_fp,
        |         row_number() OVER (PARTITION BY a ORDER BY cos_fp DESC, b) AS rk
@@ -1950,14 +1978,7 @@ object SimilarityQueries {
     val emb = pairStageEmbeddings(spark, dir)
     // r11 scale fix: bounded top-k aggregate instead of the n²-row window
     // (see cslsTopk above — same shape, same result order).
-    val pairs = emb.toDF("a", "av", "n2a")
-      .join(broadcast(emb.toDF("b", "bv", "n2b")), $"a" =!= $"b")
-      .select($"a", $"b",
-        expr(cosFpSql("vec_dot(av, bv)")).as("cos_fp"))
-    val knn = pairs.groupBy($"a")
-      .agg(expr(s"topk_pairs(cos_fp, b, $CslsK)").as("top"))
-      .select($"a", explode($"top").as("p"))
-      .select($"a", $"p.id".as("b"))
+    val knn = cosKnn(emb)
     val nk = emb.select($"vec_id")
       .join(knn.groupBy($"b").agg(count(lit(1)).as("k_occ")),
         $"vec_id" === $"b", "left")
@@ -1994,11 +2015,7 @@ object SimilarityQueries {
   }
 
   private val hubnessOracle =
-    s"""WITH $normsCte,
-       |pairs AS MATERIALIZED (
-       |  SELECT e1.vec_id AS a, e2.vec_id AS b,
-       |         ${oracleCos("e1", "e2")} AS cos_fp
-       |  FROM norms e1 JOIN norms e2 ON e1.vec_id <> e2.vec_id),
+    s"""WITH $cosPairsSql,
        |knn AS (
        |  SELECT a, b FROM (
        |    SELECT a, b,
@@ -2090,18 +2107,8 @@ object SimilarityQueries {
         floor(($"an" * $"an" + $"bn" * $"bn"
           - graft.operators.Similarity.dot($"av", $"bv") * 2) * 1e6 + 0.5)
           .cast("long").as("d2fp"))
-    val knn = cand.groupBy($"a")
-      .agg(expr(s"topk_pairs(-d2fp, b, $IvfLofK)").as("top"))
-      .select($"a", posexplode($"top"))
-      .select($"a", ($"pos" + 1).as("rk"), $"col.id".as("b"),
-        (-$"col.v").as("d2fp"))
-      .localCheckpoint(true)
-    val kdistOf = knn.filter($"rk" === IvfLofK).select($"a".as("o"), $"d2fp".as("kd2"))
-    val reach = knn
-      .join(kdistOf.toDF("b", "kd2_b"), "b")
-      .select($"a", $"b",
-        expr("greatest(CAST(floor(sqrt(greatest(kd2_b, d2fp) / 1000000.0)" +
-          " * 1000000 + 0.5) AS BIGINT), CAST(1 AS BIGINT))").as("rd_fp"))
+    val knn = knnOf(cand, IvfLofK)
+    val reach = reachOf(knn, IvfLofK)
     val lrd = reach.groupBy($"a")
       .agg(count(lit(1)).as("nk"), sum($"rd_fp").as("srd"))
       .select($"a", expr("nk * 1000000000000 div srd").as("lrd_fp"))
@@ -2112,12 +2119,7 @@ object SimilarityQueries {
       .join(lrd.toDF("a", "lrd_p"), "a")
       .select($"a".as("vec_id"),
         expr("(slrd * 1000000) div (nn * lrd_p)").as("lof_fp"))
-    lofScores
-      .withColumn("rk", row_number().over(
-        Window.orderBy($"lof_fp".desc, $"vec_id")).cast("long"))
-      .filter($"rk" <= IvfLofTop)
-      .select($"rk", $"vec_id", $"lof_fp")
-      .orderBy($"rk")
+    topLof(lofScores, IvfLofTop)
   }
 
   private val ivfLofOracle = {
@@ -2143,19 +2145,7 @@ object SimilarityQueries {
        |              AS BIGINT) AS d2fp
        |  FROM probes p JOIN assigned s USING (cent_id)
        |  WHERE s.b <> p.a),
-       |knn AS MATERIALIZED (
-       |  SELECT a, b, d2fp, rk FROM (
-       |    SELECT a, b, d2fp,
-       |           row_number() OVER (PARTITION BY a ORDER BY d2fp, b) AS rk
-       |    FROM cand) t
-       |  WHERE rk <= $IvfLofK),
-       |kdist_of AS MATERIALIZED (
-       |  SELECT a AS o, d2fp AS kd2 FROM knn WHERE rk = $IvfLofK),
-       |reach AS (
-       |  SELECT k.a, k.b,
-       |         greatest(CAST(floor(sqrt(greatest(kd.kd2, k.d2fp) / 1000000.0)
-       |              * 1000000 + 0.5) AS BIGINT), 1) AS rd_fp
-       |  FROM knn k JOIN kdist_of kd ON kd.o = k.b),
+       |${reachSql("cand", IvfLofK)},
        |lrd AS MATERIALIZED (
        |  SELECT a, CAST(count(*) * 1000000000000 // sum(rd_fp) AS BIGINT)
        |           AS lrd_fp
@@ -2168,12 +2158,7 @@ object SimilarityQueries {
        |  JOIN lrd lo ON lo.a = k.b
        |  JOIN lrd lp ON lp.a = k.a
        |  GROUP BY k.a)
-       |SELECT rk, vec_id, lof_fp FROM (
-       |  SELECT CAST(row_number() OVER (ORDER BY lof_fp DESC, vec_id)
-       |              AS BIGINT) AS rk, vec_id, lof_fp
-       |  FROM scores) t
-       |WHERE rk <= $IvfLofTop
-       |ORDER BY rk""".stripMargin
+       |${topLofSql(IvfLofTop)}""".stripMargin
   }
 
   /* Density clustering over the banded embedding
@@ -2393,16 +2378,8 @@ object SimilarityQueries {
   }
 
   private val marginBitextOracle = {
-    val cos =
-      """CAST(floor(list_sum(list_transform(range(1, len(s.embedding) + 1),
-        |    i -> CAST(s.embedding[i] AS DOUBLE) * CAST(t.embedding[i] AS DOUBLE)))
-        |  / (sqrt(s.n2) * sqrt(t.n2)) * 1000000 + 0.5) AS BIGINT)""".stripMargin
-    s"""WITH norms AS MATERIALIZED (
-       |  SELECT vec_id, embedding,
-       |         list_sum(list_transform(range(1, len(embedding) + 1),
-       |           i -> CAST(embedding[i] AS DOUBLE) * CAST(embedding[i] AS DOUBLE)))
-       |           AS n2
-       |  FROM embeddings),
+    val cos = oracleCos("s", "t")
+    s"""WITH $normsCte,
        |pairs AS MATERIALIZED (
        |  SELECT s.vec_id AS a, t.vec_id AS b, $cos + 1000000 AS sim_fp
        |  FROM norms s JOIN norms t
@@ -2648,28 +2625,6 @@ object SimilarityQueries {
   private def dotF(a: String, b: String) = dotN(a, b, 64)
   private def sliceX363(v: String, tbl: String) =
     s"list_slice($v, $tbl.s * $SubD + 1, $tbl.s * $SubD + $SubD)"
-
-  /** One unrolled Lloyd iteration over sub-vector table `sub`:
-    * `prev` -> `next` (the x39 template, parameterized by source table). */
-  private def trainIter(sub: String, prev: String, next: String): String =
-    s"""td_$next AS (SELECT $sub.vec_id, $sub.s, $prev.c,
-       |         ${dotS("sv", "sv")} - 2.0 * ${dotS("sv", "cv")} + ${dotS("cv", "cv")} AS d2
-       |       FROM $sub JOIN $prev ON $sub.s = $prev.s),
-       |ta_$next AS (SELECT vec_id, s, c
-       |       FROM (SELECT vec_id, s, c,
-       |               row_number() OVER (PARTITION BY vec_id, s ORDER BY d2, c) AS rn
-       |             FROM td_$next)
-       |       WHERE rn = 1),
-       |tm_$next AS (SELECT ta_$next.s, ta_$next.c, j,
-       |         CAST(CAST(sum(CAST(floor(CAST(sv[j] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT)) AS DOUBLE)
-       |              / (CAST(count(*) AS DOUBLE) * 1000000.0) AS FLOAT) AS m
-       |       FROM ta_$next
-       |       JOIN $sub ON ta_$next.vec_id = $sub.vec_id AND ta_$next.s = $sub.s
-       |       CROSS JOIN (SELECT unnest(range(1, ${SubD + 1})) AS j) jj
-       |       GROUP BY ta_$next.s, ta_$next.c, j),
-       |tmv_$next AS (SELECT s, c, list(m ORDER BY j) AS mv FROM tm_$next GROUP BY s, c),
-       |$next AS (SELECT $prev.s, $prev.c, coalesce(tmv_$next.mv, $prev.cv) AS cv
-       |        FROM $prev LEFT JOIN tmv_$next ON $prev.s = tmv_$next.s AND $prev.c = tmv_$next.c)""".stripMargin
 
   private def seedCase(seeds: Seq[Long]) = seeds.zipWithIndex
     .map { case (id, c) => s"WHEN vec_id = $id THEN $c" }

@@ -1247,11 +1247,7 @@ object StatsQueries {
     * grows the moment vector quadratically, not the data passes. */
   def olsMulti(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.orders(spark, dir)
-      .filter(year($"o_orderdate") <= 1997)
-      .groupBy(datediff($"o_orderdate", lit("1995-01-01").cast("date"))
-        .cast("long").as("di"))
-      .agg(sum(floor($"o_totalprice" + 0.5).cast("long")).as("y"))
+    val daily = TimeSeriesQueries.dailyOrderDollars(spark, dir)
       .select($"di", $"y",
         when(pmod($"di", lit(7L)) >= 5L, 1L).otherwise(0L).as("w"))
     val m = daily.agg(
@@ -2840,6 +2836,27 @@ object StatsQueries {
 
   // ---------------------------------------------------------------- x333
 
+  /** Per-quantity counts of each return flag: (v, ca, cn, cr), the one
+    * corpus pass of the median-based k-sample tests. */
+  private def quantityFlagCensus(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Tables.lineitem(spark, dir)
+      .select($"l_quantity".cast("long").as("v"), $"l_returnflag".as("g"))
+      .groupBy($"v")
+      .agg(sum(when($"g" === "A", 1L).otherwise(0L)).as("ca"),
+        sum(when($"g" === "N", 1L).otherwise(0L)).as("cn"),
+        sum(when($"g" === "R", 1L).otherwise(0L)).as("cr"))
+  }
+
+  /** Oracle rendering of [[quantityFlagCensus]]: the `census` CTE. */
+  private def quantityFlagCensusSql: String =
+    """census AS MATERIALIZED (
+      |  SELECT CAST(l_quantity AS BIGINT) AS v,
+      |         CAST(sum(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
+      |         CAST(sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END) AS BIGINT) AS cn,
+      |         CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS cr
+      |  FROM lineitem GROUP BY 1)""".stripMargin
+
   /** x333: Brown–Forsythe test — do the three return flags have equal
     * quantity SPREAD (not location)? z_ij = |x_ij − median_g| with the
     * group median taken off the 50-value census as a DOUBLED median
@@ -2857,12 +2874,7 @@ object StatsQueries {
     * (broadcast cross joins of one-row scalar frames). */
   def brownForsythe(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val census = Tables.lineitem(spark, dir)
-      .select($"l_quantity".cast("long").as("v"), $"l_returnflag".as("g"))
-      .groupBy($"v")
-      .agg(sum(when($"g" === "A", 1L).otherwise(0L)).as("ca"),
-        sum(when($"g" === "N", 1L).otherwise(0L)).as("cn"),
-        sum(when($"g" === "R", 1L).otherwise(0L)).as("cr"))
+    val census = quantityFlagCensus(spark, dir)
     val w = Window.orderBy($"v").rowsBetween(Long.MinValue, 0)
     val cum = census
       .withColumn("cuma", sum($"ca").over(w))
@@ -2902,12 +2914,7 @@ object StatsQueries {
   }
 
   private val brownForsytheOracle =
-    s"""WITH census AS MATERIALIZED (
-       |  SELECT CAST(l_quantity AS BIGINT) AS v,
-       |         CAST(sum(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-       |         CAST(sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END) AS BIGINT) AS cn,
-       |         CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS cr
-       |  FROM lineitem GROUP BY 1),
+    s"""WITH $quantityFlagCensusSql,
        |cum AS (
        |  SELECT *,
        |         sum(ca) OVER (ORDER BY v) AS cuma,
@@ -3266,12 +3273,7 @@ object StatsQueries {
     * χ² run on ≤ 50 rows. */
   def moodsMedian(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val census = Tables.lineitem(spark, dir)
-      .select($"l_quantity".cast("long").as("v"), $"l_returnflag".as("g"))
-      .groupBy($"v")
-      .agg(sum(when($"g" === "A", 1L).otherwise(0L)).as("ca"),
-        sum(when($"g" === "N", 1L).otherwise(0L)).as("cn"),
-        sum(when($"g" === "R", 1L).otherwise(0L)).as("cr"))
+    val census = quantityFlagCensus(spark, dir)
       .withColumn("t", $"ca" + $"cn" + $"cr")
     val w = Window.orderBy($"v").rowsBetween(Window.unboundedPreceding, 0)
     val cum = census.withColumn("cumt", sum($"t").over(w))
@@ -3306,12 +3308,7 @@ object StatsQueries {
   }
 
   private val moodsMedianOracle =
-    s"""WITH census AS MATERIALIZED (
-       |  SELECT CAST(l_quantity AS BIGINT) AS v,
-       |         CAST(sum(CASE WHEN l_returnflag = 'A' THEN 1 ELSE 0 END) AS BIGINT) AS ca,
-       |         CAST(sum(CASE WHEN l_returnflag = 'N' THEN 1 ELSE 0 END) AS BIGINT) AS cn,
-       |         CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS cr
-       |  FROM lineitem GROUP BY 1),
+    s"""WITH $quantityFlagCensusSql,
        |cum AS (
        |  SELECT *, ca + cn + cr AS t,
        |         sum(ca + cn + cr) OVER (ORDER BY v) AS cumt

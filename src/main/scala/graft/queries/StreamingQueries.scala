@@ -18,6 +18,22 @@ import org.apache.spark.sql.types._
   * must respect the operator's ordering contract. */
 object StreamingQueries {
 
+  /** Drains a `transformWithState` stream on the RocksDB state store (the
+    * only provider the operator runs on) with 8 shuffle partitions: the
+    * emissions are staged as parquet by the executors (no driver buffer)
+    * and checkpointed, then the temp tree under `base` is deleted. */
+  private def drainTws(spark: SparkSession, stream: DataFrame, base: String,
+                       outputMode: String = "update"): DataFrame = {
+    val emitted = QueryUtil.withConfs(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.shuffle.partitions" -> "8") {
+      QueryUtil.stageStream(spark, stream, base, outputMode)
+    }
+    QueryUtil.deleteRecursively(base)
+    emitted
+  }
+
   /* Opens with the batch-parity pair for the stateful
    * streaming top-k (`IncrementalStream.topkStream`), closing the r8 gap
    * where that operator was spec-only.
@@ -404,15 +420,20 @@ object StreamingQueries {
     * file-drop pipeline provides naturally (x138's staging, keyed on an
     * arbitrary long column). */
   private def stageSlicesBy(df: DataFrame, colName: String, cuts: Seq[Long],
-      dir: String): Unit = {
-    val bounds = (Long.MinValue +: cuts) zip (cuts :+ Long.MaxValue)
+      dir: String): Unit =
     // r16: snapshot the cohort ONCE — each staged slice used to re-run the
     // whole upstream scan+projection per filter (N+1 slices = N+1 parquet
     // scans); the slices now filter the in-memory snapshot. Bench/Verify
     // unpersist checkpoint blocks between queries.
-    val snap = df.localCheckpoint(true)
+    stageCuts(df.localCheckpoint(true), colName, cuts, dir)
+
+  /** [[stageSlicesBy]] without the snapshot, for a `df` that is already
+    * one (checkpointed once for the slices and its other readers). */
+  private def stageCuts(df: DataFrame, colName: String, cuts: Seq[Long],
+      dir: String): Unit = {
+    val bounds = (Long.MinValue +: cuts) zip (cuts :+ Long.MaxValue)
     QueryUtil.stageFrames(bounds.map { case (lo, hi) =>
-      snap.filter(col(colName) >= lo && col(colName) < hi)
+      df.filter(col(colName) >= lo && col(colName) < hi)
     }, dir)
   }
 
@@ -672,10 +693,7 @@ object StreamingQueries {
           .cast("long").as("sec"),
         $"event_id", $"event_type")
       .localCheckpoint(true) // r16: one scan for all staged slices
-    val bounds = (Long.MinValue +: SecCuts) zip (SecCuts :+ Long.MaxValue)
-    QueryUtil.stageFrames(bounds.map { case (lo, hi) =>
-      ev.filter($"sec" >= lo && $"sec" < hi)
-    }, s"$base/src")
+    stageCuts(ev, "sec", SecCuts, s"$base/src")
     val dim = Tables.nation(spark, dir).select($"n_nationkey", $"n_name")
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
@@ -732,10 +750,7 @@ object StreamingQueries {
           .cast("long").as("sec"),
         datediff(to_date($"ts"), lit("2024-01-01")).as("dayn"))
       .localCheckpoint(true) // r16: one scan for 3 staged slices + the batch arm
-    val bounds = (Long.MinValue +: SecCuts) zip (SecCuts :+ Long.MaxValue)
-    QueryUtil.stageFrames(bounds.map { case (lo, hi) =>
-      ev.filter($"sec" >= lo && $"sec" < hi)
-    }, s"$base/src")
+    stageCuts(ev, "sec", SecCuts, s"$base/src")
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
     // Per-batch partial day-sketches — the state a sketch store keeps —
@@ -804,23 +819,12 @@ object StreamingQueries {
           .cast("long").as("sec"),
         floor($"value" * 100 + 0.5).cast("long").as("cents"))
       .localCheckpoint(true) // r16: one scan for all staged slices
-    val bounds = (Long.MinValue +: SliceCutsX207) zip (SliceCutsX207 :+ Long.MaxValue)
-    QueryUtil.stageFrames(bounds.map { case (lo, hi) =>
-      purchases.filter($"sec" >= lo && $"sec" < hi)
-    }, s"$base/src")
+    stageCuts(purchases, "sec", SliceCutsX207, s"$base/src")
     val stream = spark.readStream.schema(purchases.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
     val totals = graft.streaming.IncrementalStream.twsUserTotals(
       stream.select($"user_id", $"cents").as[(Long, Long)])
-    // Executor-side parquet staging (no driver buffer) + full temp-tree
-    // cleanup once the emissions are checkpointed.
-    val emitted = QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "8") {
-      QueryUtil.stageStream(spark, totals.toDF(), base)
-    }
-    QueryUtil.deleteRecursively(base)
+    val emitted = drainTws(spark, totals.toDF(), base)
     // Last emission per user = the row with the maximal running count
     // (counts only grow; ties impossible within a key).
     emitted.groupBy($"user_id")
@@ -855,7 +859,8 @@ object StreamingQueries {
   private val SliceCutsX231 = Seq(1704800000L, 1705800000L)
 
   /** x231: timer parity — user sessions (30-min gap) maintained by
-    * [[graft.streaming.IncrementalStream.TwsTimerSessionProcessor]]:
+    * [[graft.streaming.IncrementalStream.twsTimerSessions]] (the one
+    * timer-session processor with a constant gap):
     * every session is held in ListState and flushes ONLY from
     * `handleExpiredTimer` once the event-time watermark passes
     * end+gap (AvailableNow runs a final watermark-only batch, so
@@ -879,10 +884,7 @@ object StreamingQueries {
       .select($"user_id", $"sec",
         $"sec".cast("timestamp").as("ts"))
       .localCheckpoint(true) // r16: one scan for all staged slices
-    val bounds = (Long.MinValue +: SliceCutsX231) zip (SliceCutsX231 :+ Long.MaxValue)
-    QueryUtil.stageFrames(bounds.map { case (lo, hi) =>
-      ev.filter($"sec" >= lo && $"sec" < hi)
-    }, s"$base/src")
+    stageCuts(ev, "sec", SliceCutsX231, s"$base/src")
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("sec", LongType), StructField("ts", TimestampType)))
     val stream = spark.readStream.schema(schema)
@@ -891,14 +893,7 @@ object StreamingQueries {
       .as[(Long, Long, java.sql.Timestamp)]
     val sessions = graft.streaming.IncrementalStream
       .twsTimerSessions(stream, GapSec)
-    // Executor-side parquet staging + temp-tree cleanup.
-    val emitted = QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "8") {
-      QueryUtil.stageStream(spark, sessions.toDF(), base, "append")
-    }
-    QueryUtil.deleteRecursively(base)
+    val emitted = drainTws(spark, sessions.toDF(), base, "append")
     emitted.orderBy($"user_id", $"start_sec")
   }
 
@@ -1197,17 +1192,6 @@ object StreamingQueries {
   /** Deterministic user sample for x299 (bounds the emitted panel). */
   private val MapUserMod = 20L
 
-  private def stageEventSlices(spark: SparkSession, dir: String, base: String,
-                               df: DataFrame): Unit = {
-    import spark.implicits._
-    val bounds = (Long.MinValue +: SliceCutsX299) zip (SliceCutsX299 :+ Long.MaxValue)
-    // r16: snapshot once — slices filter the checkpoint, not a re-scan
-    val snap = df.localCheckpoint(true)
-    QueryUtil.stageFrames(
-      bounds.map { case (lo, hi) => snap.filter($"sec" >= lo && $"sec" < hi) },
-      s"$base/src")
-  }
-
   /** x299: `transformWithState` MAP-STATE batch parity — per-user counts
     * keyed by event type in an explicit `MapState[String, Long]`
     * ([[graft.streaming.IncrementalStream.TwsTypeCountProcessor]]),
@@ -1231,18 +1215,12 @@ object StreamingQueries {
       .select($"user_id", $"event_type",
         expr("unix_timestamp(cast(date_trunc('second', ts) as timestamp))")
           .cast("long").as("sec"))
-    stageEventSlices(spark, dir, base, ev)
+    stageSlicesBy(ev, "sec", SliceCutsX299, s"$base/src")
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
     val counts = graft.streaming.IncrementalStream.twsTypeCounts(
       stream.select($"user_id", $"event_type").as[(Long, String)])
-    val emitted = QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "8") {
-      QueryUtil.stageStream(spark, counts.toDF(), base)
-    }
-    QueryUtil.deleteRecursively(base)
+    val emitted = drainTws(spark, counts.toDF(), base)
     emitted.groupBy($"user_id", $"event_type")
       .agg(max($"n").as("n"))
       .orderBy($"user_id", $"event_type")
@@ -1279,18 +1257,12 @@ object StreamingQueries {
         floor($"value" * 100 + 0.5).cast("long").as("cents"),
         expr("unix_timestamp(cast(date_trunc('second', ts) as timestamp))")
           .cast("long").as("sec"))
-    stageEventSlices(spark, dir, base, ev)
+    stageSlicesBy(ev, "sec", SliceCutsX299, s"$base/src")
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
     val sums = graft.streaming.IncrementalStream.twsPurchaseLog(
       stream.select($"user_id", $"cents").as[(Long, Long)])
-    val emitted = QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "8") {
-      QueryUtil.stageStream(spark, sums.toDF(), base)
-    }
-    QueryUtil.deleteRecursively(base)
+    val emitted = drainTws(spark, sums.toDF(), base)
     // last emission per user = maximal running count (monotone)
     emitted.groupBy($"user_id")
       .agg(max(struct($"n", $"cents", $"min_cents")).as("s"))
@@ -1340,19 +1312,13 @@ object StreamingQueries {
         expr("unix_timestamp(cast(date_trunc('second', ts) as timestamp))")
           .cast("long").as("sec"),
         $"event_id")
-    stageEventSlices(spark, dir, base, ev)
+    stageSlicesBy(ev, "sec", SliceCutsX299, s"$base/src")
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
     val stats = graft.streaming.IncrementalStream.twsTokenBucket(
       stream.select($"user_id", $"sec", $"event_id").as[(Long, Long, Long)],
       BucketCap, BucketRefillSec)
-    val emitted = QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "8") {
-      QueryUtil.stageStream(spark, stats.toDF(), base)
-    }
-    QueryUtil.deleteRecursively(base)
+    val emitted = drainTws(spark, stats.toDF(), base)
     emitted.groupBy($"user_id")
       .agg(max($"admitted").as("admitted"), max($"dropped").as("dropped"))
       .orderBy($"user_id")
@@ -1439,13 +1405,7 @@ object StreamingQueries {
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
     val totals = graft.streaming.IncrementalStream.twsWarmTotals(
       stream.select($"user_id", $"cents").as[(Long, Long)], init)
-    val emitted = QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "8") {
-      QueryUtil.stageStream(spark, totals.toDF(), base)
-    }
-    QueryUtil.deleteRecursively(base)
+    val emitted = drainTws(spark, totals.toDF(), base)
     emitted.groupBy($"user_id")
       .agg(max($"n").as("n"), max($"cents").as("cents"))
       .orderBy($"user_id")
@@ -1509,6 +1469,19 @@ object StreamingQueries {
     dynGapSessions(ev).orderBy($"user_id", $"start_sec")
   }
 
+  /** Session ids over `runs(user_id, sec, …, prev_max)`, `prev_max` the
+    * running max of the earlier window ends: a session breaks where sec
+    * passes it (`brk`), and `sid.s` numbers the sessions. */
+  private def sessionIdsSql: String =
+    """brk AS (
+      |  SELECT *, CASE WHEN prev_max IS NULL OR sec > prev_max
+      |                 THEN 1 ELSE 0 END AS b
+      |  FROM runs),
+      |sid AS (
+      |  SELECT *, sum(b) OVER (PARTITION BY user_id ORDER BY sec
+      |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
+      |  FROM brk)""".stripMargin
+
   /** Shared oracle body: batch dynamic-gap sessionization of the
     * second-truncated events. */
   private def dynGapOracleSql: String =
@@ -1524,14 +1497,7 @@ object StreamingQueries {
        |         max(sec + gap) OVER (PARTITION BY user_id ORDER BY sec
        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max
        |  FROM e),
-       |brk AS (
-       |  SELECT *, CASE WHEN prev_max IS NULL OR sec > prev_max
-       |                 THEN 1 ELSE 0 END AS b
-       |  FROM runs),
-       |sid AS (
-       |  SELECT *, sum(b) OVER (PARTITION BY user_id ORDER BY sec
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-       |  FROM brk)
+       |$sessionIdsSql
        |SELECT user_id, CAST(min(sec) AS BIGINT) AS start_sec,
        |       CAST(max(endv) AS BIGINT) AS end_sec,
        |       CAST(sum(cnt) AS BIGINT) AS n_events,
@@ -1645,14 +1611,7 @@ object StreamingQueries {
        |         max(sec + gap) OVER (PARTITION BY user_id ORDER BY sec
        |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max
        |  FROM e),
-       |brk AS (
-       |  SELECT *, CASE WHEN prev_max IS NULL OR sec > prev_max
-       |                 THEN 1 ELSE 0 END AS b
-       |  FROM runs),
-       |sid AS (
-       |  SELECT *, sum(b) OVER (PARTITION BY user_id ORDER BY sec
-       |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS s
-       |  FROM brk),
+       |$sessionIdsSql,
        |sess AS (
        |  SELECT user_id, CAST(min(sec) AS BIGINT) AS start_sec,
        |         CAST(max(endv) AS BIGINT) AS end_sec,
@@ -1701,23 +1660,12 @@ object StreamingQueries {
       .select(expr("CAST(datediff(CAST(ts AS DATE), DATE '1970-01-01') AS BIGINT)").as("day"))
       .groupBy($"day").agg(count(lit(1)).as("x"))
       .select(lit(0L).as("k"), $"day", $"x")
-    val bounds = (Long.MinValue +: PhSliceCuts) zip (PhSliceCuts :+ Long.MaxValue)
-    // r16: snapshot once — slices filter the checkpoint, not a re-aggregation
-    val snap = daily.localCheckpoint(true)
-    QueryUtil.stageFrames(
-      bounds.map { case (lo, hi) => snap.filter($"day" >= lo && $"day" < hi) },
-      s"$base/src")
+    stageSlicesBy(daily, "day", PhSliceCuts, s"$base/src")
     val stream = spark.readStream.schema(daily.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
     val points = graft.streaming.IncrementalStream.twsPageHinkley(
       stream.select($"k", $"day", $"x").as[(Long, Long, Long)], TimeSeriesQueries.PhDeltaMicro)
-    val emitted = QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "8") {
-      QueryUtil.stageStream(spark, points.toDF(), base)
-    }
-    QueryUtil.deleteRecursively(base)
+    val emitted = drainTws(spark, points.toDF(), base)
     emitted.select($"day", $"x", $"m_t", $"ph",
       when($"ph" > TimeSeriesQueries.PhLambdaMicro, 1L).otherwise(0L).as("alarm"))
       .orderBy($"day")
@@ -1737,8 +1685,8 @@ object StreamingQueries {
    * state machine — x323 proved the built-in
    * `session_window(ts, CASE …)` append contract; this proves
    * [[graft.streaming.IncrementalStream.TwsDynTimerSessionProcessor]]
-   * (ListState + event-time timers, the same audited contract as the
-   * fixed-gap x231 processor) produces the identical emitted set. */
+   * (ListState + event-time timers, the processor x231 runs with a
+   * constant gap) produces the identical emitted set. */
 
   private val SliceCutsX362 = Seq(1704800000L, 1705800000L)
   private val ApUsersX362 = 60L
@@ -1750,8 +1698,8 @@ object StreamingQueries {
     * a session is emitted exactly once, from its event-time timer, when
     * the watermark strictly passes its dynamic end. Same oracle shape as
     * x323 (running-max-of-ends sessionization, `end < final watermark`),
-    * different engine mechanism — the two gap families now share one
-    * state contract. Scale: state is the per-user unexpired session list
+    * different engine mechanism — both gap families run the one
+    * timer-session processor. Scale: state is the per-user unexpired session list
     * (bounded by the watermark delay); one user_id shuffle per batch. */
   def twsDynGapTimerParity(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -1764,10 +1712,7 @@ object StreamingQueries {
           .otherwise(lit(GapOther)).cast("long").as("gap"))
       .select($"user_id", $"sec", $"gap", $"sec".cast("timestamp").as("ts"))
       .localCheckpoint(true) // r16: one scan for all staged slices
-    val bounds = (Long.MinValue +: SliceCutsX362) zip (SliceCutsX362 :+ Long.MaxValue)
-    QueryUtil.stageFrames(bounds.map { case (lo, hi) =>
-      ev.filter($"sec" >= lo && $"sec" < hi)
-    }, s"$base/src")
+    stageCuts(ev, "sec", SliceCutsX362, s"$base/src")
     val schema = StructType(Seq(StructField("user_id", LongType),
       StructField("sec", LongType), StructField("gap", LongType),
       StructField("ts", TimestampType)))
@@ -1776,13 +1721,7 @@ object StreamingQueries {
       .withWatermark("ts", s"$DelaySec seconds")
       .as[(Long, Long, Long, java.sql.Timestamp)]
     val sessions = graft.streaming.IncrementalStream.twsDynTimerSessions(stream)
-    val emitted = QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "8") {
-      QueryUtil.stageStream(spark, sessions.toDF(), base, "append")
-    }
-    QueryUtil.deleteRecursively(base)
+    val emitted = drainTws(spark, sessions.toDF(), base, "append")
     emitted.orderBy($"user_id", $"start_sec")
   }
 
@@ -1815,10 +1754,7 @@ object StreamingQueries {
       .localCheckpoint(true)
     val n = docs.agg(max($"doc_id")).head().getLong(0)
     val cuts = Seq(n / 3, 2 * n / 3)
-    val bounds = (Long.MinValue +: cuts) zip (cuts :+ Long.MaxValue)
-    QueryUtil.stageFrames(bounds.map { case (lo, hi) =>
-      docs.filter($"doc_id" >= lo && $"doc_id" < hi)
-    }, s"$base/src")
+    stageCuts(docs, "doc_id", cuts, s"$base/src")
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType)))
     val stream = spark.readStream.schema(schema)
@@ -1864,10 +1800,7 @@ object StreamingQueries {
         when($"value" >= StatsQueries.SprtThresh, lit(1)).otherwise(lit(0)).as("x"))
       .localCheckpoint(true) // r16: one scan for all staged slices
     val cuts = Seq(1704800000L, 1705800000L)
-    val bounds = (Long.MinValue +: cuts) zip (cuts :+ Long.MaxValue)
-    QueryUtil.stageFrames(bounds.map { case (lo, hi) =>
-      ev.filter($"sec" >= lo && $"sec" < hi)
-    }, s"$base/src")
+    stageCuts(ev, "sec", cuts, s"$base/src")
     val schema = StructType(Seq(StructField("event_type", StringType),
       StructField("event_id", LongType), StructField("sec", LongType),
       StructField("x", IntegerType)))
@@ -1876,13 +1809,7 @@ object StreamingQueries {
       .as[(String, Long, Long, Int)]
     val decisions = graft.streaming.IncrementalStream.sprtStream(
       stream, StatsQueries.StepFp, StatsQueries.BoundFp)
-    val emitted = QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "8") {
-      QueryUtil.stageStream(spark, decisions.toDF(), base, "append")
-    }
-    QueryUtil.deleteRecursively(base)
+    val emitted = drainTws(spark, decisions.toDF(), base, "append")
     emitted.orderBy("event_type")
   }
 
@@ -1962,11 +1889,9 @@ object StreamingQueries {
     QueryDef("x231_tws_timer_parity",
       "handleExpiredTimer parity: timer-flushed sessions over 3 real micro-batches equal batch sessions minus unflushed last-opens",
       twsTimerParity, Some(twsTimerParityOracle),
-      // TwsTimerSessionProcessor (ListState sessions,
-      // timer-only emission, constant gap) is the fixed-gap special case
-      // of the still-timed x362_tws_dyngap_timer's
-      // TwsDynTimerSessionProcessor (same ListState layout + timer
-      // contract, per-event dynamic gap) — Verify-gated, not re-timed.
+      // the same TwsDynTimerSessionProcessor as the still-timed
+      // x362_tws_dyngap_timer, fed a constant gap — Verify-gated, not
+      // re-timed.
       benchSkip = true),
     QueryDef("x239_bounded_dedup_parity",
       "dropDuplicatesWithinWatermark parity: real same-batch + cross-batch duplicate arrivals through bounded watermark state == duplicate-free batch aggregate",

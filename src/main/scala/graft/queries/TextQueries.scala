@@ -697,6 +697,19 @@ object TextQueries {
       .filter(col("a") =!= col("b"))
   }
 
+  /** Oracle rendering of [[windowPairs]]: the `pr(a, b)` CTE (after
+    * `base` and `tokpos`). */
+  private[queries] def windowPairsSql: String =
+    """base AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+      |tokpos AS MATERIALIZED (
+      |  SELECT doc_id, pos, toks[pos] AS tok FROM (
+      |    SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS pos FROM base)),
+      |pr AS MATERIALIZED (
+      |  SELECT least(l.tok, r.tok) AS a, greatest(l.tok, r.tok) AS b
+      |  FROM tokpos l JOIN tokpos r
+      |    ON l.doc_id = r.doc_id AND r.pos > l.pos AND r.pos <= l.pos + 2
+      |  WHERE l.tok <> r.tok)""".stripMargin
+
   /** x161: TextRank keyword extraction (Mihalcea & Tarau 2004) — corpus
     * keywords are the highest-PageRank nodes of the word co-occurrence
     * graph (±2 token window, symmetrized, weight = co-occurrence count).
@@ -724,35 +737,12 @@ object TextQueries {
   }
 
   private val textrankOracle: String = {
-    def iter(prev: String, cur: String): String =
-      s"""$cur AS MATERIALIZED (SELECT n.node,
-         |  (SELECT base FROM params) + COALESCE(s.inc, 0) AS rank_fp
-         |  FROM n LEFT JOIN (
-         |    SELECT e.dst, CAST(sum((85 * r.rank_fp * e.w) // (100 * e.outw)) AS BIGINT) AS inc
-         |    FROM e JOIN $prev r ON e.src = r.node
-         |    GROUP BY e.dst) s ON n.node = s.dst)""".stripMargin
-    s"""WITH base AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-       |tokpos AS MATERIALIZED (
-       |  SELECT doc_id, pos, toks[pos] AS tok FROM (
-       |    SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS pos FROM base)),
-       |pr AS MATERIALIZED (
-       |  SELECT least(l.tok, r.tok) AS a, greatest(l.tok, r.tok) AS b
-       |  FROM tokpos l JOIN tokpos r
-       |    ON l.doc_id = r.doc_id AND r.pos > l.pos AND r.pos <= l.pos + 2
-       |  WHERE l.tok <> r.tok),
+    s"""WITH $windowPairsSql,
        |cab AS MATERIALIZED (SELECT a, b, count(*) AS w FROM pr GROUP BY 1, 2),
        |e0 AS MATERIALIZED (
        |  SELECT a AS src, b AS dst, w FROM cab
        |  UNION ALL SELECT b, a, w FROM cab),
-       |ow AS (SELECT src, CAST(sum(w) AS BIGINT) AS outw FROM e0 GROUP BY 1),
-       |e AS MATERIALIZED (SELECT e0.src, e0.dst, e0.w, ow.outw FROM e0 JOIN ow ON e0.src = ow.src),
-       |n AS MATERIALIZED (SELECT DISTINCT src AS node FROM e0),
-       |params AS MATERIALIZED (SELECT count(*) AS nn, 1000000000 // count(*) AS init,
-       |                  150000000 // count(*) AS base FROM n),
-       |r0 AS (SELECT node, (SELECT init FROM params) AS rank_fp FROM n),
-       |${iter("r0", "r1")},
-       |${iter("r1", "r2")},
-       |${iter("r2", "r3")}
+       |${GraphQueries.pageRankSql}
        |SELECT node AS token, rank_fp, rank_fp / 1000000000.0 AS rank
        |FROM r3
        |ORDER BY rank_fp DESC, token

@@ -17,6 +17,29 @@ object TimeSeriesQueries {
   /** ACF lag range (1..MaxLag). */
   private val MaxLag = 7
 
+  /** Daily order revenue in cents (di = days since 1995-01-01, y), as
+    * `cy = n·y − Σy` in exact decimals: the series centered and scaled by
+    * its length n, the input of the ACF and PACF. */
+  private def centeredDailyCents(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    val daily = Tables.orders(spark, dir)
+      .groupBy(datediff($"o_orderdate", lit("1995-01-01").cast("date"))
+        .cast("long").as("di"))
+      .agg(sum(floor($"o_totalprice" * 100 + 0.5).cast("long")).as("y"))
+    val tot = daily.agg(count(lit(1)).as("n"), sum($"y").as("s"))
+    daily.crossJoin(broadcast(tot))
+      .select($"di", ($"n".cast(StatsQueries.dec) * $"y".cast(StatsQueries.dec) - $"s".cast(StatsQueries.dec)).as("cy"))
+  }
+
+  /** Each (di, cy) row of `c` with the row `lag` days later (dj, cz), for
+    * lag = 1..maxLag. */
+  private def lagPairs(spark: SparkSession, c: DataFrame, maxLag: Int): DataFrame = {
+    import spark.implicits._
+    val lags = spark.range(1, maxLag + 1).select($"id".cast("long").as("lag"))
+    c.select($"di", $"cy").crossJoin(broadcast(lags))
+      .join(c.select($"di".as("dj"), $"cy".as("cz")), $"dj" === $"di" + $"lag")
+  }
+
   /** q85: autocorrelation function — daily revenue (exact cents) ACF at
     * lags 1..7, the seasonality screen a forecasting pipeline runs before
     * model choice. The global mean never materializes as a float: with
@@ -29,19 +52,9 @@ object TimeSeriesQueries {
     * the tiny frame with the totals broadcast. */
   def acf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.orders(spark, dir)
-      .groupBy(datediff($"o_orderdate", lit("1995-01-01").cast("date"))
-        .cast("long").as("di"))
-      .agg(sum(floor($"o_totalprice" * 100 + 0.5).cast("long")).as("y"))
-    val tot = daily.agg(count(lit(1)).as("n"), sum($"y").as("s"))
-    val c = daily.crossJoin(broadcast(tot))
-      .select($"di", ($"n".cast(StatsQueries.dec) * $"y".cast(StatsQueries.dec) - $"s".cast(StatsQueries.dec)).as("cy"))
+    val c = centeredDailyCents(spark, dir)
     val den = c.agg(sum($"cy" * $"cy").as("dd"))
-    val lags = spark.range(1, MaxLag + 1).select($"id".cast("long").as("lag"))
-    val pairs = c.select($"di", $"cy").crossJoin(broadcast(lags))
-      .join(c.select($"di".as("dj"), $"cy".as("cz")),
-        $"dj" === $"di" + $"lag")
-    pairs.groupBy($"lag")
+    lagPairs(spark, c, MaxLag).groupBy($"lag")
       .agg(count(lit(1)).as("n_pairs"), sum($"cy" * $"cz").as("num"))
       .crossJoin(broadcast(den))
       .select($"lag", $"n_pairs",
@@ -455,6 +468,17 @@ object TimeSeriesQueries {
 
   // ---------------------------------------------------------------- x218
 
+  /** Daily order revenue in whole dollars through 1997: (di = days since
+    * 1995-01-01, y). */
+  private[queries] def dailyOrderDollars(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    Tables.orders(spark, dir)
+      .filter(year($"o_orderdate") <= 1997)
+      .groupBy(datediff($"o_orderdate", lit("1995-01-01").cast("date"))
+        .cast("long").as("di"))
+      .agg(sum(floor($"o_totalprice" + 0.5).cast("long")).as("y"))
+  }
+
   /** x218: seasonal decomposition (STL-lite) of daily revenue (whole dollars so squared-moment sums stay in int64 past sf1):
     * trend = centered 29-day moving average (integer div of integer
     * sums — the window never leaves int64), seasonal = per-weekday-slot
@@ -469,11 +493,7 @@ object TimeSeriesQueries {
     * calendar-bounded, not data-bounded. */
   def seasonalDecompose(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.orders(spark, dir)
-      .filter(year($"o_orderdate") <= 1997)
-      .groupBy(datediff($"o_orderdate", lit("1995-01-01").cast("date"))
-        .cast("long").as("di"))
-      .agg(sum(floor($"o_totalprice" + 0.5).cast("long")).as("y"))
+    val daily = dailyOrderDollars(spark, dir)
       .localCheckpoint(true)
     val wT = Window.orderBy($"di").rowsBetween(-TrendHalf, TrendHalf)
     val trended = daily
@@ -665,11 +685,7 @@ object TimeSeriesQueries {
     * recursion depth is fixed, not data-dependent. */
   def binsegChangepoints(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val daily = Tables.orders(spark, dir)
-      .filter(year($"o_orderdate") <= 1997)
-      .groupBy(datediff($"o_orderdate", lit("1995-01-01").cast("date"))
-        .cast("long").as("di"))
-      .agg(sum(floor($"o_totalprice" + 0.5).cast("long")).as("y"))
+    val daily = dailyOrderDollars(spark, dir)
     val w = Window.orderBy($"di")
     val pre = daily.select($"di", $"y",
       row_number().over(w).cast("long").as("i"),
@@ -829,19 +845,9 @@ object TimeSeriesQueries {
     * pipeline — series length never matters past the first shuffle. */
   def pacf(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-    val daily = Tables.orders(spark, dir)
-      .groupBy(datediff($"o_orderdate", lit("1995-01-01").cast("date"))
-        .cast("long").as("di"))
-      .agg(sum(floor($"o_totalprice" * 100 + 0.5).cast("long")).as("y"))
-    val tot = daily.agg(count(lit(1)).as("n"), sum($"y").as("s"))
-    val c = daily.crossJoin(broadcast(tot))
-      .select($"di", ($"n".cast(dec) * $"y".cast(dec) - $"s".cast(dec)).as("cy"))
-      .localCheckpoint(true)
+    val c = centeredDailyCents(spark, dir).localCheckpoint(true)
     val den = c.agg(sum($"cy" * $"cy").as("dd"))
-    val lags = spark.range(1, PacfMax + 1).select($"id".cast("long").as("lag"))
-    val nums = c.select($"di", $"cy").crossJoin(broadcast(lags))
-      .join(c.select($"di".as("dj"), $"cy".as("cz")), $"dj" === $"di" + $"lag")
+    val nums = lagPairs(spark, c, PacfMax)
       .groupBy($"lag").agg(sum($"cy" * $"cz").as("num"))
     val rhos = nums.crossJoin(broadcast(den))
       .select($"lag", ($"num".cast("double") / $"dd".cast("double")).as("rho"))
@@ -1169,6 +1175,19 @@ object TimeSeriesQueries {
 
   // ---------------------------------------------------------------- x317
 
+  /** Oracle rendering of [[dailyCents]] (`daily`) and of each type's day
+    * series numbered from 1 (`seq(event_type, cents, i)`). */
+  private def dailyCentsSeqSql: String =
+    """daily AS MATERIALIZED (
+      |  SELECT event_type,
+      |         CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
+      |         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
+      |  FROM events GROUP BY 1, 2),
+      |seq AS MATERIALIZED (
+      |  SELECT event_type, cents,
+      |         CAST(row_number() OVER (PARTITION BY event_type ORDER BY day) AS BIGINT) AS i
+      |  FROM daily)""".stripMargin
+
   /** Per-type daily revenue census shared by the Holt fold and its
     * oracle: (event_type, epoch-day, cents). */
   private def dailyCents(spark: SparkSession, dir: String): DataFrame = {
@@ -1218,15 +1237,7 @@ object TimeSeriesQueries {
   }
 
   private val holtLinearOracle =
-    """WITH RECURSIVE daily AS MATERIALIZED (
-      |  SELECT event_type,
-      |         CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-      |         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
-      |  FROM events GROUP BY 1, 2),
-      |seq AS MATERIALIZED (
-      |  SELECT event_type, cents,
-      |         CAST(row_number() OVER (PARTITION BY event_type ORDER BY day) AS BIGINT) AS i
-      |  FROM daily),
+    s"""WITH RECURSIVE $dailyCentsSeqSql,
       |rec AS (
       |  SELECT event_type, i, cents AS l, CAST(0 AS BIGINT) AS b
       |  FROM seq WHERE i = 1
@@ -1479,15 +1490,7 @@ object TimeSeriesQueries {
     val sCols = (0 until HwPeriod).map(snew).mkString(",\n         ")
     val fidx = "CASE (n.nn - 1) % 7 WHEN 0 THEN r.s0 WHEN 1 THEN r.s1 WHEN 2 THEN r.s2 " +
       "WHEN 3 THEN r.s3 WHEN 4 THEN r.s4 WHEN 5 THEN r.s5 ELSE r.s6 END"
-    s"""WITH RECURSIVE daily AS MATERIALIZED (
-       |  SELECT event_type,
-       |         CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT) AS day,
-       |         CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS cents
-       |  FROM events GROUP BY 1, 2),
-       |seq AS MATERIALIZED (
-       |  SELECT event_type, cents,
-       |         CAST(row_number() OVER (PARTITION BY event_type ORDER BY day) AS BIGINT) AS i
-       |  FROM daily),
+    s"""WITH RECURSIVE $dailyCentsSeqSql,
        |rec AS (
        |  SELECT event_type, i, cents AS l, CAST(0 AS BIGINT) AS b,
        |         CAST(0 AS BIGINT) AS s0, CAST(0 AS BIGINT) AS s1,

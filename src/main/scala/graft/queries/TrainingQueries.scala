@@ -600,15 +600,7 @@ object TrainingQueries {
   }
 
   private val pmiCooccurOracle =
-    """WITH base AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |tokpos AS MATERIALIZED (
-      |  SELECT doc_id, pos, toks[pos] AS tok FROM (
-      |    SELECT doc_id, toks, unnest(range(1, len(toks) + 1)) AS pos FROM base)),
-      |pr AS MATERIALIZED (
-      |  SELECT least(l.tok, r.tok) AS a, greatest(l.tok, r.tok) AS b
-      |  FROM tokpos l JOIN tokpos r
-      |    ON l.doc_id = r.doc_id AND r.pos > l.pos AND r.pos <= l.pos + 2
-      |  WHERE l.tok <> r.tok),
+    s"""WITH ${TextQueries.windowPairsSql},
       |cab AS MATERIALIZED (SELECT a, b, count(*) AS cab FROM pr GROUP BY 1, 2),
       |tot AS (SELECT CAST(sum(cab) AS BIGINT) AS t FROM cab),
       |marg AS MATERIALIZED (SELECT tok, CAST(sum(cab) AS BIGINT) AS c FROM (

@@ -289,6 +289,14 @@ object IncrementalStream {
         col("session_window.end").as("session_end"),
         col("n_events"))
 
+  /** State encoders of the `transformWithState` processors below. */
+  private def longs3 = org.apache.spark.sql.Encoders.tuple(
+    org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong,
+    org.apache.spark.sql.Encoders.scalaLong)
+  private def longs4 = org.apache.spark.sql.Encoders.tuple(
+    org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong,
+    org.apache.spark.sql.Encoders.scalaLong, org.apache.spark.sql.Encoders.scalaLong)
+
   /** Running purchase totals emitted by [[TwsTotalsProcessor]]. */
   final case class TwsTotals(user_id: Long, n_purch: Long, cents: Long,
                              max_cents: Long)
@@ -309,10 +317,7 @@ object IncrementalStream {
     override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
                       timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
       totals = getHandle.getValueState[(Long, Long, Long)]("totals",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
+        longs3,
         org.apache.spark.sql.streaming.TTLConfig.NONE)
 
     override def handleInputRows(
@@ -524,11 +529,7 @@ object IncrementalStream {
     override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
                       timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
       st = getHandle.getValueState[(Long, Long, Long, Long)]("bucket",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
+        longs4,
         org.apache.spark.sql.streaming.TTLConfig.NONE)
 
     override def handleInputRows(
@@ -573,11 +574,7 @@ object IncrementalStream {
     override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
                       timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
       st = getHandle.getValueState[(Long, Long, Long, Long)]("ph",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
+        longs4,
         org.apache.spark.sql.streaming.TTLConfig.NONE)
 
     override def handleInputRows(
@@ -625,136 +622,42 @@ object IncrementalStream {
         org.apache.spark.sql.streaming.OutputMode.Update())
   }
 
-  /** Session summary emitted by [[TwsTimerSessionProcessor]] when its
+  /** Session summary emitted by [[TwsDynTimerSessionProcessor]] when its
     * event-time timer expires. */
   final case class TwsSession(user_id: Long, start_sec: Long, end_sec: Long,
                               n_events: Long)
 
-  /** The batch-session_window merge as a pure function: existing sessions
-    * plus each arrival as a singleton interval, sorted by start, coalesced
-    * where the next start is within gapSec of the previous end. Extracted
-    * from [[TwsTimerSessionProcessor.handleInputRows]] so the one
-    * invariant that processor must uphold — folding ANY batch split of an
-    * event set through this merge yields exactly the batch sessionization
-    * of the whole set — is property-testable without a streaming query
-    * (StreamingSpec; the r10–r12 ADVICE findings were all batch-split
-    * sensitivities in this code's eager-emission predecessor). */
-  private[graft] def mergeSessions(existing: Array[(Long, Long, Long)],
-                                   arrivals: Array[Long],
-                                   gapSec: Long): Array[(Long, Long, Long)] = {
-    val all = (existing ++ arrivals.map(t => (t, t, 1L)))
-      .sortBy(s => (s._1, s._2))
-    val merged = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    all.foreach { case (s, e, n) =>
-      if (merged.nonEmpty && s - merged.last._2 <= gapSec) {
-        val (ls, le, ln) = merged.last
-        merged(merged.size - 1) = (ls, math.max(le, e), ln + n)
-      } else merged += ((s, e, n))
-    }
-    merged.toArray
-  }
-
-  /** The TIMER surface of `transformWithState`: ALL of a key's unexpired
-    * sessions are held in ListState; every input batch merges the new
-    * events into them with batch `session_window` semantics (sort by
-    * start, coalesce neighbors within gapSec) and registers an EVENT-TIME
-    * timer at each session's end + gap; sessions are emitted ONLY from
-    * `handleExpiredTimer` once the watermark passes their expiry.
-    *
-    * Earlier revisions emitted in-batch gap splits and "pending earlier"
-    * sessions eagerly at end of batch — ADVICE r12 caught the hole: with
-    * watermark delay > gap, a LATER micro-batch can still deliver an
-    * in-watermark event inside (end, end+gap] of an eagerly-emitted
-    * session that batch session_window would have merged into it,
-    * fragmenting the session. Holding every session until its timer fires
-    * is the only Append-mode-safe emission rule, and it makes the state
-    * machine uniform: one list, one merge, one expiry condition.
-    *
-    * No surviving input row can extend a timer-expired session: rows past
-    * the watermark filter have t ≳ wm, while an expired session has
-    * end + gap < wm, so t − end > gap — input-vs-timer processing order
-    * within a batch therefore cannot change the output. */
-  final class TwsTimerSessionProcessor(gapSec: Long)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, java.sql.Timestamp), TwsSession] {
-    @transient private var sessions:
-        org.apache.spark.sql.streaming.ListState[(Long, Long, Long)] = _
-
-    override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
-                      timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
-      sessions = getHandle.getListState[(Long, Long, Long)]("sessions",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[(Long, Long, java.sql.Timestamp)],
-        timerValues: org.apache.spark.sql.streaming.TimerValues)
-        : Iterator[TwsSession] = {
-      // Existing sessions plus each new event as a singleton interval,
-      // sorted by start, then coalesced: exactly the batch session_window
-      // merge. Within-watermark out-of-order arrivals (earlier than any
-      // open session, or bridging two of them) land wherever the merge
-      // puts them — no eager emission, no special cases (ADVICE r10/r11/
-      // r12 were all eager-emission bugs in the predecessor of this code).
-      val existing = sessions.get().toArray
-      val merged = IncrementalStream.mergeSessions(
-        existing, rows.map(_._2).toArray, gapSec)
-      sessions.put(merged)
-      // One timer per session at its expiry, registered only when the
-      // expiry is NEW this batch (an unchanged session's timer already
-      // exists in the store — re-registering is a warn-logged no-op). An
-      // extended/merged session gets a fresh timer; its superseded timers
-      // fire harmlessly (the expiry check below finds nothing due).
-      val had = existing.map { case (_, e, _) => e }.toSet
-      merged.foreach { case (_, e, _) =>
-        if (!had.contains(e)) getHandle.registerTimer((e + gapSec) * 1000L)
-      }
-      Iterator.empty
-    }
-
-    override def handleExpiredTimer(
-        key: Long,
-        timerValues: org.apache.spark.sql.streaming.TimerValues,
-        expiredTimerInfo: org.apache.spark.sql.streaming.ExpiredTimerInfo)
-        : Iterator[TwsSession] = {
-      val expiry = expiredTimerInfo.getExpiryTimeInMs
-      val all = sessions.get().toArray
-      val (done, live) = all.partition { case (_, e, _) =>
-        (e + gapSec) * 1000L <= expiry
-      }
-      if (done.nonEmpty) {
-        if (live.isEmpty) sessions.clear() else sessions.put(live)
-      }
-      done.sortBy(_._1).iterator
-        .map { case (s, e, n) => TwsSession(key, s, e, n) }
-    }
-  }
-
-  /** Timer-driven sessionization over (user_id, sec) events: event-time
-    * mode keyed on a `ts` column the caller derives from sec. */
+  /** Timer-driven FIXED-gap sessionization over (user_id, sec) events:
+    * event-time mode keyed on a `ts` column the caller derives from sec.
+    * A fixed gap is a dynamic gap that is the same for every event:
+    * merging when `next.start − last event ≤ gap` is merging at touch on
+    * the windows [t, t + gap], and a session's expiry (last event + gap)
+    * is its window end. So the events go through the one timer-session
+    * processor with a constant gap, and each session reports its last
+    * event as `end_sec`. */
   def twsTimerSessions(
       events: org.apache.spark.sql.Dataset[(Long, Long, java.sql.Timestamp)],
       gapSec: Long): org.apache.spark.sql.Dataset[TwsSession] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_._1)
-      .transformWithState(new TwsTimerSessionProcessor(gapSec),
-        org.apache.spark.sql.streaming.TimeMode.EventTime(),
-        org.apache.spark.sql.streaming.OutputMode.Append())
+    // a projection, not a typed map, so `ts` keeps its watermark
+    val withGap = events.toDF("user_id", "sec", "ts")
+      .select($"user_id", $"sec", lit(gapSec).as("gap"), $"ts")
+      .as[(Long, Long, Long, java.sql.Timestamp)]
+    twsDynTimerSessions(withGap).map(s => s.copy(end_sec = s.end_sec - gapSec))
   }
 
-  /** DYNAMIC-gap session merge (r13 verdict "Next round #8"): every event
+  /** The session merge, for dynamic and fixed gaps: every event
     * is its own window [t, t + gap_event]; existing sessions plus the new
     * singletons sort by start and coalesce at TOUCH (next.start <=
     * prev.end — the x318-pinned boundary), keeping max end. Sorting the
     * union each batch makes the fold batch-split invariant: a long-gap
     * event can bridge past a short-gap successor (the running-max-of-ends
     * subtlety lag-diff sessionizers get wrong), and a later bridging
-    * interval re-merges previously separate sessions. Shares the
-    * fixed-gap [[mergeSessions]] contract; property-tested beside it. */
+    * interval re-merges previously separate sessions. A fixed gap g is
+    * the case gap_event = g for every event. Folding any batch split of
+    * an event set through this merge must give the batch sessionization
+    * of the whole set; that is property-tested for both gap families. */
   private[graft] def mergeDynSessions(existing: Array[(Long, Long, Long)],
                                       arrivals: Array[(Long, Long)]): Array[(Long, Long, Long)] = {
     val all = (existing ++ arrivals.map { case (s, e) => (s, e, 1L) })
@@ -769,15 +672,29 @@ object IncrementalStream {
     merged.toArray
   }
 
-  /** Dynamic-gap twin of [[TwsTimerSessionProcessor]] — ONE audited state
-    * contract for both gap families (r13 verdict #8): all of a key's
-    * unexpired sessions in ListState, merged per batch by
-    * [[mergeDynSessions]], emitted ONLY from `handleExpiredTimer`. The
-    * session end already includes each event's own gap (end = max of
-    * t + gap_t), so the timer registers at end itself and the emission
-    * boundary is the built-in dynamic `session_window`'s strict
-    * `end < watermark` (x323's pinned contract). Input rows carry
-    * (user, sec, gapSec, ts). */
+  /** The TIMER surface of `transformWithState`, for fixed and dynamic
+    * gaps alike ([[twsTimerSessions]] passes a constant gap): ALL of a
+    * key's unexpired sessions are held in ListState; every input batch
+    * merges the new events into them with [[mergeDynSessions]] and
+    * registers an EVENT-TIME timer at each new session end; sessions are
+    * emitted ONLY from `handleExpiredTimer` once the watermark passes
+    * their end. The session end already includes each event's own gap
+    * (end = max of t + gap_t), so the emission boundary is the built-in
+    * dynamic `session_window`'s strict `end < watermark` (x323's pinned
+    * contract). Input rows carry (user, sec, gapSec, ts).
+    *
+    * Emitting in-batch gap splits or "pending earlier" sessions eagerly
+    * at end of batch fragments sessions: with watermark delay > gap, a
+    * LATER micro-batch can still deliver an in-watermark event inside a
+    * session's gap that batch `session_window` would have merged into
+    * it. Holding every session until its timer fires is the only
+    * Append-mode-safe emission rule: one list, one merge, one expiry
+    * condition.
+    *
+    * No surviving input row can extend a timer-expired session: rows past
+    * the watermark filter have t ≳ wm, while an expired session has
+    * end < wm, so the row starts past the end — input-vs-timer processing
+    * order within a batch therefore cannot change the output. */
   final class TwsDynTimerSessionProcessor
       extends org.apache.spark.sql.streaming.StatefulProcessor[
         Long, (Long, Long, Long, java.sql.Timestamp), TwsSession] {
@@ -787,10 +704,7 @@ object IncrementalStream {
     override def init(outputMode: org.apache.spark.sql.streaming.OutputMode,
                       timeMode: org.apache.spark.sql.streaming.TimeMode): Unit =
       sessions = getHandle.getListState[(Long, Long, Long)]("dynsessions",
-        org.apache.spark.sql.Encoders.tuple(
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong,
-          org.apache.spark.sql.Encoders.scalaLong),
+        longs3,
         org.apache.spark.sql.streaming.TTLConfig.NONE)
 
     override def handleInputRows(

@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
 class FormatsSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val sfDir = "/root/testdata/sf0.001"
-
   test("parquet schema evolution: mergeSchema unifies appended columns, old rows null-filled") {
     val path = tmpDir("evolve") + "/t"
     // v1 writer: (id, a); later writer adds column b (the additive

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class GenScaleSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val srcDir = "/root/testdata/sf0.001"
+  private val srcDir = sfDir
   private lazy val outDir: String = {
     val d = tmpDir("graft_genscale_spec")
     graft.GenScale.run(spark, srcDir, d, 2)

@@ -169,7 +169,7 @@ class ImageCodecSpec extends SparkTestBase {
 
   test("synth→encode→decode identity: decoded frames equal direct pixel synthesis") {
     import spark.implicits._
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(40)
+    val docs = Tables.documents(spark, sfDir).limit(40)
     val vids = MediaSynth.synthVideos(docs).collect()
     val texts = docs.select($"doc_id", $"text").as[(Long, String)].collect().toMap
     val md = java.security.MessageDigest.getInstance("MD5")

@@ -186,7 +186,7 @@ class JpegCodecSpec extends SparkTestBase {
   }
 
   test("synth→encode→decode identity on real documents (gray + 4:2:0)") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(30)
+    val docs = Tables.documents(spark, sfDir).limit(30)
     val md = java.security.MessageDigest.getInstance("MD5")
     import spark.implicits._
     val texts = docs.select($"doc_id", $"text").as[(Long, String)].collect().toMap
@@ -239,7 +239,7 @@ class JpegCodecSpec extends SparkTestBase {
 
   test("indexed MJPEG sampler: skips via the length prefix, cross-checks decoded length, fails on a lying index") {
     import spark.implicits._
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(20)
+    val docs = Tables.documents(spark, sfDir).limit(20)
     val vids = MediaSynth.synthMjpegIndexed(docs)
     val sampled = MediaSynth.decodeMjpegSampled(vids, 3).collect()
     assert(sampled.nonEmpty)

@@ -89,7 +89,7 @@ class MultimodalSpec extends SparkTestBase {
     // ever lands in the fixture, this is the test that fails.
     val spark2 = spark
     import spark2.implicits._
-    val chars = Tables.documents(spark, "/root/testdata/sf0.001")
+    val chars = Tables.documents(spark, sfDir)
       .select($"doc_id", transform(split($"text", ""), c => ascii(c)).as("codes"))
       .select($"doc_id", $"codes",
         explode(sequence(lit(0), floor((size($"codes") - 1) / lit(32)).cast("int"))).as("k"))
@@ -98,7 +98,7 @@ class MultimodalSpec extends SparkTestBase {
         aggregate(slice($"codes", $"k" * 32 + 1, lit(64)), lit(0L), (acc, x) => acc + x).as("energy"),
         array_max(slice($"codes", $"k" * 32 + 1, lit(64))).as("peak"))
     val typed = Multimodal.audioWindows(
-      Multimodal.attachFakeMedia(Tables.documents(spark, "/root/testdata/sf0.001")),
+      Multimodal.attachFakeMedia(Tables.documents(spark, sfDir)),
       frame = 64, hop = 32).toDF()
     assert(chars.count() == typed.count())
     assert(chars.except(typed).count() == 0 && typed.except(chars).count() == 0)

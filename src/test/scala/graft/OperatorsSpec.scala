@@ -136,7 +136,7 @@ class OperatorsSpec extends SparkTestBase {
     // Project. FencePushdown restores per-conjunct pushdown — the doc_id
     // conjunct must land in the parquet scan's PushedFilters while the
     // fenced jaccard stays single-evaluation.
-    val df = Tables.documents(spark, "/root/testdata/sf0.001")
+    val df = Tables.documents(spark, sfDir)
       .select($"doc_id",
         graft.queries.QueryUtil.fence(
           Dedup.jaccardSorted(
@@ -151,7 +151,7 @@ class OperatorsSpec extends SparkTestBase {
     // into the filter would show 4)
     assert(plan.split("sorted_intersect_count").length - 1 == 2, plan)
     // and the split must not change results
-    val expected = Tables.documents(spark, "/root/testdata/sf0.001")
+    val expected = Tables.documents(spark, sfDir)
       .filter($"doc_id" < 30)
       .select($"doc_id",
         Dedup.jaccardSorted(
@@ -210,7 +210,7 @@ class OperatorsSpec extends SparkTestBase {
 
   test("ngram LSH banding: measured candidate recall vs exhaustive pairs") {
     // sf0.01: 500 docs — exhaustive all-pairs ground truth is feasible here
-    val g = Tables.documents(spark, "/root/testdata/sf0.01")
+    val g = Tables.documents(spark, sf001Dir)
       .select($"doc_id", TextAnalysis.charNgramLongs($"text", 3).as("g3"))
       .withColumn("n3", size($"g3"))
     val l = g.select($"doc_id".as("a"), $"g3".as("ga"), $"n3".as("na"))
@@ -231,16 +231,16 @@ class OperatorsSpec extends SparkTestBase {
     // the registered query is self-cleaning since r11 (drops its tables +
     // warehouse dir after checkpointing), so sanity-check its result and
     // then create fresh bucketed tables HERE for the plan assertion
-    val out = graft.queries.EngineOpsQueries.bucketJoin(spark, "/root/testdata/sf0.001")
+    val out = graft.queries.EngineOpsQueries.bucketJoin(spark, sfDir)
     assert(out.count() == 5)
     val wh = tmpDir("graft_x137_spec")
     spark.sql("DROP TABLE IF EXISTS graft_x137_orders")
     spark.sql("DROP TABLE IF EXISTS graft_x137_lineitem")
-    Tables.orders(spark, "/root/testdata/sf0.001")
+    Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_orderpriority")
       .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
       .option("path", s"$wh/orders").saveAsTable("graft_x137_orders")
-    Tables.lineitem(spark, "/root/testdata/sf0.001")
+    Tables.lineitem(spark, sfDir)
       .select($"l_orderkey", $"l_extendedprice")
       .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
       .option("path", s"$wh/lineitem").saveAsTable("graft_x137_lineitem")
@@ -263,7 +263,7 @@ class OperatorsSpec extends SparkTestBase {
 
   test("x139 partitioned write: the year filter prunes to one directory") {
     val base = java.nio.file.Files.createTempDirectory("graft_x139_spec").toString
-    Tables.orders(spark, "/root/testdata/sf0.001")
+    Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice",
         year($"o_orderdate".cast("date")).as("o_year"))
       .write.partitionBy("o_year").parquet(s"$base/orders")
@@ -282,7 +282,7 @@ class OperatorsSpec extends SparkTestBase {
 
   test("x143 dynamic partition pruning: the dim filter reaches the fact scan at runtime") {
     val base = java.nio.file.Files.createTempDirectory("graft_x143_spec").toString
-    Tables.orders(spark, "/root/testdata/sf0.001")
+    Tables.orders(spark, sfDir)
       .select($"o_orderkey", $"o_orderpriority", $"o_totalprice",
         year($"o_orderdate".cast("date")).as("o_year"))
       .write.partitionBy("o_year").parquet(s"$base/orders")
@@ -307,11 +307,11 @@ class OperatorsSpec extends SparkTestBase {
     try {
       conf.set(keys(0), "1024"); conf.set(keys(1), "2"); conf.set(keys(2), "1024")
       val base = java.nio.file.Files.createTempDirectory("graft_x146_spec").toString
-      graft.queries.EngineOpsQueries.skewEvents(spark, "/root/testdata/sf0.001")
+      graft.queries.EngineOpsQueries.skewEvents(spark, sfDir)
         .select($"grp").distinct()
         .select($"grp", (abs($"grp") % 3).as("cat"))
         .write.parquet(s"$base/dim")
-      val df = graft.queries.EngineOpsQueries.skewJoinPlan(spark, "/root/testdata/sf0.001", s"$base/dim")
+      val df = graft.queries.EngineOpsQueries.skewJoinPlan(spark, sfDir, s"$base/dim")
       PlanAudit.assertSkewHandled(df) // loud on either silent-no-op precondition
     } finally saved.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
   }
@@ -325,7 +325,7 @@ class OperatorsSpec extends SparkTestBase {
     val saved = keys.map(k => k -> conf.getOption(k)).toMap
     try {
       conf.set(keys(0), "true"); conf.set(keys(1), "1024"); conf.set(keys(2), "-1")
-      val df = graft.queries.EngineOpsQueries.runtimeFilterPlan(spark, "/root/testdata/sf0.001")
+      val df = graft.queries.EngineOpsQueries.runtimeFilterPlan(spark, sfDir)
       df.collect()
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("SortMergeJoin"), s"demo degraded from SMJ:\n$plan")
@@ -339,9 +339,9 @@ class OperatorsSpec extends SparkTestBase {
     // array_sort(struct(turn, line)) — prove the md5 survives an
     // adversarial repartition (the property a distributed template
     // renderer must have; a bare collect_list would flake here).
-    val a = graft.queries.PipelineQueries.chatAssembly(spark, "/root/testdata/sf0.001")
+    val a = graft.queries.PipelineQueries.chatAssembly(spark, sfDir)
       .collect().map(_.toSeq)
-    val ev = graft.Tables.events(spark, "/root/testdata/sf0.001").repartition(7)
+    val ev = graft.Tables.events(spark, sfDir).repartition(7)
     val tmp = java.nio.file.Files.createTempDirectory("graft_chat").toString
     // the query touches only events, so a directory with events alone works
     ev.write.parquet(s"$tmp/events.parquet")
@@ -351,7 +351,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("q102 lateral top-k plan: WindowGroupLimit below the exchange") {
-    val df = graft.queries.RelationalQueries.lateralTopk(spark, "/root/testdata/sf0.001")
+    val df = graft.queries.RelationalQueries.lateralTopk(spark, sfDir)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("WindowGroupLimit"), s"no group-limit pushdown:\n$plan")
     assert(!plan.contains("BroadcastNestedLoopJoin"), s"nested loop crept in:\n$plan")

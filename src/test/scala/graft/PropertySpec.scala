@@ -537,7 +537,7 @@ class PropertySpec extends SparkTestBase {
     // query chunk re-inserted at its index must reproduce the original
     // chunk sequence exactly — the slice arithmetic has off-by-one traps.
     import org.apache.spark.sql.functions._
-    val docs = graft.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = graft.Tables.documents(spark, sfDir)
     val w = 24
     val chunks = docs.filter(size(split($"text", " ")) >= w * 2)
       .select($"doc_id", split($"text", " ").as("toks"))

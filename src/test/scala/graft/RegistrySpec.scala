@@ -7,8 +7,6 @@ import scala.jdk.CollectionConverters._
   * schemas (catches column typos / type errors without executing). */
 class RegistrySpec extends SparkTestBase {
 
-  private val sfDir = "/root/testdata/sf0.001"
-
   test("names are unique and well-formed") {
     val names = Registry.all.map(_.name)
     // printed so README/SKILL query counts are mechanical to keep in sync
@@ -137,6 +135,41 @@ class RegistrySpec extends SparkTestBase {
       finally stream.close()
     assert(builders == Set("graft/EngineSession.scala"),
       s"build sessions through graft.EngineSession, not in: ${(builders - "graft/EngineSession.scala").toSeq.sorted}")
+  }
+
+  /** Bound on [[duplicateLines]] of `src/main`: the figure reached when
+    * the copied trade joins, session state machines, LOF/PQ/minhash
+    * fragments and staging harnesses were folded into one helper each. */
+  private val DuplicateLinesMax = 170
+
+  /** The 6-line duplicate scan of the `.scala` files under `root`:
+    *  - strip every line of each file and drop blank lines;
+    *  - take each window of 6 consecutive lines within a file;
+    *  - a window qualifies when at least 4 of its lines are longer than
+    *    3 characters and do not start with `//` or `*`;
+    *  - count every (file, line) covered by a qualifying window that
+    *    occurs 2 or more times anywhere. */
+  private def duplicateLines(root: java.nio.file.Path): Int = {
+    val stream = java.nio.file.Files.walk(root)
+    val files =
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally stream.close()
+    val windows = files.flatMap { p =>
+      val lines = java.nio.file.Files.readAllLines(p).asScala.zipWithIndex
+        .map { case (l, i) => (l.strip, i) }.filter(_._1.nonEmpty).toIndexedSeq
+      lines.sliding(6).filter(_.size == 6).map(w => (w.map(_._1), w.map(l => (p, l._2))))
+        .filter { case (text, _) =>
+          text.count(l => l.length > 3 && !l.startsWith("//") && !l.startsWith("*")) >= 4
+        }
+    }
+    windows.groupBy(_._1).values.filter(_.size >= 2)
+      .flatMap(_.flatMap(_._2)).toSet.size
+  }
+
+  test("duplicate scan: src/main keeps its copied 6-line windows within the folded figure") {
+    val n = duplicateLines(java.nio.file.Paths.get("src/main/scala"))
+    assert(n <= DuplicateLinesMax,
+      s"$n src/main lines sit in 6-line windows copied elsewhere (max $DuplicateLinesMax): fold the new copy into a shared helper")
   }
 
   test("every DataSourceRegister in src/main is listed in META-INF/services, and every listed class exists") {

@@ -7,8 +7,6 @@ import org.apache.spark.sql.functions._
 class RetrievalQueriesSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val sfDir = "/root/testdata/sf0.001"
-
   test("x80/x81: BM25 output is well-formed and RRF fuses only member candidates") {
     import graft.queries.RetrievalQueries
     val bm = RetrievalQueries.bm25TopK(spark, sfDir).cache()

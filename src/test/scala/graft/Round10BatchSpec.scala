@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
 class Round10BatchSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val sfDir = "/root/testdata/sf0.001"
-
   test("x181: perceptron training reaches zero training error") {
     val out = TrainingQueries.perceptronTrain(spark, sfDir).cache()
     val rows = out.orderBy($"it").collect()

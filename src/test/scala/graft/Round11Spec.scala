@@ -73,7 +73,7 @@ class Round11Spec extends SparkTestBase {
   }
 
   test("x262 Luby MIS: independent, maximal, and equal to greedy-by-priority") {
-    val dir = "/root/testdata/sf0.001"
+    val dir = sfDir
     // Independent re-derivation of the sparsified graph in plain Scala:
     // trade pairs via one SQL join chain, top-3 by (w desc, dst), closure.
     Seq("lineitem", "orders", "customer", "supplier").foreach { t =>

@@ -45,8 +45,6 @@ class Round12Spec extends SparkTestBase {
     assert(sparkSdx("burroughs") == "B620")
   }
 
-  private val sfDir = "/root/testdata/sf0.001"
-
   test("x293: exact permutation p-values obey the enumeration invariants") {
     val rows = queries.StatsQueries.permTest(spark, sfDir).collect()
     assert(rows.nonEmpty)

@@ -5,7 +5,7 @@ package graft
 class Round14Spec extends SparkTestBase {
 
   test("property: folding ANY batch split through mergeDynSessions equals batch dynamic sessionization") {
-    // The dynamic-gap twin of the mergeSessions invariant: each event is
+    // The dynamic-gap side of the one session merge: each event is
     // its own window [t, t + gap_t]; however the multiset is split into
     // micro-batches (out-of-order, duplicate timestamps, mixed gaps),
     // folding through the pure merge equals from-scratch sessionization on

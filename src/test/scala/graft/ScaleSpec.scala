@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
 class ScaleSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val sfDir = "/root/testdata/sf0.001"
-
   test("salted aggregation == plain aggregation (skew-safe groupBy)") {
     val ev = Tables.events(spark, sfDir)
     val plain = ev.groupBy($"user_id")
@@ -73,7 +71,7 @@ class ScaleSpec extends SparkTestBase {
     import org.apache.spark.sql.expressions.Window
     // sf0.01: sf0.001 has only ~2 centroids/1 query — too degenerate to
     // exercise the quantizer
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
+    val emb = Tables.embeddings(spark, sf001Dir)
       .select($"vec_id", $"embedding", Similarity.norm($"embedding").as("nrm"))
     val cents0 = emb.filter($"vec_id" % 97 === 0)
       .select($"vec_id".as("cent_id"), $"embedding".as("cv"), $"nrm".as("cn"))

@@ -18,6 +18,11 @@ trait SparkTestBase extends AnyFunSuite {
       warehouseDir = Some(s"$scratch/warehouse"))
   }
 
+  /** The fixture tables (FIXTURES.md) at scale factor 0.001, the suites'
+    * default, and at 0.01. */
+  val sfDir: String = "/root/testdata/sf0.001"
+  val sf001Dir: String = "/root/testdata/sf0.01"
+
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 }

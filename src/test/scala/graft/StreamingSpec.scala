@@ -217,7 +217,7 @@ class StreamingSpec extends SparkTestBase {
     val cp = tmpDir("ndg2_cp")
     val out = tmpDir("ndg2_out") + "/verdicts"
     // Batch truth: min doc_id per 32-bit simhash bucket over sf0.001 docs.
-    val bucketed = Tables.documents(spark, "/root/testdata/sf0.001")
+    val bucketed = Tables.documents(spark, sfDir)
       .select(col("doc_id"),
         conv(graft.operators.Dedup.simhashBits(split(col("text"), " "), 32), 2, 10)
           .cast("long").as("bucket"))
@@ -270,7 +270,7 @@ class StreamingSpec extends SparkTestBase {
         conv(substring(md5(concat_ws("|", lit("g"), col("doc_id"))), 1, 4), 16, 10)
           .cast("long") < 49152)
     }
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, sfDir)
       .select($"doc_id", $"text")
     val batchKept = gate(docs).select($"doc_id").as[Long].collect().toSet
     docs.coalesce(1).write.mode("overwrite").json(src)
@@ -295,7 +295,7 @@ class StreamingSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val src = tmpDir("qc_src")
     val out = tmpDir("qc_out") + "/scored"
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, sfDir)
       .select($"doc_id", $"source", $"text").filter($"doc_id" < 60)
     val batch = graft.queries.CurationQueries.scoreDocs(docs)
       .select($"doc_id", $"score", $"keep")
@@ -336,7 +336,7 @@ class StreamingSpec extends SparkTestBase {
     // and per-language counts are fixed at intake time; the stream is the
     // arriving batch (src10..src19). Gate = x17's exact-dup rejection +
     // x85's temperature keep, the same Column expressions batch and stream.
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, sfDir)
     val snum = substring(col("source"), 4, 10).cast("int")
     val existing = docs.filter(snum < 10)
     val exHash = existing.groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("dup_of"))
@@ -572,19 +572,51 @@ class StreamingSpec extends SparkTestBase {
     assert(sess == Seq((1L, 2L), (1L, 1L), (2L, 1L)))
   }
 
+  /** Stages `rows` (user_id, sec, …) plus `ts` = sec as the i-th
+    * single-file slice under `base/src`, with an mtime that ascends with i
+    * so a maxFilesPerTrigger=1 file source reads the slices in order. */
+  private def stageTimerSlice(base: String, i: Int,
+      rows: org.apache.spark.sql.DataFrame): Unit = {
+    rows.withColumn("ts", $"sec".cast("timestamp"))
+      .coalesce(1).write.parquet(s"$base/src/s$i")
+    val part = new java.io.File(s"$base/src/s$i").listFiles()
+      .find(_.getName.endsWith(".parquet")).get
+    val dst = java.nio.file.FileSystems.getDefault.getPath(s"$base/src/f$i.parquet")
+    java.nio.file.Files.move(part.toPath, dst)
+    java.nio.file.Files.setLastModifiedTime(dst,
+      java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
+  }
+
+  /** Runs a timer-session stream to its end (AvailableNow, RocksDB state,
+    * append mode) and returns the emitted (user_id, start_sec, end_sec,
+    * n_events) set. */
+  private def drainTimerSessions(
+      out: org.apache.spark.sql.Dataset[IncrementalStream.TwsSession],
+      base: String): Set[(Long, Long, Long, Long)] = {
+    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
+    queries.QueryUtil.withConfs(spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.shuffle.partitions" -> "4") {
+      val q = out.toDF().writeStream
+        .outputMode("append")
+        .option("checkpointLocation", s"$base/ckpt")
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          b.collect().foreach(buf.add)
+        }
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    }
+    import scala.jdk.CollectionConverters._
+    buf.asScala.toSeq.map(r => (r.getAs[Long]("user_id"),
+      r.getAs[Long]("start_sec"), r.getAs[Long]("end_sec"),
+      r.getAs[Long]("n_events"))).toSet
+  }
+
   test("transformWithState event-time timers flush sessions exactly when the watermark passes") {
     val base = java.nio.file.Files.createTempDirectory("graft_tws_timer").toString
-    def stage(i: Int, rows: Seq[(Long, Long)]): Unit = {
-      rows.toDF("user_id", "sec")
-        .withColumn("ts", $"sec".cast("timestamp"))
-        .coalesce(1).write.parquet(s"$base/src/s$i")
-      val part = new java.io.File(s"$base/src/s$i").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = java.nio.file.FileSystems.getDefault.getPath(s"$base/src/f$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-    }
+    def stage(i: Int, rows: Seq[(Long, Long)]): Unit =
+      stageTimerSlice(base, i, rows.toDF("user_id", "sec"))
     // Batch 0: u1 holds (100..120) with timer 180; u2 holds TWO sessions
     // in ListState — (100) timer 160 and (300) timer 360 (nothing emits
     // eagerly; every session waits for its timer).
@@ -604,24 +636,7 @@ class StreamingSpec extends SparkTestBase {
       .withWatermark("ts", "10 seconds")
       .as[(Long, Long, java.sql.Timestamp)]
     val out = IncrementalStream.twsTimerSessions(stream, gapSec = 60L)
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    queries.QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "4") {
-      val q = out.toDF().writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.collect().foreach(buf.add)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    import scala.jdk.CollectionConverters._
-    val got = buf.asScala.toSeq.map(r => (r.getAs[Long]("user_id"),
-      r.getAs[Long]("start_sec"), r.getAs[Long]("end_sec"),
-      r.getAs[Long]("n_events"))).toSet
+    val got = drainTimerSessions(out, base)
     // Every session flushes from its own timer: u1 (100..120) and u2 (100)
     // when the watermark passes 180/160, u2 (300) when it passes 360,
     // u1 (1000) in the final watermark-only batch. Still unexpired
@@ -640,18 +655,8 @@ class StreamingSpec extends SparkTestBase {
     // SHORTER gap (60s vs the purchase 300s), so a lag-diff sessionizer
     // (or one keying the merge on the latest event's gap) would split.
     val base = java.nio.file.Files.createTempDirectory("graft_dyngap_spec").toString
-    def stage(i: Int, rows: Seq[(Long, Long, Long)]): Unit = {
-      import spark.implicits._
-      rows.toDF("user_id", "sec", "gap")
-        .withColumn("ts", $"sec".cast("timestamp"))
-        .coalesce(1).write.parquet(s"$base/src/s$i")
-      val part = new java.io.File(s"$base/src/s$i").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = java.nio.file.FileSystems.getDefault.getPath(s"$base/src/f$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-    }
+    def stage(i: Int, rows: Seq[(Long, Long, Long)]): Unit =
+      stageTimerSlice(base, i, rows.toDF("user_id", "sec", "gap"))
     import spark.implicits._
     // Batch 0: u1 long-gap event at 100 (window [100,400]) + a later event
     // at 1000 ([1000,1060]) that keeps the watermark low enough... wm
@@ -675,24 +680,7 @@ class StreamingSpec extends SparkTestBase {
       .withWatermark("ts", "700 seconds")
       .as[(Long, Long, Long, java.sql.Timestamp)]
     val out = IncrementalStream.twsDynTimerSessions(stream)
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    queries.QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "4") {
-      val q = out.toDF().writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.collect().foreach(buf.add)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    import scala.jdk.CollectionConverters._
-    val got = buf.asScala.toSeq.map(r => (r.getAs[Long]("user_id"),
-      r.getAs[Long]("start_sec"), r.getAs[Long]("end_sec"),
-      r.getAs[Long]("n_events"))).toSet
+    val got = drainTimerSessions(out, base)
     // The late 350 event merged into the long-gap window AND extended it
     // to 410 (running max of ends); the 1000 event stayed its own session.
     assert(got == Set((1L, 100L, 410L, 2L), (1L, 1000L, 1060L, 1L)), got.toString)
@@ -700,7 +688,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("transformWithState running totals match the batch aggregate across real micro-batches") {
-    val sfDir = "/root/testdata/sf0.001"
     // Precondition that makes the parity meaningful: at least one user
     // purchases on both sides of a slice cut, so their ValueState must
     // survive a micro-batch boundary to produce the right final row.
@@ -738,17 +725,8 @@ class StreamingSpec extends SparkTestBase {
     // (b) an early event plus a bridging event that pulls the open session's
     //     start back must all merge into ONE session.
     val base = java.nio.file.Files.createTempDirectory("graft_tws_early").toString
-    def stage(i: Int, rows: Seq[(Long, Long)]): Unit = {
-      rows.toDF("user_id", "sec")
-        .withColumn("ts", $"sec".cast("timestamp"))
-        .coalesce(1).write.parquet(s"$base/src/s$i")
-      val part = new java.io.File(s"$base/src/s$i").listFiles()
-        .find(_.getName.endsWith(".parquet")).get
-      val dst = java.nio.file.FileSystems.getDefault.getPath(s"$base/src/f$i.parquet")
-      java.nio.file.Files.move(part.toPath, dst)
-      java.nio.file.Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
-    }
+    def stage(i: Int, rows: Seq[(Long, Long)]): Unit =
+      stageTimerSlice(base, i, rows.toDF("user_id", "sec"))
     // Batch 0: both users open a session at 1000.
     stage(0, Seq((1L, 1000L), (2L, 1000L)))
     // Batch 1: u1 gets two early events (920, 930) — within gapSec of each
@@ -769,24 +747,7 @@ class StreamingSpec extends SparkTestBase {
       .withWatermark("ts", "2000 seconds")
       .as[(Long, Long, java.sql.Timestamp)]
     val out = IncrementalStream.twsTimerSessions(stream, gapSec = 60L)
-    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
-    queries.QueryUtil.withConfs(spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.shuffle.partitions" -> "4") {
-      val q = out.toDF().writeStream
-        .outputMode("append")
-        .option("checkpointLocation", s"$base/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          b.collect().foreach(buf.add)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    import scala.jdk.CollectionConverters._
-    val got = buf.asScala.toSeq.map(r => (r.getAs[Long]("user_id"),
-      r.getAs[Long]("start_sec"), r.getAs[Long]("end_sec"),
-      r.getAs[Long]("n_events"))).toSet
+    val got = drainTimerSessions(out, base)
     assert(got == Set(
       (1L, 920L, 930L, 2L),   // branch a: merged pending, NOT two singletons
       (1L, 1000L, 1000L, 1L), // u1 open session via timer

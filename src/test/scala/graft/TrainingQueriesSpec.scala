@@ -9,8 +9,6 @@ import org.apache.spark.sql.functions._
 class TrainingQueriesSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val sfDir = "/root/testdata/sf0.001"
-
   test("x54: window starts cover every token, tails are short, bodies full") {
     val win = TrainingQueries.chunkWindows(spark, sfDir).cache()
     val docs = Tables.documents(spark, sfDir)
